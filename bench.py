@@ -1,6 +1,8 @@
 #!/usr/bin/env python
-"""Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR
-(default sf0.1) on local[$SPARK_GRAFT_CPUS].
+"""Benchmark harness: the headline queries (``registry.HEADLINE``, the
+same list that leads the registry's order) at $SPARK_GRAFT_SF_DIR
+(default sf0.1) on local[$SPARK_GRAFT_CPUS] (default: the cores this
+process may run on, see session.py).
 
 Prints ONE compact JSON line as the FINAL stdout line:
   {"metric": "...", "value": <total sec>, "unit": "sec",
@@ -29,147 +31,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from mpi_word_count_spark import registry  # noqa: E402
-from mpi_word_count_spark.session import get_spark  # noqa: E402
-
-# Representative slice of SURVEY.md §2 coverage: scan+agg+sort (the
-# reference's own query), joins, windows, approximate dedup, ANN,
-# text analysis, streaming execution.
-HEADLINE = [
-    "wordcount",
-    "wordcount_topk",
-    "word_doc_frequency",
-    "q1_pricing_summary",
-    "q3_top_revenue_orders",
-    "q5_regional_revenue",
-    "q4_late_order_priority",
-    "top3_orders_per_customer",
-    "user_session_counts",
-    "exact_dedup",
-    "minhash_lsh_dups",
-    "dedup_clusters",
-    "trade_graph_pagerank",
-    "simhash_fingerprints",
-    "ann_bruteforce",
-    "ann_lsh",
-    "token_stats",
-    "quality_scores",
-    "model_quality_scores",
-    "clean_corpus_summary",
-    "streaming_wordcount",
-    "benchmark_contamination",
-    "shuffled_shards",
-    "q21_waiting_suppliers",
-    "segment_dedup_summary",
-    "training_shard_manifest",
-    "repetition_scores",
-    "semantic_dedup",
-    "curation_funnel",
-    "q9_product_profit",
-    "edit_distance_dups",
-    "incremental_exact_dedup",
-    "incremental_minhash_dups",
-    "cms_word_counts",
-    "bloom_prefilter_stats",
-    "duplicate_passages",
-    "unigram_logprob_scores",
-    "bpe_token_counts",
-    "media_phash_dups",
-    "ann_ivfpq",
-    "session_concurrency_hourly",
-    "overlapping_order_pairs",
-    "semantic_contamination",
-    "pii_redaction_stats",
-    "weighted_sample_by_length",
-    "curriculum_batches",
-    "ppjoin_dups",
-    "winnowing_dups",
-    "hybrid_rrf_retrieval",
-    "token_budget_selection",
-    "embedding_norms",
-    "label_centroid_spread",
-    "data_quality_report",
-    "events_ohlc_hourly",
-    # round-4 continuation part 3: governance + degeneracy + IR.
-    # dedup_method_agreement is deliberately NOT here: it re-runs
-    # three pipelines the list already times individually (its 9s is
-    # the nightly-audit composition price, measured once in SCALE.md,
-    # not a plan to track round-over-round)
-    "user_erasure_audit",
-    "html_boilerplate_strip",
-    "unicode_nfc_stats",
-    "blocklist_filter_stats",
-    "trade_graph_kcore",
-    "phrase_search",
-    # round-5 additions: importance-resampling selection, CDC dedup,
-    # CCNet bucket partition
-    "dsir_importance_weights",
-    "cdc_chunk_dups",
-    "ccnet_perplexity_buckets",
-    # round-6 additions: the two remaining round-5 plan shapes worth
-    # tracking round-over-round (BNLJ margin mining with partitioned
-    # kNN windows; the packing-efficiency audit's bounded cumsum)
-    "margin_knn_alignment",
-    "packing_efficiency_audit",
-    # round-7 additions: the Gopher rule battery (one wide codegen
-    # projection pass) and the REAL media paths (video: AVI synth +
-    # container parse + per-frame decode, the heaviest per-item
-    # kernel; audio: WAV round-trip + windowed zero-cross/energy)
-    "gopher_quality_flags",
-    "video_frame_stats",
-    "audio_window_stats",
-    # unigram-LM segmentation: tracks the two-shuffle + bounded-DP
-    # tokenizer-training plan alongside bpe_token_counts
-    "unigram_segment_stats",
-    # round-8 additions: the EM training loop (per-round type-table
-    # Arrow pass + vocab-sized shuffle) and the decode census (every
-    # codec's real decode per item + a 7-group aggregate)
-    "unigram_em_vocab",
-    "media_decode_census",
-    # MP4 stsd/avcC metadata inventory: the zero-shuffle header-parse
-    # plan shape (encode + parse per item, no decode)
-    "media_codec_ids",
-    # round-9 addition: subword regularization — the k-best DP over
-    # the type table (same shuffles as unigram_segment_stats, k x DP
-    # state per word; the sampled twin shares the plan so one entry
-    # tracks the family)
-    "unigram_nbest_segments",
-    # round-9 additions (session 2), one entry per NEW plan shape:
-    # explode-x-B + B-row partial agg (the distributed bootstrap)
-    "poisson_bootstrap_ci",
-    # Arrow integer-Gram partials + model-sized shuffle + driver
-    # eigen-iteration (linear algebra on sufficient statistics)
-    "embedding_pca_power",
-    # iterative LPA: per round one src join + (node,label) count +
-    # argmax agg — the two-shuffle-per-round iterative shape
-    "trade_graph_communities",
-    # fold-complement CV: one 11-sum agg + 5 closed-form solves
-    "price_ols_cv",
-    # rollup Expand x4 + count(DISTINCT) over grouping sets
-    "k_anonymity_audit",
-    # applyInPandasWithState custom stateful operator (streaming)
-    "streaming_holt_forecast",
-    # round-10 additions, one entry per NEW plan shape:
-    # batch-broadcast embedding ingest: banded batch broadcast against
-    # the corpus bucket store, zero shuffle joins, one corpus scan
-    "incremental_embedding_dups",
-    # byte-level BPE: hex-split + 256-entry remap transform feeding
-    # the literal-merge fold chain (byte_bpe_merges shares the plan)
-    "byte_bpe_token_counts",
-    # stream-static LEFT joins against the broadcast bucket store +
-    # one stateful classification aggregate
-    "streaming_embedding_dedup",
-    # round-10 session-2 additions, one entry per NEW plan shape:
-    # Aho-Corasick mapInPandas scan (automaton built per worker,
-    # lexicon-sized partial agg) — the multi-pattern governance shape
-    "term_scan_census",
-    # double corpus-stage ML: (lang,token) count then a x|langs|
-    # fan-out scoring join + per-doc argmax (dense broadcast model)
-    "naive_bayes_confusion",
-    # histogram order statistics: two brand-partitioned cumulative
-    # windows over the price-domain-bounded histogram (exact
-    # median/MAD — the robust-stats shape)
-    "brand_price_mad_outliers",
-]
+from mpi_word_count_spark.session import get_spark, host_defaults  # noqa: E402
 
 
 def stdout_line(total: float, n_queries: int, sf: float) -> str:
@@ -238,7 +100,9 @@ def main() -> None:
 
     queries = registry.queries()
     timings: dict[str, float] = {}
-    runs_meta: dict[str, dict] = {name: {"runs": [], "loads": []} for name in HEADLINE}
+    runs_meta: dict[str, dict] = {
+        name: {"runs": [], "loads": []} for name in registry.HEADLINE
+    }
 
     def timed_run(name: str) -> float:
         start = time.monotonic()
@@ -270,7 +134,7 @@ def main() -> None:
             # plans, not accumulated block-manager litter.
             spark.sparkContext._jvm.System.gc()
             wait_for_quiet_host(threshold=2.0, max_wait_s=300.0)
-        for name in HEADLINE:
+        for name in registry.HEADLINE:
             for _ in range(2):
                 timed_run(name)
             # spread guard (round-7, tightened round-9 from 2.0x to
@@ -293,7 +157,7 @@ def main() -> None:
                     timed_run(name)
                     extra += 1
                 runs_meta[name]["t_wall"] = round(time.time(), 1)
-    for name in HEADLINE:
+    for name in registry.HEADLINE:
         timings[name] = min(runs_meta[name]["runs"])
 
     total = round(sum(timings.values()), 3)
@@ -310,9 +174,9 @@ def main() -> None:
         # runs are hygiene checks and must not be quoted as totals.
         "official": "BENCH_r{N}.json (driver-parsed from this stdout line)",
         "total_sec_this_run": total,
-        "n_queries": len(HEADLINE),
+        "n_queries": len(registry.HEADLINE),
         "best_of": "min over 2 passes x 2 runs (+spread-guard extras)",
-        "cpus": os.environ.get("SPARK_GRAFT_CPUS", "32"),
+        "cpus": os.environ.get("SPARK_GRAFT_CPUS", str(host_defaults()[0])),
         **gate,
         "load1_at_start": round(load1_at_start, 2),
         "load1_at_end": round(os.getloadavg()[0], 2),
@@ -333,14 +197,14 @@ def main() -> None:
     sidecar = {
         "sf": sf,
         "cpus": meta["cpus"],
-        "n_queries": len(HEADLINE),
+        "n_queries": len(registry.HEADLINE),
         "queries": timings,
     }
     for fname in ("BENCH_queries.json", f"BENCH_queries_c{meta['cpus']}.json"):
         with open(os.path.join(here, fname), "w") as f:
             json.dump(sidecar, f, indent=1, sort_keys=True)
     spark.stop()
-    print(stdout_line(total, len(HEADLINE), sf))
+    print(stdout_line(total, len(registry.HEADLINE), sf))
 
 
 if __name__ == "__main__":

@@ -131,26 +131,15 @@ def chars_col(col: Column | str) -> Column:
     return F.regexp_extract_all(c, F.lit("."), 0)
 
 
-def apply_merge_col(syms: Column, left: str, right: str, merged: str) -> Column:
+def _apply_merge_expr(syms: Column, lit_l: Column, lit_r: Column, lit_m: Column) -> Column:
     """One greedy merge round as a JVM array fold (F.aggregate): the
     accumulator's last element merges with the incoming symbol iff it
-    equals `left` and the symbol equals `right`. Because a merged
-    token is never equal to `left` (merged = left||right, symbols are
-    non-empty), a fresh merge can't immediately re-merge — exactly
+    equals `lit_l` and the symbol equals `lit_r`. Because a merged
+    token is never equal to `lit_l` (merged = left||right, symbols
+    are non-empty), a fresh merge can't immediately re-merge — exactly
     the greedy left-to-right semantics (tested against greedy_merge
-    in tests/test_bpe.py).
-
-    Delegates to _apply_merge_expr (ADVICE r10): the fold body lives
-    in ONE place so the chained and collapsed forms cannot silently
-    diverge — the documented greedy-merge parity depends on them
-    being the identical expression."""
-    return _apply_merge_expr(syms, F.lit(left), F.lit(right), F.lit(merged))
-
-
-def _apply_merge_expr(syms: Column, lit_l: Column, lit_r: Column, lit_m: Column) -> Column:
-    """apply_merge_col's fold with Column-valued merge symbols — the
-    body shared by the chained form (literal args) and the collapsed
-    single-aggregate form (element_at over the merge-table arrays)."""
+    in tests/test_bpe.py). The merge symbols are Columns so one body
+    serves literal args and element_at over the merge-table arrays."""
     return F.aggregate(
         syms,
         F.expr("cast(array() as array<string>)"),
@@ -233,21 +222,12 @@ def _gpt2_byte_map() -> dict[int, str]:
 
 
 BYTE_TO_CHAR: dict[int, str] = _gpt2_byte_map()
-CHAR_TO_BYTE: dict[str, int] = {c: b for b, c in BYTE_TO_CHAR.items()}
 
 
 def byte_symbols(word: str) -> list[str]:
     """word -> remapped UTF-8 byte symbol sequence (Python twin of
     byte_symbols_col; the `split` argument for byte-level train_bpe)."""
     return [BYTE_TO_CHAR[b] for b in word.encode("utf-8")]
-
-
-def byte_decode(symbols: list[str]) -> str:
-    """Invert byte-level BPE: concatenate symbols, unmap each char to
-    its byte, UTF-8 decode. Total on any encoder output (merged
-    symbols are concatenations of base symbols, so the char stream is
-    always a valid image of the original byte stream)."""
-    return bytes(CHAR_TO_BYTE[ch] for ch in "".join(symbols)).decode("utf-8")
 
 
 def byte_remap_sql_array(dialect: str = "duckdb") -> str:

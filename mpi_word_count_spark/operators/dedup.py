@@ -11,7 +11,9 @@ Five flavors (BASELINE.json north star), all designed shuffle-lean:
                        only on bucket collisions (the 100 TB path)
   simhash              64-bit-style (60-bit) SimHash fingerprints +
                        hamming-distance pairing
-  embedding_dup_pairs  cosine near-dup over embedding vectors
+  embedding_dup_pairs_banded
+                       cosine near-dup over embedding vectors (banded
+                       hyperplane LSH)
 
 Every hash is md5-derived (functions/hashing.py) so the DuckDB oracle
 reproduces the exact same candidate sets and signatures — the
@@ -64,12 +66,6 @@ def shingles_from_tokens(toks: Column, n: int = 3) -> Column:
         F.array().cast("array<string>")
     )
     return F.array_distinct(guarded)
-
-
-def shingles_col(col: Column | str, n: int = 3) -> Column:
-    """Shingles directly from a text column — convenience for small
-    inputs/tests; hot paths go through shingles_from_tokens."""
-    return shingles_from_tokens(tokens_col(col), n)
 
 
 def doc_shingles(
@@ -760,36 +756,6 @@ def simhash(
     )
 
 
-def simhash_dup_pairs(
-    df: DataFrame,
-    max_hamming: int = 8,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Near-dup pairs by SimHash hamming distance ≤ max_hamming.
-
-    Fixture-scale implementation is the all-pairs comparison (500²);
-    at scale you'd band the fingerprint into (max_hamming+1) chunks —
-    pigeonhole: any pair within distance d shares at least one exact
-    chunk — and equi-join on chunks exactly like MinHash LSH.
-    """
-    s = simhash(df, id_col, text_col)
-    a = s.alias("a")
-    b = s.alias("b")
-    ham = F.bit_count(
-        F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))
-    )
-    return (
-        a.join(b, F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(
-            F.col("a.doc_id").alias("d1"),
-            F.col("b.doc_id").alias("d2"),
-            ham.cast("bigint").alias("hamming"),
-        )
-        .filter(F.col("hamming") <= max_hamming)
-    )
-
-
 def simhash_chunk_bounds(
     bits: int = SIMHASH_BITS, max_hamming: int = 8
 ) -> list[tuple[int, int]]:
@@ -810,7 +776,7 @@ def simhash_banded_pairs(
 ) -> DataFrame:
     """Near-dup pairs by SimHash hamming ≤ max_hamming — the SCALE
     path: equi-join on fingerprint chunks instead of the all-pairs
-    comparison. Produces IDENTICAL output to simhash_dup_pairs (the
+    comparison. Produces IDENTICAL output to the all-pairs pairing (the
     pigeonhole guarantee is exact, not probabilistic), but candidate
     generation is a hash join on (chunk_no, chunk_value) whose cost
     tracks collision structure, not |docs|² — the same banding idea
@@ -1228,43 +1194,6 @@ def incremental_embedding_dups(
             ),
             F.col("max_cosine"),
         )
-    )
-
-
-def embedding_dup_pairs(
-    df: DataFrame,
-    threshold: float = 0.4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs (id1 < id2, cos ≥ τ).
-
-    All-pairs self-join — the exact-recall VERIFICATION kernel, kept
-    for tests and for within-bucket use. Registered pipelines go
-    through embedding_dup_pairs_banded (equi-join candidate
-    generation); this O(n²) shape must never be a primary plan.
-    """
-    from mpi_word_count_spark.functions.vector import dot, norm
-
-    normed = df.select(
-        F.col(id_col).alias("_id"),
-        F.col(vec_col).alias("_vec"),
-        norm(F.col(vec_col)).alias("_norm"),
-    )
-    a = normed.alias("a")
-    b = normed.alias("b")
-    return (
-        a.join(b, F.col("a._id") < F.col("b._id"))
-        .select(
-            F.col("a._id").alias("id1"),
-            F.col("b._id").alias("id2"),
-            F.round(
-                dot(F.col("a._vec"), F.col("b._vec"))
-                / (F.col("a._norm") * F.col("b._norm")),
-                4,
-            ).alias("cosine"),
-        )
-        .filter(F.col("cosine") >= threshold)
     )
 
 

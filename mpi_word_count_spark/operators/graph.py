@@ -380,7 +380,9 @@ def label_propagation(
     graphs.
 
     edges: DataFrame[src, dst], both orientations present (same
-    contract as pagerank_fixed_point). Per round: one equi-join on
+    contract as pagerank_fixed_point). Self-loops in the input are
+    dropped before the damping self-edge is added, so a node's own
+    label counts exactly once per round either way. Per round: one equi-join on
     src + one (node, label) count shuffle + one argmax aggregation —
     never a window over the corpus. Lineage is truncated on the
     pagerank cadence argument (every 3 rounds; each round references
@@ -393,7 +395,7 @@ def label_propagation(
     nodes table — the old three-branch form (nodes, union, labels)
     re-ran the upstream orders⋈lineitem+distinct chain per branch.
     Measured at sf0.1: 6.0–6.6 → 4.2–4.5 s, bit-identical labels."""
-    withself = edges.union(
+    withself = edges.filter(F.col("src") != F.col("dst")).union(
         edges.select("src", "src").distinct().toDF("src", "dst")
     ).localCheckpoint()
     track_releaser(lambda df=withself: _unpersist_local_ckpt(df))

@@ -7,11 +7,11 @@ everything. Interleaving the bits of both dimensions into one Morton
 key makes rows that are close in BOTH dimensions close in the key, so
 one sorted/partitioned layout serves 2-D range queries: an aligned
 2^k × 2^k box is exactly ONE contiguous key range, and an arbitrary
-box intersects a provably bounded set of key tiles (enumerated
-driver-side, turned into partition pruning). This is the technique
-behind Delta/Iceberg `OPTIMIZE ZORDER BY` — here expressed as plain
-integer expressions any engine evaluates identically, so the key
-itself is oracle-verifiable bit for bit.
+box intersects a provably bounded set of key tiles (zkey >> 2k is
+the tile id, so a bucket IN-list becomes partition pruning). This is
+the technique behind Delta/Iceberg `OPTIMIZE ZORDER BY` — here
+expressed as plain integer expressions any engine evaluates
+identically, so the key itself is oracle-verifiable bit for bit.
 
 Everything is pure 64-bit integer arithmetic (shift/and/or, the
 classic mask-spreading construction) — no floats, no UDFs, codegen
@@ -20,7 +20,7 @@ end to end.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 # Successive mask-spreading rounds: after all four, the low 16 bits of
@@ -50,48 +50,6 @@ def morton_key_sql(x_expr: str, y_expr: str) -> str:
     """SQL text of the Morton key interleaving two ≤16-bit values:
     x in even bits, y in odd bits. Same text runs on both engines."""
     return f"({spread_bits_sql(x_expr)} | ({spread_bits_sql(y_expr)} << 1))"
-
-
-def morton_key(x: Column | str, y: Column | str) -> Column:
-    """Spark column form of morton_key_sql (via F.expr so the shift
-    amounts stay SQL-side)."""
-    xn = x if isinstance(x, str) else x._jc.toString()  # pragma: no cover
-    yn = y if isinstance(y, str) else y._jc.toString()  # pragma: no cover
-    return F.expr(morton_key_sql(xn, yn))
-
-
-def py_morton(x: int, y: int) -> int:
-    """Python reference (tests + driver-side tile enumeration)."""
-
-    def spread(v: int) -> int:
-        v &= 0xFFFF
-        for shift, mask in _SPREAD_ROUNDS:
-            v = (v | (v << shift)) & mask
-        return v
-
-    return spread(x) | (spread(y) << 1)
-
-
-def zorder_box_buckets(
-    x_lo: int, x_hi: int, y_lo: int, y_hi: int, tile_bits: int
-) -> list[int]:
-    """Bucket ids (zkey >> 2·tile_bits) intersecting the inclusive box
-    [x_lo, x_hi] × [y_lo, y_hi], where each bucket is an aligned
-    2^tile_bits × 2^tile_bits tile.
-
-    Driver-side enumeration over TILE indices, not points: the loop is
-    O(#intersecting tiles) — e.g. a 100×100 box over 16×16 tiles is
-    ≤ 64 iterations however large the table. The identity making
-    buckets tiles is morton(x, y) >> 2k == morton(x >> k, y >> k)
-    (interleaved bits shift out pairwise). The returned IN-list turns
-    a 2-D range predicate into partition pruning on a zbucket
-    partition column — the directory-level analog of what file-level
-    z-clustering + min/max stats give on a real lakehouse layout."""
-    return sorted(
-        py_morton(xt, yt)
-        for xt in range(x_lo >> tile_bits, (x_hi >> tile_bits) + 1)
-        for yt in range(y_lo >> tile_bits, (y_hi >> tile_bits) + 1)
-    )
 
 
 def zorder_keys(

@@ -126,7 +126,7 @@ def _decode_counters(media: DataFrame) -> dict[str, Any]:
 def _pool_feature(img: np.ndarray) -> np.ndarray:
     """Deterministic pooled feature with a FIXED dimension: row sums,
     nearest-neighbor resampled to exactly FEATURE_DIM bins (same index
-    arithmetic as dhash_pixels / resize_stub). Raw truncation
+    arithmetic as the dHash kernels). Raw truncation
     (`sums[:FEATURE_DIM]`) yielded ragged vectors for short images and
     length-1 for 1-D audio — fixed-dim is the contract any downstream
     cosine/k-means consumer needs, identical between the fake path
@@ -146,8 +146,8 @@ def extract_features(media: DataFrame, fake: bool = True) -> DataFrame:
     """media → (media_id, n_bytes, feature: array<float>) via
     mapInPandas (Arrow batches, iterator form). The feature is always
     exactly FEATURE_DIM floats (see _pool_feature). With fake=False,
-    undecodable payloads are SKIPPED per item — same crawl-robustness
-    contract as phash_decoded_media — and counted in the returned
+    undecodable payloads are SKIPPED per item — a media crawl always
+    carries undecodable items — and counted in the returned
     DataFrame's `decode_stats` accumulators."""
     out_schema = T.StructType(
         [
@@ -195,77 +195,10 @@ PHASH_BANDS = 4
 _BAND_BITS = PHASH_BITS // PHASH_BANDS  # 16
 
 
-def dhash_pixels(img: "np.ndarray") -> "np.ndarray":
-    """Classic difference-hash over a DECODED grayscale image: resize
-    to 9×8 by integer nearest-neighbor (same index arithmetic as the
-    byte-probe dHash below, so it is deterministic and
-    library-independent), then bit (r,c) = px[r,c] > px[r,c+1].
-    Returns the 64 bits as an int64 array — band-pack with the same
-    (PHASH_BANDS, _BAND_BITS) scheme as phash_media.
-
-    Round-6: with functions/codecs.py the decode is REAL for
-    PNG/BMP/netpbm, so this kernel hashes actual pixels, not byte
-    histograms — the standard dHash of Krawetz's "Kind of Like That"
-    (public algorithm), not a library port."""
-    h, w = img.shape
-    if h == 0 or w == 0:
-        return np.zeros(PHASH_BITS, dtype=np.int64)
-    rows = (np.arange(8, dtype=np.int64) * (h - 1)) // 7 if h > 1 else np.zeros(8, np.int64)
-    cols = (np.arange(9, dtype=np.int64) * (w - 1)) // 8 if w > 1 else np.zeros(9, np.int64)
-    small = img[np.ix_(rows, cols)]
-    return (small[:, :-1] > small[:, 1:]).astype(np.int64).reshape(PHASH_BITS)
-
-
-def phash_decoded_media(media: DataFrame) -> DataFrame:
-    """phash_media's REAL-decode twin: decode each payload with the
-    pure-python codecs (PNG/BMP/netpbm), dHash the pixels, band-pack.
-    Same output schema as phash_media, so phash_dups consumes either —
-    the banded-join pairing is decode-agnostic. Payloads that no
-    pure-python codec handles are SKIPPED (yielded without a row)
-    rather than failed: a 100 TB media crawl always carries undecodable
-    items, and dropping them must not kill the job. The drop rate is
-    observable via the returned DataFrame's `decode_stats`
-    accumulators (decoded/skipped) — an all-skipped corpus must not
-    read as 'no duplicates'."""
-    out_schema = T.StructType(
-        [T.StructField("media_id", T.LongType(), False)]
-        + [
-            T.StructField(f"b{i}", T.IntegerType(), False)
-            for i in range(PHASH_BANDS)
-        ]
-    )
-    weights = 1 << np.arange(_BAND_BITS - 1, -1, -1, dtype=np.int64)
-    counters = _decode_counters(media)
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from mpi_word_count_spark.functions import codecs
-
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["media"]):
-                try:
-                    img = codecs.decode_image(bytes(payload))
-                except (ValueError, NotImplementedError):
-                    counters["skipped"] += 1
-                    continue  # undecodable item: skip, never fail the task
-                counters["decoded"] += 1
-                bits = dhash_pixels(img)
-                bands = bits.reshape(PHASH_BANDS, _BAND_BITS) @ weights
-                rows.append([int(mid), *(int(b) for b in bands)])
-            yield pd.DataFrame(
-                rows, columns=["media_id"] + [f"b{i}" for i in range(PHASH_BANDS)]
-            )
-
-    out = media.select("media_id", "media").mapInPandas(kernel, schema=out_schema)
-    out.decode_stats = counters
-    return out
-
-
 def phash_media(media: DataFrame) -> DataFrame:
     """Perceptual difference-hash (dHash) over the raw media byte
     stream: resample each payload to PHASH_BITS+1 byte probes at
-    linspace positions (the same nearest-neighbor resampling
-    resize_stub uses), then bit i = probe[i] > probe[i+1]. Returns
+    linspace positions (nearest-neighbor resampling), then bit i = probe[i] > probe[i+1]. Returns
     (media_id, b0..b3) — the 64-bit hash packed as PHASH_BANDS
     16-bit band integers, never as one 64-bit value (bit 63 would
     overflow signed BIGINT in either engine).
@@ -381,58 +314,6 @@ def phash_dups(phash: DataFrame, max_hamming: int = PHASH_BANDS - 1) -> DataFram
         )
         .filter(F.col("hamming") <= max_hamming)
     )
-
-
-def resize_stub(media: DataFrame, height: int, width: int, fake: bool = True) -> DataFrame:
-    """Resize kernel: decode → (fake) nearest-neighbor resample →
-    re-encode as raw bytes. Demonstrates binary-in/binary-out batch
-    shape; swap the body for a real codec at deployment. With
-    fake=False, undecodable payloads are skipped per item (same
-    contract as phash_decoded_media / extract_features) and counted in
-    the returned DataFrame's `decode_stats` accumulators."""
-    out_schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType(), False),
-            T.StructField("media", T.BinaryType(), True),
-            T.StructField("height", T.IntegerType(), False),
-            T.StructField("width", T.IntegerType(), False),
-        ]
-    )
-    counters = _decode_counters(media)
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids: list[int] = []
-            out: list[bytes] = []
-            for mid, payload, meta in zip(pdf["media_id"], pdf["media"], pdf["meta"]):
-                try:
-                    img = np.atleast_2d(
-                        decode_media(bytes(payload), meta["mime"], fake=fake)
-                    )
-                except (ValueError, NotImplementedError):
-                    if fake:
-                        raise  # the fake path decodes anything; never mask
-                    counters["skipped"] += 1
-                    continue
-                counters["decoded"] += 1
-                ys = np.linspace(0, img.shape[0] - 1, height).astype(int)
-                xs = np.linspace(0, img.shape[1] - 1, width).astype(int)
-                ids.append(int(mid))
-                out.append(img[np.ix_(ys, xs)].astype(np.float32).tobytes())
-            # dtype=object: an all-skipped batch otherwise yields a
-            # float64 column Arrow cannot convert to binary
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "media": pd.Series(out, dtype=object),
-                    "height": height,
-                    "width": width,
-                }
-            )
-
-    result = media.mapInPandas(kernel, schema=out_schema)
-    result.decode_stats = counters
-    return result
 
 
 def sample_frames(

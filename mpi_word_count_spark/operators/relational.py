@@ -44,7 +44,9 @@ def sessionize(
     session_col: str = "session_id",
 ) -> DataFrame:
     """Batch sessionization: a new session starts when the gap to the
-    previous event of the same user exceeds `gap_seconds`.
+    previous event of the same user exceeds `gap_seconds`. Gaps are
+    compared in microseconds (the timestamp's own precision), so a
+    1800.5 s gap exceeds 1800 s.
 
     Classic lag + cumulative-sum-of-boundaries pattern: one shuffle on
     the user key, two window passes over the same partitioning (Spark
@@ -56,7 +58,7 @@ def sessionize(
     prev_ts = F.lag(ts_col).over(w)
     is_new = F.when(
         prev_ts.isNull()
-        | (F.unix_timestamp(ts_col) - F.unix_timestamp(prev_ts) > gap_seconds),
+        | (F.unix_micros(ts_col) - F.unix_micros(prev_ts) > gap_seconds * 1_000_000),
         F.lit(1),
     ).otherwise(F.lit(0))
     return df.withColumn("_new_session", is_new).withColumn(

@@ -13,7 +13,7 @@ shuffle carries only |keys|·S rows.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -33,22 +33,6 @@ def salted_count(
     return partial.groupBy(*key_cols).agg(
         F.sum("_partial").cast("bigint").alias(count_alias)
     )
-
-
-def salted_sum(
-    df: DataFrame,
-    key_cols: list[str],
-    value: Column | str,
-    salt_buckets: int = 16,
-    sum_alias: str = "sum",
-) -> DataFrame:
-    """sum(value) per key via two-phase salted aggregation."""
-    v = F.col(value) if isinstance(value, str) else value
-    salted = df.withColumn("_v", v).withColumn(
-        "_salt", (F.rand(seed=42) * salt_buckets).cast("int")
-    )
-    partial = salted.groupBy(*key_cols, "_salt").agg(F.sum("_v").alias("_partial"))
-    return partial.groupBy(*key_cols).agg(F.sum("_partial").alias(sum_alias))
 
 
 def salted_join(

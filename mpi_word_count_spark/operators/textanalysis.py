@@ -856,48 +856,6 @@ def seq_length_histogram(
 
 
 
-def make_doc_chunks_udtf(chunk_size: int = 120, stride: int = 60):
-    """Python-UDTF twin of doc_chunks — completes the SURVEY §2.8
-    UDF-surface set (scalar pandas_udf / GROUPED_AGG UDAF /
-    applyInPandas / mapInPandas / UDTF) with the lateral-join API:
-
-        spark.udtf.register("doc_chunks_udtf", make_doc_chunks_udtf())
-        SELECT d.doc_id, c.* FROM docs d,
-               LATERAL doc_chunks_udtf(d._toks) c
-
-    IDENTICAL contract to the builtin (starts 0, stride, … while
-    < n_tokens; short final chunk; md5 chunk identity; empty docs emit
-    nothing) — equality is locked in tests/test_similarity_text.py.
-    Tokenization stays JVM-side (the UDTF takes the token ARRAY), so
-    the two paths share one tokenizer. The BUILTIN is the production
-    path: sequence→transform→explode runs in codegen at scan speed,
-    while the UDTF pays a Python worker round-trip per partition —
-    registered queries use the builtin; the UDTF exists for users who
-    need imperative per-row expansion Spark expressions can't say.
-    """
-    import hashlib
-
-    from pyspark.sql.functions import udtf
-
-    @udtf(
-        returnType="chunk_id bigint, n_chunk_tokens bigint, chunk_hash string"
-    )
-    class DocChunksUDTF:
-        def eval(self, toks):
-            if not toks:
-                return
-            n = len(toks)
-            for c, s in enumerate(range(0, n, stride)):
-                window = toks[s : s + chunk_size]
-                yield (
-                    c,
-                    min(chunk_size, n - s),
-                    hashlib.md5(" ".join(window).encode()).hexdigest(),
-                )
-
-    return DocChunksUDTF
-
-
 def unigram_logprob(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:

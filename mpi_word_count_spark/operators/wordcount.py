@@ -95,18 +95,6 @@ def word_count_dir(
     return word_count_df(lines, col="value", delimiters=delimiters, ordered=ordered)
 
 
-def word_count_per_file(
-    spark: SparkSession,
-    path: str,
-    delimiters: str = DEFAULT_DELIMITERS,
-) -> DataFrame:
-    """Per-file word counts: DataFrame[file, word, count] — exposes
-    the lineage the reference tracks via its sorted file array."""
-    lines = spark.read.text(path).withColumn("file", F.input_file_name())
-    tokens = tokenize(lines, col="value", delimiters=delimiters, keep=["file"])
-    return tokens.groupBy("file", "word").agg(F.count(F.lit(1)).alias("count"))
-
-
 def word_count_compat(
     df: DataFrame,
     col: str = "text",

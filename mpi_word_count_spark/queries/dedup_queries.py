@@ -41,7 +41,7 @@ SIMHASH_MAX_HAMMING = 8
 COSINE_DUP_THRESHOLD = 0.4
 
 # Shared oracle fragments: tokenization + distinct 3-gram shingles,
-# identical to operators/dedup.py tokens_col/shingles_col.
+# identical to operators/dedup.py tokens_col/shingles_from_tokens.
 _SQL_SHINGLES = f"""
     toks AS (
         SELECT doc_id,
@@ -299,8 +299,7 @@ def q_simhash_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     pigeonhole guarantee (any pair within hamming ≤ h agrees on one of
     h+1 fingerprint chunks) makes the banded plan output-identical, so
     hash-matching it against the exhaustive comparison re-proves the
-    equivalence every round. The O(n²) kernel survives only as
-    operators/dedup.simhash_dup_pairs for tests."""
+    equivalence every round."""
     return simhash_banded_pairs(
         table(spark, "documents", sf_dir), max_hamming=SIMHASH_MAX_HAMMING
     )
@@ -397,9 +396,7 @@ def q_embedding_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Primary embedding-dedup plan = banded hyperplane LSH (equi-join
     candidate generation, the shape that survives 100 TB). Recall < 1
     by construction — the oracle replicates the identical deterministic
-    bucketing, so the candidate set itself is hash-verified. The exact
-    all-pairs kernel stays available as
-    operators/dedup.embedding_dup_pairs for verification roles."""
+    bucketing, so the candidate set itself is hash-verified."""
     return embedding_dup_pairs_banded(
         table(spark, "embeddings", sf_dir), threshold=COSINE_DUP_THRESHOLD
     )

@@ -174,55 +174,6 @@ def q_user_erasure_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def post_delete_orphans(
-    customer_after: DataFrame,
-    orders_after: DataFrame,
-    lineitem_after: DataFrame,
-    req: DataFrame,
-) -> DataFrame:
-    """Independent post-state audit: given the tables AS MATERIALIZED
-    after an (externally executed, possibly buggy) erasure cascade and
-    the request keys, count surviving rows that still reference an
-    erased entity. The registered query's orphan columns verify the
-    delete-and-audit-in-one-plan invariant; THIS probe is what runs
-    the morning after against the rewritten tables — it catches a
-    cascade that deleted customers but missed their orders (locked on
-    a deliberately broken post-state in tests/test_governance.py).
-    Request keys broadcast; each table is probed with one semi join."""
-    o_orphans = orders_after.join(
-        F.broadcast(req),
-        orders_after.o_custkey == req.c_custkey,
-        "left_semi",
-    )
-    # lineitems whose parent order no longer exists (the cascade
-    # dropped the order but left the lines)
-    l_orphans = lineitem_after.join(
-        orders_after.select("o_orderkey"),
-        lineitem_after.l_orderkey == orders_after.o_orderkey,
-        "left_anti",
-    )
-    c_orphans = customer_after.join(
-        F.broadcast(req),
-        customer_after.c_custkey == req.c_custkey,
-        "left_semi",
-    )
-    return (
-        c_orphans.agg(F.count(F.lit(1)).alias("orphans"))
-        .select(F.lit("customer").alias("table_name"), "orphans")
-        .unionByName(
-            l_orphans.agg(F.count(F.lit(1)).alias("orphans")).select(
-                F.lit("lineitem").alias("table_name"), "orphans"
-            )
-        )
-        .unionByName(
-            o_orphans.agg(F.count(F.lit(1)).alias("orphans")).select(
-                F.lit("orders").alias("table_name"), "orphans"
-            )
-        )
-        .orderBy("table_name")
-    )
-
-
 # ---------------------------------------------------------------------------
 # HTML boilerplate stripping
 # ---------------------------------------------------------------------------

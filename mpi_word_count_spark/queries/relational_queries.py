@@ -777,10 +777,8 @@ def user_event_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle="""
     WITH gaps AS (
         SELECT user_id, event_id, ts,
-               -- floor(epoch) matches Spark's whole-second
-               -- unix_timestamp exactly at gap boundaries
                CASE WHEN lag(ts) OVER w IS NULL
-                         OR floor(epoch(ts)) - floor(epoch(lag(ts) OVER w)) > 600
+                         OR epoch_us(ts) - epoch_us(lag(ts) OVER w) > 600000000
                     THEN 1 ELSE 0 END AS is_new
         FROM events
         WINDOW w AS (PARTITION BY user_id ORDER BY ts ASC, event_id ASC)

@@ -189,37 +189,6 @@ def q_streaming_stateful_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_to_completion(stateful_user_totals(ev), "update")
 
 
-def q_streaming_stateful_totals_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-user running totals through transformWithStateInPandas (the
-    Spark 4 stateful API) on the RocksDB state-store provider — the
-    production state backend. Same oracle as the applyInPandasWithState
-    twin; the provider conf is restored after the run.
-
-    NOT registered for the driver gate: the API's Python driver worker
-    imports google.protobuf, which this container lacks (and installs
-    are off) — tests/test_streaming.py runs it with a skip-if-
-    unavailable guard so the code path is exercised wherever protobuf
-    exists. The applyInPandasWithState twin (streaming_stateful_totals)
-    carries the registered correctness row."""
-    from mpi_word_count_spark.streaming.queries import stateful_user_totals_tws
-
-    key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(
-        key,
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    try:
-        ev = stream_table(spark, "events", sf_dir)
-        return run_to_completion(stateful_user_totals_tws(ev), "update")
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
-
-
 @register(
     "streaming_dedup",
     oracle="SELECT DISTINCT md5(text) AS content_hash FROM documents",

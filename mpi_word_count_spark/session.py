@@ -1,7 +1,9 @@
 """SparkSession factory tuned for this engine.
 
-Local-mode defaults target the test container (local[32], 128 GiB);
-every knob is chosen to also be the right *shape* at cluster scale:
+Local-mode defaults come from the host (see host_defaults): one task
+slot per core this process may run on, and a driver heap of 3/8 of
+physical RAM. Every knob is chosen to also be the right *shape* at
+cluster scale:
 AQE on (runtime partition coalescing + skew-join handling), shuffle
 partitions sized to parallelism, Arrow enabled for the Pandas-UDF
 paths, UTC session timezone so results compare bit-for-bit against
@@ -15,6 +17,19 @@ import os
 from pyspark.sql import SparkSession
 
 
+def host_defaults() -> tuple[int, str]:
+    """(cores, driver heap) for a local session on this host.
+
+    Cores are the CPUs this process may be scheduled on (cpuset-aware,
+    unlike os.cpu_count). The heap is 3/8 of physical RAM, the share the
+    old fixed 48g default took of the 128 GiB host it was tuned for; in
+    local mode the driver heap also holds every executor's blocks, and
+    the rest is left to the Python workers and the OS."""
+    cpus = len(os.sched_getaffinity(0))
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return cpus, f"{max(ram * 3 // 8 >> 20, 512)}m"
+
+
 def get_spark(
     app_name: str = "mpi_word_count_spark",
     master: str | None = None,
@@ -24,13 +39,14 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) a SparkSession with engine defaults.
 
-    Env overrides: SPARK_GRAFT_CPUS (core count for local master),
-    SPARK_GRAFT_DRIVER_MEM (driver heap).
+    Env overrides of the host_defaults(): SPARK_GRAFT_CPUS (core count
+    for the local master), SPARK_GRAFT_DRIVER_MEM (driver heap).
     """
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    host_cpus, host_heap = host_defaults()
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", host_cpus))
     master = master or f"local[{cpus}]"
     shuffle_partitions = shuffle_partitions or max(cpus, 8)
-    driver_memory = driver_memory or os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g")
+    driver_memory = driver_memory or os.environ.get("SPARK_GRAFT_DRIVER_MEM", host_heap)
 
     builder = (
         SparkSession.builder.appName(app_name)

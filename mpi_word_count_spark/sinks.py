@@ -55,35 +55,6 @@ def show_console(df: DataFrame, limit: int = 0) -> list[str]:
     return lines
 
 
-def observed_write(
-    df: DataFrame,
-    metrics: dict[str, "object"],
-    path: str | None = None,
-) -> dict[str, object]:
-    """Metrics sink, Spark-native form (O6 modernized): attach an
-    Observation to the plan so row counts / sums / mins are collected
-    DURING the one execution — no second pass over the data, which is
-    the only affordable way to audit a 100 TB write. The reference's
-    equivalent is the wall-clock line appended to timing.log
-    (word_count_mpi.c:434-437); observe() generalizes it to arbitrary
-    aggregate metrics riding the same job.
-
-    `metrics` maps name -> aggregate Column (e.g. F.count, F.sum).
-    Executes via parquet write when `path` is given, else a noop-format
-    write; returns the observed metric values.
-    """
-    from pyspark.sql import Observation
-
-    obs = Observation()
-    named = [col.alias(name) for name, col in metrics.items()]
-    watched = df.observe(obs, *named)
-    if path is None:
-        watched.write.format("noop").mode("overwrite").save()
-    else:
-        watched.write.mode("overwrite").parquet(path)
-    return obs.get
-
-
 @contextmanager
 def timing_log(path: str = "timing.log", label: str = "query"):
     """Metrics sink (O6): append elapsed wall seconds, like the

@@ -168,23 +168,3 @@ def read_manifest_jsonl(spark, path: str, schema: str, version: int | None = Non
     if not files:
         return spark.createDataFrame([], schema)
     return spark.read.schema(schema).json(files)
-
-
-def vacuum_candidates(path: str, keep_versions: int = 1) -> list[str]:
-    """The janitor companion to time travel: data files on disk that
-    NO retained manifest references (aborted/failed attempts, or files
-    only reachable from snapshots older than the retention horizon)
-    are safe to delete — visibility was always manifest-resolved, so
-    removing them can never change any retained snapshot's contents.
-    Returns the file names; deletion is the caller's (audited) act."""
-    latest = read_manifest(path)
-    keep_from = max(1, latest["version"] - keep_versions + 1)
-    referenced: set[str] = set()
-    for v in range(keep_from, latest["version"] + 1):
-        referenced.update(f["file"] for f in read_manifest(path, v)["files"])
-    on_disk = {
-        f
-        for f in os.listdir(path)
-        if f.endswith(".jsonl") and not f.startswith("_")
-    }
-    return sorted(on_disk - referenced)

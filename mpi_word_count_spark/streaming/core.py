@@ -37,40 +37,6 @@ def stream_table(spark: SparkSession, name: str, sf_dir: str) -> DataFrame:
     return sdf
 
 
-def run_foreach_batch_parquet(
-    sdf: DataFrame,
-    path: str,
-    checkpoint_dir: str,
-    output_mode: str = "update",
-) -> None:
-    """Drive a finite streaming DataFrame into parquet through an
-    idempotent `foreachBatch` writer — the production sink pattern.
-
-    Exactly-once without a transactional sink: each micro-batch
-    OVERWRITES its own `batch_id=N` partition, so when Spark replays
-    an uncommitted batch after failure (same deterministic batch id,
-    tracked in the checkpoint WAL) the rewrite lands on the same path
-    instead of appending duplicates. Readers see the union of batch
-    partitions; in complete mode each batch carries the full result,
-    so readers take max(batch_id) instead.
-    """
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("overwrite").parquet(f"{path}/batch_id={batch_id}")
-
-    q = (
-        sdf.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode(output_mode)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        q.awaitTermination()
-
-
 def run_to_completion(
     sdf: DataFrame, output_mode: str = "complete"
 ) -> DataFrame:

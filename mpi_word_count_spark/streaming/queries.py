@@ -196,58 +196,6 @@ def stateful_user_totals(events: DataFrame) -> DataFrame:
     )
 
 
-def stateful_user_totals_tws(events: DataFrame) -> DataFrame:
-    """Spark 4-native twin of stateful_user_totals built on
-    transformWithStateInPandas (the successor stateful API): explicit
-    ValueState in the RocksDB state store, Arrow-batched per group.
-
-    transformWithState REQUIRES the RocksDB state-store provider —
-    which is also the provider you run at 100 TB (incremental
-    checkpointing, state larger than executor heap); callers set
-    spark.sql.streaming.stateStore.providerClass before starting.
-    Also demonstrates the richer surface the old API lacks: named
-    state variables, TTL, timers (unused here; the query is a pure
-    running aggregate so its state never expires).
-    """
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class UserTotals(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._totals = handle.getValueState("totals", "n long, v double")
-
-        def handleInputRows(self, key, rows, timerValues):
-            n, v = self._totals.get() if self._totals.exists() else (0, 0.0)
-            for pdf in rows:
-                n += len(pdf)
-                v += float(pdf["value"].sum())
-            self._totals.update((n, v))
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "n_events": [n],
-                    "total_value": [round(v, 2)],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return (
-        events.select("user_id", "value")
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            statefulProcessor=UserTotals(),
-            outputStructType="user_id long, n_events long, total_value double",
-            outputMode="Update",
-            timeMode="None",
-        )
-    )
-
-
 def streaming_dedup(docs: DataFrame) -> DataFrame:
     """Streaming exact dedup: first-seen wins per content hash.
     With event-time bounds use dropDuplicatesWithinWatermark so state
@@ -429,18 +377,6 @@ def streaming_embedding_dedup(
         .alias("status"),
         "n_collisions",
         "max_cosine",
-    )
-
-
-def streaming_dedup_within_watermark(
-    events: DataFrame, watermark: str = "1 hour"
-) -> DataFrame:
-    """Keyed dedup with bounded state: duplicates of (user_id,
-    event_type) within the watermark horizon are dropped, state
-    evicted as the watermark advances — the only dedup shape that
-    runs forever at scale."""
-    return events.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
-        ["user_id", "event_type"]
     )
 
 

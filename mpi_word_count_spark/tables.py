@@ -90,9 +90,3 @@ def table(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> DataF
     if name == "events":
         df = normalize_events_ts(df)
     return df
-
-
-def register_views(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> None:
-    """Register every fixture table as a temp view for spark.sql()."""
-    for name in TABLES:
-        table(spark, name, sf_dir).createOrReplaceTempView(name)

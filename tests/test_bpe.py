@@ -171,7 +171,6 @@ def test_byte_bpe_roundtrip_random_utf8():
 
     from mpi_word_count_spark.operators.bpe import (
         BYTE_TO_CHAR,
-        byte_decode,
         byte_symbols,
         greedy_merge,
         train_bpe,
@@ -180,6 +179,12 @@ def test_byte_bpe_roundtrip_random_utf8():
     # a bijective remap covering all 256 bytes is the precondition
     assert sorted(BYTE_TO_CHAR) == list(range(256))
     assert len(set(BYTE_TO_CHAR.values())) == 256
+    char_to_byte = {c: b for b, c in BYTE_TO_CHAR.items()}
+
+    def byte_decode(symbols: list[str]) -> str:
+        # the inverse of byte-level BPE: concatenate symbols, unmap
+        # each char to its byte, UTF-8 decode
+        return bytes(char_to_byte[ch] for ch in "".join(symbols)).decode("utf-8")
 
     @settings(max_examples=200, deadline=None)
     @given(st.text(min_size=1, max_size=40))

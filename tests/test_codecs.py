@@ -10,6 +10,7 @@ import numpy as np
 import pytest
 
 from mpi_word_count_spark.functions import codecs
+from tests import codec_fixtures as fx
 from mpi_word_count_spark.operators.multimodal import decode_media
 
 
@@ -52,7 +53,7 @@ def test_bmp_roundtrip_and_dimensions():
 
 def test_pgm_roundtrip_honors_comments():
     img = _gradient(4, 5)
-    data = codecs.encode_pgm(img)  # header includes a '#' comment
+    data = fx.encode_pgm(img)  # header includes a '#' comment
     out = codecs.decode_image(data)
     np.testing.assert_array_equal(out.astype(np.uint8), img)
     assert codecs.media_dimensions(data) == (5, 4, "pgm")
@@ -134,7 +135,7 @@ def test_real_png_bytes_through_spark_kernel(spark):
 
 
 def test_dhash_pixels_contract():
-    from mpi_word_count_spark.operators.multimodal import dhash_pixels
+    from tests.media_kernels import dhash_pixels
 
     img = _gradient(32, 48).astype(np.float32)
     bits = dhash_pixels(img)
@@ -156,10 +157,8 @@ def test_phash_decoded_media_finds_real_near_dups(spark):
     brightened copy must band-collide with its original via the same
     phash_dups join phash_media uses; an unrelated image must not;
     an undecodable payload is skipped, not fatal."""
-    from mpi_word_count_spark.operators.multimodal import (
-        phash_decoded_media,
-        phash_dups,
-    )
+    from mpi_word_count_spark.operators.multimodal import phash_dups
+    from tests.media_kernels import phash_decoded_media
 
     rng = np.random.default_rng(11)
     base = rng.integers(0, 200, size=(40, 40), dtype=np.uint8)
@@ -217,7 +216,7 @@ def test_bmp_pgm_roundtrip_property(img):
         codecs.decode_image(codecs.encode_bmp(img)).astype(np.uint8), img
     )
     np.testing.assert_array_equal(
-        codecs.decode_image(codecs.encode_pgm(img)).astype(np.uint8), img
+        codecs.decode_image(fx.encode_pgm(img)).astype(np.uint8), img
     )
 
 
@@ -306,7 +305,7 @@ def test_jpeg_unsupported_variants_raise_not_implemented():
     # non-interleaved multi-scan DECODES since round 8; a 3-component
     # frame whose only scan covers component 1 is malformed (two
     # components never coded), not env-bound
-    color = codecs.encode_jpeg_rgb(np.full((8, 8, 3), 99, np.uint8))
+    color = fx.encode_jpeg_rgb(np.full((8, 8, 3), 99, np.uint8))
     j = color.index(b"\xff\xda")
     single_sos = b"\xff\xda" + (8).to_bytes(2, "big") + bytes([1, 1, 0x00, 0, 63, 0])
     old_sos_len = 2 + int.from_bytes(color[j + 2 : j + 4], "big")
@@ -333,20 +332,20 @@ def test_jpeg_color_roundtrip_property(data):
     quant = codecs._jpeg_quant_for_quality(98)
     bound = 2.0 * float(quant.sum()) / 8.0 + 1.0
     expected = rgb.astype(np.float64).mean(axis=2)
-    dec = codecs.decode_image(codecs.encode_jpeg_rgb(rgb, quality=98))
+    dec = codecs.decode_image(fx.encode_jpeg_rgb(rgb, quality=98))
     assert dec.shape == (h, w)
     assert float(np.abs(dec - expected).max()) <= bound
     gray = rgb[:, :, :1].repeat(3, axis=2)  # chroma-constant input
     dec420 = codecs.decode_image(
-        codecs.encode_jpeg_rgb(gray, quality=98, subsample="420")
+        fx.encode_jpeg_rgb(gray, quality=98, subsample="420")
     )
     assert float(np.abs(dec420 - gray[:, :, 0]).max()) <= bound
     ri = data.draw(st.integers(1, 4))
     with_rst = codecs.decode_image(
-        codecs.encode_jpeg_rgb(rgb, quality=98, restart_interval=ri)
+        fx.encode_jpeg_rgb(rgb, quality=98, restart_interval=ri)
     )
     np.testing.assert_array_equal(
-        with_rst, codecs.decode_image(codecs.encode_jpeg_rgb(rgb, quality=98))
+        with_rst, codecs.decode_image(fx.encode_jpeg_rgb(rgb, quality=98))
     )
 
 
@@ -363,10 +362,10 @@ def test_jpeg_color_420_smooth_image():
         axis=2,
     ).astype(np.uint8)
     expected = rgb.astype(np.float64).mean(axis=2)
-    dec = codecs.decode_image(codecs.encode_jpeg_rgb(rgb, 95, "420"))
+    dec = codecs.decode_image(fx.encode_jpeg_rgb(rgb, 95, "420"))
     assert dec.shape == (24, 40)
     assert float(np.abs(dec - expected).mean()) < 2.0
-    w, h, kind = codecs.media_dimensions(codecs.encode_jpeg_rgb(rgb, 95, "420"))
+    w, h, kind = codecs.media_dimensions(fx.encode_jpeg_rgb(rgb, 95, "420"))
     assert (w, h, kind) == (40, 24, "jpeg")
 
 
@@ -387,10 +386,8 @@ def test_jpeg_through_spark_phash_kernel(spark):
     """The real-decode Spark path now covers JPEG: a grayscale JPEG
     near-duplicate pair is found by phash_decoded_media + phash_dups,
     and the decode counters confirm nothing was skipped."""
-    from mpi_word_count_spark.operators.multimodal import (
-        phash_decoded_media,
-        phash_dups,
-    )
+    from mpi_word_count_spark.operators.multimodal import phash_dups
+    from tests.media_kernels import phash_decoded_media
 
     y, x = np.mgrid[0:32, 0:32]
     img = ((y * 5 + x * 11) % 190 + 25).astype(np.uint8)
@@ -449,7 +446,7 @@ def test_phash_decoded_media_survives_truncated_payloads(spark):
     """The 'never fail the task' contract under the REAL failure
     modes of a crawl: truncation (struct.error inside the codec) and
     bit corruption (zlib.error) — both must be skipped per item."""
-    from mpi_word_count_spark.operators.multimodal import phash_decoded_media
+    from tests.media_kernels import phash_decoded_media
 
     img = _gradient(16, 16)
     png = codecs.encode_png(img)
@@ -470,10 +467,8 @@ def test_extract_features_handles_audio_payloads(spark):
     """fake=False decode returns 1-D for WAV; the pooled-feature and
     resize kernels must not assume 2-D."""
     from pyspark.sql import functions as F
-    from mpi_word_count_spark.operators.multimodal import (
-        extract_features,
-        resize_stub,
-    )
+    from mpi_word_count_spark.operators.multimodal import extract_features
+    from tests.media_kernels import resize_stub
 
     wav = codecs.encode_wav(np.linspace(-0.5, 0.5, 400).astype(np.float32))
     png = codecs.encode_png(_gradient(8, 8))
@@ -499,11 +494,8 @@ def test_feature_and_resize_skip_undecodable_and_count(spark):
     per-item skip contract with fake=False, and all three expose the
     drop rate via decode_stats accumulators (an all-skipped corpus
     must not read as an empty-but-healthy result)."""
-    from mpi_word_count_spark.operators.multimodal import (
-        extract_features,
-        phash_decoded_media,
-        resize_stub,
-    )
+    from mpi_word_count_spark.operators.multimodal import extract_features
+    from tests.media_kernels import phash_decoded_media, resize_stub
 
     png = codecs.encode_png(_gradient(8, 8))
     rows = [
@@ -706,13 +698,13 @@ def test_gif_animation_compositing():
     rng = np.random.default_rng(3)
     # full-frame animation round-trips losslessly
     frames = [rng.integers(0, 256, (9, 13), dtype=np.uint8) for _ in range(4)]
-    out = codecs._decode_gif_frames(codecs.encode_gif_frames(frames))
+    out = codecs._decode_gif_frames(fx.encode_gif_frames(frames))
     assert len(out) == 4
     for d, s in zip(out, frames):
         np.testing.assert_array_equal(d.astype(np.uint8), s)
     # single-image decoder returns the first frame of an animation
     np.testing.assert_array_equal(
-        codecs.decode_image(codecs.encode_gif_frames(frames)).astype(np.uint8),
+        codecs.decode_image(fx.encode_gif_frames(frames)).astype(np.uint8),
         frames[0],
     )
 
@@ -720,7 +712,7 @@ def test_gif_animation_compositing():
     # partial frame over retained base (disposal 0 leaves canvas)
     patch = np.full((4, 4), 200, dtype=np.uint8)
     f = codecs._decode_gif_frames(
-        codecs.encode_gif_frames(
+        fx.encode_gif_frames(
             [base, patch], offsets=[(0, 0), (3, 3)], screen=(10, 10)
         )
     )
@@ -729,7 +721,7 @@ def test_gif_animation_compositing():
     hole = np.full((4, 4), 50, dtype=np.uint8)
     hole[0, 0] = 42
     f = codecs._decode_gif_frames(
-        codecs.encode_gif_frames(
+        fx.encode_gif_frames(
             [base, hole], offsets=[(0, 0), (2, 2)], transparent=42, screen=(10, 10)
         )
     )
@@ -738,7 +730,7 @@ def test_gif_animation_compositing():
     p1 = np.full((3, 3), 200, dtype=np.uint8)
     p2 = np.full((3, 3), 30, dtype=np.uint8)
     f = codecs._decode_gif_frames(
-        codecs.encode_gif_frames(
+        fx.encode_gif_frames(
             [base, p1, p2],
             offsets=[(0, 0), (1, 1), (5, 5)],
             disposals=[0, 3, 0],
@@ -748,7 +740,7 @@ def test_gif_animation_compositing():
     assert f[1][1, 1] == 200 and f[2][1, 1] == 100 and f[2][5, 5] == 30
     # disposal 2 restores background in the frame's rect
     f = codecs._decode_gif_frames(
-        codecs.encode_gif_frames(
+        fx.encode_gif_frames(
             [base, p1, p2],
             offsets=[(0, 0), (1, 1), (5, 5)],
             disposals=[0, 2, 0],
@@ -764,7 +756,7 @@ def test_gif_animation_through_video_frame_stats(spark):
 
     rng = np.random.default_rng(8)
     frames = [rng.integers(0, 256, (8, 8), dtype=np.uint8) for _ in range(5)]
-    gif = codecs.encode_gif_frames(frames)
+    gif = fx.encode_gif_frames(frames)
     avi = codecs.encode_avi_dib(frames)
     media = spark.createDataFrame(
         [(1, bytearray(gif)), (2, bytearray(avi))], "media_id long, media binary"
@@ -783,7 +775,7 @@ def test_decode_media_video_first_frame():
     np.testing.assert_array_equal(
         decode_media(bytes(avi), "video/avi").astype(np.uint8), frames[0]
     )
-    gif = codecs.encode_gif_frames(frames)
+    gif = fx.encode_gif_frames(frames)
     np.testing.assert_array_equal(
         decode_media(bytes(gif), "image/gif").astype(np.uint8), frames[0]
     )
@@ -881,7 +873,7 @@ def test_gif_animation_roundtrip_property(data, img):
         ).reshape(img.shape)
         for i in range(n - 1)
     ]
-    out = codecs._decode_gif_frames(codecs.encode_gif_frames(frames))
+    out = codecs._decode_gif_frames(fx.encode_gif_frames(frames))
     assert len(out) == n
     for d, s in zip(out, frames):
         np.testing.assert_array_equal(d.astype(np.uint8), s)
@@ -985,7 +977,7 @@ def test_tiff_packbits_strip():
     img = np.repeat(rng.integers(0, 256, (9, 4), dtype=np.uint8), 5, axis=1)
     t = bytearray(codecs.encode_tiff(img))
     pixel_off = 8 + 2 + 8 * 12 + 4
-    comp = codecs._packbits_encode(img.tobytes())
+    comp = fx.packbits_encode(img.tobytes())
 
     def patch_tag(buf, tag, value):
         idx = buf.find(struct.pack("<H", tag), 8)
@@ -1005,7 +997,7 @@ def test_tiff_packbits_strip():
 @settings(max_examples=60, deadline=None)
 @given(st.binary(min_size=0, max_size=600))
 def test_packbits_roundtrip_property(payload):
-    assert codecs._packbits_decode(codecs._packbits_encode(payload)) == payload
+    assert codecs._packbits_decode(fx.packbits_encode(payload)) == payload
 
 
 # --- ADVICE r7 codec regressions --------------------------------------------
@@ -1134,7 +1126,7 @@ def test_gif_first_frame_composites_onto_logical_screen():
     _decode_gif_frames(data)[0] (ADVICE r7)."""
     small = np.full((3, 4), 200, dtype=np.uint8)
     big = np.zeros((8, 10), dtype=np.uint8)
-    gif = codecs.encode_gif_frames(
+    gif = fx.encode_gif_frames(
         [small, big], offsets=[(5, 2), (0, 0)], screen=(10, 8), background=7
     )
     w, h, kind = codecs.media_dimensions(gif)
@@ -1167,7 +1159,7 @@ def test_tiff_lzw_strip_decodes():
     img = np.repeat(rng.integers(0, 256, (11, 5), dtype=np.uint8), 4, axis=1)
     t = bytearray(codecs.encode_tiff(img))
     pixel_off = 8 + 2 + 8 * 12 + 4
-    comp = codecs._tiff_lzw_encode(img.tobytes())
+    comp = fx.tiff_lzw_encode(img.tobytes())
     _patch_tiff_tag(t, 259, 5)
     _patch_tiff_tag(t, 279, len(comp))
     data = bytes(t[:pixel_off]) + comp
@@ -1187,7 +1179,7 @@ def test_tiff_lzw_multi_strip_independent_streams():
     rng = np.random.default_rng(8)
     img = rng.integers(0, 256, (6, 8), dtype=np.uint8)
     top, bottom = img[:3].tobytes(), img[3:].tobytes()
-    s1, s2 = codecs._tiff_lzw_encode(top), codecs._tiff_lzw_encode(bottom)
+    s1, s2 = fx.tiff_lzw_encode(top), fx.tiff_lzw_encode(bottom)
     entries = [
         (256, 4, 1, 8),
         (257, 4, 1, 6),
@@ -1227,7 +1219,7 @@ def test_tiff_lzw_horizontal_predictor():
     rng = np.random.default_rng(9)
     img = rng.integers(0, 256, (5, 12), dtype=np.uint8)
     deltas = np.diff(img.astype(np.int16), axis=1, prepend=0) % 256
-    comp = codecs._tiff_lzw_encode(deltas.astype(np.uint8).tobytes())
+    comp = fx.tiff_lzw_encode(deltas.astype(np.uint8).tobytes())
     t = bytearray(codecs.encode_tiff(img))
     pixel_off = 8 + 2 + 8 * 12 + 4
     _patch_tiff_tag(t, 259, 5)
@@ -1264,14 +1256,14 @@ def test_tiff_lzw_horizontal_predictor():
 @settings(max_examples=60, deadline=None)
 @given(st.binary(min_size=0, max_size=800))
 def test_tiff_lzw_roundtrip_property(payload):
-    assert codecs._tiff_lzw_decode(codecs._tiff_lzw_encode(payload)) == payload
+    assert codecs._tiff_lzw_decode(fx.tiff_lzw_encode(payload)) == payload
 
 
 def test_tiff_lzw_width_bump_and_reset():
     """Cross the 511-entry EarlyChange boundary and the 4094-entry
     table reset: a long non-repeating byte sequence forces both."""
     payload = bytes(range(256)) * 40  # 10,240 bytes, many new digrams
-    assert codecs._tiff_lzw_decode(codecs._tiff_lzw_encode(payload)) == payload
+    assert codecs._tiff_lzw_decode(fx.tiff_lzw_encode(payload)) == payload
 
 
 # --- MP4 stsd/avc1 codec-id metadata ----------------------------------------
@@ -1334,9 +1326,9 @@ def test_progressive_jpeg_equals_baseline_decode():
 def test_progressive_jpeg_color_and_quality_sweep():
     rng = np.random.default_rng(22)
     img3 = rng.integers(0, 256, (24, 17, 3), dtype=np.uint8)
-    base3 = codecs.decode_image(codecs.encode_jpeg_rgb(img3, quality=85))
+    base3 = codecs.decode_image(fx.encode_jpeg_rgb(img3, quality=85))
     for successive in (False, True):
-        prog3 = codecs.encode_jpeg_rgb_progressive(
+        prog3 = fx.encode_jpeg_rgb_progressive(
             img3, quality=85, successive=successive
         )
         np.testing.assert_array_equal(codecs.decode_image(prog3), base3)
@@ -1386,10 +1378,10 @@ def test_multiscan_jpeg_equals_interleaved_decode():
         img3 = rng.integers(0, 256, (*shape, 3), dtype=np.uint8)
         for sub in ("444", "420"):
             base = codecs.decode_image(
-                codecs.encode_jpeg_rgb(img3, quality=85, subsample=sub)
+                fx.encode_jpeg_rgb(img3, quality=85, subsample=sub)
             )
             for ri in (0, 3):
-                ms = codecs.encode_jpeg_rgb_multiscan(
+                ms = fx.encode_jpeg_rgb_multiscan(
                     img3, quality=85, subsample=sub, restart_interval=ri
                 )
                 np.testing.assert_array_equal(codecs.decode_image(ms), base)
@@ -1397,7 +1389,7 @@ def test_multiscan_jpeg_equals_interleaved_decode():
 
 def test_multiscan_jpeg_malformed():
     img3 = np.arange(8 * 8 * 3, dtype=np.uint8).reshape(8, 8, 3)
-    ms = codecs.encode_jpeg_rgb_multiscan(img3)
+    ms = fx.encode_jpeg_rgb_multiscan(img3)
     # dropping the last scan leaves a component undecoded
     last_sos = ms.rfind(b"\xff\xda")
     with pytest.raises(ValueError, match="missing component"):
@@ -1422,7 +1414,7 @@ def test_multiscan_jpeg_non_integer_sampling_ratio():
     a non-integer hmax/h ratio is NotImplementedError, never a
     mis-sized plane or broadcast crash."""
     img3 = np.arange(16 * 16 * 3, dtype=np.uint8).reshape(16, 16, 3) % 256
-    ms = bytearray(codecs.encode_jpeg_rgb_multiscan(img3))
+    ms = bytearray(fx.encode_jpeg_rgb_multiscan(img3))
     sof = ms.find(b"\xff\xc0")
     assert sof > 0
     # component spec starts at sof+2(marker)+2(len)+1(prec)+4(dims)+1(Nf)
@@ -1445,7 +1437,7 @@ def test_tiff_tiled_roundtrip_matrix():
         img = rng.integers(0, 256, shape, dtype=np.uint8)
         for comp in (1, 5, 8, 32773):
             for pred in (1, 2):
-                t = codecs.encode_tiff_tiled(
+                t = fx.encode_tiff_tiled(
                     img, 16, 16, compression=comp, predictor=pred
                 )
                 assert codecs.media_dimensions(t) == (
@@ -1459,7 +1451,7 @@ def test_tiff_tiled_roundtrip_matrix():
 def test_tiff_tiled_malformed():
     rng = np.random.default_rng(42)
     img = rng.integers(0, 256, (40, 40), dtype=np.uint8)
-    t = codecs.encode_tiff_tiled(img, compression=5)
+    t = fx.encode_tiff_tiled(img, compression=5)
     with pytest.raises(ValueError):
         codecs.decode_image(t[:-10])  # truncated tile stream
     # non-multiple-of-16 tile dims are malformed per §15
@@ -1473,7 +1465,7 @@ def test_tiff_tiled_malformed():
 @settings(max_examples=40, deadline=None)
 @given(img=_uint8_images(max_h=20, max_w=20), comp=st.sampled_from([1, 5, 32773]))
 def test_tiff_tiled_roundtrip_property(img, comp):
-    t = codecs.encode_tiff_tiled(img, compression=comp, predictor=2)
+    t = fx.encode_tiff_tiled(img, compression=comp, predictor=2)
     np.testing.assert_array_equal(
         codecs.decode_image(t).astype(np.uint8), img
     )
@@ -1616,7 +1608,7 @@ def test_tiff_jpeg_malformed_and_unsupported():
         codecs.decode_image(bytes(bad))
     # tiled + compression 7 is NotImplementedError, not silence:
     # craft by patching a tiled TIFF's compression tag to 7
-    tiled = bytearray(codecs.encode_tiff_tiled(img, 16, 16, compression=1))
+    tiled = bytearray(fx.encode_tiff_tiled(img, 16, 16, compression=1))
     # find the compression IFD entry (tag 259, LE) and set value to 7
     i = tiled.find(struct.pack("<HH", 259, 3))
     assert i > 0
@@ -1631,7 +1623,7 @@ def test_tiff_jpeg_color_strip_under_spp1_rejected():
     vstack an RGB-shaped array into the grayscale pipeline."""
     img = np.arange(16 * 16, dtype=np.uint8).reshape(16, 16)
     t = bytearray(codecs.encode_tiff_jpeg(img, rows_per_strip=16))
-    color = codecs.encode_jpeg_rgb(np.dstack([img, img, img]))
+    color = fx.encode_jpeg_rgb(np.dstack([img, img, img]))
     # single-strip layout: the strip is the file tail and tags 273/279
     # hold inline LONG values — splice the color stream in and patch
     # StripByteCounts

@@ -52,34 +52,6 @@ def test_timing_log(tmp_path):
     assert content.startswith("unit: ") and content.endswith(" s\n")
 
 
-def test_observed_write_metrics(spark, tmp_path):
-    from pyspark.sql import functions as F
-
-    from mpi_word_count_spark.operators.wordcount import word_count_df
-    from mpi_word_count_spark.sinks import observed_write
-    from mpi_word_count_spark.tables import table
-    from tests.conftest import SF_DIR
-
-    wc = word_count_df(table(spark, "documents", SF_DIR), col="text")
-    out = str(tmp_path / "observed")
-    got = observed_write(
-        wc,
-        {
-            "n_words": F.count(F.lit(1)),
-            "total_count": F.sum("count"),
-            "max_count": F.max("count"),
-        },
-        path=out,
-    )
-    # the metrics observed in-flight equal a separate aggregation pass
-    want = wc.agg(
-        F.count(F.lit(1)), F.sum("count"), F.max("count")
-    ).first()
-    assert (got["n_words"], got["total_count"], got["max_count"]) == tuple(want)
-    # and the write itself landed intact
-    assert spark.read.parquet(out).count() == got["n_words"]
-
-
 def test_cli_main(tmp_path):
     """The reference's user surface (word_count_mpi.c:25-56): --path in,
     csv_results.csv + timing.log out, console format, --compat mode."""
@@ -169,3 +141,18 @@ def test_bench_stdout_line_contract():
         assert parsed["n_queries"] == n
         # nothing list-sized may ride on the stdout line
         assert parsed["queries"] == {"see": "BENCH_queries.json"}
+
+
+def test_session_defaults_come_from_the_host(monkeypatch):
+    """Without env overrides the local session takes the host's usable
+    cores and 3/8 of its physical RAM as driver heap (no JVM needed)."""
+    from mpi_word_count_spark import session
+
+    pages = {"SC_PAGE_SIZE": 4096, "SC_PHYS_PAGES": (16 << 30) // 4096}
+    monkeypatch.setattr(session.os, "sched_getaffinity", lambda pid: {0, 1, 2})
+    monkeypatch.setattr(session.os, "sysconf", lambda name: pages[name])
+    assert session.host_defaults() == (3, "6144m")
+    pages["SC_PHYS_PAGES"] = (128 << 30) // 4096
+    assert session.host_defaults() == (3, "49152m")  # the old fixed 48g
+    pages["SC_PHYS_PAGES"] = (1 << 30) // 4096
+    assert session.host_defaults() == (3, "512m")  # floor on tiny hosts

@@ -4,12 +4,26 @@ elimination (SCALE.md evidence)."""
 from __future__ import annotations
 
 import io
+import os
 from contextlib import redirect_stdout
 
 from pyspark.sql import functions as F
 
+from mpi_word_count_spark.operators.layout import _SPREAD_ROUNDS
 from mpi_word_count_spark.tables import table
 from tests.conftest import SF_DIR
+
+
+def py_morton(x: int, y: int) -> int:
+    """Python reference of morton_key_sql."""
+
+    def spread(v: int) -> int:
+        v &= 0xFFFF
+        for shift, mask in _SPREAD_ROUNDS:
+            v = (v | (v << shift)) & mask
+        return v
+
+    return spread(x) | (spread(y) << 1)
 
 
 def _roundtrip(spark, df, tmp_path, fmt, **read_opts):
@@ -133,7 +147,7 @@ def test_synth_datasource_partitions_and_determinism(spark):
 
 
 def test_salted_agg_matches_plain(spark):
-    from mpi_word_count_spark.operators.skew import salted_count, salted_sum
+    from mpi_word_count_spark.operators.skew import salted_count
 
     df = spark.createDataFrame(
         [("a", 1.0)] * 50 + [("b", 2.0)] * 3, "k string, v double"
@@ -142,8 +156,6 @@ def test_salted_agg_matches_plain(spark):
              df.groupBy("k").agg(F.count(F.lit(1)).alias("count")).collect()}
     salted = {(r["k"], r["count"]) for r in salted_count(df, ["k"]).collect()}
     assert salted == plain == {("a", 50), ("b", 3)}
-    sums = {(r["k"], r["sum"]) for r in salted_sum(df, ["k"], "v").collect()}
-    assert sums == {("a", 50.0), ("b", 6.0)}
 
 
 def test_salted_agg_under_heavy_skew(spark):
@@ -174,7 +186,7 @@ def test_morton_key_three_way_parity(spark):
     reference — the property that makes the layout oracle-verifiable."""
     import duckdb
 
-    from mpi_word_count_spark.operators.layout import morton_key_sql, py_morton
+    from mpi_word_count_spark.operators.layout import morton_key_sql
 
     cases = [(0, 0), (1, 0), (0, 1), (255, 255), (170, 85), (65535, 65535), (12345, 54321)]
     sql = morton_key_sql("x", "y")
@@ -193,8 +205,6 @@ def test_zorder_aligned_box_is_contiguous_range():
     """The load-bearing locality property: an aligned 2^k × 2^k box is
     EXACTLY one contiguous zkey range — a range scan over the sorted
     layout touches nothing outside the box."""
-    from mpi_word_count_spark.operators.layout import py_morton
-
     for x0, y0, k in [(0, 0, 4), (16, 32, 4), (48, 16, 4), (8, 8, 3), (128, 64, 5)]:
         side = 1 << k
         keys = sorted(
@@ -207,18 +217,16 @@ def test_zorder_aligned_box_is_contiguous_range():
 
 def test_zorder_partition_pruning_on_2d_box(spark, tmp_path):
     """End to end: write events partitioned by zbucket, query a 2-D
-    box via the driver-enumerated bucket IN-list — the scan must carry
-    zbucket PartitionFilters (directory pruning) and return exactly
-    the rows a full-scan filter returns."""
+    box via the bucket IN-list enumerated over the box's tiles (bucket
+    ids are tiles because morton(x, y) >> 2k == morton(x >> k, y >> k))
+    — the scan must carry zbucket PartitionFilters (directory pruning)
+    and return exactly the rows a full-scan filter returns."""
     import contextlib
     import io
 
     from pyspark.sql import functions as F
 
-    from mpi_word_count_spark.operators.layout import (
-        zorder_box_buckets,
-        zorder_keys,
-    )
+    from mpi_word_count_spark.operators.layout import zorder_keys
     from mpi_word_count_spark.tables import table
     from tests.conftest import SF_DIR
 
@@ -234,7 +242,11 @@ def test_zorder_partition_pruning_on_2d_box(spark, tmp_path):
     # an UNALIGNED box spanning several tiles (fixture domain at
     # sf0.001: user buckets 0-14, days 1-30)
     x_lo, x_hi, y_lo, y_hi = 3, 12, 5, 25
-    buckets = zorder_box_buckets(x_lo, x_hi, y_lo, y_hi, tile_bits=4)
+    buckets = [
+        py_morton(xt, yt)
+        for xt in range(x_lo >> 4, (x_hi >> 4) + 1)
+        for yt in range(y_lo >> 4, (y_hi >> 4) + 1)
+    ]
     box = (
         F.col("xb").between(x_lo, x_hi) & F.col("yb").between(y_lo, y_hi)
     )
@@ -434,16 +446,13 @@ def test_manifest_sink_two_phase_commit(spark, tmp_path):
 
 
 def test_manifest_time_travel_and_vacuum(spark, tmp_path):
-    """Snapshot isolation: v1 is immutable while v2 commits; vacuum
-    lists exactly the unreferenced files (planted orphan), and with
-    full retention nothing referenced is ever a candidate."""
-    import os
-
+    """Snapshot isolation: v1 is immutable while v2 commits, and a file
+    no manifest references (a planted orphan from a failed attempt,
+    vacuum fodder) is invisible to every snapshot."""
     from mpi_word_count_spark.sources.manifest_sink import (
         read_manifest,
         read_manifest_jsonl,
         register_manifest_sink,
-        vacuum_candidates,
     )
     from mpi_word_count_spark.tables import table
     from tests.conftest import SF_DIR
@@ -469,31 +478,26 @@ def test_manifest_time_travel_and_vacuum(spark, tmp_path):
     )
     assert read_manifest(path)["version"] == 2
 
-    # orphan from a failed attempt: vacuum's only candidate under
-    # full retention
+    # orphan from a failed attempt: on disk, in no manifest, so no
+    # snapshot sees its row
     orphan = os.path.join(path, "part-00000-attempt-777.jsonl")
     with open(orphan, "w") as fh:
         fh.write('{"doc_id": -1}\n')
-    assert vacuum_candidates(path, keep_versions=2) == [
-        "part-00000-attempt-777.jsonl"
-    ]
-    # retention horizon 1: v1-only files are STILL referenced by v2
-    # (append snapshots are supersets), so only the orphan remains
-    assert vacuum_candidates(path, keep_versions=1) == [
-        "part-00000-attempt-777.jsonl"
-    ]
+    for version, want in ((1, v1), (2, docs.count())):
+        snap = read_manifest_jsonl(spark, path, "doc_id BIGINT", version=version)
+        assert snap.count() == want
+        assert snap.filter("doc_id = -1").count() == 0
 
 
 def test_manifest_sink_replayed_batch_is_idempotent(spark, tmp_path):
     """The streaming exactly-once contract: committing the SAME
     batch_id twice (sink committed, checkpoint WAL lost — Spark
     replays the batch) must not change the snapshot; the replay's
-    files become vacuum candidates, never data."""
+    files stay on disk as vacuum fodder, never data."""
     from mpi_word_count_spark.sources.manifest_sink import (
         read_manifest,
         read_manifest_jsonl,
         register_manifest_sink,
-        vacuum_candidates,
     )
     from mpi_word_count_spark.tables import table
     from tests.conftest import SF_DIR
@@ -517,4 +521,5 @@ def test_manifest_sink_replayed_batch_is_idempotent(spark, tmp_path):
     assert m2 == m1  # version, files, totals all unchanged
     assert read_manifest_jsonl(spark, path, "doc_id BIGINT").count() == n1
     # the replay's data files exist on disk but only as vacuum fodder
-    assert vacuum_candidates(path, keep_versions=m2["version"])
+    on_disk = {f for f in os.listdir(path) if f.endswith(".jsonl")}
+    assert on_disk > {f["file"] for f in m2["files"]}

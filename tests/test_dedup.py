@@ -2,16 +2,16 @@
 
 from __future__ import annotations
 
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from mpi_word_count_spark.operators.dedup import (
-    embedding_dup_pairs,
     exact_dedup,
     minhash_lsh_pairs,
     ngram_jaccard_pairs,
-    shingles_col,
+    shingles_from_tokens,
     simhash,
-    simhash_dup_pairs,
+    tokens_col,
 )
 
 DOCS = [
@@ -23,16 +23,65 @@ DOCS = [
 ]
 
 
+def simhash_dup_pairs(df: DataFrame, max_hamming: int) -> DataFrame:
+    """All-pairs reference: near-dup pairs by SimHash hamming distance
+    ≤ max_hamming, the exhaustive comparison the banded and
+    sorted-neighborhood plans are checked against."""
+    s = simhash(df)
+    a = s.alias("a")
+    b = s.alias("b")
+    ham = F.bit_count(
+        F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))
+    )
+    return (
+        a.join(b, F.col("a.doc_id") < F.col("b.doc_id"))
+        .select(
+            F.col("a.doc_id").alias("d1"),
+            F.col("b.doc_id").alias("d2"),
+            ham.cast("bigint").alias("hamming"),
+        )
+        .filter(F.col("hamming") <= max_hamming)
+    )
+
+
+def embedding_dup_pairs(df: DataFrame, threshold: float) -> DataFrame:
+    """All-pairs reference: embedding-cosine near-duplicate pairs
+    (id1 < id2, cos ≥ τ), exact recall, for checking the banded plan."""
+    from mpi_word_count_spark.functions.vector import dot, norm
+
+    normed = df.select(
+        F.col("vec_id").alias("_id"),
+        F.col("embedding").alias("_vec"),
+        norm(F.col("embedding")).alias("_norm"),
+    )
+    a = normed.alias("a")
+    b = normed.alias("b")
+    return (
+        a.join(b, F.col("a._id") < F.col("b._id"))
+        .select(
+            F.col("a._id").alias("id1"),
+            F.col("b._id").alias("id2"),
+            F.round(
+                dot(F.col("a._vec"), F.col("b._vec"))
+                / (F.col("a._norm") * F.col("b._norm")),
+                4,
+            ).alias("cosine"),
+        )
+        .filter(F.col("cosine") >= threshold)
+    )
+
+
 def docs_df(spark):
     return spark.createDataFrame(DOCS, "doc_id long, text string")
 
 
 def test_shingles(spark):
-    df = spark.createDataFrame([(1, "a b c d")], "doc_id long, text string")
-    got = df.select(shingles_col("text").alias("s")).collect()[0]["s"]
-    assert sorted(got) == ["a b c", "b c d"]
-    short = spark.createDataFrame([(1, "a b")], "doc_id long, text string")
-    assert short.select(shingles_col("text").alias("s")).collect()[0]["s"] == []
+    def shingles(text):
+        df = spark.createDataFrame([(1, text)], "doc_id long, text string")
+        return df.select(shingles_from_tokens(tokens_col("text"), 3).alias("s")).first()["s"]
+
+    assert sorted(shingles("a b c d")) == ["a b c", "b c d"]
+    assert shingles("a b") == []
 
 
 def test_exact_dedup(spark):
@@ -87,6 +136,12 @@ def test_embedding_dup_pairs(spark):
     got = embedding_dup_pairs(df, threshold=0.95)
     pairs = [(r["id1"], r["id2"]) for r in got.collect()]
     assert pairs == [(1, 2)]
+    # the registered banded plan finds the planted pair and never a
+    # pair the exact comparison rejects
+    from mpi_word_count_spark.operators.dedup import embedding_dup_pairs_banded
+
+    banded = embedding_dup_pairs_banded(df, threshold=0.95, dim=3).collect()
+    assert [(r["id1"], r["id2"]) for r in banded] == [(1, 2)]
 
 
 def test_simhash_banded_equals_allpairs(spark):

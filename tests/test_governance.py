@@ -7,11 +7,11 @@ from __future__ import annotations
 import contextlib
 import io
 
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from mpi_word_count_spark.queries.governance_queries import (
     _ERASURE_MOD,
-    post_delete_orphans,
     q_html_boilerplate_strip,
     q_unicode_nfc_stats,
     q_url_domain_stats,
@@ -31,6 +31,54 @@ def test_erasure_audit_counts_consistent(spark):
     assert rows["customer"]["rows_erased"] > 0
     assert rows["orders"]["rows_erased"] > 0
     assert rows["lineitem"]["rows_erased"] > 0
+
+
+def post_delete_orphans(
+    customer_after: DataFrame,
+    orders_after: DataFrame,
+    lineitem_after: DataFrame,
+    req: DataFrame,
+) -> DataFrame:
+    """Independent post-state audit: given the tables AS MATERIALIZED
+    after an (externally executed, possibly buggy) erasure cascade and
+    the request keys, count surviving rows that still reference an
+    erased entity. The registered query's orphan columns verify the
+    delete-and-audit-in-one-plan invariant inside one plan; this probe
+    checks the same invariant against rewritten tables, and must catch
+    a cascade that deleted customers but missed their orders.
+    Request keys broadcast; each table is probed with one semi join."""
+    o_orphans = orders_after.join(
+        F.broadcast(req),
+        orders_after.o_custkey == req.c_custkey,
+        "left_semi",
+    )
+    # lineitems whose parent order no longer exists (the cascade
+    # dropped the order but left the lines)
+    l_orphans = lineitem_after.join(
+        orders_after.select("o_orderkey"),
+        lineitem_after.l_orderkey == orders_after.o_orderkey,
+        "left_anti",
+    )
+    c_orphans = customer_after.join(
+        F.broadcast(req),
+        customer_after.c_custkey == req.c_custkey,
+        "left_semi",
+    )
+    return (
+        c_orphans.agg(F.count(F.lit(1)).alias("orphans"))
+        .select(F.lit("customer").alias("table_name"), "orphans")
+        .unionByName(
+            l_orphans.agg(F.count(F.lit(1)).alias("orphans")).select(
+                F.lit("lineitem").alias("table_name"), "orphans"
+            )
+        )
+        .unionByName(
+            o_orphans.agg(F.count(F.lit(1)).alias("orphans")).select(
+                F.lit("orders").alias("table_name"), "orphans"
+            )
+        )
+        .orderBy("table_name")
+    )
 
 
 def test_post_delete_orphans_catches_broken_cascade(spark):

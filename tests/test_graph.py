@@ -255,3 +255,27 @@ def test_label_propagation_separates_components_deterministically(spark):
     star = undirected([(0, 2), (0, 4), (0, 6)])
     got = {r["node"]: r["label"] for r in label_propagation(star, rounds=1).collect()}
     assert got == {0: 0, 2: 0, 4: 0, 6: 0}
+
+
+def test_label_propagation_ignores_native_self_loops(spark):
+    """Self-loops already in the input must not count a node's own
+    label twice: adding them leaves every community unchanged. On the
+    star, a doubled self-vote would let each leaf keep its own label
+    (2 votes against the hub's 1)."""
+    from mpi_word_count_spark.operators.graph import label_propagation
+
+    def undirected(pairs):
+        rows = [(a, b) for a, b in pairs] + [(b, a) for a, b in pairs]
+        return spark.createDataFrame(rows, "src long, dst long")
+
+    def communities(edges, rounds):
+        return {r["node"]: r["label"] for r in label_propagation(edges, rounds=rounds).collect()}
+
+    for pairs, rounds in (
+        ([(0, 2), (0, 4), (0, 6)], 1),
+        ([(2, 4), (4, 6), (2, 6), (1, 3), (3, 5), (1, 5), (6, 7)], 4),
+    ):
+        plain = undirected(pairs)
+        nodes = plain.select("src").distinct()
+        looped = plain.union(nodes.select("src", F.col("src").alias("dst")))
+        assert communities(looped, rounds) == communities(plain, rounds)

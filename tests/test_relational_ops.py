@@ -43,6 +43,25 @@ def test_sessionize_gap(spark):
     assert sessions == {1: 1, 2: 1, 3: 2, 4: 1}
 
 
+def test_sessionize_sub_second_gap(spark):
+    """Gaps compare at microsecond precision, as the DuckDB oracle's
+    fractional epoch() does: 1800.5 s ends a session, 1800 s exactly
+    and 1799.5 s do not. (A whole-second unix_timestamp difference
+    reads the 1800.5 s gap as 1800 and keeps the session open.)"""
+    rows = [
+        (1, ts("2024-01-01T00:00:00"), 1),
+        (1, ts("2024-01-01T00:30:00.500000"), 2),  # gap 1800.5 s: new
+        (2, ts("2024-01-01T00:00:00.250000"), 3),
+        (2, ts("2024-01-01T00:30:00.250000"), 4),  # gap 1800 s: same
+        (3, ts("2024-01-01T00:00:00.900000"), 5),
+        (3, ts("2024-01-01T00:30:00.400000"), 6),  # gap 1799.5 s: same
+    ]
+    df = spark.createDataFrame(rows, "user_id long, ts timestamp, event_id long")
+    got = sessionize(df, gap_seconds=1800, tiebreak="event_id")
+    sessions = {r["event_id"]: r["session_id"] for r in got.collect()}
+    assert sessions == {1: 1, 2: 2, 3: 1, 4: 1, 5: 1, 6: 1}
+
+
 def test_asof_join_backward(spark):
     trades = spark.createDataFrame(
         [("A", ts("2024-01-01T00:00:05"), 10.0),

@@ -8,7 +8,6 @@ from mpi_word_count_spark.operators.multimodal import (
     decode_media,
     extract_features,
     media_from_documents,
-    resize_stub,
     sample_frames,
 )
 from mpi_word_count_spark.operators.similarity import (
@@ -23,6 +22,7 @@ from mpi_word_count_spark.operators.textanalysis import (
     quality_scores,
     token_stats,
 )
+from tests.media_kernels import resize_stub
 
 
 def vecs_df(spark):
@@ -366,6 +366,42 @@ def test_pq_recall_vs_bruteforce(spark):
     assert sorted(map(tuple, pq)) == sorted(map(tuple, pq2))
 
 
+def make_doc_chunks_udtf(chunk_size: int = 120, stride: int = 60):
+    """Python-UDTF reference for doc_chunks, called through the
+    lateral-join API:
+
+        spark.udtf.register("doc_chunks_udtf", make_doc_chunks_udtf())
+        SELECT d.doc_id, c.* FROM docs d,
+               LATERAL doc_chunks_udtf(d._toks) c
+
+    The chunking contract written imperatively (starts 0, stride, …
+    while < n_tokens; short final chunk; md5 chunk identity; empty
+    docs emit nothing). Tokenization stays JVM-side (the UDTF takes
+    the token ARRAY), so both paths share one tokenizer.
+    """
+    import hashlib
+
+    from pyspark.sql.functions import udtf
+
+    @udtf(
+        returnType="chunk_id bigint, n_chunk_tokens bigint, chunk_hash string"
+    )
+    class DocChunksUDTF:
+        def eval(self, toks):
+            if not toks:
+                return
+            n = len(toks)
+            for c, s in enumerate(range(0, n, stride)):
+                window = toks[s : s + chunk_size]
+                yield (
+                    c,
+                    min(chunk_size, n - s),
+                    hashlib.md5(" ".join(window).encode()).hexdigest(),
+                )
+
+    return DocChunksUDTF
+
+
 def test_doc_chunks_udtf_twin_matches_builtin(spark):
     """The Python-UDTF lateral-join surface (SURVEY §2.8) must produce
     bit-identical rows to the builtin sequence/transform/explode path
@@ -373,10 +409,7 @@ def test_doc_chunks_udtf_twin_matches_builtin(spark):
     from pyspark.sql import functions as F
 
     from mpi_word_count_spark.operators.dedup import tokens_col
-    from mpi_word_count_spark.operators.textanalysis import (
-        doc_chunks,
-        make_doc_chunks_udtf,
-    )
+    from mpi_word_count_spark.operators.textanalysis import doc_chunks
     from mpi_word_count_spark.tables import table
 
     docs = table(spark, "documents", "/root/testdata/sf0.001")

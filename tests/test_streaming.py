@@ -13,7 +13,6 @@ from mpi_word_count_spark.streaming.core import run_to_completion, stream_table
 from mpi_word_count_spark.streaming.queries import (
     sliding_event_counts,
     stateful_user_totals,
-    streaming_dedup_within_watermark,
     streaming_word_count,
 )
 from tests.conftest import SF_DIR
@@ -65,32 +64,6 @@ def test_sliding_windows_overlap(spark):
     )
     # each event falls into exactly window/slide = 2 sliding buckets
     assert slid.agg(F.sum("n")).collect()[0][0] == 2 * tumb_n
-
-
-def test_dedup_within_watermark(spark, tmp_path):
-    rows = [
-        (1, datetime.datetime(2024, 1, 1, 0, 0, 0), 10, "click", 1.0, "{}"),
-        (2, datetime.datetime(2024, 1, 1, 0, 5, 0), 10, "click", 1.0, "{}"),  # dup inside horizon
-        (3, datetime.datetime(2024, 1, 1, 0, 10, 0), 10, "view", 1.0, "{}"),
-    ]
-    src = tmp_path / "events_src"
-    df = spark.createDataFrame(
-        rows,
-        "event_id long, ts timestamp, user_id long, event_type string, "
-        "value double, props string",
-    )
-    df.write.parquet(str(src))
-    sdf = spark.readStream.schema(df.schema).parquet(str(src))
-    got = run_to_completion(
-        streaming_dedup_within_watermark(sdf, watermark="1 hour"), "append"
-    )
-    rows_out = got.collect()
-    # one row per (user_id, event_type) key within the watermark horizon;
-    # which duplicate survives is arrival-order-defined, not asserted
-    assert sorted((r["user_id"], r["event_type"]) for r in rows_out) == [
-        (10, "click"),
-        (10, "view"),
-    ]
 
 
 def test_streaming_incremental_dedup_across_batches(spark, tmp_path):
@@ -155,120 +128,6 @@ def test_watermarked_append_window(spark, tmp_path):
     got = run_to_completion(agg, "append").collect()
     # the 00:00 window closed (watermark 04:00); the 05:00 window did not
     assert [(r["w"]["start"].hour, r["n"]) for r in got] == [(0, 1)]
-
-
-def test_transform_with_state_totals(spark):
-    """transformWithStateInPandas twin of the stateful-totals query
-    (RocksDB provider). Skipped where the API's python driver worker
-    can't start (it imports google.protobuf, absent in this
-    container) — the guard probes the import the worker performs."""
-    import pytest
-
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError:
-        pytest.skip("google.protobuf unavailable: transformWithState "
-                    "python runner cannot start in this environment")
-
-    from mpi_word_count_spark.queries.streaming_queries import (
-        q_streaming_stateful_totals_tws,
-    )
-    from mpi_word_count_spark.tables import table
-
-    got = q_streaming_stateful_totals_tws(spark, SF_DIR)
-    want = (
-        table(spark, "events", SF_DIR)
-        .groupBy("user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum("value"), 2).alias("total_value"),
-        )
-    )
-    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
-
-
-def test_foreach_batch_checkpoint_resume(spark, tmp_path):
-    """Kill-and-resume: a foreachBatch sink that dies AFTER writing its
-    batch but BEFORE the checkpoint WAL commit must not duplicate rows
-    when Spark replays the batch on restart — the replay overwrites the
-    same batch_id partition (streaming/core.py idempotence claim)."""
-    import pytest
-
-    schema = (
-        "event_id long, ts timestamp, user_id long, event_type string, "
-        "value double, props string"
-    )
-    rows = [
-        (i, datetime.datetime(2024, 1, 1, 0, i % 60, 0), i % 3, "click", float(i), "{}")
-        for i in range(30)
-    ]
-    src = tmp_path / "src"
-    full = spark.createDataFrame(rows, schema)
-    # three files -> three micro-batches under maxFilesPerTrigger=1
-    for i in range(3):
-        full.filter(F.col("event_id") % 3 == i).coalesce(1).write.mode(
-            "append"
-        ).parquet(str(src))
-
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-
-    def make_stream():
-        return (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(str(src))
-            .select("event_id", "user_id", "value")
-        )
-
-    def crashing(batch_df, batch_id):
-        batch_df.write.mode("overwrite").parquet(f"{out}/batch_id={batch_id}")
-        if batch_id == 1:
-            raise RuntimeError("injected crash after sink write, before WAL commit")
-
-    q = (
-        make_stream()
-        .writeStream.foreachBatch(crashing)
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    with pytest.raises(Exception):
-        q.processAllAvailable()
-    q.stop()
-    assert q.exception() is not None  # the query really died mid-stream
-
-    # resume from the same checkpoint with the normal idempotent writer:
-    # batch 1 (written but uncommitted) replays onto the same partition
-    from mpi_word_count_spark.streaming.core import run_foreach_batch_parquet
-
-    run_foreach_batch_parquet(make_stream(), out, ckpt, output_mode="append")
-
-    written = spark.read.parquet(out)
-    got = sorted(r["event_id"] for r in written.collect())
-    assert got == list(range(30))  # exactly once: no dupes, no gaps
-
-
-def test_foreach_batch_parquet_sink(spark, tmp_path):
-    from mpi_word_count_spark.streaming.core import run_foreach_batch_parquet
-    from mpi_word_count_spark.operators.wordcount import word_count_df
-    from mpi_word_count_spark.tables import table
-
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    sdf = streaming_word_count(stream_table(spark, "documents", SF_DIR))
-    run_foreach_batch_parquet(sdf, out, ckpt, output_mode="complete")
-    written = spark.read.parquet(out)
-    # complete mode: take the newest batch's full result
-    last = written.agg(F.max("batch_id")).first()[0]
-    got = {
-        (r["word"], r["count"])
-        for r in written.filter(F.col("batch_id") == last).collect()
-    }
-    want = {
-        (r["word"], r["count"])
-        for r in word_count_df(table(spark, "documents", SF_DIR), "text").collect()
-    }
-    assert got == want
 
 
 def test_synth_stream_reader_contract():

@@ -67,7 +67,8 @@ def test_edit_distance_length_band_is_lossless(spark):
     and pairs the band prunes."""
     from mpi_word_count_spark.operators.dedup import (
         edit_distance_pairs,
-        shingles_col,
+        shingles_from_tokens,
+        tokens_col,
     )
 
     base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
@@ -93,7 +94,7 @@ def test_edit_distance_length_band_is_lossless(spark):
     sh = {
         r["doc_id"]: set(r["s"])
         for r in df.select(
-            "doc_id", shingles_col("text").alias("s")
+            "doc_id", shingles_from_tokens(tokens_col("text"), 3).alias("s")
         ).collect()
     }
     lev_rows = df.alias("x").crossJoin(df.alias("y")).filter(

@@ -10,7 +10,6 @@ from mpi_word_count_spark.operators.wordcount import (
     top_k_words,
     word_count_df,
     word_count_dir,
-    word_count_per_file,
 )
 from mpi_word_count_spark.sinks import show_console, write_word_count_csv
 
@@ -64,13 +63,6 @@ def test_multi_file_aggregation(spark, tmp_path):
         tmp_path, {"a.txt": "x y\n", "b.txt": "y z\n", "c.txt": "z z\n"}
     )
     assert rows(word_count_dir(spark, path)) == [("x", 1), ("y", 2), ("z", 3)]
-
-
-def test_per_file_lineage(spark, tmp_path):
-    path = make_corpus(tmp_path, {"a.txt": "x y\n", "b.txt": "y\n"})
-    df = word_count_per_file(spark, path)
-    got = {(r["file"].rsplit("/", 1)[-1], r["word"]): r["count"] for r in df.collect()}
-    assert got == {("a.txt", "x"): 1, ("a.txt", "y"): 1, ("b.txt", "y"): 1}
 
 
 def test_top_k(spark):
