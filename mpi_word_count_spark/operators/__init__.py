@@ -30,13 +30,108 @@ def track_releaser(fn) -> None:
     _TRACKED_RELEASERS.append(fn)
 
 
+def _unpersist_local_ckpt(df: DataFrame) -> None:
+    """Free a checkpointed DataFrame's storage blocks NOW.
+
+    localCheckpoint keeps its materialized RDD cached with no public
+    DataFrame-level unpersist; orphaned rounds otherwise sit in the
+    block manager until a JVM GC lets the ContextCleaner notice them —
+    measured as episodic multi-second stalls in later queries of a
+    long session. Reaches the RDD through LogicalRDD (non-public
+    accessor, hence the broad guard: worst case blocks free on GC as
+    before), so `df` must be the checkpointed frame itself, not a
+    projection over it."""
+    try:
+        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+    except Exception:
+        pass
+
+
+def _checkpoint(df: DataFrame) -> DataFrame:
+    """Eager, lineage-truncating materialization: reliable checkpoint()
+    when the session has a checkpoint dir (the files survive executor
+    loss), localCheckpoint otherwise."""
+    if df.sparkSession.sparkContext.getCheckpointDir() is not None:
+        return df.checkpoint(eager=True)
+    return df.localCheckpoint(eager=True)
+
+
+def materialize(df: DataFrame) -> DataFrame:
+    """Checkpoint once a loop-invariant input that every round scans
+    (an adjacency list, a symmetrized edge set); release_caches()
+    frees it."""
+    out = _checkpoint(df)
+    track_releaser(lambda: _unpersist_local_ckpt(out))
+    return out
+
+
+def iterate(state, *steps, rounds: int, every: int = 1, until=None):
+    """Run `rounds` rounds of `state = step(state)` for each of `steps`
+    in order: the one place round state is materialized and freed.
+
+    Each round's plan embeds its predecessor's, so state is
+    checkpointed to keep plans O(1) (dup_clusters states the measured
+    analysis blow-up). With `every` = k > 0 that happens after every
+    k-th round but never after the last (the result reads it lazily);
+    k = 1 also checkpoints the starting state, for loops whose round
+    reads its state more than once; k = 0 never, and the state may
+    then be any value. A checkpointing round checkpoints after each of
+    its steps.
+
+    With `until(prev, new)` every round is checkpointed and the test
+    runs on the checkpointed `new` while `prev` is still held; the loop
+    stops at the first True and raises RuntimeError when no round
+    within `rounds` gives one (part-merged state looks plausible and
+    is wrong).
+
+    Once a round is checkpointed (and tested), the loop's earlier
+    checkpoints are freed; the survivor is freed by release_caches().
+    On any exception everything held is freed before it propagates, so
+    a catch-and-retry caller accumulates nothing."""
+    held: list[DataFrame] = []
+
+    def hold(df: DataFrame) -> DataFrame:
+        held.append(_checkpoint(df))
+        return held[-1]
+
+    try:
+        if every == 1:
+            state = hold(state)
+        for i in range(1, rounds + 1):
+            prev = state
+            ckpt = until is not None or (every and i % every == 0 and i < rounds)
+            for step in steps:
+                state = step(state)
+                if ckpt:
+                    state = hold(state)
+            if ckpt:
+                done = until is not None and until(prev, state)
+                for df in held[:-1]:
+                    _unpersist_local_ckpt(df)
+                del held[:-1]
+                if done:
+                    break
+        else:
+            if until is not None:
+                raise RuntimeError(
+                    f"did not converge within max_iters={rounds}; raise max_iters"
+                )
+    except BaseException:
+        for df in held:
+            _unpersist_local_ckpt(df)
+        raise
+    for df in held:
+        track_releaser(lambda df=df: _unpersist_local_ckpt(df))
+    return state
+
+
 def release_caches() -> int:
     """Unpersist every tracked cache and run every tracked releaser;
     returns how many were released.
 
     Caches recompute transparently if their DataFrame is re-executed
     later. RELEASERS MAY NOT: operators that register one (e.g.
-    dup_clusters' localCheckpoint labels) produce results whose
+    dup_clusters' checkpointed labels) produce results whose
     storage has no recomputable lineage — after release_caches(),
     re-derive such results by calling the operator again instead of
     re-executing a held DataFrame reference."""

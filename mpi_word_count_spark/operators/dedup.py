@@ -510,28 +510,11 @@ def minhash_lsh_pairs(
     )
 
 
-def _unpersist_local_ckpt(df: DataFrame) -> None:
-    """Free a localCheckpoint'ed DataFrame's storage blocks NOW.
-
-    localCheckpoint keeps its materialized RDD cached with no public
-    DataFrame-level unpersist; orphaned rounds otherwise sit in the
-    block manager until a JVM GC lets the ContextCleaner notice them —
-    measured as episodic multi-second stalls in later queries of a
-    long session. Reaches the RDD through LogicalRDD (non-public
-    accessor, hence the broad guard: worst case blocks free on GC as
-    before)."""
-    try:
-        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
-    except Exception:
-        pass
-
-
 def dup_clusters(
     df: DataFrame,
     pairs: DataFrame,
     id_col: str = "doc_id",
     max_iters: int = 25,
-    reliable_checkpoint: bool = False,
 ) -> DataFrame:
     """Connected components over duplicate pairs → (doc_id, cluster_id)
     with cluster_id = min doc id of the component; docs in no pair are
@@ -551,32 +534,22 @@ def dup_clusters(
     physical planning, every round's ANALYZED plan re-embeds the whole
     upstream tree — the tree doubles per round and Catalyst analysis
     goes exponential (measured: round 0 = 7.8s, round 1 = 104s at
-    sf0.1 with cached inputs; 2.9s total after truncation). Eager
-    localCheckpoint on the edge list and each round's labels keeps
-    every plan O(1). At cluster scale pass reliable_checkpoint=True
-    (requires sparkContext.setCheckpointDir): localCheckpoint loses
-    blocks with a dead executor, reliable checkpoint() writes rounds
-    to the checkpoint FS and survives executor loss — same plan
-    shape, exercised by tests/test_dedup.py::
-    test_dup_clusters_reliable_checkpoint.
+    sf0.1 with cached inputs; 2.9s total after truncation). The edge
+    list is materialized once and each round's labels are checkpointed
+    by operators.iterate, which keeps every plan O(1). At cluster
+    scale set a checkpoint dir (sparkContext.setCheckpointDir): the
+    rounds then go through reliable checkpoint() and survive executor
+    loss — same plan shape, exercised by tests/test_dedup.py::
+    test_dup_clusters_reliable_checkpoint. Raises RuntimeError when
+    the labels have not converged within `max_iters` rounds.
     """
-    from mpi_word_count_spark.operators import track_releaser
+    from mpi_word_count_spark.operators import iterate, materialize
 
-    ckpt = (
-        (lambda d: d.checkpoint(eager=True))
-        if reliable_checkpoint
-        else (lambda d: d.localCheckpoint(eager=True))
-    )
     e = pairs.select(F.col("d1").alias("src"), F.col("d2").alias("dst"))
-    edges = ckpt(_symmetrize(e))
-    labels_ckpt = ckpt(
-        edges.select(F.col("src").alias("v"))
-        .distinct()
-        .withColumn("label", F.col("v"))
-    )
-    labels = labels_ckpt
-    converged = False
-    for _ in range(max_iters):
+    edges = materialize(_symmetrize(e))
+
+    def step(labels: DataFrame) -> DataFrame:
+        labels = labels.select("v", "label")
         prop = (
             edges.join(labels, edges.src == labels.v)
             .select(F.col("dst").alias("v"), "label")
@@ -586,48 +559,28 @@ def dup_clusters(
         # carry the pre-round label through the join so convergence
         # detection is a scan of THIS round's checkpoint, not an extra
         # join+shuffle job per round (the checkpoint materializes the
-        # round anyway; the count is then block-local). The unpersist
-        # target must be the CHECKPOINTED frame itself (labels_ckpt) —
-        # a projection over it has no LogicalRDD at its analyzed root,
-        # so _unpersist_local_ckpt would silently skip and the round's
-        # blocks would sit until GC (the episodic-stall mechanism).
-        round_ckpt = (
-            labels.join(prop, "v", "left")
-            .select(
-                "v",
-                F.least(
-                    F.col("label"), F.coalesce(F.col("nbr_min"), F.col("label"))
-                ).alias("label"),
-                F.col("label").alias("_old"),
-            )
+        # round anyway; the count is then block-local).
+        return labels.join(prop, "v", "left").select(
+            "v",
+            F.least(
+                F.col("label"), F.coalesce(F.col("nbr_min"), F.col("label"))
+            ).alias("label"),
+            F.col("label").alias("_old"),
         )
-        round_ckpt = ckpt(round_ckpt)
-        changed = round_ckpt.filter(F.col("label") != F.col("_old")).count()
-        _unpersist_local_ckpt(labels_ckpt)  # superseded round's blocks
-        labels_ckpt = round_ckpt
-        labels = round_ckpt.select("v", "label")
-        if changed == 0:
-            converged = True
-            break
-    _unpersist_local_ckpt(edges)
-    if not converged:
-        # silent non-convergence would hand back labels that are only
-        # PART-WAY merged — wrong clusters that look plausible. Free
-        # the final round's blocks NOW (a catch-and-retry caller must
-        # not accumulate one orphaned label set per attempt), then
-        # raise: the caller either raises max_iters (component
-        # diameter bound) or switches to large-star/small-star.
-        _unpersist_local_ckpt(labels_ckpt)
-        raise RuntimeError(
-            f"dup_clusters did not converge within max_iters={max_iters}; "
-            "raise max_iters (labels need >= component-diameter rounds)"
-        )
-    # The final labels feed the returned join lazily: their blocks are
-    # freed only when the caller signals it is done (release_caches).
-    # CONTRACT: the released checkpoint has no recomputable lineage, so
-    # a dup_clusters result must not be re-executed AFTER
+
+    # silent non-convergence would hand back labels that are only
+    # PART-WAY merged — wrong clusters that look plausible; iterate
+    # raises instead, and the caller either raises max_iters (component
+    # diameter bound) or switches to large-star/small-star.
+    labels = iterate(
+        edges.select(F.col("src").alias("v")).distinct().withColumn("label", F.col("v")),
+        step,
+        rounds=max_iters,
+        until=lambda _, new: new.filter(F.col("label") != F.col("_old")).count() == 0,
+    ).select("v", "label")
+    # CONTRACT: the final labels' checkpoint has no recomputable
+    # lineage, so a dup_clusters result must not be re-executed AFTER
     # release_caches() — re-derive it (call dup_clusters again) instead.
-    track_releaser(lambda df=labels_ckpt: _unpersist_local_ckpt(df))
     ids = df.select(F.col(id_col).alias("doc_id"))
     return ids.join(
         labels.select(F.col("v").alias("doc_id"), "label"), "doc_id", "left"
@@ -1362,13 +1315,7 @@ def dup_clusters_twostar(
     graphs) and value-hash-verified against the same recursive-CTE
     oracle.
     """
-    from mpi_word_count_spark.operators import track_releaser
-
-    edges = (
-        _symmetrize(pairs.select(F.col("d1").alias("src"), F.col("d2").alias("dst")))
-        .filter(F.col("src") != F.col("dst"))
-        .localCheckpoint()
-    )
+    from mpi_word_count_spark.operators import iterate
 
     def star(e: DataFrame, large: bool) -> DataFrame:
         """One star operation over the symmetric edge set `e`:
@@ -1389,31 +1336,22 @@ def dup_clusters_twostar(
             rewired = rewired.union(mins.select(F.col("src"), m.alias("dst")))
         return rewired.filter(F.col("src") != F.col("dst")).distinct()
 
-    converged = False
-    for _ in range(max_iters):
-        after_large = _symmetrize(star(edges, large=True)).localCheckpoint()
-        new_edges = _symmetrize(star(after_large, large=False)).localCheckpoint()
-        _unpersist_local_ckpt(after_large)
-        changed = (
-            new_edges.exceptAll(edges).limit(1).count()
-            + edges.exceptAll(new_edges).limit(1).count()
-        )
-        _unpersist_local_ckpt(edges)
-        edges = new_edges
-        if changed == 0:
-            converged = True
-            break
-    if not converged:
-        _unpersist_local_ckpt(edges)
-        raise RuntimeError(
-            f"dup_clusters_twostar did not converge within max_iters={max_iters}"
-        )
+    def fixpoint(old: DataFrame, new: DataFrame) -> bool:
+        return new.exceptAll(old).limit(1).count() + old.exceptAll(new).limit(1).count() == 0
+
+    edges = iterate(
+        _symmetrize(pairs.select(F.col("d1").alias("src"), F.col("d2").alias("dst")))
+        .filter(F.col("src") != F.col("dst")),
+        lambda e: _symmetrize(star(e, large=True)),
+        lambda e: _symmetrize(star(e, large=False)),
+        rounds=max_iters,
+        until=fixpoint,
+    )
     # fixpoint edge set = min-rooted stars (symmetric): each node's
     # label is min(neighbors ∪ self)
     labels = edges.groupBy(F.col("src").alias("v")).agg(
         F.least(F.min("dst"), F.col("src")).alias("label")
     )
-    track_releaser(lambda df=edges: _unpersist_local_ckpt(df))
     ids = df.select(F.col(id_col).alias("doc_id"))
     return ids.join(
         labels.select(F.col("v").alias("doc_id"), "label"), "doc_id", "left"

@@ -29,13 +29,13 @@ Scale design (100 TB / 10^10 nodes):
   map-side partial sums (Tungsten partial agg), the Pregel/GraphX
   message pattern without a vertex-program framework.
 - the adjacency list (src, dst, outdeg) is built once and
-  localCheckpoint'ed; per-round plans stay O(1) because each round's
-  ranks are lineage-truncated too (the same analyzed-plan-doubling
-  hazard measured in dup_clusters — see its docstring). On a real
-  cluster prefer reliable checkpoint() for executor-loss recovery —
-  the swap is exercised (identical results, files on the checkpoint
-  FS) by tests/test_dedup.py::test_dup_clusters_reliable_checkpoint
-  on the same iteration shape.
+  materialized; per-round plans stay O(1) because round state is
+  lineage-truncated on each operator's cadence by the one iteration
+  driver (operators.iterate, which states the analyzed-plan hazard).
+  On a real cluster set a checkpoint dir (sparkContext.setCheckpointDir):
+  every loop then writes its checkpoints to the checkpoint FS and
+  survives executor loss (identical results, exercised by
+  tests/test_dedup.py::test_dup_clusters_reliable_checkpoint).
 - rounds are FIXED (default 6), not convergence-tested: fixed-round
   PageRank is the production form for ranking (ordering stabilizes
   long before values), keeps every job identical, and is what an
@@ -46,30 +46,30 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from mpi_word_count_spark.operators import track_releaser
+from mpi_word_count_spark.operators import iterate, materialize
 
 DEFAULT_SCALE = 10**12
 DAMPING_NUM = 85
 DAMPING_DEN = 100
 DEFAULT_ITERATIONS = 6
 
-
-def _unpersist_local_ckpt(df: DataFrame) -> None:
-    """See operators/dedup.py:_unpersist_local_ckpt (same mechanism)."""
-    try:
-        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
-    except Exception:
-        pass
-
-
-DEFAULT_CHECKPOINT_EVERY = 3
+# Checkpoint cadence of the once-reading loops (pagerank, LPA, SSSP).
+# Each eager checkpoint is a blocking materialization job, so per-round
+# truncation pays ~iterations extra job launches; letting Catalyst
+# compose a few rounds into ONE multi-stage job is measurably faster
+# (pagerank, sf0.1 trade graph, best-of-2: every-round 8.1s, every-3
+# 5.0s, never 5.3s) while still bounding plan depth — each round
+# references its predecessor exactly once, so depth grows linearly
+# (never the analyzed-plan DOUBLING dup_clusters guards against) and a
+# cadence of 3 keeps any single plan ≤ 3 join+agg rounds deep at any
+# iteration count.
+CHECKPOINT_EVERY = 3
 
 
 def pagerank_fixed_point(
     edges: DataFrame,
     iterations: int = DEFAULT_ITERATIONS,
     scale: int = DEFAULT_SCALE,
-    checkpoint_every: int = DEFAULT_CHECKPOINT_EVERY,
     seeds: DataFrame | None = None,
 ) -> DataFrame:
     """Fixed-round integer-fixed-point PageRank.
@@ -80,20 +80,8 @@ def pagerank_fixed_point(
     both-orientations graph that is every non-isolated node). Nodes
     that receive no in-edges in some round would drop from the rank
     table; with both orientations present every source also receives,
-    so the node set is stable across rounds.
-
-    checkpoint_every: lineage truncation cadence. Each eager
-    localCheckpoint is a blocking materialization job, so per-round
-    truncation pays ~iterations extra job launches; letting Catalyst
-    compose a few rounds into ONE multi-stage job is measurably
-    faster (sf0.1 trade graph, best-of-2: every-round 8.1s, every-3
-    5.0s, never 5.3s) while still bounding plan depth — each round
-    references its predecessor exactly once, so depth grows linearly
-    (never the analyzed-plan DOUBLING dup_clusters guards against)
-    and a cadence of 3 keeps any single plan ≤ 3 join+agg rounds
-    deep at any iteration count. On a real cluster the same cadence
-    argument applies to reliable checkpoint() for executor-loss
-    recovery.
+    so the node set is stable across rounds. Rank state is
+    checkpointed every CHECKPOINT_EVERY rounds.
 
     Returns DataFrame[node: long, rank_fp: long] — rank in fixed-point
     units of 1/scale.
@@ -111,22 +99,23 @@ def pagerank_fixed_point(
         else None
     )
     # adjacency with out-degree attached once: per-round work is then a
-    # single equi-join on src + one aggregated shuffle on dst; this one
-    # IS checkpointed eagerly — every round scans it, so materializing
-    # it once is pure win. Out-degree comes from an unordered COUNT
-    # window over the same src partitioning (optimization r11): the
-    # old deg-groupBy + join form instantiated the upstream
-    # edge-building subtree TWICE inside the one materialization job
-    # (once under deg, once under the join probe) — for the trade
-    # graph that is the orders⋈lineitem+distinct chain re-run; the
-    # window needs ONE pass and one exchange. Weighted graphs
+    # single equi-join on src + one aggregated shuffle on dst; every
+    # round scans it, so it is materialized once. Out-degree comes from
+    # an unordered COUNT window over the same src partitioning
+    # (optimization r11): the old deg-groupBy + join form instantiated
+    # the upstream edge-building subtree TWICE inside the one
+    # materialization job (once under deg, once under the join probe) —
+    # for the trade graph that is the orders⋈lineitem+distinct chain
+    # re-run; the window needs ONE pass and one exchange. Weighted graphs
     # (keyword_pagerank's duplicate edge rows) are unchanged: the
     # window counts rows per src exactly as the groupBy did. At scale
     # both forms co-locate a node's out-edges by src — the window is
     # the SMJ shape without the second subtree evaluation.
-    adj = edges.withColumn(
-        "outdeg", F.count(F.lit(1)).over(Window.partitionBy("src"))
-    ).localCheckpoint()
+    adj = materialize(
+        edges.withColumn(
+            "outdeg", F.count(F.lit(1)).over(Window.partitionBy("src"))
+        )
+    )
 
     nodes = adj.select(F.col("src").alias("node")).distinct()
     if seed_set is None:
@@ -141,46 +130,33 @@ def pagerank_fixed_point(
             .cast("long")
             .alias("rank_fp"),
         )
-    live_ckpts: list[DataFrame] = []
-    for i in range(iterations):
+
+    def step(ranks: DataFrame) -> DataFrame:
         contrib = adj.join(ranks, adj["src"] == ranks["node"]).select(
             F.col("dst"), F.expr("rank_fp div outdeg").alias("c")
         )
         agg = contrib.groupBy("dst").agg(F.sum("c").alias("s"))
         if seed_set is None:
-            ranks = agg.select(
+            return agg.select(
                 F.col("dst").alias("node"),
                 (
                     F.lit(base)
                     + F.expr(f"({DAMPING_NUM} * s) div {DAMPING_DEN}")
                 ).alias("rank_fp"),
             )
-        else:
-            ranks = agg.join(
-                seed_set, agg["dst"] == F.col("_seed"), "left"
-            ).select(
-                F.col("dst").alias("node"),
-                (
-                    F.when(F.col("_seed").isNotNull(), F.lit(base)).otherwise(
-                        F.lit(0)
-                    )
-                    + F.expr(f"({DAMPING_NUM} * s) div {DAMPING_DEN}")
-                ).alias("rank_fp"),
-            )
-        if (
-            checkpoint_every
-            and (i + 1) % checkpoint_every == 0
-            and i + 1 < iterations
-        ):
-            ranks = ranks.localCheckpoint()
-            for prev in live_ckpts:
-                _unpersist_local_ckpt(prev)
-            live_ckpts = [ranks]
+        return agg.join(
+            seed_set, agg["dst"] == F.col("_seed"), "left"
+        ).select(
+            F.col("dst").alias("node"),
+            (
+                F.when(F.col("_seed").isNotNull(), F.lit(base)).otherwise(
+                    F.lit(0)
+                )
+                + F.expr(f"({DAMPING_NUM} * s) div {DAMPING_DEN}")
+            ).alias("rank_fp"),
+        )
 
-    track_releaser(lambda df=adj: _unpersist_local_ckpt(df))
-    for kept in live_ckpts:
-        track_releaser(lambda df=kept: _unpersist_local_ckpt(df))
-    return ranks
+    return iterate(ranks, step, rounds=iterations, every=CHECKPOINT_EVERY)
 
 
 def triangle_counts(edges: DataFrame) -> DataFrame:
@@ -270,12 +246,20 @@ def triangle_counts(edges: DataFrame) -> DataFrame:
     )
 
 
-def kcore_peel(
-    edges: DataFrame,
-    k: int,
-    rounds: int,
-    checkpoint_every: int = 1,
-) -> DataFrame:
+# k-core truncates EVERY round (not pagerank's every-3): round i+1
+# references round i's edge set THREE times (the degree scan and both
+# semi-join probes of the keep set), so an untruncated analyzed plan
+# grows ~3^rounds — the exact plan-doubling hazard dup_clusters
+# documents, one power worse. PageRank can amortize because its chain
+# references each round exactly once; a peel cannot. Cadence 1 also
+# materializes the input edge set up front, for the same reason (round
+# 0 already reads it three times; measured at sf0.1: 47.7s without the
+# base checkpoint, 9s with — the un-truncated round-0 plan re-ran the
+# upstream edge-building join once per reference).
+KCORE_CHECKPOINT_EVERY = 1
+
+
+def kcore_peel(edges: DataFrame, k: int, rounds: int) -> DataFrame:
     """Fixed-round k-core peeling: repeatedly delete nodes of degree
     < k (with their edges) for exactly `rounds` synchronous rounds,
     then report the survivors with their within-subgraph degree. The
@@ -295,21 +279,10 @@ def kcore_peel(
     Scale shape: each round is one partial-aggregated degree count
     plus two semi joins keyed on the shrinking survivor set — the
     peel only ever removes rows, so per-round cost is monotonically
-    non-increasing. Lineage truncates EVERY round (not pagerank's
-    every-3): round i+1 references round i's edge set THREE times
-    (the degree scan and both semi-join probes of the keep set), so
-    an untruncated analyzed plan grows ~3^rounds — the exact
-    plan-doubling hazard dup_clusters documents, one power worse.
-    PageRank can amortize because its chain references each round
-    exactly once; a peel cannot. The input edge set is materialized
-    up front for the same reason (round 0 already reads it three
-    times; measured at sf0.1: 47.7s without the base checkpoint,
-    9s with — the un-truncated round-0 plan re-ran the upstream
-    edge-building join once per reference)."""
-    e = edges.localCheckpoint()
-    track_releaser(lambda df=e: _unpersist_local_ckpt(df))
-    live_ckpts: list[DataFrame] = []
-    for i in range(rounds):
+    non-increasing. The edge set is checkpointed before the first
+    round and after every round (KCORE_CHECKPOINT_EVERY)."""
+
+    def step(e: DataFrame) -> DataFrame:
         deg = (
             e.select(F.col("a").alias("node"))
             .union(e.select(F.col("b").alias("node")))
@@ -317,20 +290,11 @@ def kcore_peel(
             .agg(F.count(F.lit(1)).alias("degree"))
         )
         keep = deg.filter(F.col("degree") >= k).select("node")
-        e = e.join(
+        return e.join(
             keep.withColumnRenamed("node", "a"), "a", "left_semi"
         ).join(keep.withColumnRenamed("node", "b"), "b", "left_semi")
-        if (
-            checkpoint_every
-            and (i + 1) % checkpoint_every == 0
-            and i + 1 < rounds
-        ):
-            e = e.localCheckpoint()
-            for prev in live_ckpts:
-                _unpersist_local_ckpt(prev)
-            live_ckpts = [e]
-    for kept in live_ckpts:
-        track_releaser(lambda df=kept: _unpersist_local_ckpt(df))
+
+    e = iterate(edges, step, rounds=rounds, every=KCORE_CHECKPOINT_EVERY)
     return (
         e.select(F.col("a").alias("node"))
         .union(e.select(F.col("b").alias("node")))
@@ -366,11 +330,7 @@ def trade_graph_edges(orders: DataFrame, lineitem: DataFrame) -> DataFrame:
 LPA_ROUNDS = 4
 
 
-def label_propagation(
-    edges: DataFrame,
-    rounds: int = LPA_ROUNDS,
-    checkpoint_every: int = 3,
-) -> DataFrame:
+def label_propagation(edges: DataFrame, rounds: int = LPA_ROUNDS) -> DataFrame:
     """Synchronous label propagation (Raghavan et al. 2007) with a
     self-loop per node: community(v) starts as v's own id; each round
     every node adopts the most frequent label among its neighbors AND
@@ -384,9 +344,7 @@ def label_propagation(
     dropped before the damping self-edge is added, so a node's own
     label counts exactly once per round either way. Per round: one equi-join on
     src + one (node, label) count shuffle + one argmax aggregation —
-    never a window over the corpus. Lineage is truncated on the
-    pagerank cadence argument (every 3 rounds; each round references
-    its predecessor once, so depth grows linearly).
+    never a window over the corpus.
 
     Setup (optimization r11): ONE materialization job builds
     edges ∪ self-loops; the initial labels come from the
@@ -395,14 +353,16 @@ def label_propagation(
     nodes table — the old three-branch form (nodes, union, labels)
     re-ran the upstream orders⋈lineitem+distinct chain per branch.
     Measured at sf0.1: 6.0–6.6 → 4.2–4.5 s, bit-identical labels."""
-    withself = edges.filter(F.col("src") != F.col("dst")).union(
-        edges.select("src", "src").distinct().toDF("src", "dst")
-    ).localCheckpoint()
-    track_releaser(lambda df=withself: _unpersist_local_ckpt(df))
+    withself = materialize(
+        edges.filter(F.col("src") != F.col("dst")).union(
+            edges.select("src", "src").distinct().toDF("src", "dst")
+        )
+    )
     labels = withself.filter(F.col("src") == F.col("dst")).select(
         F.col("src").alias("node"), F.col("src").alias("label")
     )
-    for i in range(1, rounds + 1):
+
+    def step(labels: DataFrame) -> DataFrame:
         counted = (
             withself.join(
                 labels.select(
@@ -413,7 +373,7 @@ def label_propagation(
             .groupBy(F.col("dst").alias("node"), F.col("_lab").alias("label"))
             .agg(F.count(F.lit(1)).alias("cnt"))
         )
-        labels = (
+        return (
             counted.groupBy("node")
             .agg(
                 F.max(
@@ -422,9 +382,8 @@ def label_propagation(
             )
             .select("node", (-F.col("m.neg")).alias("label"))
         )
-        if i % checkpoint_every == 0 and i < rounds:
-            labels = labels.localCheckpoint()
-    return labels
+
+    return iterate(labels, step, rounds=rounds, every=CHECKPOINT_EVERY)
 
 
 SSSP_ROUNDS = 4
@@ -434,7 +393,6 @@ def bellman_ford(
     wedges: DataFrame,
     source: DataFrame,
     rounds: int = SSSP_ROUNDS,
-    checkpoint_every: int = 3,
 ) -> DataFrame:
     """Fixed-round Bellman–Ford single-source shortest paths — the
     remaining Pregel-family classic next to pagerank_fixed_point /
@@ -452,38 +410,25 @@ def bellman_ford(
     partitionings (the same argument as integer PageRank above).
 
     Scale: dist state is 16 B/node; the adjacency is materialized
-    once (localCheckpoint — swap for reliable checkpoint() on a real
-    cluster); lineage truncates on the pagerank cadence."""
-    adj = wedges.localCheckpoint()
+    once."""
+    adj = materialize(wedges)
     dist = source.select(
         F.col("node").cast("long").alias("node"),
         F.lit(0).cast("long").alias("dist"),
     )
-    live_ckpts: list[DataFrame] = []
-    for i in range(rounds):
+
+    def step(dist: DataFrame) -> DataFrame:
         relaxed = adj.join(dist, adj["src"] == dist["node"]).select(
             F.col("dst").alias("node"),
             (F.col("dist") + F.col("w")).cast("long").alias("dist"),
         )
-        dist = (
+        return (
             dist.unionByName(relaxed)
             .groupBy("node")
             .agg(F.min("dist").alias("dist"))
         )
-        if (
-            checkpoint_every
-            and (i + 1) % checkpoint_every == 0
-            and i + 1 < rounds
-        ):
-            dist = dist.localCheckpoint()
-            for prev in live_ckpts:
-                _unpersist_local_ckpt(prev)
-            live_ckpts = [dist]
 
-    track_releaser(lambda df=adj: _unpersist_local_ckpt(df))
-    for kept in live_ckpts:
-        track_releaser(lambda df=kept: _unpersist_local_ckpt(df))
-    return dist
+    return iterate(dist, step, rounds=rounds, every=CHECKPOINT_EVERY)
 
 
 HITS_ROUNDS = 3
@@ -514,15 +459,18 @@ def hits_fixed_point(
 
     Scale shape: per half-step ONE equi-join + ONE partial-aggregated
     shuffle (the pagerank/LPA/SSSP round shape); score state is
-    16 B/node; the edge list is materialized once."""
-    adj = edges.localCheckpoint()
+    16 B/node; the edge list is materialized once, score state never
+    (each half-step reads its predecessor once, so the plan grows
+    linearly in `rounds`)."""
+    adj = materialize(edges)
     hubs = (
         adj.select("src")
         .distinct()
         .select("src", F.lit(scale).cast("long").alias("h"))
     )
-    auth = None
-    for _ in range(rounds):
+
+    def step(state: tuple) -> tuple[DataFrame, DataFrame]:
+        _, hubs = state
         auth = (
             adj.join(hubs, "src")
             .groupBy("dst")
@@ -533,5 +481,6 @@ def hits_fixed_point(
             .groupBy("src")
             .agg(F.expr(f"CAST(sum(a) DIV {rescale} AS BIGINT)").alias("h"))
         )
-    track_releaser(lambda df=adj: _unpersist_local_ckpt(df))
-    return auth, hubs
+        return auth, hubs
+
+    return iterate((None, hubs), step, rounds=rounds, every=0)

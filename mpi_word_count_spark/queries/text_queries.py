@@ -1486,8 +1486,10 @@ def _rrf_compact_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         "spark_graft_scratch",
         f"rrf_index_{uuid.uuid4().hex}",
     )
-    compact.write.mode("overwrite").parquet(path)
+    # registered before the write: a write that fails part-way leaves
+    # files under `path` that release_caches() must still remove
     track_releaser(lambda p=path: shutil.rmtree(p, ignore_errors=True))
+    compact.write.mode("overwrite").parquet(path)
     return spark.read.parquet(path)
 
 

@@ -12,3 +12,11 @@ def spark():
     s = get_spark(app_name="tests", shuffle_partitions=8, driver_memory="8g")
     yield s
     s.stop()
+
+
+def persisted_rdd_ids(spark) -> set[int]:
+    """Ids of the RDDs the JVM currently holds persisted (caches and
+    localCheckpoint blocks). A leak check compares the ids before and
+    after a call, so a JVM GC freeing some older RDD in between cannot
+    mask a new one."""
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())

@@ -8,6 +8,7 @@ from __future__ import annotations
 
 from collections import defaultdict
 
+import pytest
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_DIR
@@ -279,3 +280,61 @@ def test_label_propagation_ignores_native_self_loops(spark):
         nodes = plain.select("src").distinct()
         looped = plain.union(nodes.select("src", F.col("src").alias("dst")))
         assert communities(looped, rounds) == communities(plain, rounds)
+
+
+ITERATIVE_OPERATORS = (
+    "pagerank_fixed_point",
+    "kcore_peel",
+    "label_propagation",
+    "bellman_ford",
+    "hits_fixed_point",
+    "dup_clusters",
+    "dup_clusters_twostar",
+)
+
+
+@pytest.mark.parametrize("op", ITERATIVE_OPERATORS)
+def test_iterative_operator_releases_every_checkpoint(spark, op):
+    """After release_caches() none of the seven checkpointed loops
+    leaves a persisted RDD behind: not its materialized input, not an
+    intermediate round, not the surviving round state (label
+    propagation used to keep its round-3 labels). Each loop runs long
+    enough to checkpoint round state on its cadence (HITS checkpoints
+    only its input). The result stays referenced until after the
+    release, so a JVM GC cannot free a leaked checkpoint first."""
+    from mpi_word_count_spark.operators import dedup, graph, release_caches
+
+    from tests.conftest import persisted_rdd_ids
+
+    directed = spark.createDataFrame(both_orientations(), "src long, dst long")
+    docs = spark.createDataFrame(
+        [(i, f"text {i}") for i in range(1, 8)], "doc_id long, text string"
+    )
+    pairs = spark.createDataFrame([(2, 3), (1, 2), (5, 6)], "d1 long, d2 long")
+    calls = {
+        "pagerank_fixed_point": lambda: [graph.pagerank_fixed_point(directed)],
+        "kcore_peel": lambda: [
+            graph.kcore_peel(
+                spark.createDataFrame([(0, 1), (0, 2), (1, 2), (2, 3)], "a long, b long"),
+                k=2,
+                rounds=3,
+            )
+        ],
+        "label_propagation": lambda: [graph.label_propagation(directed)],
+        "bellman_ford": lambda: [
+            graph.bellman_ford(
+                directed.withColumn("w", F.lit(1).cast("long")),
+                spark.createDataFrame([(0,)], "node long"),
+            )
+        ],
+        "hits_fixed_point": lambda: list(graph.hits_fixed_point(directed)),
+        "dup_clusters": lambda: [dedup.dup_clusters(docs, pairs)],
+        "dup_clusters_twostar": lambda: [dedup.dup_clusters_twostar(docs, pairs)],
+    }
+    release_caches()
+    before = persisted_rdd_ids(spark)
+    results = calls[op]()
+    for df in results:
+        assert df.collect()
+    release_caches()
+    assert persisted_rdd_ids(spark) - before == set()

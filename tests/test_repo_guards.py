@@ -107,3 +107,28 @@ def test_registry_order_rule():
     assert len(names) == len(set(names)) == REGISTRY_SIZE
     digest = hashlib.sha256("\n".join(sorted(names)).encode()).hexdigest()
     assert digest == REGISTRY_NAMES_SHA256
+
+
+# What only the iteration driver (operators/__init__.py) may call: the
+# two checkpoint APIs and the non-public py4j chain that frees a
+# checkpoint's blocks (queryExecution().analyzed().rdd().unpersist).
+CHECKPOINT_CALLS = {"localCheckpoint", "checkpoint", "queryExecution", "_unpersist_local_ckpt"}
+
+
+def test_checkpointing_only_in_the_iteration_driver():
+    """Round state is materialized and freed in one place: a package
+    module other than operators/__init__.py that checkpoints or frees a
+    checkpoint by hand regrows the seven hand-rolled loops. Docstrings
+    and comments are mentions, not uses."""
+    driver = PKG / "operators" / "__init__.py"
+    found = []
+    for path in PKG.rglob("*.py"):
+        if path == driver:
+            continue
+        for node in ast.walk(ast.parse(path.read_text())):
+            name = getattr(node, "attr", None) or getattr(node, "id", None)
+            if isinstance(node, ast.alias):
+                name = node.name.rsplit(".", 1)[-1]
+            if name in CHECKPOINT_CALLS:
+                found.append(f"{path.relative_to(ROOT)}:{node.lineno} {name}")
+    assert not found, "checkpoint calls outside operators/__init__.py:\n" + "\n".join(found)

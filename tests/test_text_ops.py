@@ -119,3 +119,34 @@ def test_edit_distance_length_band_is_lossless(spark):
     # the band AND (by the Levenshtein lower bound) absent from brute
     # force
     assert (1, 4) not in got
+
+
+def test_rrf_index_scratch_dir_removed_after_failed_write(spark, monkeypatch):
+    """A compact-index write that fails part-way must not strand its
+    rrf_index_* scratch dir: release_caches() removes it even though
+    the write raised. The patched writer creates the dir with a file in
+    it, as a partial write does, then fails."""
+    import os
+
+    import pytest
+    from pyspark.sql import DataFrameWriter
+
+    from mpi_word_count_spark.operators import release_caches
+    from mpi_word_count_spark.queries.text_queries import _rrf_compact_index
+
+    from tests.conftest import SF_DIR
+
+    written = []
+
+    def failing_parquet(self, path, *args, **kwargs):
+        os.makedirs(path)
+        open(os.path.join(path, "part-00000.parquet"), "w").close()
+        written.append(path)
+        raise OSError("disk full")
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", failing_parquet)
+    with pytest.raises(OSError, match="disk full"):
+        _rrf_compact_index(spark, SF_DIR)
+    assert written and os.path.isdir(written[0])
+    release_caches()
+    assert not os.path.exists(written[0])
