@@ -609,21 +609,25 @@ def _simhash_terms(
     )
 
 
-def simhash_arrow(
+def simhash(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
     bits: int = SIMHASH_BITS,
 ) -> DataFrame:
-    """SimHash via a grouped Arrow/numpy kernel — the 100 TB path.
+    """SimHash fingerprint per document (term-frequency weighted).
 
-    Bit-identical to simhash() (same md5-derived term hashes, same
-    integer fold), but all `bits` positions fold inside one numpy
-    kernel per document group instead of exploding docs × terms × bits
-    rows through two shuffles: the only shuffle is the groupBy(doc_id)
-    of (term, tf, th) rows — a 60× reduction in shuffled rows. The
-    sign matrix is (terms × bits) int64; batches stream through
-    applyInPandas without materializing a partition.
+    For each bit j: sum over distinct terms of ±tf (sign from bit j of
+    the term hash); fingerprint bit j is 1 iff the sum is positive.
+
+    All `bits` positions fold inside one grouped Arrow/numpy kernel
+    instead of exploding docs × terms × bits rows through two
+    shuffles: the only shuffle is the groupBy of (term, tf, th) rows —
+    a 60× reduction in shuffled rows, measured 1.4× faster locally.
+    The sign matrix is (terms × bits) int64; batches stream through
+    applyInPandas without materializing a partition. The DuckDB oracle
+    and tests/test_dedup.py's JVM-expression reference compute the
+    same integer fold row-wise (tested bit-identical).
     """
     import pandas as pd
 
@@ -655,57 +659,6 @@ def simhash_arrow(
 
     return terms.groupBy("_bucket").applyInPandas(
         fold, f"doc_id {id_type}, simhash long"
-    )
-
-
-def simhash(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    bits: int = SIMHASH_BITS,
-    kernel: str = "arrow",
-) -> DataFrame:
-    """SimHash fingerprint per document (term-frequency weighted).
-
-    For each bit j: sum over distinct terms of ±tf (sign from bit j of
-    the term hash); fingerprint bit j is 1 iff the sum is positive.
-
-    Two bit-identical implementations (tested equal):
-      kernel="arrow" (default): bucketed applyInPandas numpy fold —
-        the only shuffle is (term, tf, th) rows; measured 1.4× faster
-        locally and 60× less shuffle volume at scale.
-      kernel="expr": pure JVM expressions exploding docs × terms ×
-        bits rows — no Python anywhere in the row path; the
-        cross-engine reference the DuckDB oracle mirrors.
-    """
-    if kernel == "arrow":
-        return simhash_arrow(df, id_col, text_col, bits)
-    terms = _simhash_terms(df, id_col, text_col)
-    per_bit = (
-        terms.select(
-            "doc_id",
-            "tf",
-            "th",
-            F.explode(F.sequence(F.lit(0), F.lit(bits - 1))).alias("j"),
-        )
-        .withColumn(
-            "contrib",
-            # shiftright() the function needs a literal shift; expr form
-            # accepts a column shift amount
-            F.when(
-                F.expr("shiftright(th, cast(j as int)) & 1") == 1, F.col("tf")
-            ).otherwise(-F.col("tf")),
-        )
-        .groupBy("doc_id", "j")
-        .agg(F.sum("contrib").alias("s"))
-    )
-    return per_bit.groupBy("doc_id").agg(
-        F.sum(
-            F.when(
-                F.col("s") > 0,
-                F.expr("shiftleft(cast(1 as bigint), cast(j as int))"),
-            ).otherwise(F.lit(0).cast("long"))
-        ).alias("simhash")
     )
 
 

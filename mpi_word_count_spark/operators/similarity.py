@@ -1,22 +1,32 @@
 """Similarity search over embedding columns (BASELINE.json north star).
 
-Two paths:
+Candidate generation, one function each; scoring is shared:
 
   ann_bruteforce_topk  exact top-k by cosine — the correctness
                        baseline. Query side broadcasts; the big side
                        streams. O(|queries| · |corpus|) but never
                        shuffles the corpus.
-  ann_lsh_topk         random-hyperplane LSH bucketing — the scale
-                       path. Vectors hash to a 2^P bucket space via
-                       sign bits against P fixed hyperplanes;
-                       candidates are same-bucket vectors only. At
-                       100 TB the corpus is bucketed once (write-time
-                       partitioning by bucket) and each query touches
-                       one partition.
+  ann_lsh_topk         random-hyperplane LSH bucketing, `nprobes`
+                       buckets per query (own bucket plus the
+                       lowest-margin bit flips). Candidates are an
+                       equi-join on the bucket id; at 100 TB the
+                       corpus is bucketed once (write-time
+                       partitioning) and each probe touches one
+                       partition.
+  ann_ivf_topk         k-means inverted lists; queries probe the
+                       `nprobe` nearest lists (equi-join on cluster).
+  ann_pq_topk          product-quantized codes scored by asymmetric
+                       distance, exact re-rank of the best `rerank`.
+  ann_ivfpq_topk       IVF list pruning and PQ codes together.
+
+Every exact score goes through _cosine_topk (self-pairs dropped,
+cosine rounded to 4, ties on neighbor id) and every PQ score through
+_adc_scores, so rounding and self-pair rules cannot drift between
+paths.
 
 Hyperplanes are generated in Python from md5 (functions/hashing.py)
 — deterministic and reproducible in the DuckDB oracle, which makes
-the approximate path value-hash-verifiable.
+the approximate paths value-hash-verifiable.
 """
 
 from __future__ import annotations
@@ -129,6 +139,40 @@ def lsh_bucket_array(
     )
 
 
+def _normed(side: str, id_col: str, vec_col: str) -> list[Column]:
+    """The columns one side of a candidate pair selects: id, vector and
+    norm, named for _cosine_topk (side "q": q_id/q_vec/q_norm; side
+    "n": neighbor_id/n_vec/n_norm). Each norm is computed ONCE per row
+    before the join (same doubles as inlining — the per-pair work drops
+    from three array folds to one, measured ~2× on ann_bruteforce)."""
+    return [
+        F.col(id_col).alias("q_id" if side == "q" else "neighbor_id"),
+        F.col(vec_col).alias(f"{side}_vec"),
+        norm(F.col(vec_col)).alias(f"{side}_norm"),
+    ]
+
+
+def _cosine_topk(pairs: DataFrame, k: int) -> DataFrame:
+    """The shared exact-scoring tail of a joined candidate frame
+    (q_id, q_vec, q_norm, neighbor_id, n_vec, n_norm): drop self-pairs,
+    score cosine rounded to 4 (the oracle-parity contract — the rank
+    order is reproducible across engines), keep the k best per query,
+    ties on neighbor id. Only candidate GENERATION differs between the
+    callers (cross join, bucket join, cluster join, rerank join)."""
+    scored = pairs.filter(F.col("neighbor_id") != F.col("q_id")).select(
+        "q_id",
+        "neighbor_id",
+        F.round(
+            dot(F.col("q_vec"), F.col("n_vec")) / (F.col("q_norm") * F.col("n_norm")),
+            4,
+        ).alias("cosine"),
+    )
+    return topk_per_group(
+        scored, ["q_id"], [F.desc("cosine"), F.asc("neighbor_id")], k=k,
+        rank_col="rank",
+    )
+
+
 def ann_bruteforce_topk(
     vectors: DataFrame,
     queries: DataFrame,
@@ -137,65 +181,37 @@ def ann_bruteforce_topk(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Exact cosine top-k: for each query vector, the k nearest corpus
-    vectors (self excluded). Cosine rounded to 4 before ranking so the
-    rank order is reproducible across engines; ties break on id.
-
-    Each side's norm is computed ONCE per row before the join (same
-    doubles as inlining — the per-pair work drops from three array
-    folds to one, measured ~2× on the bench query)."""
-    q = queries.select(
-        F.col(id_col).alias("q_id"),
-        F.col(vec_col).alias("q_vec"),
-        norm(F.col(vec_col)).alias("q_norm"),
-    )
-    v = vectors.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("n_vec"),
-        norm(F.col(vec_col)).alias("n_norm"),
-    )
-    scored = (
-        v.crossJoin(F.broadcast(q))
-        .filter(F.col("neighbor_id") != F.col("q_id"))
-        .select(
-            "q_id",
-            "neighbor_id",
-            F.round(
-                dot(F.col("q_vec"), F.col("n_vec"))
-                / (F.col("q_norm") * F.col("n_norm")),
-                4,
-            ).alias("cosine"),
-        )
-    )
-    return topk_per_group(
-        scored,
-        ["q_id"],
-        [F.desc("cosine"), F.asc("neighbor_id")],
-        k=k,
-        rank_col="rank",
-    )
+    vectors (self excluded), over the broadcast cross join."""
+    q = queries.select(*_normed("q", id_col, vec_col))
+    v = vectors.select(*_normed("n", id_col, vec_col))
+    return _cosine_topk(v.crossJoin(F.broadcast(q)), k)
 
 
-def ann_lsh_multiprobe_topk(
+def ann_lsh_topk(
     vectors: DataFrame,
     queries: DataFrame,
     k: int = 5,
-    nprobes: int = 2,
+    nprobes: int = 1,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     num_planes: int = NUM_PLANES,
     dim: int = EMBED_DIM,
 ) -> DataFrame:
-    """Multi-probe LSH ANN: each query probes its own bucket plus the
-    buckets reached by flipping its (nprobes−1) lowest-|margin| sign
-    bits — the hyperplanes it sits closest to, i.e. the flips most
-    likely to hide true neighbors. Standard recall recovery for
-    bucketed LSH (recall strictly ≥ single-probe at ~nprobes× the
-    candidate cost, still an equi-join, never a cross join).
+    """LSH-bucketed ANN top-k: rank only candidates in the probed
+    buckets. Each query probes its own bucket plus the buckets reached
+    by flipping its (nprobes−1) lowest-|margin| sign bits — the
+    hyperplanes it sits closest to, i.e. the flips most likely to hide
+    true neighbors (multi-probe: recall ≥ single-probe at ~nprobes× the
+    candidate cost). At nprobes=1 the flip list is empty and the probe
+    set is the query's own bucket.
 
-    Probe buckets are distinct by construction (distinct bit flips)
-    and every corpus vector lives in exactly one bucket, so no
-    candidate pair duplicates. Deterministic margins (md5 planes) —
-    fully oracle-verifiable.
+    Recall < 1 by design; the win is that candidate generation is an
+    equi-join on the bucket id instead of a cross join — the joinable
+    shape that scales. Bucket skew is handled by AQE. Probe buckets are
+    distinct by construction (distinct bit flips) and every corpus
+    vector lives in exactly one bucket, so no candidate pair
+    duplicates. Deterministic margins (md5 planes) — fully
+    oracle-verifiable.
     """
     planes = lsh_planes(num_planes, dim)
     # one zip_with over the planes literal, not num_planes struct
@@ -209,9 +225,7 @@ def ann_lsh_multiprobe_topk(
         ),
     )
     staged = queries.select(
-        F.col(id_col).alias("q_id"),
-        F.col(vec_col).alias("q_vec"),
-        norm(F.col(vec_col)).alias("q_norm"),
+        *_normed("q", id_col, vec_col),
         lsh_bucket_col(F.col(vec_col), planes).alias("_b0"),
         F.array_sort(margins).alias("_margins"),
     )
@@ -228,31 +242,10 @@ def ann_lsh_multiprobe_topk(
         F.explode(F.concat(F.array(F.col("_b0")), flips)).alias("bucket"),
     )
     v = vectors.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("n_vec"),
-        norm(F.col(vec_col)).alias("n_norm"),
+        *_normed("n", id_col, vec_col),
         lsh_bucket_col(F.col(vec_col), planes).alias("bucket"),
     )
-    scored = (
-        v.join(F.broadcast(q), "bucket")
-        .filter(F.col("neighbor_id") != F.col("q_id"))
-        .select(
-            "q_id",
-            "neighbor_id",
-            F.round(
-                dot(F.col("q_vec"), F.col("n_vec"))
-                / (F.col("q_norm") * F.col("n_norm")),
-                4,
-            ).alias("cosine"),
-        )
-    )
-    return topk_per_group(
-        scored,
-        ["q_id"],
-        [F.desc("cosine"), F.asc("neighbor_id")],
-        k=k,
-        rank_col="rank",
-    )
+    return _cosine_topk(v.join(F.broadcast(q), "bucket"), k)
 
 
 def kmeans_centroids(
@@ -395,91 +388,16 @@ def ann_ivf_topk(
         vectors, k=n_clusters, iters=kmeans_iters, id_col=id_col, vec_col=vec_col
     )
     v = vectors.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("n_vec"),
-        norm(F.col(vec_col)).alias("n_norm"),
+        *_normed("n", id_col, vec_col),
         nearest_centroid_col(F.col(vec_col), centroids).alias("_cluster"),
     )
     q = queries.select(
-        F.col(id_col).alias("q_id"),
-        F.col(vec_col).alias("q_vec"),
-        norm(F.col(vec_col)).alias("q_norm"),
+        *_normed("q", id_col, vec_col),
         F.explode(
             probe_centroids_col(F.col(vec_col), centroids, nprobe)
         ).alias("_cluster"),
     )
-    scored = (
-        v.join(F.broadcast(q), "_cluster")
-        .filter(F.col("neighbor_id") != F.col("q_id"))
-        .select(
-            "q_id",
-            "neighbor_id",
-            F.round(
-                dot(F.col("q_vec"), F.col("n_vec"))
-                / (F.col("q_norm") * F.col("n_norm")),
-                4,
-            ).alias("cosine"),
-        )
-    )
-    return topk_per_group(
-        scored,
-        ["q_id"],
-        [F.desc("cosine"), F.asc("neighbor_id")],
-        k=k,
-        rank_col="rank",
-    )
-
-
-def ann_lsh_topk(
-    vectors: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    num_planes: int = NUM_PLANES,
-    dim: int = EMBED_DIM,
-) -> DataFrame:
-    """LSH-bucketed ANN top-k: rank only same-bucket candidates.
-
-    Recall < 1 by design (a query returns up to k of its bucket
-    peers); the win is that candidate generation is an equi-join on
-    the bucket id instead of a cross join — the joinable shape that
-    scales. Bucket skew is handled by AQE; for adversarial skew,
-    multi-probe (flip one sign bit) is the standard extension.
-    """
-    planes = lsh_planes(num_planes, dim)
-    q = queries.select(
-        F.col(id_col).alias("q_id"),
-        F.col(vec_col).alias("q_vec"),
-        norm(F.col(vec_col)).alias("q_norm"),
-        lsh_bucket_col(F.col(vec_col), planes).alias("bucket"),
-    )
-    v = vectors.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("n_vec"),
-        norm(F.col(vec_col)).alias("n_norm"),
-        lsh_bucket_col(F.col(vec_col), planes).alias("bucket"),
-    )
-    scored = (
-        v.join(F.broadcast(q), "bucket")
-        .filter(F.col("neighbor_id") != F.col("q_id"))
-        .select(
-            "q_id",
-            "neighbor_id",
-            F.round(
-                dot(F.col("q_vec"), F.col("n_vec"))
-                / (F.col("q_norm") * F.col("n_norm")),
-                4,
-            ).alias("cosine"),
-        )
-    )
-    return topk_per_group(
-        scored,
-        ["q_id"],
-        [F.desc("cosine"), F.asc("neighbor_id")],
-        k=k,
-        rank_col="rank",
-    )
+    return _cosine_topk(v.join(F.broadcast(q), "_cluster"), k)
 
 
 # --- product quantization (ADC) ------------------------------------------
@@ -647,33 +565,10 @@ def _rerank_exact_topk(
         adc, ["q_id"], [F.asc("adc"), F.asc("neighbor_id")], k=rerank,
         rank_col="_rn",
     ).select("q_id", "neighbor_id")
-    v = vectors.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("n_vec"),
-        norm(F.col(vec_col)).alias("n_norm"),
-    )
-    qn = queries.select(
-        F.col(id_col).alias("q_id"),
-        F.col(vec_col).alias("q_vec2"),
-        norm(F.col(vec_col)).alias("q_norm"),
-    )
-    scored = (
-        cands.join(v, "neighbor_id")
-        .join(F.broadcast(qn), "q_id")
-        .select(
-            "q_id",
-            "neighbor_id",
-            F.round(
-                dot(F.col("q_vec2"), F.col("n_vec"))
-                / (F.col("q_norm") * F.col("n_norm")),
-                4,
-            ).alias("cosine"),
-        )
-    )
-    return topk_per_group(
-        scored, ["q_id"], [F.desc("cosine"), F.asc("neighbor_id")], k=k,
-        rank_col="rank",
-    )
+    v = vectors.select(*_normed("n", id_col, vec_col))
+    qn = queries.select(*_normed("q", id_col, vec_col))
+    pairs = cands.join(v, "neighbor_id").join(F.broadcast(qn), "q_id")
+    return _cosine_topk(pairs, k)
 
 
 def ann_pq_topk(

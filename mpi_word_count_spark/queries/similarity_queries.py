@@ -14,7 +14,6 @@ from mpi_word_count_spark.functions.parity import sql_portable_round
 from mpi_word_count_spark.operators.similarity import (
     ann_bruteforce_topk,
     ann_ivf_topk,
-    ann_lsh_multiprobe_topk,
     ann_lsh_topk,
     lsh_planes,
 )
@@ -144,9 +143,7 @@ def ann_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-probe LSH top-5: own bucket + lowest-|margin| bit flip.
     Recall ≥ single-probe ann_lsh at ~2× candidate cost."""
     emb = table(spark, "embeddings", sf_dir)
-    return ann_lsh_multiprobe_topk(
-        emb, _queries_df(spark, sf_dir), k=TOP_K, nprobes=2
-    )
+    return ann_lsh_topk(emb, _queries_df(spark, sf_dir), k=TOP_K, nprobes=2)
 
 
 IVF_CLUSTERS = 8

@@ -1411,59 +1411,19 @@ def _rrf_oracle() -> str:
     """
 
 
-def _rrf_use_index(sf_dir: str) -> bool:
-    """Size-adaptive switch for the RRF positional-index
-    materialization (guide §2: scale-dependent decisions derive from
-    input size, never from a local-mode constant). Measured crossover
-    on the bench host (OPTIMIZATION_r11.md): the 24-scan inline DAG
-    is ~0.3 s faster on the 0.6 MB sf0.1 fixture, the materialized
-    index is 1.4–1.5× faster from 5 MB of documents up (and the
-    inline DAG turns unstable at 16 MB — 24–43 s outlier runs from 24
-    concurrent corpus scans). Default threshold 4 MiB sits just under
-    the measured win; production corpora are far above it, so
-    materialization IS the production path — the inline body is the
-    small-input fast path. Overrides for tests/measurement:
-    SPARK_GRAFT_RRF_INDEX=force|off|auto,
-    SPARK_GRAFT_RRF_INDEX_MIN_BYTES."""
-    import os
-
-    mode = os.environ.get("SPARK_GRAFT_RRF_INDEX", "auto")
-    if mode == "force":
-        return True
-    if mode == "off":
-        return False
-    min_bytes = int(
-        os.environ.get("SPARK_GRAFT_RRF_INDEX_MIN_BYTES", str(4 * 1024 * 1024))
-    )
-    src = os.path.join(sf_dir, "documents.parquet")
-    size = 0
-    if os.path.isdir(src):
-        for root, _, files in os.walk(src):
-            size += sum(os.path.getsize(os.path.join(root, f)) for f in files)
-    elif os.path.exists(src):
-        size = os.path.getsize(src)
-    return size >= min_bytes
-
-
 def _rrf_compact_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ONE corpus pass → the compact retrieval index
     (doc_id, len, hits: array<struct<pos:int, word:string>>) every
     RRF input derives from: doc length for BM25's normalization, and
     the position-ordered query-term occurrences for tf, df and
     proximity. This is guide §8's lightweight proxy — a few bytes per
-    document instead of the document — MATERIALIZED (write + read
-    back, guide §6) so the plan's many index consumers (tf, df,
-    stats, proximity, ×2 through the rank decomposition's count/data
-    passes) each read a metadata-sized parquet instead of
-    re-tokenizing the corpus. The write is part of the query's own
-    execution, recomputed from the inputs on every invocation
-    (scratch dir removed by release_caches)."""
-    import os
-    import shutil
-    import tempfile
-    import uuid
-
-    from mpi_word_count_spark.operators import track_releaser
+    document instead of the document — materialized once (guide §6)
+    so the plan's many index consumers (tf, df, stats, proximity, ×2
+    through the rank decomposition's count/data passes) each read the
+    metadata-sized index instead of re-tokenizing the corpus. The
+    materialization is part of the query's own execution, recomputed
+    from the inputs on every invocation; release_caches() frees it."""
+    from mpi_word_count_spark.operators import materialize
     from mpi_word_count_spark.operators.dedup import tokens_col
 
     docs = table(spark, "documents", sf_dir)
@@ -1481,16 +1441,7 @@ def _rrf_compact_index(spark: SparkSession, sf_dir: str) -> DataFrame:
             lambda h: h["word"].isin(terms),
         ).alias("hits"),
     )
-    path = os.path.join(
-        tempfile.gettempdir(),
-        "spark_graft_scratch",
-        f"rrf_index_{uuid.uuid4().hex}",
-    )
-    # registered before the write: a write that fails part-way leaves
-    # files under `path` that release_caches() must still remove
-    track_releaser(lambda p=path: shutil.rmtree(p, ignore_errors=True))
-    compact.write.mode("overwrite").parquet(path)
-    return spark.read.parquet(path)
+    return materialize(compact)
 
 
 def _min_diff_word_dist(hits: Column) -> Column:
@@ -1533,21 +1484,17 @@ def q_hybrid_rrf_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranking is float-scored (ranks, not scores, cross the fusion
     boundary — the whole point of RRF).
 
-    Optimization r11 (VERDICT r10 item 1, guide §6/§2.4): above the
-    measured input-size crossover (_rrf_use_index) every input
-    derives from the ONE materialized compact positional index of
-    _rrf_compact_index — before: the corpus was tokenized once per
-    consumer (24 corpus scans / 68 Exchanges in the r10 before-plan);
-    after: ONE corpus scan (the index write) and metadata-sized index
-    reads. On the index path, doc length rides with tf through the
-    explode so BM25 needs no dl join; document frequency is
-    tf.groupBy(word).count() — identical to countDistinct(doc_id)
-    because tf is one row per (doc, word); and proximity needs NO
-    positional self-join (_min_diff_word_dist). Below the crossover
-    the original inline DAG stands — its duplicated subtrees are
-    ~20 ms concurrent scans there, faster than any materialization
-    barrier (measured, r10 AND r11). Both paths are oracle-identical
-    (hash-verified at sf0.01/sf0.1 and under local[7]).
+    One plan (optimization r11, VERDICT r10 item 1, guide §6/§2.4):
+    every input derives from the ONE materialized compact positional
+    index of _rrf_compact_index, so the corpus is tokenized once.
+    Measured against a plan that tokenizes per consumer (24 corpus
+    scans, OPTIMIZATION_r11.md): 1.4–1.5× faster from 5 MB of
+    documents up, where that plan also ran 24–43 s outliers at 16 MB;
+    0.3 s slower on the 0.6 MB sf0.1 fixture (2.30 vs 2.01 s). Doc
+    length rides with tf through the explode so BM25 needs no dl join;
+    document frequency is tf.groupBy(word).count() — identical to
+    countDistinct(doc_id) because tf is one row per (doc, word); and
+    proximity needs NO positional self-join (_min_diff_word_dist).
 
     Scale shape: both EXACT rank columns (they are part of the result
     even beyond the contributing top-50, so a top-k heap can't produce
@@ -1558,11 +1505,8 @@ def q_hybrid_rrf_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB (round-4 verdict). The final top-k IS a plain
     orderBy().limit() heap.
     """
-    from mpi_word_count_spark.operators.dedup import tokens_col
     from mpi_word_count_spark.operators.ranking import bucketed_global_rank
-    from mpi_word_count_spark.tokenizer import tokenize
 
-    terms = list(BM25_TERMS)
     idf = F.log(
         (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0
     )
@@ -1573,71 +1517,26 @@ def q_hybrid_rrf_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(idf * F.col("tf") * (BM25_K1 + 1.0) / denom), 4
     ).alias("bm25")
 
-    if _rrf_use_index(sf_dir):
-        # --- index path: everything from the materialized index -----
-        compact = _rrf_compact_index(spark, sf_dir)
-        stats = compact.filter(F.col("len") > 0).agg(
-            F.count(F.lit(1)).alias("n_docs"), F.avg("len").alias("avg_len")
-        )
-        tf = (
-            compact.select("doc_id", "len", F.explode("hits").alias("h"))
-            .groupBy("doc_id", "len", F.col("h.word").alias("word"))
-            .agg(F.count(F.lit(1)).alias("tf"))
-        )
-        # one row per (doc, word) in tf ⇒ count(*) == countDistinct
-        dfreq = tf.groupBy("word").agg(F.count(F.lit(1)).alias("df"))
-        bm = (
-            tf.join(F.broadcast(dfreq), "word")
-            .crossJoin(F.broadcast(stats))
-            .groupBy("doc_id")
-            .agg(bm25_sum)
-        )
-        prox = compact.select(
-            "doc_id", _min_diff_word_dist(F.col("hits")).alias("min_dist")
-        ).filter(F.col("min_dist").isNotNull())
-    else:
-        # --- inline path: the original small-input DAG --------------
-        docs = table(spark, "documents", sf_dir)
-        toks = tokenize(docs, col="text", keep=["doc_id"])
-        dl = toks.groupBy("doc_id").agg(F.count(F.lit(1)).alias("len"))
-        stats = dl.agg(
-            F.count(F.lit(1)).alias("n_docs"), F.avg("len").alias("avg_len")
-        )
-        dfreq = (
-            toks.filter(F.col("word").isin(terms))
-            .groupBy("word")
-            .agg(F.countDistinct("doc_id").alias("df"))
-        )
-        tf = (
-            toks.filter(F.col("word").isin(terms))
-            .groupBy("doc_id", "word")
-            .agg(F.count(F.lit(1)).alias("tf"))
-        )
-        bm = (
-            tf.join(F.broadcast(dfreq), "word")
-            .join(dl, "doc_id")
-            .crossJoin(F.broadcast(stats))
-            .groupBy("doc_id")
-            .agg(bm25_sum)
-        )
-        ptoks = docs.select("doc_id", tokens_col("text").alias("_toks"))
-        posd = (
-            ptoks.select("doc_id", F.posexplode("_toks").alias("p0", "word"))
-            .filter(F.col("word").isin(terms))
-            .select("doc_id", "word", (F.col("p0") + 1).alias("pos"))
-        )
-        a, b = posd.alias("a"), posd.alias("b")
-        prox = (
-            a.join(
-                b,
-                (F.col("a.doc_id") == F.col("b.doc_id"))
-                & (F.col("a.word") < F.col("b.word")),
-            )
-            .groupBy(F.col("a.doc_id").alias("doc_id"))
-            .agg(
-                F.min(F.abs(F.col("a.pos") - F.col("b.pos"))).alias("min_dist")
-            )
-        )
+    compact = _rrf_compact_index(spark, sf_dir)
+    stats = compact.filter(F.col("len") > 0).agg(
+        F.count(F.lit(1)).alias("n_docs"), F.avg("len").alias("avg_len")
+    )
+    tf = (
+        compact.select("doc_id", "len", F.explode("hits").alias("h"))
+        .groupBy("doc_id", "len", F.col("h.word").alias("word"))
+        .agg(F.count(F.lit(1)).alias("tf"))
+    )
+    # one row per (doc, word) in tf ⇒ count(*) == countDistinct
+    dfreq = tf.groupBy("word").agg(F.count(F.lit(1)).alias("df"))
+    bm = (
+        tf.join(F.broadcast(dfreq), "word")
+        .crossJoin(F.broadcast(stats))
+        .groupBy("doc_id")
+        .agg(bm25_sum)
+    )
+    prox = compact.select(
+        "doc_id", _min_diff_word_dist(F.col("hits")).alias("min_dist")
+    ).filter(F.col("min_dist").isNotNull())
 
     # bucket = -floor(10·score): monotone in desc(bm25), equal scores
     # share a bucket, ~hundreds of deciscore buckets

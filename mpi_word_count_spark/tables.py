@@ -56,20 +56,27 @@ def normalize_events_ts(df: DataFrame) -> DataFrame:
     return df
 
 
-# Resolved-relation memo, keyed (applicationId, sf_dir, name) — the
+# Resolved-relation memo, keyed (session, sf_dir, name) — the
 # catalog behavior (optimization r11, guide §6 file-listing reuse).
 # Every `spark.read.parquet` call re-lists the path and re-reads
 # parquet footers for the schema: measured ~125 ms per call on the
 # driver, paid 1-3× per query BUILD (inside the bench's timed
-# region) for metadata that cannot change between runs. A real
-# deployment resolves tables through a catalog, which caches exactly
-# this (Spark's session catalog holds the resolved relation; Iceberg/
-# Delta keep manifests for the same reason — §6). NOTHING about the
-# data is cached: the memoized object is an UNEXECUTED lazy plan and
-# every execution scans parquet from storage. Keyed by applicationId
-# so a new session (tests start/stop several) never sees a stale
-# relation.
-_RESOLVED: dict[tuple[str, str, str], DataFrame] = {}
+# region). A real deployment resolves tables through a catalog, which
+# caches exactly this (Spark's session catalog holds the resolved
+# relation; Iceberg/Delta keep manifests for the same reason — §6).
+# NOTHING about the data is cached: the memoized object is an
+# UNEXECUTED lazy plan and every execution scans parquet from storage.
+# Keyed by the owning session, not the application: a relation is
+# bound to the session that read it and runs on that session's conf,
+# so a sibling from spark.newSession() (same application, its own
+# shuffle/AQE settings) must resolve its own, and a session
+# recreated after stop() is a new object that never sees a stale
+# relation (the stopped one's few lazy plans stay in the memo until
+# the process exits). Assumes the fixture datasets are immutable
+# while a session lives: a file added to or rewritten under a
+# memoized path is not picked up (the listing and schema are the
+# ones read first).
+_RESOLVED: dict[tuple[SparkSession, str, str], DataFrame] = {}
 
 
 def raw_table(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> DataFrame:
@@ -77,7 +84,7 @@ def raw_table(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> D
     table()'s source, also the schema authority for stream_table."""
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; known: {TABLES}")
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir), name)
+    key = (spark, os.path.abspath(sf_dir), name)
     df = _RESOLVED.get(key)
     if df is None:
         df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))

@@ -156,3 +156,24 @@ def test_session_defaults_come_from_the_host(monkeypatch):
     assert session.host_defaults() == (3, "49152m")  # the old fixed 48g
     pages["SC_PHYS_PAGES"] = (1 << 30) // 4096
     assert session.host_defaults() == (3, "512m")  # floor on tiny hosts
+
+
+def test_table_memo_is_per_session(spark):
+    """A sibling session (same application, its own conf) resolves its
+    own relation: the memoized relation of the first session would run
+    on that session's shuffle/AQE settings instead."""
+    from pyspark.sql import functions as F
+
+    from mpi_word_count_spark.tables import table
+
+    from tests.conftest import SF_DIR
+
+    assert table(spark, "orders", SF_DIR).sparkSession is spark
+    sibling = spark.newSession()
+    sibling.conf.set("spark.sql.shuffle.partitions", "3")
+    sibling.conf.set("spark.sql.adaptive.enabled", "false")
+    orders = table(sibling, "orders", SF_DIR)
+    assert orders.sparkSession is sibling
+    assert table(sibling, "orders", SF_DIR) is orders  # still memoized
+    grouped = orders.groupBy("o_custkey").agg(F.count(F.lit(1)))
+    assert grouped.rdd.getNumPartitions() == 3

@@ -6,6 +6,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from mpi_word_count_spark.operators.dedup import (
+    SIMHASH_BITS,
+    _simhash_terms,
     exact_dedup,
     minhash_lsh_pairs,
     ngram_jaccard_pairs,
@@ -41,6 +43,40 @@ def simhash_dup_pairs(df: DataFrame, max_hamming: int) -> DataFrame:
             ham.cast("bigint").alias("hamming"),
         )
         .filter(F.col("hamming") <= max_hamming)
+    )
+
+
+def simhash_expr(df: DataFrame, bits: int = SIMHASH_BITS) -> DataFrame:
+    """JVM-expression reference for simhash(): the same integer fold
+    row-wise, exploding docs × terms × bits rows through two shuffles
+    with no Python in the row path — the form the DuckDB oracle
+    mirrors."""
+    terms = _simhash_terms(df, "doc_id", "text")
+    per_bit = (
+        terms.select(
+            "doc_id",
+            "tf",
+            "th",
+            F.explode(F.sequence(F.lit(0), F.lit(bits - 1))).alias("j"),
+        )
+        .withColumn(
+            "contrib",
+            # shiftright() the function needs a literal shift; expr form
+            # accepts a column shift amount
+            F.when(
+                F.expr("shiftright(th, cast(j as int)) & 1") == 1, F.col("tf")
+            ).otherwise(-F.col("tf")),
+        )
+        .groupBy("doc_id", "j")
+        .agg(F.sum("contrib").alias("s"))
+    )
+    return per_bit.groupBy("doc_id").agg(
+        F.sum(
+            F.when(
+                F.col("s") > 0,
+                F.expr("shiftleft(cast(1 as bigint), cast(j as int))"),
+            ).otherwise(F.lit(0).cast("long"))
+        ).alias("simhash")
     )
 
 
@@ -174,28 +210,19 @@ def test_dup_clusters_components(spark):
 
 
 def test_simhash_arrow_equals_expression(spark):
-    from mpi_word_count_spark.operators.dedup import simhash_arrow
-
-    expr = {
-        r["doc_id"]: r["simhash"]
-        for r in simhash(docs_df(spark), kernel="expr").collect()
-    }
-    arrow = {r["doc_id"]: r["simhash"] for r in simhash_arrow(docs_df(spark)).collect()}
+    expr = {r["doc_id"]: r["simhash"] for r in simhash_expr(docs_df(spark)).collect()}
+    arrow = {r["doc_id"]: r["simhash"] for r in simhash(docs_df(spark)).collect()}
     assert expr == arrow
 
 
 def test_simhash_arrow_string_ids(spark):
     # string ids must survive the bucketing (hash(id), not pmod(id))
     # and come back with their original type
-    from mpi_word_count_spark.operators.dedup import simhash_arrow
-
     df = spark.createDataFrame(
         [(f"doc-{i}", t) for i, t in DOCS], "doc_id string, text string"
     )
-    expr = {
-        r["doc_id"]: r["simhash"] for r in simhash(df, kernel="expr").collect()
-    }
-    arrow = {r["doc_id"]: r["simhash"] for r in simhash_arrow(df).collect()}
+    expr = {r["doc_id"]: r["simhash"] for r in simhash_expr(df).collect()}
+    arrow = {r["doc_id"]: r["simhash"] for r in simhash(df).collect()}
     assert expr == arrow
     assert expr["doc-1"] == expr["doc-2"]
 

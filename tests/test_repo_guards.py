@@ -115,20 +115,34 @@ def test_registry_order_rule():
 CHECKPOINT_CALLS = {"localCheckpoint", "checkpoint", "queryExecution", "_unpersist_local_ckpt"}
 
 
-def test_checkpointing_only_in_the_iteration_driver():
-    """Round state is materialized and freed in one place: a package
-    module other than operators/__init__.py that checkpoints or frees a
-    checkpoint by hand regrows the seven hand-rolled loops. Docstrings
-    and comments are mentions, not uses."""
-    driver = PKG / "operators" / "__init__.py"
+def _uses_outside(allowed: Path, names: set[str]) -> list[str]:
+    """Every use of one of `names` (attribute, name or imported alias)
+    in a package module other than `allowed`. Docstrings and comments
+    are mentions, not uses."""
     found = []
     for path in PKG.rglob("*.py"):
-        if path == driver:
+        if path == allowed:
             continue
         for node in ast.walk(ast.parse(path.read_text())):
             name = getattr(node, "attr", None) or getattr(node, "id", None)
             if isinstance(node, ast.alias):
                 name = node.name.rsplit(".", 1)[-1]
-            if name in CHECKPOINT_CALLS:
+            if name in names:
                 found.append(f"{path.relative_to(ROOT)}:{node.lineno} {name}")
+    return found
+
+
+def test_checkpointing_only_in_the_iteration_driver():
+    """Round state is materialized and freed in one place: a package
+    module other than operators/__init__.py that checkpoints or frees a
+    checkpoint by hand regrows the seven hand-rolled loops."""
+    found = _uses_outside(PKG / "operators" / "__init__.py", CHECKPOINT_CALLS)
     assert not found, "checkpoint calls outside operators/__init__.py:\n" + "\n".join(found)
+
+
+def test_env_reads_only_in_session():
+    """Configuration comes from the environment in one place:
+    session.py. A package module reading os.environ / os.getenv
+    elsewhere grows an A/B knob the session does not know about."""
+    found = _uses_outside(PKG / "session.py", {"environ", "environb", "getenv", "getenvb"})
+    assert not found, "environment reads outside session.py:\n" + "\n".join(found)

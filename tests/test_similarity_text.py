@@ -53,7 +53,7 @@ def test_lsh_topk_subset_of_bruteforce(spark):
     bf = {r["neighbor_id"] for r in
           ann_bruteforce_topk(df, q, k=3, vec_col="embedding").collect()}
     lsh = {r["neighbor_id"] for r in
-           ann_lsh_topk(df, q, k=3, vec_col="embedding", dim=2).collect()}
+           ann_lsh_topk(df, q, k=3, nprobes=1, vec_col="embedding", dim=2).collect()}
     assert lsh <= bf | {1, 2, 3}
 
 
@@ -220,17 +220,19 @@ def test_ngram_counts_bigrams(spark):
 
 def test_multiprobe_recall_at_least_single_probe(spark):
     from tests.conftest import SF_DIR
-    from mpi_word_count_spark.operators.similarity import ann_lsh_multiprobe_topk
     from mpi_word_count_spark.tables import table
     from pyspark.sql import functions as F
 
     emb = table(spark, "embeddings", SF_DIR)
     q = emb.filter(F.col("vec_id") < 10)
     bf = {(r["q_id"], r["neighbor_id"]) for r in ann_bruteforce_topk(emb, q, k=5).collect()}
-    single = {(r["q_id"], r["neighbor_id"]) for r in ann_lsh_topk(emb, q, k=5).collect()}
+    single = {
+        (r["q_id"], r["neighbor_id"])
+        for r in ann_lsh_topk(emb, q, k=5, nprobes=1).collect()
+    }
     multi = {
         (r["q_id"], r["neighbor_id"])
-        for r in ann_lsh_multiprobe_topk(emb, q, k=5, nprobes=2).collect()
+        for r in ann_lsh_topk(emb, q, k=5, nprobes=2).collect()
     }
     # the single-probe bucket is always among the probes → candidate
     # superset → per-query top-k can only improve vs ground truth

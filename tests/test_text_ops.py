@@ -121,32 +121,30 @@ def test_edit_distance_length_band_is_lossless(spark):
     assert (1, 4) not in got
 
 
-def test_rrf_index_scratch_dir_removed_after_failed_write(spark, monkeypatch):
-    """A compact-index write that fails part-way must not strand its
-    rrf_index_* scratch dir: release_caches() removes it even though
-    the write raised. The patched writer creates the dir with a file in
-    it, as a partial write does, then fails."""
+def test_rrf_index_released_and_never_written_to_disk(spark):
+    """hybrid_rrf_retrieval materializes its compact index through the
+    operators' one materialization path: after a collect,
+    release_caches() leaves no persisted RDD the call made, and no
+    rrf_index_* scratch directory is ever written."""
+    import glob
     import os
+    import tempfile
 
-    import pytest
-    from pyspark.sql import DataFrameWriter
-
+    import __spark_entry__ as entrymod
     from mpi_word_count_spark.operators import release_caches
-    from mpi_word_count_spark.queries.text_queries import _rrf_compact_index
 
-    from tests.conftest import SF_DIR
+    from tests.conftest import SF_DIR, persisted_rdd_ids
 
-    written = []
+    def scratch_dirs() -> set[str]:
+        tmp = tempfile.gettempdir()
+        return set(glob.glob(os.path.join(tmp, "rrf_index_*"))) | set(
+            glob.glob(os.path.join(tmp, "*", "rrf_index_*"))
+        )
 
-    def failing_parquet(self, path, *args, **kwargs):
-        os.makedirs(path)
-        open(os.path.join(path, "part-00000.parquet"), "w").close()
-        written.append(path)
-        raise OSError("disk full")
-
-    monkeypatch.setattr(DataFrameWriter, "parquet", failing_parquet)
-    with pytest.raises(OSError, match="disk full"):
-        _rrf_compact_index(spark, SF_DIR)
-    assert written and os.path.isdir(written[0])
+    scratch_before = scratch_dirs()
     release_caches()
-    assert not os.path.exists(written[0])
+    before = persisted_rdd_ids(spark)
+    assert entrymod.queries()["hybrid_rrf_retrieval"](spark, SF_DIR).collect()
+    release_caches()
+    assert persisted_rdd_ids(spark) - before == set()
+    assert scratch_dirs() == scratch_before
