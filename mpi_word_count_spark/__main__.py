@@ -149,12 +149,11 @@ def main(argv: list[str] | None = None) -> int:
     with timing_log(args.timing, label="word_count"):
         if args.compat:
             from mpi_word_count_spark.operators.wordcount import (
-                _check_corpus,
+                read_corpus,
                 word_count_compat,
             )
 
-            _check_corpus(args.path)  # same friendly error as the default path
-            lines = spark.read.text(args.path)
+            lines = read_corpus(spark, args.path)  # same empty-corpus error
             result = word_count_compat(lines, col="value", delimiters=delimiters)
         else:
             from mpi_word_count_spark.operators.wordcount import word_count_dir

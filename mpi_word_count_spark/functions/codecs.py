@@ -2050,14 +2050,14 @@ def encode_jpeg_gray_progressive(
     )
 
 
-def encode_wav(samples: np.ndarray, rate: int = 16000) -> bytes:
+def encode_wav(samples: np.ndarray) -> bytes:
     """Encode float32 mono samples in [-1, 1] as 16-bit PCM WAV."""
     pcm = (np.clip(np.asarray(samples), -1.0, 1.0) * 32767.0).astype("<i2")
     buf = io.BytesIO()
     with wave.open(buf, "wb") as w:
         w.setnchannels(1)
         w.setsampwidth(2)
-        w.setframerate(rate)
+        w.setframerate(16000)
         w.writeframes(pcm.tobytes())
     return buf.getvalue()
 

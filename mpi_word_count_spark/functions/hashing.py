@@ -65,12 +65,12 @@ def py_hash32(value: str, seed: str = "") -> int:
 MINHASH_PRIME = (1 << 61) - 1
 
 
-def universal_coeffs(k: int, seed: str = "uh") -> list[tuple[int, int]]:
+def universal_coeffs(k: int) -> list[tuple[int, int]]:
     """k deterministic (a, b) pairs: a odd in [1, 2^31), b in [0, 2^31)."""
     return [
         (
-            (py_hash32(f"a{i}", seed) % (1 << 31)) | 1,
-            py_hash32(f"b{i}", seed) % (1 << 31),
+            (py_hash32(f"a{i}", "uh") % (1 << 31)) | 1,
+            py_hash32(f"b{i}", "uh") % (1 << 31),
         )
         for i in range(k)
     ]

@@ -145,11 +145,7 @@ def release_caches() -> int:
     return n
 
 
-def widen(
-    df: DataFrame,
-    min_partitions: int | None = None,
-    probe: DataFrame | None = None,
-) -> DataFrame:
+def widen(df: DataFrame, probe: DataFrame | None = None) -> DataFrame:
     """Ensure CPU-heavy per-row operators get full parallelism.
 
     Small parquet inputs scan as 1-2 tasks (row-group granularity), so
@@ -172,7 +168,7 @@ def widen(
     before the expensive scan loop.
     """
     sc = df.sparkSession.sparkContext
-    target = min_partitions or sc.defaultParallelism
+    target = sc.defaultParallelism
     src = probe if probe is not None else df
     if src.rdd.getNumPartitions() < target:
         return df.repartition(target)

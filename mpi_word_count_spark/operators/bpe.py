@@ -50,12 +50,12 @@ DEFAULT_MERGES = 16
 DEFAULT_VOCAB_TYPES = 2000
 
 
-def word_freqs(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def word_freqs(docs: DataFrame) -> DataFrame:
     """Corpus word-type frequency table: (word, freq), alnum words
     only. The only corpus-sized stage of BPE training — one
     partial-aggregated shuffle keyed on the word (S1/S2 tokenizer
     semantics, shared with the flagship)."""
-    toks = tokenize(docs, col=text_col)
+    toks = tokenize(docs)
     return (
         toks.filter(F.col("word").rlike(ALNUM_WORD))
         .groupBy("word")
@@ -63,13 +63,13 @@ def word_freqs(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def top_vocab(freqs: DataFrame, n_types: int = DEFAULT_VOCAB_TYPES) -> list[tuple[str, int]]:
+def top_vocab(freqs: DataFrame) -> list[tuple[str, int]]:
     """Driver-side (word, freq) training slice: top-N word types by
     (freq DESC, word ASC). Bounded collect — model-sized, like the
     k-means centroid pulls (operators/similarity.py)."""
     rows = (
         freqs.orderBy(F.desc("freq"), F.asc("word"))
-        .limit(n_types)
+        .limit(DEFAULT_VOCAB_TYPES)
         .collect()
     )
     return [(r["word"], r["freq"]) for r in rows]
@@ -286,12 +286,12 @@ UNIGRAM_K_MULTI = 32
 UNIGRAM_MAX_PIECE = 4
 
 
-def piece_freqs(freqs: DataFrame, max_piece: int = UNIGRAM_MAX_PIECE) -> DataFrame:
+def piece_freqs(freqs: DataFrame) -> DataFrame:
     """Candidate-piece frequency table: every substring of length
     1..max_piece of every word type, weighted by the word's corpus
     frequency. JVM-side substring explosion (no UDF); output is
     word-type-bounded (~30 pieces/type), one piece-keyed shuffle."""
-    lens = F.sequence(F.lit(1), F.least(F.lit(max_piece), F.length("word")))
+    lens = F.sequence(F.lit(1), F.least(F.lit(UNIGRAM_MAX_PIECE), F.length("word")))
     subs = F.flatten(
         F.transform(
             lens,
@@ -308,22 +308,18 @@ def piece_freqs(freqs: DataFrame, max_piece: int = UNIGRAM_MAX_PIECE) -> DataFra
     )
 
 
-def unigram_vocab(
-    freqs: DataFrame,
-    k_multi: int = UNIGRAM_K_MULTI,
-    max_piece: int = UNIGRAM_MAX_PIECE,
-) -> dict[str, int]:
+def unigram_vocab(freqs: DataFrame) -> dict[str, int]:
     """piece -> integer cost. ALL single characters are kept (every
     word stays segmentable); the top k_multi multi-char pieces join
     them by (freq DESC, piece ASC) — binary-collation tie-break, same
     as the oracle's ORDER BY. Bounded collects (≤ alphabet + k_multi
     rows), the same model-sized driver pull as top_vocab above."""
-    pf = piece_freqs(freqs, max_piece).cache()
+    pf = piece_freqs(freqs).cache()
     singles = pf.filter(F.length("piece") == 1).collect()
     multi = (
         pf.filter(F.length("piece") >= 2)
         .orderBy(F.desc("pfreq"), F.asc("piece"))
-        .limit(k_multi)
+        .limit(UNIGRAM_K_MULTI)
         .collect()
     )
     pf.unpersist()
@@ -407,17 +403,15 @@ UNIGRAM_EM_ROUNDS = 2
 def unigram_em_train(
     freqs: DataFrame,
     rounds: int = UNIGRAM_EM_ROUNDS,
-    k_multi: int = UNIGRAM_K_MULTI,
-    max_piece: int = UNIGRAM_MAX_PIECE,
 ) -> tuple[dict[str, int], dict[str, int]]:
     """The hard-EM loop itself: (final piece->cost vocab, final
     E-step's piece->usage counts). Shared by unigram_em_vocab (which
     returns the model) and unigram_em_segment_stats (which tokenizes
     under it)."""
-    vocab = unigram_vocab(freqs, k_multi, max_piece)
+    vocab = unigram_vocab(freqs)
     use: dict[str, int] = {}
     for _ in range(rounds):
-        use = _em_usage(freqs, vocab, max_piece)
+        use = _em_usage(freqs, vocab, UNIGRAM_MAX_PIECE)
         total = sum(use.values())
         new_vocab: dict[str, int] = {}
         for p in vocab:
@@ -430,12 +424,7 @@ def unigram_em_train(
     return vocab, use
 
 
-def unigram_em_vocab(
-    docs: DataFrame,
-    rounds: int = UNIGRAM_EM_ROUNDS,
-    k_multi: int = UNIGRAM_K_MULTI,
-    max_piece: int = UNIGRAM_MAX_PIECE,
-) -> DataFrame:
+def unigram_em_vocab(docs: DataFrame, rounds: int = UNIGRAM_EM_ROUNDS) -> DataFrame:
     """Unigram-LM vocabulary with hard-EM refinement (the training
     loop sentencepiece runs after the frequency initialization that
     unigram_vocab computes; Kudo 2018 §3.2, Viterbi approximation):
@@ -459,7 +448,7 @@ def unigram_em_vocab(
     from mpi_word_count_spark.operators import track_cache
 
     freqs = track_cache(word_freqs(docs))
-    vocab, use = unigram_em_train(freqs, rounds, k_multi, max_piece)
+    vocab, use = unigram_em_train(freqs, rounds)
     rows = [
         (p, len(p), int(use.get(p, 0)), int(c))
         for p, c in sorted(vocab.items())
@@ -469,11 +458,7 @@ def unigram_em_vocab(
     )
 
 
-def unigram_segment_stats(
-    docs: DataFrame,
-    k_multi: int = UNIGRAM_K_MULTI,
-    max_piece: int = UNIGRAM_MAX_PIECE,
-) -> DataFrame:
+def unigram_segment_stats(docs: DataFrame) -> DataFrame:
     """Per word type: the unigram-LM segmentation cost and piece
     count — (word, freq, n_chars, min_cost, min_pieces), all exact
     integers. Corpus-sized work is ONE word-count shuffle plus one
@@ -481,8 +466,8 @@ def unigram_segment_stats(
     word-TYPE table (Zipf-bounded at 100 TB) with the model-sized
     vocab broadcast in the closure."""
     freqs = word_freqs(docs)
-    vocab = unigram_vocab(freqs, k_multi, max_piece)
-    return _segment_stats_df(freqs, vocab, max_piece)
+    vocab = unigram_vocab(freqs)
+    return _segment_stats_df(freqs, vocab, UNIGRAM_MAX_PIECE)
 
 
 def _segment_stats_df(
@@ -521,12 +506,7 @@ def _segment_stats_df(
     return freqs.mapInPandas(kernel, schema=schema)
 
 
-def unigram_em_segment_stats(
-    docs: DataFrame,
-    rounds: int = UNIGRAM_EM_ROUNDS,
-    k_multi: int = UNIGRAM_K_MULTI,
-    max_piece: int = UNIGRAM_MAX_PIECE,
-) -> DataFrame:
+def unigram_em_segment_stats(docs: DataFrame) -> DataFrame:
     """Tokenization under the EM-REFINED vocabulary: train with
     unigram_em_train, then segment every word type under the final
     costs — the inference half of the sentencepiece pipeline (train →
@@ -535,8 +515,8 @@ def unigram_em_segment_stats(
     from mpi_word_count_spark.operators import track_cache
 
     freqs = track_cache(word_freqs(docs))
-    vocab, _use = unigram_em_train(freqs, rounds, k_multi, max_piece)
-    return _segment_stats_df(freqs, vocab, max_piece)
+    vocab, _use = unigram_em_train(freqs)
+    return _segment_stats_df(freqs, vocab, UNIGRAM_MAX_PIECE)
 
 
 # --- subword regularization: n-best segmentation (Kudo 2018 §3.1) -----------
@@ -621,12 +601,7 @@ def _nbest_df(
     return freqs.mapInPandas(kernel, schema=schema)
 
 
-def unigram_nbest_segments(
-    docs: DataFrame,
-    k: int = UNIGRAM_NBEST_K,
-    k_multi: int = UNIGRAM_K_MULTI,
-    max_piece: int = UNIGRAM_MAX_PIECE,
-) -> DataFrame:
+def unigram_nbest_segments(docs: DataFrame) -> DataFrame:
     """Subword regularization's enumeration half (Kudo 2018 §3.1,
     sentencepiece `nbest_size`): the n best segmentations per word
     type under the frequency-initialized unigram costs. Corpus-sized
@@ -634,16 +609,11 @@ def unigram_nbest_segments(
     one piece-count shuffle); the k-best DP replaces the 1-best DP in
     the same Arrow kernel."""
     freqs = word_freqs(docs)
-    vocab = unigram_vocab(freqs, k_multi, max_piece)
-    return _nbest_df(freqs, vocab, max_piece, k)
+    vocab = unigram_vocab(freqs)
+    return _nbest_df(freqs, vocab, UNIGRAM_MAX_PIECE, UNIGRAM_NBEST_K)
 
 
-def unigram_sampled_segments(
-    docs: DataFrame,
-    k: int = UNIGRAM_NBEST_K,
-    k_multi: int = UNIGRAM_K_MULTI,
-    max_piece: int = UNIGRAM_MAX_PIECE,
-) -> DataFrame:
+def unigram_sampled_segments(docs: DataFrame) -> DataFrame:
     """Subword regularization's sampling half: ONE segmentation per
     word type, drawn uniformly from its n-best list — sentencepiece's
     `SampleEncode(nbest_size=k, alpha→0)` limit, where the sampling
@@ -659,7 +629,7 @@ def unigram_sampled_segments(
     from mpi_word_count_spark.functions.hashing import py_hash32
 
     freqs = word_freqs(docs)
-    vocab = unigram_vocab(freqs, k_multi, max_piece)
+    vocab = unigram_vocab(freqs)
 
     def kernel(batches):
         for pdf in batches:
@@ -668,7 +638,7 @@ def unigram_sampled_segments(
                 "pick": [], "cost": [], "pieces": [], "seg": [],
             }
             for word, freq in zip(pdf["word"], pdf["freq"]):
-                nbest = _unigram_kbest(word, vocab, max_piece, k)
+                nbest = _unigram_kbest(word, vocab, UNIGRAM_MAX_PIECE, UNIGRAM_NBEST_K)
                 pick = py_hash32(word, "useg") % len(nbest)
                 cost, pieces, seg = nbest[pick]
                 out["word"].append(word)
@@ -719,11 +689,7 @@ def _wordpiece_greedy(
     return len(out), ",".join(out)
 
 
-def wordpiece_segment_stats(
-    docs: DataFrame,
-    k_multi: int = UNIGRAM_K_MULTI,
-    max_piece: int = UNIGRAM_MAX_PIECE,
-) -> DataFrame:
+def wordpiece_segment_stats(docs: DataFrame) -> DataFrame:
     """Per word type: the WordPiece greedy longest-match segmentation
     under the frequency-derived piece vocabulary (the same singles +
     top-k_multi substrings unigram_segment_stats scores, so the BPE /
@@ -742,7 +708,7 @@ def wordpiece_segment_stats(
     from pyspark.sql import types as T
 
     freqs = word_freqs(docs)
-    pieces = set(unigram_vocab(freqs, k_multi, max_piece))
+    pieces = set(unigram_vocab(freqs))
 
     def kernel(batches):
         for pdf in batches:
@@ -751,7 +717,7 @@ def wordpiece_segment_stats(
                 "n_pieces": [], "seg": [],
             }
             for word, freq in zip(pdf["word"], pdf["freq"]):
-                n_pieces, seg = _wordpiece_greedy(word, pieces, max_piece)
+                n_pieces, seg = _wordpiece_greedy(word, pieces, UNIGRAM_MAX_PIECE)
                 out["word"].append(word)
                 out["freq"].append(int(freq))
                 out["n_chars"].append(len(word))

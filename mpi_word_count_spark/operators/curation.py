@@ -39,8 +39,6 @@ def benchmark_contamination(
     docs: DataFrame,
     bench_filter: Column,
     n: int = CONTAMINATION_NGRAM,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """Flag corpus documents sharing any word n-gram with a benchmark
     set (train/test contamination scan).
@@ -50,11 +48,11 @@ def benchmark_contamination(
     shingles / doc's distinct shingles.
     """
     bench_shingles = (
-        doc_shingles(docs.filter(bench_filter), id_col, text_col, n)
+        doc_shingles(docs.filter(bench_filter), n=n)
         .select("shingle")
         .distinct()
     )
-    corpus_sh = doc_shingles(docs.filter(~bench_filter), id_col, text_col, n)
+    corpus_sh = doc_shingles(docs.filter(~bench_filter), n=n)
     sizes = corpus_sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_shingles"))
     shared = (
         corpus_sh.join(F.broadcast(bench_shingles), "shingle")
@@ -81,13 +79,7 @@ def sample_hash(id_col: Column | str, seed: str) -> Column:
     return hash32(c.cast("string"), seed) % 10000
 
 
-def mixture_keep_col(
-    stratum_col: str,
-    weights: dict[str, float],
-    default_weight: float = 1.0,
-    id_col: str = "doc_id",
-    seed: str = "mix",
-) -> Column:
+def mixture_keep_col(stratum_col: str, weights: dict[str, float]) -> Column:
     """Boolean keep-predicate for hash-threshold mixture sampling —
     the ONE definition both corpus_mixture and the end-to-end pipeline
     share. Thresholds are INTEGER bucket counts (int(round(w·10000))),
@@ -101,19 +93,14 @@ def mixture_keep_col(
             for x in (F.lit(lang), F.lit(int(round(wt * 10000))))
         ]
     )
-    thresh = F.coalesce(
-        w[F.col(stratum_col)], F.lit(int(round(default_weight * 10000)))
-    )
-    return sample_hash(id_col, seed) < thresh
+    thresh = F.coalesce(w[F.col(stratum_col)], F.lit(10000))
+    return sample_hash("doc_id", "mix") < thresh
 
 
 def corpus_mixture(
     docs: DataFrame,
     weights: dict[str, float],
     stratum_col: str = "lang",
-    id_col: str = "doc_id",
-    default_weight: float = 1.0,
-    seed: str = "mix",
 ) -> DataFrame:
     """Deterministic domain/language re-weighting: keep each doc with
     its stratum's probability, by hash threshold (doc-stable, not
@@ -126,7 +113,7 @@ def corpus_mixture(
     """
     from mpi_word_count_spark.functions.parity import portable_round
 
-    kept = mixture_keep_col(stratum_col, weights, default_weight, id_col, seed)
+    kept = mixture_keep_col(stratum_col, weights)
     return (
         docs.select(F.col(stratum_col).alias("stratum"), kept.cast("int").alias("_kept"))
         .groupBy("stratum")
@@ -143,7 +130,6 @@ def corpus_mixture(
 def hash_order_rank(
     df: DataFrame,
     partition_col: str,
-    id_col: str = "doc_id",
     seed: str = "shard",
 ) -> DataFrame:
     """`pos` = row_number in deterministic md5-hash order WITHIN each
@@ -152,8 +138,8 @@ def hash_order_rank(
     convention here changes every consumer together). Adds `_h` (the
     hash key) and `pos`; one shuffle on partition_col, per-group sort
     only — never a global sort."""
-    h = hash32(F.col(id_col).cast("string"), seed)
-    win = Window.partitionBy(partition_col).orderBy("_h", id_col)
+    h = hash32(F.col("doc_id").cast("string"), seed)
+    win = Window.partitionBy(partition_col).orderBy("_h", "doc_id")
     return df.withColumn("_h", h).withColumn("pos", F.row_number().over(win))
 
 
@@ -161,7 +147,6 @@ def hash_order_rank(
 def shuffled_shards(
     df: DataFrame,
     num_shards: int = 64,
-    id_col: str = "doc_id",
     seed: str = "shard",
 ) -> DataFrame:
     """Deterministic global shuffle into training shards: each row gets
@@ -172,11 +157,9 @@ def shuffled_shards(
     each shard sorts independently — the exact layout a sharded
     parquet/WebDataset write wants at 100 TB.
     """
-    h = hash32(F.col(id_col).cast("string"), seed)  # full 32-bit order key
-    staged = df.select(F.col(id_col), (h % num_shards).alias("shard"))
-    return hash_order_rank(staged, "shard", id_col, seed).select(
-        id_col, "shard", "pos"
-    )
+    h = hash32(F.col("doc_id").cast("string"), seed)  # full 32-bit order key
+    staged = df.select(F.col("doc_id"), (h % num_shards).alias("shard"))
+    return hash_order_rank(staged, "shard", seed).select("doc_id", "shard", "pos")
 
 
 def epoch_shuffled_batches(
@@ -184,7 +167,6 @@ def epoch_shuffled_batches(
     epoch: int,
     num_shards: int = 16,
     batch_size: int = 32,
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Multi-epoch reproducible training order: re-seed the shard
     permutation with the epoch number, then cut each shard's hash
@@ -199,10 +181,10 @@ def epoch_shuffled_batches(
     shard key, per-shard sort only, never a global sort; batch
     boundaries are pure arithmetic on the per-shard rank.
     """
-    sh = shuffled_shards(df, num_shards, id_col, seed=f"epoch{epoch}")
+    sh = shuffled_shards(df, num_shards, seed=f"epoch{epoch}")
     pos0 = F.col("pos") - 1  # row_number is 1-based
     return sh.select(
-        id_col,
+        "doc_id",
         "shard",
         ((pos0 - pos0 % batch_size) / batch_size).cast("long").alias("batch_idx"),
         (pos0 % batch_size).cast("long").alias("pos_in_batch"),
@@ -213,8 +195,6 @@ def cluster_aware_split(
     docs: DataFrame,
     clusters: DataFrame,
     train_pct: int = 90,
-    id_col: str = "doc_id",
-    seed: str = "split",
 ) -> DataFrame:
     """Train/validation split that never separates near-duplicates:
     the split hash is computed on the dedup CLUSTER id, not the doc
@@ -222,12 +202,12 @@ def cluster_aware_split(
     (the leakage a doc-level split silently creates). `clusters` is
     dup_clusters() output (doc_id, cluster_id)."""
     split = F.when(
-        sample_hash(F.col("cluster_id"), seed) % 100 < train_pct, F.lit("train")
+        sample_hash(F.col("cluster_id"), "split") % 100 < train_pct, F.lit("train")
     ).otherwise(F.lit("val"))
     return (
-        docs.select(id_col)
-        .join(clusters, id_col)
-        .select(id_col, "cluster_id", split.alias("split"))
+        docs.select("doc_id")
+        .join(clusters, "doc_id")
+        .select("doc_id", "cluster_id", split.alias("split"))
     )
 
 
@@ -235,8 +215,6 @@ def quota_sample(
     df: DataFrame,
     quota: int = 10,
     stratum_col: str = "source",
-    id_col: str = "doc_id",
-    seed: str = "quota",
 ) -> DataFrame:
     """Exact per-stratum quota sampling: the first `quota` rows of each
     stratum in deterministic hash order — (id, stratum, pos ∈ [1,quota]).
@@ -252,22 +230,15 @@ def quota_sample(
     stratum sorts independently, and at 100 TB the per-stratum sort is
     the same work the sharded write needs anyway.
     """
-    staged = df.select(F.col(id_col), F.col(stratum_col))
+    staged = df.select(F.col("doc_id"), F.col(stratum_col))
     return (
-        hash_order_rank(staged, stratum_col, id_col, seed)
+        hash_order_rank(staged, stratum_col, "quota")
         .filter(F.col("pos") <= quota)
-        .select(id_col, F.col(stratum_col).alias("stratum"), "pos")
+        .select("doc_id", F.col(stratum_col).alias("stratum"), "pos")
     )
 
 
-def weighted_sample(
-    df: DataFrame,
-    k: int,
-    weight_col: str = "n_chars",
-    stratum_col: str = "source",
-    id_col: str = "doc_id",
-    seed: str = "wsample",
-) -> DataFrame:
+def weighted_sample(df: DataFrame, k: int, weight_col: str = "n_chars") -> DataFrame:
     """Weighted sampling WITHOUT replacement, k per stratum:
     Efraimidis–Spirakis (A-Res). Each row gets key = ln(u) / w with
     u ~ U(0,1); the k largest keys per stratum are a weight-
@@ -287,21 +258,19 @@ def weighted_sample(
     its local top-k before the exchange — the 100 TB shape (never a
     full per-stratum sort of all rows).
     """
-    u = (sample_hash_u(F.col(id_col).cast("string"), seed))
+    u = (sample_hash_u(F.col("doc_id").cast("string"), "wsample"))
     w = F.col(weight_col).cast("double")
     keyed = df.select(
-        F.col(id_col),
-        F.col(stratum_col).alias("stratum"),
+        F.col("doc_id"),
+        F.col("source").alias("stratum"),
         F.col(weight_col).alias("weight"),
         (F.log(u) / w).alias("es_key"),
     )
-    win = Window.partitionBy("stratum").orderBy(
-        F.desc("es_key"), F.asc(id_col)
-    )
+    win = Window.partitionBy("stratum").orderBy(F.desc("es_key"), F.asc("doc_id"))
     return (
         keyed.withColumn("pos", F.row_number().over(win))
         .filter(F.col("pos") <= k)
-        .select(id_col, "stratum", "weight", "pos")
+        .select("doc_id", "stratum", "weight", "pos")
     )
 
 
@@ -316,9 +285,6 @@ def curriculum_stages(
     df: DataFrame,
     n_stages: int = 4,
     n_shards: int = 16,
-    difficulty_col: str = "n_chars",
-    id_col: str = "doc_id",
-    seed: str = "curr",
 ) -> DataFrame:
     """Curriculum ordering: stage 1..n_stages by ascending difficulty
     (equal-ish document counts), deterministic hash shuffle WITHIN the
@@ -336,7 +302,7 @@ def curriculum_stages(
     repartition the sharded write needs anyway; within a (stage,
     shard) cell the hash-order rank is an independent local sort.
     """
-    diff = F.col(difficulty_col)
+    diff = F.col("n_chars")
     hist = (
         df.groupBy(diff.alias("d"))
         .agg(F.count(F.lit(1)).alias("cnt"))
@@ -354,10 +320,12 @@ def curriculum_stages(
         )
     )
     staged = df.join(F.broadcast(hist), diff == F.col("d")).select(
-        F.col(id_col), F.col("stage"), (hash32(F.col(id_col).cast("string"), seed) % n_shards).alias("shard")
+        F.col("doc_id"),
+        F.col("stage"),
+        (hash32(F.col("doc_id").cast("string"), "curr") % n_shards).alias("shard"),
     )
     win = Window.partitionBy("stage", "shard").orderBy(
-        hash32(F.col(id_col).cast("string"), seed + "o"), F.asc(id_col)
+        hash32(F.col("doc_id").cast("string"), "curro"), F.asc("doc_id")
     )
     return staged.withColumn("pos", F.row_number().over(win))
 
@@ -365,20 +333,14 @@ def curriculum_stages(
 DSIR_BUCKETS = 4096  # hashed n-gram feature dimension (paper: 10^4)
 
 
-def dsir_importance_weights(
-    docs: DataFrame,
-    target_filter: Column,
-    num_buckets: int = DSIR_BUCKETS,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def dsir_importance_weights(docs: DataFrame, target_filter: Column) -> DataFrame:
     """DSIR importance weights (Xie et al. 2023, "Data Selection for
     Language Models via Importance Resampling"): score every RAW
     document by how target-like its hashed n-gram profile is, so a
     top-k/threshold pass selects pretraining data matching a small
     target distribution (a benchmark, a curated domain).
 
-    Features are unigrams + bigrams hashed into `num_buckets`
+    Features are unigrams + bigrams hashed into `DSIR_BUCKETS`
     (hash-trick bag of n-grams). Two add-1-smoothed categorical
     models are fit over the buckets — target p̂ and raw q̂ — and each
     raw document scores
@@ -418,9 +380,9 @@ def dsir_importance_weights(
     # (no-op at scale where scans already have thousands of splits)
     docs = widen(docs)
     toks = docs.select(
-        F.col(id_col).alias("doc_id"),
+        F.col("doc_id").alias("doc_id"),
         target_filter.alias("_is_target"),
-        tokens_col(text_col).alias("t"),
+        tokens_col("text").alias("t"),
     )
     feats = toks.select(
         "doc_id",
@@ -429,7 +391,7 @@ def dsir_importance_weights(
     ).select(
         "doc_id",
         "_is_target",
-        (hash32(F.col("g"), seed="dsir") % num_buckets).alias("b"),
+        (hash32(F.col("g"), seed="dsir") % DSIR_BUCKETS).alias("b"),
     )
     # BOTH the model fit (counts) and the scoring tail read dbc: cache
     # the thin (doc, bucket) count table so the corpus-sized tokenize +
@@ -453,8 +415,8 @@ def dsir_importance_weights(
     ratio = counts.crossJoin(F.broadcast(totals)).select(
         "b",
         (
-            F.log((F.col("ct") + 1.0) / (F.col("nt") + float(num_buckets)))
-            - F.log((F.col("cr") + 1.0) / (F.col("nr") + float(num_buckets)))
+            F.log((F.col("ct") + 1.0) / (F.col("nt") + float(DSIR_BUCKETS)))
+            - F.log((F.col("cr") + 1.0) / (F.col("nr") + float(DSIR_BUCKETS)))
         ).alias("r"),
     )
     from mpi_word_count_spark.functions.parity import portable_round

@@ -20,9 +20,9 @@ reproduces the exact same candidate sets and signatures — the
 approximate pipelines are value-hash-verifiable end to end.
 
 Scale notes: at 100 TB the all-pairs verification stays tractable
-because it only runs on LSH-candidate pairs; the shingle inverted
-index should additionally drop ultra-common shingles (stop-shingles)
-to bound fan-out — exposed via `max_shingle_freq`.
+because it only runs on LSH-candidate pairs. The shingle inverted
+index has no stop-shingle guard: its join fan-out grows with each
+shingle's document frequency.
 """
 
 from __future__ import annotations
@@ -31,21 +31,22 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from mpi_word_count_spark.functions.hashing import hash32, hash60
-from mpi_word_count_spark.tokenizer import DEFAULT_DELIMITERS, delimiter_regex
+from mpi_word_count_spark.operators.similarity import EMBED_DIM
+from mpi_word_count_spark.tokenizer import delimiter_regex
 
 # MinHash/LSH default geometry: 16 hash functions, 8 bands × 2 rows.
 # S-curve threshold (1/b)^(1/r) ≈ 0.35 — catches jaccard ≥ 0.5 pairs
 # with high probability while keeping bucket fan-out tiny.
 NUM_HASHES = 16
 NUM_BANDS = 8
-ROWS_PER_BAND = 2
+ROWS_PER_BAND = NUM_HASHES // NUM_BANDS
 
 
-def tokens_col(col: Column | str, delimiters: str = DEFAULT_DELIMITERS) -> Column:
+def tokens_col(col: Column | str) -> Column:
     """Ordered token array (empties removed) — the array-valued twin
     of tokenizer.tokenize for per-document operators."""
     c = F.col(col) if isinstance(col, str) else col
-    return F.filter(F.split(F.lower(c), delimiter_regex(delimiters)), lambda x: x != "")
+    return F.filter(F.split(F.lower(c), delimiter_regex()), lambda x: x != "")
 
 
 def shingles_from_tokens(toks: Column, n: int = 3) -> Column:
@@ -70,27 +71,21 @@ def shingles_from_tokens(toks: Column, n: int = 3) -> Column:
 
 def doc_shingles(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     n: int = 3,
-    probe: DataFrame | None = None,
     extra_cols: dict[str, Column] | None = None,
 ) -> DataFrame:
     """(id, shingle) exploded distinct-shingle table — the inverted
     index input. One narrow two-phase pass (tokenize, then shingle),
-    no shuffle. `probe` forwards to widen(): pass the base relation
-    when `df` is a narrow decoration of it, so the width check never
-    physically plans a composite tree (see widen's docstring).
-    `extra_cols` are per-document expressions over `df`'s columns
-    that ride through the explode (e.g. a length band key) — they
-    repeat per shingle row, so keep them to a few bytes."""
+    no shuffle. `extra_cols` are per-document expressions over `df`'s
+    columns that ride through the explode (e.g. a length band key) —
+    they repeat per shingle row, so keep them to a few bytes."""
     from mpi_word_count_spark.operators import widen
 
     extras = extra_cols or {}
-    toks = widen(df, probe=probe).select(
-        F.col(id_col).alias("doc_id"),
+    toks = widen(df).select(
+        F.col("doc_id").alias("doc_id"),
         *[c.alias(k) for k, c in extras.items()],
-        tokens_col(text_col).alias("_toks"),
+        tokens_col("text").alias("_toks"),
     )
     return toks.select(
         "doc_id",
@@ -101,8 +96,6 @@ def doc_shingles(
 
 def passage_windows(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     width: int = 20,
     stride: int = 1,
     sample_mod: int = 1,
@@ -140,7 +133,7 @@ def passage_windows(
     from mpi_word_count_spark.operators import widen
 
     toks = widen(df).select(
-        F.col(id_col).alias("doc_id"), tokens_col(text_col).alias("_toks")
+        F.col("doc_id").alias("doc_id"), tokens_col("text").alias("_toks")
     )
     wins = F.transform(
         F.sequence(F.lit(0), F.size("_toks") - width, F.lit(stride)),
@@ -170,9 +163,7 @@ def passage_windows(
     return out
 
 
-def exact_dedup(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def exact_dedup(df: DataFrame) -> DataFrame:
     """Exact dedup by content hash: one row per distinct text with the
     minimum id as canonical plus the duplicate count.
 
@@ -180,34 +171,15 @@ def exact_dedup(
     the exchange is ~32 bytes/doc independent of document size.
     """
     return (
-        df.select(F.col(id_col).alias("doc_id"), F.md5(F.col(text_col)).alias("content_hash"))
+        df.select(
+            F.col("doc_id").alias("doc_id"), F.md5(F.col("text")).alias("content_hash")
+        )
         .groupBy("content_hash")
         .agg(
             F.min("doc_id").alias("canonical_id"),
             F.count(F.lit(1)).alias("n_copies"),
         )
     )
-
-
-def _shingle_index(
-    df: DataFrame,
-    n: int,
-    id_col: str,
-    text_col: str,
-    max_shingle_freq: int | None,
-    extra_cols: dict[str, Column] | None = None,
-) -> DataFrame:
-    """Inverted shingle index with the stop-shingle guard applied —
-    the ONE candidate-generation input both ngram_jaccard_pairs and
-    edit_distance_pairs share (a guard fix must hit every consumer).
-    `extra_cols` ride through (doc_shingles docstring)."""
-    sh = doc_shingles(df, id_col, text_col, n, extra_cols=extra_cols)
-    if max_shingle_freq is not None:
-        freq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
-        sh = sh.join(freq.filter(F.col("df") <= max_shingle_freq), "shingle").drop(
-            "df"
-        )
-    return sh
 
 
 def _shared_shingle_pairs(sh: DataFrame, pair_filter=None) -> DataFrame:
@@ -275,9 +247,6 @@ def _verify_candidates_jaccard(
     candidates: DataFrame,
     sizes: DataFrame,
     threshold: float,
-    n: int,
-    id_col: str,
-    text_col: str,
     left: str = "d1",
     right: str = "d2",
     extra: tuple[str, ...] = (),
@@ -306,14 +275,14 @@ def _verify_candidates_jaccard(
     from mpi_word_count_spark.operators import widen
 
     cand_ids = (
-        candidates.select(F.col(left).alias(id_col))
-        .union(candidates.select(F.col(right).alias(id_col)))
+        candidates.select(F.col(left).alias("doc_id"))
+        .union(candidates.select(F.col(right).alias("doc_id")))
         .distinct()
     )
     # probe=df: the semi join preserves df's partitioning, and letting
     # widen() plan the candidates subtree cost ~2s of driver time per
     # plan build (the dedup_clusters drift, VERDICT r8 item 2)
-    pruned = df.join(F.broadcast(cand_ids), id_col, "left_semi")
+    pruned = df.join(F.broadcast(cand_ids), "doc_id", "left_semi")
     # Optimization r10 (guide §2.3, OPTIMIZATION_r10.md): intersection
     # counts come from size(array_intersect(set1, set2)) over per-doc
     # DISTINCT shingle ARRAYS (a narrow projection — no explode), not
@@ -326,11 +295,9 @@ def _verify_candidates_jaccard(
     # filter. Stage-profiled at sf0.1: the verification tail fell from
     # 2.2-3.1 s to ~0.9 s of the minhash pipeline.
     toks = widen(pruned, probe=df).select(
-        F.col(id_col).alias("doc_id"), tokens_col(text_col).alias("_toks")
+        F.col("doc_id").alias("doc_id"), tokens_col("text").alias("_toks")
     )
-    sets = toks.select(
-        "doc_id", shingles_from_tokens(F.col("_toks"), n).alias("_set")
-    )
+    sets = toks.select("doc_id", shingles_from_tokens(F.col("_toks")).alias("_set"))
     sa_, sb_ = sets.alias("sa"), sets.alias("sb")
     inter = (
         candidates.join(sa_, F.col(left) == F.col("sa.doc_id"))
@@ -347,14 +314,7 @@ def _verify_candidates_jaccard(
     return _jaccard_from_inter(inter, sizes, threshold, left, right, extra)
 
 
-def ngram_jaccard_pairs(
-    df: DataFrame,
-    threshold: float = 0.5,
-    n: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    max_shingle_freq: int | None = None,
-) -> DataFrame:
+def ngram_jaccard_pairs(df: DataFrame, threshold: float = 0.5) -> DataFrame:
     """Exact n-gram Jaccard near-duplicate pairs (d1 < d2, jaccard ≥
     threshold), via inverted-index self-join:
 
@@ -363,23 +323,15 @@ def ngram_jaccard_pairs(
 
     The self-join shuffles on the shingle key; only documents sharing
     a shingle ever meet, so cost tracks true similarity structure
-    rather than |docs|². `max_shingle_freq` drops shingles appearing
-    in more than that many docs (stop-shingle guard for web-scale
-    corpora where boilerplate would otherwise explode the join).
+    rather than |docs|².
     """
-    sh = _shingle_index(df, n, id_col, text_col, max_shingle_freq)
+    sh = doc_shingles(df)
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_shingles"))
     shared = _shared_shingle_pairs(sh)
     return _jaccard_from_inter(shared, sizes, threshold, "d1", "d2")
 
 
-def minhash_signatures(
-    df: DataFrame,
-    num_hashes: int = NUM_HASHES,
-    n: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def minhash_signatures(df: DataFrame) -> DataFrame:
     """MinHash signature per document: h0..h{k-1} columns.
 
     Computed as k simultaneous MIN aggregates over the exploded
@@ -395,35 +347,24 @@ def minhash_signatures(
     """
     from mpi_word_count_spark.functions.hashing import MINHASH_PRIME, universal_coeffs
 
-    sh = doc_shingles(df, id_col, text_col, n)
+    sh = doc_shingles(df)
     # bind the base hash once in its own projection so the md5 isn't
     # re-evaluated per aggregate (same CSE caveat as shingles)
     based = sh.select("doc_id", hash32(F.col("shingle"), seed="mh").alias("_x"))
     x = F.col("_x")
     aggs = [
         F.min((F.lit(a) * x + F.lit(b)) % F.lit(MINHASH_PRIME)).alias(f"h{i}")
-        for i, (a, b) in enumerate(universal_coeffs(num_hashes))
+        for i, (a, b) in enumerate(universal_coeffs(NUM_HASHES))
     ] + [F.count(F.lit(1)).alias("n_shingles")]
     return based.groupBy("doc_id").agg(*aggs)
 
 
-def band_keys(
-    sig: DataFrame, num_hashes: int = NUM_HASHES, num_bands: int = NUM_BANDS
-) -> DataFrame:
+def band_keys(sig: DataFrame) -> DataFrame:
     """(doc_id, band, key) LSH band keys from a signature table: each
     band's key is the md5 of its row concatenation — a 16-byte
     equi-join key whatever rows_per_band is. Shared by the full-corpus
     pairing (minhash_lsh_pairs) and the incremental batch-vs-corpus
     pairing so the bucketing convention cannot drift between them."""
-    if num_hashes % num_bands != 0:
-        # silent floor division would band only num_bands*(h//b) of
-        # the signature columns — a different S-curve than requested,
-        # with the tail hashes paid for but never used
-        raise ValueError(
-            f"banding requires num_hashes % num_bands == 0, got "
-            f"{num_hashes} % {num_bands}"
-        )
-    rows_per_band = num_hashes // num_bands
     return sig.select(
         "doc_id",
         F.explode(
@@ -435,13 +376,13 @@ def band_keys(
                             F.concat_ws(
                                 ",",
                                 *[
-                                    F.col(f"h{b * rows_per_band + r}")
-                                    for r in range(rows_per_band)
+                                    F.col(f"h{b * ROWS_PER_BAND + r}")
+                                    for r in range(ROWS_PER_BAND)
                                 ],
                             )
                         ).alias("key"),
                     )
-                    for b in range(num_bands)
+                    for b in range(NUM_BANDS)
                 ]
             )
         ).alias("bk"),
@@ -449,15 +390,7 @@ def band_keys(
 
 
 
-def minhash_lsh_pairs(
-    df: DataFrame,
-    threshold: float = 0.5,
-    num_hashes: int = NUM_HASHES,
-    num_bands: int = NUM_BANDS,
-    n: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def minhash_lsh_pairs(df: DataFrame, threshold: float = 0.5) -> DataFrame:
     """MinHash + banded LSH near-duplicate pairs, verified with exact
     Jaccard ≥ threshold. Deterministic end to end (md5-derived hash
     family) — the oracle replicates the identical pipeline.
@@ -479,8 +412,8 @@ def minhash_lsh_pairs(
     """
     from mpi_word_count_spark.operators import track_cache
 
-    sig = track_cache(minhash_signatures(df, num_hashes, n, id_col, text_col))
-    bands = band_keys(sig, num_hashes, num_bands)
+    sig = track_cache(minhash_signatures(df))
+    bands = band_keys(sig)
     a = bands.alias("a")
     b_ = bands.alias("b")
     # cached: consumed twice (candidate-id broadcast + verification
@@ -504,18 +437,10 @@ def minhash_lsh_pairs(
         candidates,
         sig.select("doc_id", "n_shingles"),
         threshold,
-        n,
-        id_col,
-        text_col,
     )
 
 
-def dup_clusters(
-    df: DataFrame,
-    pairs: DataFrame,
-    id_col: str = "doc_id",
-    max_iters: int = 25,
-) -> DataFrame:
+def dup_clusters(df: DataFrame, pairs: DataFrame, max_iters: int = 25) -> DataFrame:
     """Connected components over duplicate pairs → (doc_id, cluster_id)
     with cluster_id = min doc id of the component; docs in no pair are
     their own singleton cluster. This is the step that turns pairwise
@@ -581,7 +506,7 @@ def dup_clusters(
     # CONTRACT: the final labels' checkpoint has no recomputable
     # lineage, so a dup_clusters result must not be re-executed AFTER
     # release_caches() — re-derive it (call dup_clusters again) instead.
-    ids = df.select(F.col(id_col).alias("doc_id"))
+    ids = df.select(F.col("doc_id").alias("doc_id"))
     return ids.join(
         labels.select(F.col("v").alias("doc_id"), "label"), "doc_id", "left"
     ).select(
@@ -592,16 +517,13 @@ def dup_clusters(
 SIMHASH_BITS = 60  # 15 hex chars of md5 — fits signed int64 in every engine
 
 
-def _simhash_terms(
-    df: DataFrame, id_col: str, text_col: str
-) -> DataFrame:
+def _simhash_terms(df: DataFrame) -> DataFrame:
     from mpi_word_count_spark.operators import widen
 
     return (
         widen(df)
         .select(
-            F.col(id_col).alias("doc_id"),
-            F.explode(tokens_col(text_col)).alias("term"),
+            F.col("doc_id").alias("doc_id"), F.explode(tokens_col("text")).alias("term")
         )
         .groupBy("doc_id", "term")
         .agg(F.count(F.lit(1)).alias("tf"))
@@ -609,18 +531,13 @@ def _simhash_terms(
     )
 
 
-def simhash(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    bits: int = SIMHASH_BITS,
-) -> DataFrame:
+def simhash(df: DataFrame) -> DataFrame:
     """SimHash fingerprint per document (term-frequency weighted).
 
     For each bit j: sum over distinct terms of ±tf (sign from bit j of
     the term hash); fingerprint bit j is 1 iff the sum is positive.
 
-    All `bits` positions fold inside one grouped Arrow/numpy kernel
+    All `SIMHASH_BITS` positions fold inside one grouped Arrow/numpy kernel
     instead of exploding docs × terms × bits rows through two
     shuffles: the only shuffle is the groupBy of (term, tf, th) rows —
     a 60× reduction in shuffled rows, measured 1.4× faster locally.
@@ -639,17 +556,17 @@ def simhash(
     # not the id itself — ids can be strings, and raw numeric ids can
     # carry patterns (all-even ids would leave half the buckets empty).
     n_buckets = 64
-    terms = _simhash_terms(df, id_col, text_col).withColumn(
+    terms = _simhash_terms(df).withColumn(
         "_bucket", F.pmod(F.hash(F.col("doc_id")), F.lit(n_buckets))
     )
-    id_type = df.schema[id_col].dataType.simpleString()
+    id_type = df.schema["doc_id"].dataType.simpleString()
 
     def fold(pdf: pd.DataFrame) -> pd.DataFrame:
         import numpy as np
 
         th = pdf["th"].to_numpy(dtype=np.int64)
         tf = pdf["tf"].to_numpy(dtype=np.int64)
-        j = np.arange(bits, dtype=np.int64)
+        j = np.arange(SIMHASH_BITS, dtype=np.int64)
         signs = ((th[:, None] >> j[None, :]) & 1) * 2 - 1  # (terms, bits) ±1
         contrib = pd.DataFrame(tf[:, None] * signs)
         contrib["doc_id"] = pdf["doc_id"].to_numpy()
@@ -673,13 +590,7 @@ def simhash_chunk_bounds(
     return [(bounds[j], bounds[j + 1] - bounds[j]) for j in range(chunks)]
 
 
-def simhash_banded_pairs(
-    df: DataFrame,
-    max_hamming: int = 8,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    bits: int = SIMHASH_BITS,
-) -> DataFrame:
+def simhash_banded_pairs(df: DataFrame, max_hamming: int = 8) -> DataFrame:
     """Near-dup pairs by SimHash hamming ≤ max_hamming — the SCALE
     path: equi-join on fingerprint chunks instead of the all-pairs
     comparison. Produces IDENTICAL output to the all-pairs pairing (the
@@ -690,7 +601,7 @@ def simhash_banded_pairs(
     """
     from mpi_word_count_spark.operators import track_cache
 
-    s = track_cache(simhash(df, id_col, text_col, bits))
+    s = track_cache(simhash(df))
     chunks = [
         F.struct(
             F.lit(j).alias("band"),
@@ -698,7 +609,9 @@ def simhash_banded_pairs(
                 "chunk"
             ),
         )
-        for j, (shift, width) in enumerate(simhash_chunk_bounds(bits, max_hamming))
+        for j, (shift, width) in enumerate(
+            simhash_chunk_bounds(SIMHASH_BITS, max_hamming)
+        )
     ]
     bands = s.select(
         "doc_id", "simhash", F.explode(F.array(*chunks)).alias("bk")
@@ -735,11 +648,7 @@ EMB_PLANES_PER_BAND = 3
 
 def embedding_band_keys(
     df: DataFrame,
-    num_bands: int = NUM_EMB_BANDS,
-    planes_per_band: int = EMB_PLANES_PER_BAND,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int | None = None,
+    dim: int = EMBED_DIM,
     extra_cols: tuple[str, ...] = (),
     with_all: str | None = None,
 ) -> DataFrame:
@@ -754,24 +663,20 @@ def embedding_band_keys(
     under that column name (band = array index), for consumers that
     reason about all of a vector's bands per candidate row (the
     first-colliding-band device in streaming_embedding_dedup)."""
-    from mpi_word_count_spark.operators.similarity import (
-        EMBED_DIM,
-        lsh_bucket_array,
-        lsh_planes,
-    )
+    from mpi_word_count_spark.operators.similarity import lsh_bucket_array, lsh_planes
 
-    planes = lsh_planes(num_bands * planes_per_band, dim or EMBED_DIM)
+    planes = lsh_planes(NUM_EMB_BANDS * EMB_PLANES_PER_BAND, dim)
     # all bands' buckets as ONE expression; element b equals the ANN
     # kernel (similarity.lsh_bucket_col) over band b's plane slice, so
     # dedup banding can never drift from ANN banding or their shared
     # oracle convention — see lsh_bucket_array's equivalence note
     buckets = lsh_bucket_array(
-        F.col(vec_col), planes, num_bands, planes_per_band
+        F.col("embedding"), planes, NUM_EMB_BANDS, EMB_PLANES_PER_BAND
     )
     all_cols = (with_all,) if with_all else ()
     return (
         df.select(
-            F.col(id_col).alias("_id"),
+            F.col("vec_id").alias("_id"),
             buckets.alias("_bk_arr"),
             *extra_cols,
         )
@@ -789,11 +694,6 @@ def embedding_contamination(
     emb: DataFrame,
     bench_filter: Column,
     threshold: float = 0.3,
-    num_bands: int = NUM_EMB_BANDS,
-    planes_per_band: int = EMB_PLANES_PER_BAND,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int | None = None,
 ) -> DataFrame:
     """Embedding-space decontamination: corpus vectors semantically
     close (cos ≥ τ) to ANY benchmark vector — the paraphrase-robust
@@ -828,11 +728,6 @@ def embedding_contamination(
     # the already-banded rows
     all_bands = embedding_band_keys(
         emb.withColumn("_is_bench", bench_filter),
-        num_bands,
-        planes_per_band,
-        id_col,
-        vec_col,
-        dim,
         extra_cols=("_is_bench",),
     )
     bench_bands = all_bands.filter(F.col("_is_bench")).select(
@@ -847,20 +742,20 @@ def embedding_contamination(
         .distinct()
     )
     bench_vecs = bench.select(
-        F.col(id_col).alias("bench_id"),
-        F.col(vec_col).alias("_bvec"),
-        norm(F.col(vec_col)).alias("_bnorm"),
+        F.col("vec_id").alias("bench_id"),
+        F.col("embedding").alias("_bvec"),
+        norm(F.col("embedding")).alias("_bnorm"),
     )
     scored = (
         corpus.select(
-            F.col(id_col),
-            F.col(vec_col).alias("_vec"),
-            norm(F.col(vec_col)).alias("_norm"),
+            F.col("vec_id"),
+            F.col("embedding").alias("_vec"),
+            norm(F.col("embedding")).alias("_norm"),
         )
-        .join(F.broadcast(candidates), F.col(id_col) == F.col("cand_id"))
+        .join(F.broadcast(candidates), F.col("vec_id") == F.col("cand_id"))
         .join(F.broadcast(bench_vecs), "bench_id")
         .select(
-            F.col(id_col),
+            F.col("vec_id"),
             F.round(
                 dot(F.col("_vec"), F.col("_bvec"))
                 / (F.col("_norm") * F.col("_bnorm")),
@@ -869,7 +764,7 @@ def embedding_contamination(
         )
         .filter(F.col("cosine") >= threshold)
     )
-    return scored.groupBy(id_col).agg(
+    return scored.groupBy("vec_id").agg(
         F.count(F.lit(1)).alias("n_bench_hits"),
         F.max("cosine").alias("max_cosine"),
     )
@@ -878,11 +773,7 @@ def embedding_contamination(
 def embedding_dup_pairs_banded(
     df: DataFrame,
     threshold: float = 0.4,
-    num_bands: int = NUM_EMB_BANDS,
-    planes_per_band: int = EMB_PLANES_PER_BAND,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int | None = None,
+    dim: int = EMBED_DIM,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (id1 < id2, cos ≥ τ) with
     banded random-hyperplane LSH candidate generation — the 100 TB
@@ -899,7 +790,7 @@ def embedding_dup_pairs_banded(
     """
     from mpi_word_count_spark.functions.vector import dot, norm
 
-    bands = embedding_band_keys(df, num_bands, planes_per_band, id_col, vec_col, dim)
+    bands = embedding_band_keys(df, dim=dim)
     a = bands.alias("a")
     b_ = bands.alias("b")
     candidates = (
@@ -913,9 +804,9 @@ def embedding_dup_pairs_banded(
         .distinct()
     )
     v = df.select(
-        F.col(id_col).alias("_id"),
-        F.col(vec_col).alias("_vec"),
-        norm(F.col(vec_col)).alias("_norm"),
+        F.col("vec_id").alias("_id"),
+        F.col("embedding").alias("_vec"),
+        norm(F.col("embedding")).alias("_norm"),
     )
     va = v.alias("va")
     vb = v.alias("vb")
@@ -939,11 +830,7 @@ def incremental_embedding_dups(
     emb: DataFrame,
     batch_filter: Column,
     threshold: float = 0.4,
-    num_bands: int = NUM_EMB_BANDS,
-    planes_per_band: int = EMB_PLANES_PER_BAND,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int | None = None,
+    dim: int = EMBED_DIM,
     corpus_buckets: DataFrame | None = None,
 ) -> DataFrame:
     """Incremental SEMANTIC near-duplicate classification of a new
@@ -997,11 +884,7 @@ def incremental_embedding_dups(
     if corpus_buckets is None:
         all_bands = embedding_band_keys(
             emb.withColumn("_is_batch", batch_filter),
-            num_bands,
-            planes_per_band,
-            id_col,
-            vec_col,
-            dim,
+            dim=dim,
             extra_cols=("_is_batch",),
         )
         batch_bands = all_bands.filter(F.col("_is_batch")).select(
@@ -1013,11 +896,7 @@ def incremental_embedding_dups(
     else:
         batch_bands = embedding_band_keys(
             emb.filter(batch_filter),
-            num_bands,
-            planes_per_band,
-            id_col,
-            vec_col,
-            dim,
+            dim=dim,
         )
         corpus_bands = corpus_buckets.select("_id", "band", "bucket")
     batch_bands = track_cache(batch_bands)
@@ -1050,14 +929,14 @@ def incremental_embedding_dups(
     )
     candidates = corpus_cands.unionByName(batch_cands).distinct()
     batch_vecs = emb.filter(batch_filter).select(
-        F.col(id_col).alias("did"),
-        F.col(vec_col).alias("_bvec"),
-        norm(F.col(vec_col)).alias("_bnorm"),
+        F.col("vec_id").alias("did"),
+        F.col("embedding").alias("_bvec"),
+        norm(F.col("embedding")).alias("_bnorm"),
     )
     other_vecs = emb.select(
-        F.col(id_col).alias("other"),
-        F.col(vec_col).alias("_ovec"),
-        norm(F.col(vec_col)).alias("_onorm"),
+        F.col("vec_id").alias("other"),
+        F.col("embedding").alias("_ovec"),
+        norm(F.col("embedding")).alias("_onorm"),
     )
     passed = (
         other_vecs.join(F.broadcast(candidates), "other")
@@ -1085,7 +964,7 @@ def incremental_embedding_dups(
         .when(F.col("b_min").isNotNull(), F.lit("dup_in_batch"))
         .otherwise(F.lit("unique"))
     )
-    flags = emb.select(F.col(id_col).alias("vec_id"), batch_filter.alias("is_batch"))
+    flags = emb.select(F.col("vec_id").alias("vec_id"), batch_filter.alias("is_batch"))
     return (
         flags.filter(F.col("is_batch"))
         # agg is batch-sized: broadcast so the closing left join (and
@@ -1108,10 +987,6 @@ def edit_distance_pairs(
     max_distance: int = 40,
     min_shared_shingles: int = 3,
     prefix_chars: int = 256,
-    n: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    max_shingle_freq: int | None = None,
 ) -> DataFrame:
     """Near-duplicate pairs verified by LEVENSHTEIN distance on a
     bounded text prefix (d1 < d2, distance ≤ max_distance).
@@ -1143,16 +1018,10 @@ def edit_distance_pairs(
     the output is bit-identical while candidate fan-out (and the DP
     kernel invocations) is bounded by the length band at scale.
     """
-    sh = _shingle_index(
+    sh = doc_shingles(
         df,
-        n,
-        id_col,
-        text_col,
-        max_shingle_freq,
         extra_cols={
-            "plen": F.least(
-                F.length(F.col(text_col)), F.lit(prefix_chars)
-            ).cast("int")
+            "plen": F.least(F.length(F.col("text")), F.lit(prefix_chars)).cast("int")
         },
     )
     candidates = (
@@ -1167,8 +1036,8 @@ def edit_distance_pairs(
         .filter(F.col("n_shared") >= min_shared_shingles)
     )
     texts = df.select(
-        F.col(id_col).alias("_tid"),
-        F.substring(F.col(text_col), 1, prefix_chars).alias("_prefix"),
+        F.col("doc_id").alias("_tid"),
+        F.substring(F.col("text"), 1, prefix_chars).alias("_prefix"),
     )
     t1 = texts.alias("t1")
     t2 = texts.alias("t2")
@@ -1187,12 +1056,7 @@ def edit_distance_pairs(
     )
 
 
-def incremental_exact_dedup(
-    df: DataFrame,
-    batch_filter: Column,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def incremental_exact_dedup(df: DataFrame, batch_filter: Column) -> DataFrame:
     """Incremental-ingest dedup: classify each NEW-batch document
     against the existing corpus and against the rest of its batch.
 
@@ -1212,8 +1076,8 @@ def incremental_exact_dedup(
     """
     w = Window.partitionBy("content_hash")
     flagged = df.select(
-        F.col(id_col).alias("doc_id"),
-        F.md5(F.col(text_col)).alias("content_hash"),
+        F.col("doc_id").alias("doc_id"),
+        F.md5(F.col("text")).alias("content_hash"),
         batch_filter.alias("_is_batch"),
     )
     has_corpus = (
@@ -1238,12 +1102,7 @@ def _symmetrize(e: DataFrame) -> DataFrame:
     ).distinct()
 
 
-def dup_clusters_twostar(
-    df: DataFrame,
-    pairs: DataFrame,
-    id_col: str = "doc_id",
-    max_iters: int = 25,
-) -> DataFrame:
+def dup_clusters_twostar(df: DataFrame, pairs: DataFrame) -> DataFrame:
     """Connected components via alternating large-star / small-star
     contractions — the published MapReduce-era algorithm whose round
     count is O(log n) in expectation, vs the component DIAMETER for
@@ -1297,7 +1156,7 @@ def dup_clusters_twostar(
         .filter(F.col("src") != F.col("dst")),
         lambda e: _symmetrize(star(e, large=True)),
         lambda e: _symmetrize(star(e, large=False)),
-        rounds=max_iters,
+        rounds=25,
         until=fixpoint,
     )
     # fixpoint edge set = min-rooted stars (symmetric): each node's
@@ -1305,7 +1164,7 @@ def dup_clusters_twostar(
     labels = edges.groupBy(F.col("src").alias("v")).agg(
         F.least(F.min("dst"), F.col("src")).alias("label")
     )
-    ids = df.select(F.col(id_col).alias("doc_id"))
+    ids = df.select(F.col("doc_id").alias("doc_id"))
     return ids.join(
         labels.select(F.col("v").alias("doc_id"), "label"), "doc_id", "left"
     ).select(
@@ -1317,11 +1176,6 @@ def incremental_minhash_dups(
     df: DataFrame,
     batch_filter: Column,
     threshold: float = 0.5,
-    num_hashes: int = NUM_HASHES,
-    num_bands: int = NUM_BANDS,
-    n: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     corpus_signatures: DataFrame | None = None,
 ) -> DataFrame:
     """Incremental NEAR-duplicate classification of a new batch against
@@ -1348,16 +1202,14 @@ def incremental_minhash_dups(
     """
     from mpi_word_count_spark.operators import track_cache
 
-    flags = df.select(F.col(id_col).alias("doc_id"), batch_filter.alias("is_batch"))
+    flags = df.select(F.col("doc_id").alias("doc_id"), batch_filter.alias("is_batch"))
     if corpus_signatures is None:
-        sig = minhash_signatures(df, num_hashes, n, id_col, text_col)
+        sig = minhash_signatures(df)
     else:
-        batch_sig = minhash_signatures(
-            df.filter(batch_filter), num_hashes, n, id_col, text_col
-        )
+        batch_sig = minhash_signatures(df.filter(batch_filter))
         sig = corpus_signatures.unionByName(batch_sig)
     sig = track_cache(sig)
-    tagged = band_keys(sig, num_hashes, num_bands).join(flags, "doc_id")
+    tagged = band_keys(sig).join(flags, "doc_id")
     bb = tagged.filter(F.col("is_batch")).alias("bb")
     other = tagged.alias("o")
     candidates = track_cache(
@@ -1380,9 +1232,6 @@ def incremental_minhash_dups(
         candidates,
         sig.select("doc_id", "n_shingles"),
         threshold,
-        n,
-        id_col,
-        text_col,
         left="did",
         right="other",
         extra=("other_is_batch",),
@@ -1414,8 +1263,6 @@ def incremental_minhash_dups(
 def ppjoin_pairs(
     df: DataFrame,
     threshold_pct: int = 50,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     shingle_n: int | None = 3,
 ) -> DataFrame:
     """EXACT set-similarity self-join with prefix filtering (the
@@ -1453,7 +1300,7 @@ def ppjoin_pairs(
     from mpi_word_count_spark.operators import track_cache, widen
 
     toks = widen(df).select(
-        F.col(id_col).alias("doc_id"), tokens_col(text_col).alias("_toks")
+        F.col("doc_id").alias("doc_id"), tokens_col("text").alias("_toks")
     )
     sets_col = (
         shingles_from_tokens(F.col("_toks"), shingle_n)
@@ -1588,8 +1435,6 @@ def sorted_neighborhood_pairs(
     df: DataFrame,
     neighborhood: int = 8,
     max_hamming: int = 8,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """Sorted-neighborhood near-dup candidates (SNM, Hernández &
     Stolfo '95): sort records by a similarity-preserving key — the
@@ -1615,7 +1460,7 @@ def sorted_neighborhood_pairs(
     # and the ranked branch, whose exchanges hash on different keys —
     # without the cache the full-corpus applyInPandas simhash pass
     # executes twice (same convention as simhash_banded_pairs)
-    s = track_cache(simhash(df, id_col, text_col))
+    s = track_cache(simhash(df))
     bucket = F.shiftrightunsigned("simhash", SIMHASH_BITS - 8).alias("b")
     sb = s.select("doc_id", "simhash", bucket)
     counts = sb.groupBy("b").agg(F.count(F.lit(1)).alias("n"))
@@ -1661,13 +1506,7 @@ def sorted_neighborhood_pairs(
     )
 
 
-def winnowing_fingerprints(
-    df: DataFrame,
-    k: int = 4,
-    w: int = 5,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def winnowing_fingerprints(df: DataFrame, k: int = 4, w: int = 5) -> DataFrame:
     """Winnowing fingerprint selection (Schleimer/Wilkerson/Aiken
     SIGMOD'03, the MOSS algorithm): per document, hash every k-token
     gram, then from each window of w consecutive gram hashes keep the
@@ -1690,9 +1529,7 @@ def winnowing_fingerprints(
     (doc, pos-order) frame — ONE doc-keyed exchange, state bounded by
     w, never document or corpus size.
     """
-    grams = passage_windows(
-        df, id_col=id_col, text_col=text_col, width=k, stride=1, with_pos=True
-    )
+    grams = passage_windows(df, width=k, stride=1, with_pos=True)
     # 9_999_999_999, NOT 10_000_000_000: the inverted position must
     # stay ≤ 10 digits for EVERY pos ≥ 0, or lpad(..., 10) silently
     # truncates (pos=0 under a base of 10^10 encoded as '1000000000',
@@ -1733,12 +1570,7 @@ def winnowing_fingerprints(
 CDC_MOD = 16  # expected chunk length in tokens (boundary prob 1/16)
 
 
-def cdc_chunks(
-    df: DataFrame,
-    mod: int = CDC_MOD,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def cdc_chunks(df: DataFrame, mod: int = CDC_MOD) -> DataFrame:
     """Content-defined chunking (the LBFS/FastCDC idea at token
     granularity): a chunk boundary falls BEFORE every token whose
     hash ≡ 0 (mod `mod`), so expected chunk length is `mod` tokens
@@ -1763,8 +1595,8 @@ def cdc_chunks(
     deterministic under any partitioning.
     """
     posd = df.select(
-        F.col(id_col).alias("doc_id"),
-        F.posexplode(tokens_col(text_col)).alias("p0", "tok"),
+        F.col("doc_id").alias("doc_id"),
+        F.posexplode(tokens_col("text")).alias("p0", "tok"),
     ).select("doc_id", "tok", (F.col("p0") + 1).alias("pos"))
     bd = posd.withColumn(
         "_bd", (hash32(F.col("tok"), seed="cdc") % mod == 0).cast("int")

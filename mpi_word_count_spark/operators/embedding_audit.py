@@ -70,7 +70,7 @@ def _norms_kernel(batches: "Iterator") -> "Iterator":
         )
 
 
-def embedding_norms(emb: DataFrame, digits: int = 4) -> DataFrame:
+def embedding_norms(emb: DataFrame) -> DataFrame:
     """Per-vector norm audit via the mapInArrow kernel. The embedding
     column is projected before the kernel so the Arrow transfer ships
     exactly (vec_id, embedding) — column pruning still applies to the
@@ -82,12 +82,12 @@ def embedding_norms(emb: DataFrame, digits: int = 4) -> DataFrame:
     return raw.select(
         "vec_id",
         "dim",
-        portable_round(F.col("l2_norm"), digits).alias("l2_norm"),
-        portable_round(F.col("max_abs"), digits).alias("max_abs"),
+        portable_round(F.col("l2_norm")).alias("l2_norm"),
+        portable_round(F.col("max_abs")).alias("max_abs"),
     )
 
 
-def label_centroid_spread(emb: DataFrame, digits: int = 4) -> DataFrame:
+def label_centroid_spread(emb: DataFrame) -> DataFrame:
     """Per-label cluster audit: member count, centroid norm, and mean
     cosine(member, centroid) — collapsed encoders show spread ≈ 1 with
     tiny centroid norm; mislabeled shards show low mean cosine.
@@ -134,8 +134,8 @@ def label_centroid_spread(emb: DataFrame, digits: int = 4) -> DataFrame:
     return agg.join(cnorm, "label").select(
         "label",
         "n",
-        portable_round(F.col("centroid_norm"), digits).alias("centroid_norm"),
-        portable_round(F.col("mean_cos"), digits).alias("mean_cos"),
+        portable_round(F.col("centroid_norm")).alias("centroid_norm"),
+        portable_round(F.col("mean_cos")).alias("mean_cos"),
     )
 
 
@@ -154,9 +154,7 @@ PCA_ROUNDS = 12
 PCA_Q = 10000  # embedding quantization: tenth-milli integer units
 
 
-def embedding_pca_power(
-    emb: DataFrame, dim: int = 64, rounds: int = PCA_ROUNDS
-) -> DataFrame:
+def embedding_pca_power(emb: DataFrame, dim: int = 64) -> DataFrame:
     """First principal component of the embedding cloud by power
     iteration on the covariance matrix — computed the only way that
     works at 100 TB: ONE Arrow pass emits per-batch integer Gram
@@ -244,7 +242,7 @@ def embedding_pca_power(
     ]
     vq = [Q] * dim  # iterate at 1e-9 scale; v0 = all-ones
     m = 0
-    for _ in range(rounds):
+    for _ in range(PCA_ROUNDS):
         wq = [
             (sum(covq[i][j] * vq[j] for j in range(dim)) + Q // 2) // Q
             for i in range(dim)

@@ -41,27 +41,21 @@ FEATURE_SEED = "feat"
 WEIGHT_SEED = "w"
 
 
-def demo_weight_rows(dim: int = FEATURE_DIM) -> list[tuple[int, int]]:
+def demo_weight_rows() -> list[tuple[int, int]]:
     """Deterministic stand-in for trained classifier weights: milli-unit
     ints in [-1000, 1000] derived from md5 so the oracle can rebuild
     the identical table in SQL. In production this is `spark.read` of
     the exported model — same broadcast join, different provenance."""
     return [
-        (j, py_hash32(str(j), WEIGHT_SEED) % 2001 - 1000) for j in range(dim)
+        (j, py_hash32(str(j), WEIGHT_SEED) % 2001 - 1000) for j in range(FEATURE_DIM)
     ]
 
 
-def demo_weights(spark: SparkSession, dim: int = FEATURE_DIM) -> DataFrame:
-    return spark.createDataFrame(demo_weight_rows(dim), "j long, w_int long")
+def demo_weights(spark: SparkSession) -> DataFrame:
+    return spark.createDataFrame(demo_weight_rows(), "j long, w_int long")
 
 
-def hashed_linear_scores(
-    docs: DataFrame,
-    weights: DataFrame,
-    dim: int = FEATURE_DIM,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def hashed_linear_scores(docs: DataFrame, weights: DataFrame) -> DataFrame:
     """Score every document with a linear model over hashed unigram
     features; returns (id, n_tokens, logit_milli, score, keep).
 
@@ -73,14 +67,14 @@ def hashed_linear_scores(
     activation; keep = logit_milli ≥ 0 decided on the exact integer.
     Documents with zero tokens score 0.0 and are kept (no evidence)."""
     terms = (
-        docs.select(F.col(id_col), F.explode(tokens_col(text_col)).alias("term"))
-        .groupBy(id_col, "term")
+        docs.select(F.col("doc_id"), F.explode(tokens_col("text")).alias("term"))
+        .groupBy("doc_id", "term")
         .agg(F.count(F.lit(1)).alias("tf"))
     )
-    feat = terms.withColumn("j", hash32(F.col("term"), FEATURE_SEED) % dim)
+    feat = terms.withColumn("j", hash32(F.col("term"), FEATURE_SEED) % FEATURE_DIM)
     scored = (
         feat.join(F.broadcast(weights), "j")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.sum("tf").alias("n_tokens"),
             F.sum(F.col("tf") * F.col("w_int")).alias("logit_milli"),
@@ -88,8 +82,8 @@ def hashed_linear_scores(
     )
     n = F.coalesce(F.col("n_tokens"), F.lit(0)).cast("long")
     logit = F.coalesce(F.col("logit_milli"), F.lit(0)).cast("long")
-    return docs.select(id_col).join(scored, id_col, "left").select(
-        F.col(id_col),
+    return docs.select("doc_id").join(scored, "doc_id", "left").select(
+        F.col("doc_id"),
         n.alias("n_tokens"),
         logit.alias("logit_milli"),
         F.when(n == 0, F.lit(0.0))
@@ -99,13 +93,7 @@ def hashed_linear_scores(
     )
 
 
-def hashed_linear_scores_stateless(
-    docs: DataFrame,
-    weight_rows: list[tuple[int, int]] | None = None,
-    dim: int = FEATURE_DIM,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def hashed_linear_scores_stateless(docs: DataFrame) -> DataFrame:
     """The STATELESS twin of hashed_linear_scores: the model rides in
     the plan as a literal int array and every document is scored by a
     single row-local expression — tokenize, per-token weight lookup
@@ -122,13 +110,12 @@ def hashed_linear_scores_stateless(
     the task binary — perfect for O(100..10k) weights; past that the
     plan bloats and the broadcast-join variant wins. Both keep the
     model off the row path's Python side."""
-    rows = weight_rows if weight_rows is not None else demo_weight_rows(dim)
-    w_arr = F.array(*[F.lit(w) for _, w in sorted(rows)])
-    toks = tokens_col(text_col)
+    w_arr = F.array(*[F.lit(w) for _, w in sorted(demo_weight_rows())])
+    toks = tokens_col("text")
 
     def w_of(t):
         return F.element_at(
-            w_arr, (hash32(t, FEATURE_SEED) % dim + 1).cast("int")
+            w_arr, (hash32(t, FEATURE_SEED) % FEATURE_DIM + 1).cast("int")
         )
 
     docs = docs.withColumn("_toks", toks)
@@ -139,7 +126,7 @@ def hashed_linear_scores_stateless(
         lambda acc, x: acc + x.cast("long"),
     )
     return docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         n.alias("n_tokens"),
         logit.alias("logit_milli"),
         F.when(n == 0, F.lit(0.0))

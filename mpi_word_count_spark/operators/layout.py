@@ -126,11 +126,11 @@ def compact_partitions(
     return manifest
 
 
-def hilbert_xy2d(x: int, y: int, bits: int = 8) -> int:
+def hilbert_xy2d(x: int, y: int) -> int:
     """Pure-Python Hilbert curve index (the classic xy2d loop) — the
     reference both engine implementations are verified against."""
     d = 0
-    s = 1 << (bits - 1)
+    s = 1 << 7  # top bit of an 8-bit coordinate
     while s > 0:
         rx = 1 if (x & s) > 0 else 0
         ry = 1 if (y & s) > 0 else 0

@@ -37,11 +37,8 @@ def topk_per_group(
 
 def sessionize(
     df: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
     gap_seconds: int = 1800,
     tiebreak: str | None = None,
-    session_col: str = "session_id",
 ) -> DataFrame:
     """Batch sessionization: a new session starts when the gap to the
     previous event of the same user exceeds `gap_seconds`. Gaps are
@@ -53,16 +50,16 @@ def sessionize(
     reuses the exchange). Streaming variant: F.session_window (see
     streaming/windows.py).
     """
-    order = [F.col(ts_col)] + ([F.col(tiebreak)] if tiebreak else [])
-    w = Window.partitionBy(user_col).orderBy(*order)
-    prev_ts = F.lag(ts_col).over(w)
+    order = [F.col("ts")] + ([F.col(tiebreak)] if tiebreak else [])
+    w = Window.partitionBy("user_id").orderBy(*order)
+    prev_ts = F.lag("ts").over(w)
     is_new = F.when(
         prev_ts.isNull()
-        | (F.unix_micros(ts_col) - F.unix_micros(prev_ts) > gap_seconds * 1_000_000),
+        | (F.unix_micros("ts") - F.unix_micros(prev_ts) > gap_seconds * 1_000_000),
         F.lit(1),
     ).otherwise(F.lit(0))
     return df.withColumn("_new_session", is_new).withColumn(
-        session_col,
+        "session_id",
         F.sum("_new_session").over(
             w.rowsBetween(Window.unboundedPreceding, 0)
         ),

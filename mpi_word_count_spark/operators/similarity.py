@@ -40,6 +40,7 @@ from mpi_word_count_spark.operators.relational import topk_per_group
 
 NUM_PLANES = 8
 EMBED_DIM = 64
+TRAIN_CAP = 65536  # quantizer training sample: this many smallest-id vectors
 
 
 def lsh_planes(num_planes: int = NUM_PLANES, dim: int = EMBED_DIM) -> list[list[float]]:
@@ -139,14 +140,14 @@ def lsh_bucket_array(
     )
 
 
-def _normed(side: str, id_col: str, vec_col: str) -> list[Column]:
+def _normed(side: str, vec_col: str) -> list[Column]:
     """The columns one side of a candidate pair selects: id, vector and
     norm, named for _cosine_topk (side "q": q_id/q_vec/q_norm; side
     "n": neighbor_id/n_vec/n_norm). Each norm is computed ONCE per row
     before the join (same doubles as inlining — the per-pair work drops
     from three array folds to one, measured ~2× on ann_bruteforce)."""
     return [
-        F.col(id_col).alias("q_id" if side == "q" else "neighbor_id"),
+        F.col("vec_id").alias("q_id" if side == "q" else "neighbor_id"),
         F.col(vec_col).alias(f"{side}_vec"),
         norm(F.col(vec_col)).alias(f"{side}_norm"),
     ]
@@ -177,13 +178,12 @@ def ann_bruteforce_topk(
     vectors: DataFrame,
     queries: DataFrame,
     k: int = 5,
-    id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Exact cosine top-k: for each query vector, the k nearest corpus
     vectors (self excluded), over the broadcast cross join."""
-    q = queries.select(*_normed("q", id_col, vec_col))
-    v = vectors.select(*_normed("n", id_col, vec_col))
+    q = queries.select(*_normed("q", vec_col))
+    v = vectors.select(*_normed("n", vec_col))
     return _cosine_topk(v.crossJoin(F.broadcast(q)), k)
 
 
@@ -192,9 +192,7 @@ def ann_lsh_topk(
     queries: DataFrame,
     k: int = 5,
     nprobes: int = 1,
-    id_col: str = "vec_id",
     vec_col: str = "embedding",
-    num_planes: int = NUM_PLANES,
     dim: int = EMBED_DIM,
 ) -> DataFrame:
     """LSH-bucketed ANN top-k: rank only candidates in the probed
@@ -213,7 +211,7 @@ def ann_lsh_topk(
     duplicates. Deterministic margins (md5 planes) — fully
     oracle-verifiable.
     """
-    planes = lsh_planes(num_planes, dim)
+    planes = lsh_planes(NUM_PLANES, dim)
     # one zip_with over the planes literal, not num_planes struct
     # trees — same plan-construction economy as lsh_bucket_col
     margins = F.zip_with(
@@ -225,7 +223,7 @@ def ann_lsh_topk(
         ),
     )
     staged = queries.select(
-        *_normed("q", id_col, vec_col),
+        *_normed("q", vec_col),
         lsh_bucket_col(F.col(vec_col), planes).alias("_b0"),
         F.array_sort(margins).alias("_margins"),
     )
@@ -242,7 +240,7 @@ def ann_lsh_topk(
         F.explode(F.concat(F.array(F.col("_b0")), flips)).alias("bucket"),
     )
     v = vectors.select(
-        *_normed("n", id_col, vec_col),
+        *_normed("n", vec_col),
         lsh_bucket_col(F.col(vec_col), planes).alias("bucket"),
     )
     return _cosine_topk(v.join(F.broadcast(q), "bucket"), k)
@@ -252,9 +250,6 @@ def kmeans_centroids(
     vectors: DataFrame,
     k: int = 8,
     iters: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    train_cap: int = 65536,
     sample=None,
 ) -> list[list[float]]:
     """Deterministic Lloyd's k-means over an embedding column —
@@ -263,7 +258,7 @@ def kmeans_centroids(
     representative sample, while ASSIGNMENT (the per-vector nearest
     list) stays a distributed codegen expression in the callers.
 
-    Sample = the `train_cap` smallest-id vectors (TakeOrdered heap, no
+    Sample = the `TRAIN_CAP` smallest-id vectors (TakeOrdered heap, no
     shuffle; swap in a hash-sample for id-correlated corpora). Every
     fixture corpus fits inside the cap, so the SQL oracles' unrolled
     full-corpus trainings see the identical vector set and the whole
@@ -276,14 +271,14 @@ def kmeans_centroids(
     dominated every k-means query in the bench).
     """
     if sample is None:
-        sample = train_sample(vectors, id_col, vec_col, train_cap)
+        sample = train_sample(vectors)
     if len(sample) == 0:
         raise ValueError("kmeans_centroids: empty vector input")
     return _lloyd(sample, k, iters)
 
 
-def train_sample(vectors, id_col="vec_id", vec_col="embedding", train_cap=65536):
-    """The deterministic quantizer-training sample: the `train_cap`
+def train_sample(vectors):
+    """The deterministic quantizer-training sample: the `TRAIN_CAP`
     smallest-id vectors as a float64 ndarray (TakeOrdered heap, one
     collect). Shared by the coarse and PQ quantizers so pipelines
     that train BOTH (ann_ivfpq_topk) pay one job + one driver
@@ -291,9 +286,9 @@ def train_sample(vectors, id_col="vec_id", vec_col="embedding", train_cap=65536)
     import numpy as np
 
     rows = (
-        vectors.select(F.col(id_col).alias("_id"), _as_double_list(vec_col))
+        vectors.select(F.col("vec_id").alias("_id"), _as_double_list("embedding"))
         .orderBy("_id")
-        .limit(train_cap)
+        .limit(TRAIN_CAP)
         .collect()
     )
     return np.array([list(r["v"]) for r in rows], dtype=np.float64)
@@ -371,8 +366,6 @@ def ann_ivf_topk(
     n_clusters: int = 8,
     nprobe: int = 2,
     kmeans_iters: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """IVF-flat ANN: k-means coarse quantizer, queries probe the
     `nprobe` nearest inverted lists, exact cosine rank within them.
@@ -384,17 +377,15 @@ def ann_ivf_topk(
     Not SQL-expressible (iterative k-means) → rows-only driver check;
     recall vs. ann_bruteforce_topk is asserted in tests instead.
     """
-    centroids = kmeans_centroids(
-        vectors, k=n_clusters, iters=kmeans_iters, id_col=id_col, vec_col=vec_col
-    )
+    centroids = kmeans_centroids(vectors, k=n_clusters, iters=kmeans_iters)
     v = vectors.select(
-        *_normed("n", id_col, vec_col),
-        nearest_centroid_col(F.col(vec_col), centroids).alias("_cluster"),
+        *_normed("n", "embedding"),
+        nearest_centroid_col(F.col("embedding"), centroids).alias("_cluster"),
     )
     q = queries.select(
-        *_normed("q", id_col, vec_col),
+        *_normed("q", "embedding"),
         F.explode(
-            probe_centroids_col(F.col(vec_col), centroids, nprobe)
+            probe_centroids_col(F.col("embedding"), centroids, nprobe)
         ).alias("_cluster"),
     )
     return _cosine_topk(v.join(F.broadcast(q), "_cluster"), k)
@@ -406,10 +397,7 @@ def pq_codebooks(
     m: int = 8,
     n_codes: int = 8,
     iters: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     dim: int = EMBED_DIM,
-    train_cap: int = 65536,
     sample=None,
 ) -> list[list[list[float]]]:
     """Per-subspace k-means codebooks (m subspaces × n_codes centroids
@@ -424,11 +412,7 @@ def pq_codebooks(
         # a silent dim//m would train/encode/score on only m*(dim//m)
         # dimensions and quietly degrade recall for the remainder
         raise ValueError(f"PQ requires dim % m == 0, got dim={dim} m={m}")
-    x = (
-        train_sample(vectors, id_col, vec_col, train_cap)
-        if sample is None
-        else sample
-    )
+    x = train_sample(vectors) if sample is None else sample
     if len(x) == 0:
         raise ValueError("pq_codebooks: empty vector input")
     sub = dim // m
@@ -553,8 +537,6 @@ def _rerank_exact_topk(
     queries: DataFrame,
     k: int,
     rerank: int,
-    id_col: str,
-    vec_col: str,
 ) -> DataFrame:
     """Shared rerank tail of the PQ family: keep the top `rerank`
     candidates per query by ADC distance, re-score those with exact
@@ -565,8 +547,8 @@ def _rerank_exact_topk(
         adc, ["q_id"], [F.asc("adc"), F.asc("neighbor_id")], k=rerank,
         rank_col="_rn",
     ).select("q_id", "neighbor_id")
-    v = vectors.select(*_normed("n", id_col, vec_col))
-    qn = queries.select(*_normed("q", id_col, vec_col))
+    v = vectors.select(*_normed("n", "embedding"))
+    qn = queries.select(*_normed("q", "embedding"))
     pairs = cands.join(v, "neighbor_id").join(F.broadcast(qn), "q_id")
     return _cosine_topk(pairs, k)
 
@@ -579,8 +561,6 @@ def ann_pq_topk(
     n_codes: int = 8,
     iters: int = 3,
     rerank: int = 25,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     dim: int = EMBED_DIM,
 ) -> DataFrame:
     """PQ-ADC approximate top-k with exact re-ranking: corpus vectors
@@ -589,16 +569,14 @@ def ann_pq_topk(
     bytes an exact scan reads); the top `rerank` candidates per query
     are re-scored with exact cosine. Deterministic end to end, so the
     oracle replicates codebooks, codes, ADC ranking, and re-rank."""
-    books = pq_codebooks(vectors, m, n_codes, iters, id_col, vec_col, dim)
+    books = pq_codebooks(vectors, m, n_codes, iters, dim)
     coded = vectors.select(
-        F.col(id_col).alias("neighbor_id"),
-        pq_codes_col(F.col(vec_col), books, dim).alias("codes"),
+        F.col("vec_id").alias("neighbor_id"),
+        pq_codes_col(F.col("embedding"), books, dim).alias("codes"),
     )
-    q = queries.select(
-        F.col(id_col).alias("q_id"), F.col(vec_col).alias("q_vec")
-    )
+    q = queries.select(F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec"))
     adc = _adc_scores(coded.crossJoin(F.broadcast(q)), books, dim)
-    return _rerank_exact_topk(adc, vectors, queries, k, rerank, id_col, vec_col)
+    return _rerank_exact_topk(adc, vectors, queries, k, rerank)
 
 
 def ann_ivfpq_topk(
@@ -612,8 +590,6 @@ def ann_ivfpq_topk(
     n_codes: int = 8,
     pq_iters: int = 3,
     rerank: int = 25,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     dim: int = EMBED_DIM,
 ) -> DataFrame:
     """IVF-PQ: the FAISS-standard combination — the coarse quantizer
@@ -635,32 +611,25 @@ def ann_ivfpq_topk(
     # ONE training-sample collect shared by both quantizers (they use
     # the identical smallest-id sample; two TakeOrdered jobs + driver
     # transfers for the same rows was the measured waste here)
-    sample = train_sample(vectors, id_col, vec_col)
+    sample = train_sample(vectors)
     centroids = kmeans_centroids(
-        vectors,
-        k=n_clusters,
-        iters=kmeans_iters,
-        id_col=id_col,
-        vec_col=vec_col,
-        sample=sample,
+        vectors, k=n_clusters, iters=kmeans_iters, sample=sample
     )
-    books = pq_codebooks(
-        vectors, m, n_codes, pq_iters, id_col, vec_col, dim, sample=sample
-    )
+    books = pq_codebooks(vectors, m, n_codes, pq_iters, dim, sample=sample)
     coded = vectors.select(
-        F.col(id_col).alias("neighbor_id"),
-        pq_codes_col(F.col(vec_col), books, dim).alias("codes"),
-        nearest_centroid_col(F.col(vec_col), centroids).alias("_cluster"),
+        F.col("vec_id").alias("neighbor_id"),
+        pq_codes_col(F.col("embedding"), books, dim).alias("codes"),
+        nearest_centroid_col(F.col("embedding"), centroids).alias("_cluster"),
     )
     q = queries.select(
-        F.col(id_col).alias("q_id"),
-        F.col(vec_col).alias("q_vec"),
+        F.col("vec_id").alias("q_id"),
+        F.col("embedding").alias("q_vec"),
         F.explode(
-            probe_centroids_col(F.col(vec_col), centroids, nprobe)
+            probe_centroids_col(F.col("embedding"), centroids, nprobe)
         ).alias("_cluster"),
     )
     adc = _adc_scores(coded.join(F.broadcast(q), "_cluster"), books, dim)
-    return _rerank_exact_topk(adc, vectors, queries, k, rerank, id_col, vec_col)
+    return _rerank_exact_topk(adc, vectors, queries, k, rerank)
 
 
 def semantic_dedup(
@@ -668,8 +637,6 @@ def semantic_dedup(
     threshold: float = 0.35,
     n_clusters: int = 8,
     kmeans_iters: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication: cluster the embedding
     space with deterministic k-means, then within each cluster mark a
@@ -690,9 +657,7 @@ def semantic_dedup(
     from mpi_word_count_spark.functions.parity import portable_round
     from mpi_word_count_spark.operators import track_cache
 
-    cents = kmeans_centroids(
-        vectors, k=n_clusters, iters=kmeans_iters, id_col=id_col, vec_col=vec_col
-    )
+    cents = kmeans_centroids(vectors, k=n_clusters, iters=kmeans_iters)
     # cache the assignment: it feeds BOTH sides of the within-cluster
     # join plus the final projection — without the cache the
     # k-literal argmin expression re-evaluates three times per row.
@@ -709,10 +674,10 @@ def semantic_dedup(
     # and widen is a no-op
     assigned = track_cache(
         widen(vectors).select(
-            F.col(id_col).alias("vec_id"),
-            F.col(vec_col).alias("_v"),
-            norm(F.col(vec_col)).alias("_n"),
-            nearest_centroid_col(F.col(vec_col), cents).alias("cluster"),
+            F.col("vec_id").alias("vec_id"),
+            F.col("embedding").alias("_v"),
+            norm(F.col("embedding")).alias("_n"),
+            nearest_centroid_col(F.col("embedding"), cents).alias("cluster"),
         )
     )
     a, b = assigned.alias("a"), assigned.alias("b")
@@ -747,8 +712,6 @@ def margin_alignment_pairs(
     side_a,
     side_b,
     k: int = MARGIN_K,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Margin-based mutual-kNN alignment between two embedding sets
     (Artetxe & Schwenk 2019, the bitext-mining scorer): a pair (a, b)
@@ -775,14 +738,14 @@ def margin_alignment_pairs(
     from mpi_word_count_spark.functions.parity import portable_round
 
     a = emb.filter(side_a).select(
-        F.col(id_col).alias("a_id"),
-        F.col(vec_col).alias("a_vec"),
-        norm(F.col(vec_col)).alias("a_norm"),
+        F.col("vec_id").alias("a_id"),
+        F.col("embedding").alias("a_vec"),
+        norm(F.col("embedding")).alias("a_norm"),
     )
     b = emb.filter(side_b).select(
-        F.col(id_col).alias("b_id"),
-        F.col(vec_col).alias("b_vec"),
-        norm(F.col(vec_col)).alias("b_norm"),
+        F.col("vec_id").alias("b_id"),
+        F.col("embedding").alias("b_vec"),
+        norm(F.col("embedding")).alias("b_norm"),
     )
     from mpi_word_count_spark.operators import track_cache
 

@@ -40,16 +40,10 @@ BLOOM_BITS = 1024  # M (32 slot rows)
 BLOOM_HASHES = 4  # K
 
 
-def cms_counters(
-    items: DataFrame,
-    item_col: str = "word",
-    depth: int = CMS_DEPTH,
-    width: int = CMS_WIDTH,
-    seed_prefix: str = "cms",
-) -> DataFrame:
+def cms_counters(items: DataFrame, item_col: str = "word") -> DataFrame:
     """Count-min counter table (i, bucket, c) from an item stream.
 
-    One narrow pass: each item expands to `depth` (row, bucket) pairs
+    One narrow pass: each item expands to `CMS_DEPTH` (row, bucket) pairs
     map-side, then ONE aggregation whose key domain is ≤ depth·width —
     partial aggregation collapses each task's stream to at most that
     many rows before the exchange, so shuffle volume is independent of
@@ -60,11 +54,11 @@ def cms_counters(
                 *[
                     F.struct(
                         F.lit(i).alias("i"),
-                        (hash32(F.col(item_col), f"{seed_prefix}{i}") % width).alias(
+                        (hash32(F.col(item_col), f"cms{i}") % CMS_WIDTH).alias(
                             "bucket"
                         ),
                     )
-                    for i in range(depth)
+                    for i in range(CMS_DEPTH)
                 ]
             )
         ).alias("p")
@@ -78,9 +72,6 @@ def cms_estimates(
     counters: DataFrame,
     probes: DataFrame,
     item_col: str = "word",
-    depth: int = CMS_DEPTH,
-    width: int = CMS_WIDTH,
-    seed_prefix: str = "cms",
 ) -> DataFrame:
     """min-over-rows count-min estimate for each probe item: probes
     expand to their depth (i, bucket) coordinates and join the counter
@@ -93,11 +84,11 @@ def cms_estimates(
                 *[
                     F.struct(
                         F.lit(i).alias("i"),
-                        (hash32(F.col(item_col), f"{seed_prefix}{i}") % width).alias(
+                        (hash32(F.col(item_col), f"cms{i}") % CMS_WIDTH).alias(
                             "bucket"
                         ),
                     )
-                    for i in range(depth)
+                    for i in range(CMS_DEPTH)
                 ]
             )
         ).alias("p"),
@@ -109,13 +100,7 @@ def cms_estimates(
     )
 
 
-def bloom_bitmap(
-    items: DataFrame,
-    item_col: str,
-    bits: int = BLOOM_BITS,
-    k: int = BLOOM_HASHES,
-    seed_prefix: str = "bf",
-) -> DataFrame:
+def bloom_bitmap(items: DataFrame, item_col: str) -> DataFrame:
     """Bloom filter as (slot, bits) rows — slot = bit_position >> 5,
     bits = OR of (1 << (position & 31)): 32 payload bits per slot so
     the shift never reaches bit 63, where DuckDB's checked left-shift
@@ -126,8 +111,8 @@ def bloom_bitmap(
         F.explode(
             F.array(
                 *[
-                    (hash32(F.col(item_col), f"{seed_prefix}{j}") % bits).alias("p")
-                    for j in range(k)
+                    (hash32(F.col(item_col), f"bf{j}") % BLOOM_BITS).alias("p")
+                    for j in range(BLOOM_HASHES)
                 ]
             )
         ).alias("p")
@@ -138,14 +123,7 @@ def bloom_bitmap(
     ).groupBy("slot").agg(F.bit_or("b").alias("bits"))
 
 
-def bloom_probe(
-    bitmap: DataFrame,
-    probes: DataFrame,
-    item_col: str,
-    bits: int = BLOOM_BITS,
-    k: int = BLOOM_HASHES,
-    seed_prefix: str = "bf",
-) -> DataFrame:
+def bloom_probe(bitmap: DataFrame, probes: DataFrame, item_col: str) -> DataFrame:
     """might_contain per probe item: all K bit positions set. The
     bitmap (≤ bits/32 rows) broadcasts; a missing slot row means the
     whole 64-bit word is zero."""
@@ -154,8 +132,8 @@ def bloom_probe(
         F.explode(
             F.array(
                 *[
-                    (hash32(F.col(item_col), f"{seed_prefix}{j}") % bits).alias("p")
-                    for j in range(k)
+                    (hash32(F.col(item_col), f"bf{j}") % BLOOM_BITS).alias("p")
+                    for j in range(BLOOM_HASHES)
                 ]
             )
         ).alias("p"),

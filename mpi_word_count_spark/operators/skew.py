@@ -21,7 +21,6 @@ def salted_count(
     df: DataFrame,
     key_cols: list[str],
     salt_buckets: int = 16,
-    count_alias: str = "count",
 ) -> DataFrame:
     """count(*) per key via two-phase salted aggregation."""
     salted = df.withColumn(
@@ -31,7 +30,7 @@ def salted_count(
         F.count(F.lit(1)).alias("_partial")
     )
     return partial.groupBy(*key_cols).agg(
-        F.sum("_partial").cast("bigint").alias(count_alias)
+        F.sum("_partial").cast("bigint").alias("count")
     )
 
 

@@ -31,12 +31,7 @@ STOPWORDS = LANG_MARKERS["en"] + ("a", "an", "on", "with", "as", "at", "by")
 BPE_ISH_PATTERN = r"[A-Za-z]+|[0-9]|[^A-Za-z0-9\s]"
 
 
-def doc_metrics(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    keep: list[str] | None = None,
-) -> DataFrame:
+def doc_metrics(df: DataFrame, keep: list[str] | None = None) -> DataFrame:
     """ALL narrow per-document metrics in ONE projection pass — token
     stats, quality ratios, content hash. `token_stats`/`quality_scores`
     are selections of this; pipeline compositions should use it
@@ -51,10 +46,10 @@ def doc_metrics(
 
     keep = keep or []
     staged = widen(df).select(
-        F.col(id_col).alias("doc_id"),
+        F.col("doc_id").alias("doc_id"),
         *[F.col(k) for k in keep],
-        F.col(text_col).alias("_text"),
-        tokens_col(text_col).alias("_toks"),
+        F.col("text").alias("_text"),
+        tokens_col("text").alias("_toks"),
     )
     toks = F.col("_toks")
     n = F.size(toks)
@@ -91,22 +86,15 @@ def doc_metrics(
     )
 
 
-def token_stats(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def token_stats(df: DataFrame) -> DataFrame:
     """Per-document token statistics: whitespace/delimiter tokens,
     distinct tokens, mean token length, BPE-ish token count."""
-    return doc_metrics(df, id_col, text_col).select(
+    return doc_metrics(df).select(
         "doc_id", "n_tokens", "n_unique", "mean_token_len", "n_bpe_tokens"
     )
 
 
-def predicted_language(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    markers: dict[str, tuple[str, ...]] = LANG_MARKERS,
-) -> DataFrame:
+def predicted_language(df: DataFrame) -> DataFrame:
     """Language prediction for docs with ≥1 marker match: tokens ⋈
     broadcast(marker vocab) → per-doc score per language → argmax
     (ties break on language code). Docs with no match are ABSENT —
@@ -115,11 +103,11 @@ def predicted_language(
     'unknown' completion."""
     spark = df.sparkSession
     vocab = spark.createDataFrame(
-        [(lang, w) for lang, words in sorted(markers.items()) for w in words],
+        [(lang, w) for lang, words in sorted(LANG_MARKERS.items()) for w in words],
         "lang string, marker string",
     )
     toks = df.select(
-        F.col(id_col).alias("doc_id"), F.explode(tokens_col(text_col)).alias("tok")
+        F.col("doc_id").alias("doc_id"), F.explode(tokens_col("text")).alias("tok")
     )
     scores = (
         toks.join(F.broadcast(vocab), toks.tok == vocab.marker)
@@ -135,19 +123,14 @@ def predicted_language(
     )
 
 
-def language_id(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    markers: dict[str, tuple[str, ...]] = LANG_MARKERS,
-) -> DataFrame:
+def language_id(df: DataFrame) -> DataFrame:
     """Heuristic language ID over ALL docs (zero matches → 'unknown').
 
     The vocab join broadcasts (vocab is tiny by construction); the
     only shuffles are the per-doc aggregation and the completion join
     back to the id spine."""
-    best = predicted_language(df, id_col, text_col, markers)
-    ids = df.select(F.col(id_col).alias("doc_id"))
+    best = predicted_language(df)
+    ids = df.select(F.col("doc_id").alias("doc_id"))
     return ids.join(best, "doc_id", "left").select(
         "doc_id",
         F.coalesce(F.col("pred_lang"), F.lit("unknown")).alias("pred_lang"),
@@ -155,9 +138,7 @@ def language_id(
     )
 
 
-def quality_scores(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def quality_scores(df: DataFrame) -> DataFrame:
     """Document quality heuristics: length, stopword ratio, alphabetic
     ratio, mean token length → one [0,1] score.
 
@@ -165,7 +146,7 @@ def quality_scores(
 
     (the C4/Gopher-style cheap filters; the formula is config, the
     plan shape — single narrow projection, no shuffle — is the point)."""
-    return doc_metrics(df, id_col, text_col).select(
+    return doc_metrics(df).select(
         "doc_id",
         "n_chars",
         "n_tokens",
@@ -182,9 +163,7 @@ GOPHER_REQUIRED_STOPS = ("the", "be", "to", "of", "and", "that", "have", "with")
 GOPHER_BULLETS = ("-", "*", "•")  # line-start bullet characters
 
 
-def gopher_quality_flags(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def gopher_quality_flags(df: DataFrame) -> DataFrame:
     """The full Gopher quality-rule set (Rae et al. 2021 Appendix A)
     as per-document boolean flags plus the measured ratios, so a
     curation pipeline can tune/ablate individual rules instead of
@@ -213,13 +192,13 @@ def gopher_quality_flags(
 
     text = F.col("_text")
     staged = widen(df).select(
-        F.col(id_col).alias("doc_id"),
-        F.col(text_col).alias("_text"),
+        F.col("doc_id").alias("doc_id"),
+        F.col("text").alias("_text"),
         F.filter(
-            F.split(F.col(text_col), r"\s+"), lambda w: w != F.lit("")
+            F.split(F.col("text"), r"\s+"), lambda w: w != F.lit("")
         ).alias("_words"),
         F.filter(
-            F.split(F.col(text_col), "\n"), lambda l: F.trim(l) != F.lit("")
+            F.split(F.col("text"), "\n"), lambda l: F.trim(l) != F.lit("")
         ).alias("_lines"),
     )
     words, lines = F.col("_words"), F.col("_lines")
@@ -286,28 +265,20 @@ def gopher_quality_flags(
     )
 
 
-def doc_fingerprints(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def doc_fingerprints(df: DataFrame) -> DataFrame:
     """Content-defined fingerprint: md5 over the sorted distinct token
     set (order-insensitive bag signature — robust to shuffling, the
     cheap companion to MinHash for exact set identity)."""
-    toks = tokens_col(text_col)
+    toks = tokens_col("text")
     return df.select(
-        F.col(id_col).alias("doc_id"),
+        F.col("doc_id").alias("doc_id"),
         F.md5(F.concat_ws(" ", F.array_sort(F.array_distinct(toks)))).alias(
             "fingerprint"
         ),
     )
 
 
-def doc_chunks(
-    df: DataFrame,
-    chunk_size: int = 120,
-    stride: int = 60,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def doc_chunks(df: DataFrame, chunk_size: int = 120, stride: int = 60) -> DataFrame:
     """Overlapping token-window chunks per document — the standard
     LLM-training preprocessing step (context-window packing input).
 
@@ -322,7 +293,7 @@ def doc_chunks(
     from mpi_word_count_spark.operators import widen
 
     staged = widen(df).select(
-        F.col(id_col).alias("doc_id"), tokens_col(text_col).alias("_toks")
+        F.col("doc_id").alias("doc_id"), tokens_col("text").alias("_toks")
     )
     toks = F.col("_toks")
     n = F.size(toks)
@@ -386,9 +357,7 @@ URL_PATTERN = r"https?://\S+"
 EMAIL_PATTERN = r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"
 
 
-def scrub_text(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def scrub_text(df: DataFrame) -> DataFrame:
     """URL/email redaction + whitespace normalization — the standard
     first pass of an LLM training-data cleaning pipeline (the reference
     has no scalar functions beyond lower, SURVEY.md §2.6; this is the
@@ -398,12 +367,12 @@ def scrub_text(
     identity for downstream dedup) rather than shipping the full text
     through the plan. Pure narrow projection of JVM regex expressions:
     no shuffle, no UDF — scan-speed at any corpus size."""
-    text = F.col(text_col)
+    text = F.col("text")
     clean = F.regexp_replace(text, URL_PATTERN, "<URL>")
     clean = F.regexp_replace(clean, EMAIL_PATTERN, "<EMAIL>")
     clean = F.trim(F.regexp_replace(clean, r"\s+", " "))
     return df.select(
-        F.col(id_col).alias("doc_id"),
+        F.col("doc_id").alias("doc_id"),
         F.size(F.regexp_extract_all(text, F.lit(URL_PATTERN), 0))
         .cast("bigint")
         .alias("n_urls"),
@@ -420,9 +389,7 @@ PHONE_PATTERN = r"\d{3}-\d{3}-\d{4}"
 IPV4_PATTERN = r"\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}"
 
 
-def pii_scrub(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def pii_scrub(df: DataFrame) -> DataFrame:
     """Multi-pattern PII detection + redaction: emails, NANP-style
     phone numbers, IPv4 addresses — per-type match counts plus the md5
     of the fully redacted text (replacement order: email → phone → ip,
@@ -433,7 +400,7 @@ def pii_scrub(
     regex expressions — no shuffle, no UDF, scan-speed at 100 TB. The
     counts are what a curation dashboard aggregates; the redacted hash
     is the content identity fed to downstream dedup."""
-    text = F.col(text_col)
+    text = F.col("text")
     red = F.regexp_replace(text, EMAIL_PATTERN, "<EMAIL>")
     red = F.regexp_replace(red, PHONE_PATTERN, "<PHONE>")
     red = F.regexp_replace(red, IPV4_PATTERN, "<IP>")
@@ -442,7 +409,7 @@ def pii_scrub(
         return F.size(F.regexp_extract_all(text, F.lit(pattern), 0)).cast("bigint")
 
     return df.select(
-        F.col(id_col).alias("doc_id"),
+        F.col("doc_id").alias("doc_id"),
         n(EMAIL_PATTERN).alias("n_emails"),
         n(PHONE_PATTERN).alias("n_phones"),
         n(IPV4_PATTERN).alias("n_ips"),
@@ -450,12 +417,7 @@ def pii_scrub(
     )
 
 
-def ngram_counts(
-    df: DataFrame,
-    n: int = 2,
-    k: int | None = None,
-    text_col: str = "text",
-) -> DataFrame:
+def ngram_counts(df: DataFrame, n: int = 2, k: int | None = None) -> DataFrame:
     """Corpus-level word n-gram frequencies (top-k when k is set) —
     the n>1 generalization of the reference's flagship word count
     (word_count_mpi.c:346-384 counts exactly the n=1 case).
@@ -466,7 +428,7 @@ def ngram_counts(
     as word count. Top-k runs as TakeOrderedAndProject, not a sort."""
     from mpi_word_count_spark.operators import widen
 
-    staged = widen(df).select(tokens_col(text_col).alias("_toks"))
+    staged = widen(df).select(tokens_col("text").alias("_toks"))
     toks = F.col("_toks")
     grams = F.when(
         F.size(toks) >= n,
@@ -487,14 +449,7 @@ def ngram_counts(
     return counts
 
 
-def repetition_scores(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    top_token_max: float = 0.2,
-    dup_2gram_max: float = 0.35,
-    dup_3gram_max: float = 0.25,
-) -> DataFrame:
+def repetition_scores(df: DataFrame) -> DataFrame:
     """Gopher-style repetition signals per document: the fraction of
     tokens taken by the single most frequent token, and the fraction
     of word n-grams (n=2,3) that occur more than once. Documents
@@ -514,7 +469,7 @@ def repetition_scores(
     from mpi_word_count_spark.operators import widen
 
     staged = widen(df).select(
-        F.col(id_col).alias("doc_id"), tokens_col(text_col).alias("_toks")
+        F.col("doc_id").alias("doc_id"), tokens_col("text").alias("_toks")
     )
     toks = F.col("_toks")
 
@@ -569,7 +524,7 @@ def repetition_scores(
         # plain projection (no widen): the id-only scan feeds the
         # streamed side of a broadcast join and does zero per-row
         # compute — widening it would only add an Exchange
-        df.select(F.col(id_col).alias("doc_id"))
+        df.select(F.col("doc_id").alias("doc_id"))
         .join(wide, "doc_id", "left")
         .select(
             "doc_id",
@@ -583,15 +538,13 @@ def repetition_scores(
     # boolean is engine-stable even at half-way points
     return scored.withColumn(
         "repetitive",
-        (F.col("top_token_frac") > top_token_max)
-        | (F.col("dup_2gram_frac") > dup_2gram_max)
-        | (F.col("dup_3gram_frac") > dup_3gram_max),
+        (F.col("top_token_frac") > 0.2)
+        | (F.col("dup_2gram_frac") > 0.35)
+        | (F.col("dup_3gram_frac") > 0.25),
     )
 
 
-def compression_ratios(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def compression_ratios(df: DataFrame) -> DataFrame:
     """Per-document zlib compression ratio (compressed/raw bytes) —
     the classic repetition/boilerplate quality signal (highly
     repetitive machine-generated text compresses far below natural
@@ -620,9 +573,9 @@ def compression_ratios(
     zratio = pandas_udf(_zratio, "double")
 
     return df.select(
-        F.col(id_col).alias("doc_id"),
-        F.length(text_col).cast("bigint").alias("n_chars"),
-        F.round(zratio(F.col(text_col)), 4).alias("compression_ratio"),
+        F.col("doc_id").alias("doc_id"),
+        F.length("text").cast("bigint").alias("n_chars"),
+        F.round(zratio(F.col("text")), 4).alias("compression_ratio"),
     )
 
 
@@ -679,19 +632,14 @@ def pmi_score_pairs(
     )
 
 
-def bigram_pmi(
-    df: DataFrame,
-    min_count: int = 5,
-    k: int | None = 50,
-    text_col: str = "text",
-) -> DataFrame:
+def bigram_pmi(df: DataFrame, min_count: int = 5, k: int | None = 50) -> DataFrame:
     """Pointwise mutual information of corpus bigrams — collocation
     detection (the signal behind phrase merging in LM tokenizers).
     Formula, min_count semantics, and plan shape: pmi_score_pairs."""
-    uni = ngram_counts(df, n=1, text_col=text_col).select(
+    uni = ngram_counts(df, n=1).select(
         F.col("ngram").alias("w"), F.col("n_occurrences").alias("c")
     )
-    big = ngram_counts(df, n=2, text_col=text_col).select(
+    big = ngram_counts(df, n=2).select(
         "ngram",
         "n_occurrences",
         F.split(F.col("ngram"), " ").getItem(0).alias("w1"),
@@ -708,7 +656,6 @@ def skipgram_pmi(
     window: int = 2,
     min_count: int = 5,
     k: int | None = 50,
-    text_col: str = "text",
 ) -> DataFrame:
     """Windowed co-occurrence PMI — the skip-gram statistic behind
     count-based word embeddings (word2vec/GloVe prep): every unordered
@@ -731,7 +678,7 @@ def skipgram_pmi(
     cutoff could tie on rounded floats)."""
     from mpi_word_count_spark.operators import widen
 
-    staged = widen(df).select(tokens_col(text_col).alias("_toks"))
+    staged = widen(df).select(tokens_col("text").alias("_toks"))
     toks = F.col("_toks")
 
     def pairs_at(off: int):
@@ -772,12 +719,7 @@ def skipgram_pmi(
     return scored
 
 
-def tfidf_top_terms(
-    df: DataFrame,
-    k: int = 1,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def tfidf_top_terms(df: DataFrame, k: int = 1) -> DataFrame:
     """Top-k TF-IDF terms per document: tf·ln(N/df), ties on term.
 
     df (document frequency) aggregates once over (term, doc) pairs
@@ -785,7 +727,7 @@ def tfidf_top_terms(
     a literal (one count job) rather than a cross join."""
     n_docs = df.count()
     toks = df.select(
-        F.col(id_col).alias("doc_id"), F.explode(tokens_col(text_col)).alias("term")
+        F.col("doc_id").alias("doc_id"), F.explode(tokens_col("text")).alias("term")
     )
     tf = toks.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
     docfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
@@ -801,9 +743,7 @@ def tfidf_top_terms(
     )
 
 
-def seq_length_histogram(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def seq_length_histogram(df: DataFrame) -> DataFrame:
     """Power-of-two token-length histogram of the corpus: one row per
     bucket [2^k, 2^(k+1)) with doc count, total tokens, and doc share
     — the first chart anyone draws before choosing a training sequence
@@ -821,9 +761,9 @@ def seq_length_histogram(
     from mpi_word_count_spark.functions.parity import portable_round
     from mpi_word_count_spark.operators import widen
 
-    n = F.size(tokens_col(text_col))
+    n = F.size(tokens_col("text"))
     staged = widen(df).select(
-        F.col(id_col).alias("doc_id"), n.cast("bigint").alias("n_tokens")
+        F.col("doc_id").alias("doc_id"), n.cast("bigint").alias("n_tokens")
     )
     # shiftleft's bit count is column-valued here, which only the SQL
     # form accepts (the Python wrapper requires a literal int)
@@ -856,9 +796,7 @@ def seq_length_histogram(
 
 
 
-def unigram_logprob(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def unigram_logprob(df: DataFrame) -> DataFrame:
     """Corpus-unigram-LM quality score (the CCNet-style filter): train
     p(w) = count(w)/N on the corpus itself, score each document by the
     mean token ln p(w). Low scorers are boilerplate/garbage (rare-token
@@ -871,7 +809,7 @@ def unigram_logprob(
     count itself, and N is a 1-row broadcast. No Python, no UDFs —
     ln is JVM codegen."""
     toks = df.select(
-        F.col(id_col).alias("doc_id"), F.explode(tokens_col(text_col)).alias("tok")
+        F.col("doc_id").alias("doc_id"), F.explode(tokens_col("text")).alias("tok")
     )
     vocab = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("c"))
     totals = vocab.agg(F.sum("c").alias("n_total"))
@@ -888,9 +826,7 @@ def unigram_logprob(
     )
 
 
-def positional_index(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def positional_index(df: DataFrame) -> DataFrame:
     """Positional inverted-index postings: one row per (token, doc)
     with term frequency, first occurrence, and the full 1-based
     position list (comma-joined for a stable scalar encoding) — the
@@ -908,7 +844,7 @@ def positional_index(
     from mpi_word_count_spark.operators.dedup import tokens_col
 
     toks = widen(df).select(
-        F.col(id_col).alias("doc_id"), tokens_col(text_col).alias("_toks")
+        F.col("doc_id").alias("doc_id"), tokens_col("text").alias("_toks")
     )
     posted = toks.select(
         "doc_id", F.posexplode("_toks").alias("pos0", "token")

@@ -107,12 +107,7 @@ _SCAN_SCHEMA = StructType(
 )
 
 
-def multi_pattern_counts(
-    docs: DataFrame,
-    patterns: Sequence[str],
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def multi_pattern_counts(docs: DataFrame, patterns: Sequence[str]) -> DataFrame:
     """(doc_id, pattern, hits) for every document×pattern with at
     least one occurrence (zero-hit pairs are omitted — at blocklist
     scale almost all pairs are zero and materializing them would turn
@@ -128,7 +123,7 @@ def multi_pattern_counts(
             ids: list[int] = []
             names: list[str] = []
             hits: list[int] = []
-            for doc_id, text in zip(pdf[id_col], pdf[text_col]):
+            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
                 counts = scan_counts(text or "", goto, fail, out, len(pats))
                 for idx, c in enumerate(counts):
                     if c:
@@ -139,4 +134,4 @@ def multi_pattern_counts(
                 {"doc_id": ids, "pattern": names, "hits": hits}
             )
 
-    return docs.select(id_col, text_col).mapInPandas(scan, _SCAN_SCHEMA)
+    return docs.select("doc_id", "text").mapInPandas(scan, _SCAN_SCHEMA)

@@ -33,8 +33,6 @@ Spark-first design notes
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -46,13 +44,15 @@ class EmptyCorpusError(ValueError):
     (word_count_mpi.c:415-422), not an empty result."""
 
 
-def _check_corpus(path: str) -> None:
-    # Local-path parity check only; remote FS paths (hdfs://, s3://)
-    # defer to the source's own listing.
-    if os.path.isdir(path) and not any(
-        e.is_file() for e in os.scandir(path)
-    ):
-        raise EmptyCorpusError(f"corpus directory {path!r} contains no files")
+def read_corpus(spark: SparkSession, path: str) -> DataFrame:
+    """`spark.read.text(path)` (schema: value string), raising
+    EmptyCorpusError when Spark's own listing finds no file to read —
+    it skips names starting with `.` or `_`, and covers non-local
+    paths too."""
+    lines = spark.read.text(path)
+    if not lines.inputFiles():
+        raise EmptyCorpusError(f"corpus {path!r} contains no file to read")
+    return lines
 
 
 def word_count_df(
@@ -90,8 +90,7 @@ def word_count_dir(
     (the reference keeps a sorted dirent array for the same purpose,
     word_count_mpi.c:88-97).
     """
-    _check_corpus(path)
-    lines = spark.read.text(path)  # schema: value string
+    lines = read_corpus(spark, path)
     return word_count_df(lines, col="value", delimiters=delimiters, ordered=ordered)
 
 
@@ -99,9 +98,6 @@ def word_count_compat(
     df: DataFrame,
     col: str = "text",
     delimiters: str = DEFAULT_DELIMITERS,
-    max_word_len: int | None = 29,
-    ascii_fold: bool = True,
-    ordered: bool = True,
 ) -> DataFrame:
     """Strict reference-compat word count (SURVEY.md §7 hard parts).
 
@@ -116,28 +112,21 @@ def word_count_compat(
 
     toks = tokenize(df, col=col, delimiters=delimiters, lowercase=False)
     word = F.col("word")
-    if max_word_len is not None:
-        word = F.substring(word, 1, max_word_len)
-    if ascii_fold:
-        # ASCII-only folding: translate A-Z only, leave Unicode alone
-        word = F.translate(
-            word,
-            "ABCDEFGHIJKLMNOPQRSTUVWXYZ",
-            "abcdefghijklmnopqrstuvwxyz",
-        )
-    else:
-        word = F.lower(word)
+    # ASCII-only folding: translate A-Z only, leave Unicode alone
+    word = F.translate(
+        F.substring(word, 1, 29),
+        "ABCDEFGHIJKLMNOPQRSTUVWXYZ",
+        "abcdefghijklmnopqrstuvwxyz",
+    )
     counts = (
         toks.select(word.alias("word"))
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("count"))
     )
-    return counts.orderBy("word") if ordered else counts
+    return counts.orderBy("word")
 
 
-def word_count_rdd(
-    spark: SparkSession, path: str, delimiters: str = DEFAULT_DELIMITERS
-) -> DataFrame:
+def word_count_rdd(spark: SparkSession, path: str) -> DataFrame:
     """RDD demonstration path (SURVEY.md §1.3): the canonical
     flatMap → map → reduceByKey word count. Kept as the educational
     twin of the reference's explicit map/reduce phases
@@ -148,8 +137,8 @@ def word_count_rdd(
 
     from mpi_word_count_spark.tokenizer import delimiter_regex
 
-    _check_corpus(path)
-    rx = re.compile(delimiter_regex(delimiters))
+    read_corpus(spark, path)  # the empty-corpus check of the DataFrame path
+    rx = re.compile(delimiter_regex())
     counts = (
         spark.sparkContext.textFile(path)
         .flatMap(rx.split)
@@ -160,14 +149,9 @@ def word_count_rdd(
     return spark.createDataFrame(counts, "word string, count long").orderBy("word")
 
 
-def top_k_words(
-    df: DataFrame,
-    col: str = "text",
-    k: int = 100,
-    delimiters: str = DEFAULT_DELIMITERS,
-) -> DataFrame:
+def top_k_words(df: DataFrame, col: str = "text", k: int = 100) -> DataFrame:
     """Top-k most frequent words (M1 extension): full aggregation then
     a TakeOrderedAndProject — Spark converts orderBy+limit into a
     per-partition top-k + driver merge, so no global sort happens."""
-    counts = word_count_df(df, col=col, delimiters=delimiters, ordered=False)
+    counts = word_count_df(df, col=col, ordered=False)
     return counts.orderBy(F.desc("count"), F.asc("word")).limit(k)

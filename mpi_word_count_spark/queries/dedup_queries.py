@@ -1013,14 +1013,9 @@ def q_containment_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     directed expansion is a projection over the already-aggregated
     pair table.
     """
-    from mpi_word_count_spark.operators.dedup import (
-        _shared_shingle_pairs,
-        _shingle_index,
-    )
+    from mpi_word_count_spark.operators.dedup import _shared_shingle_pairs, doc_shingles
 
-    sh = _shingle_index(
-        table(spark, "documents", sf_dir), 3, "doc_id", "text", None
-    )
+    sh = doc_shingles(table(spark, "documents", sf_dir))
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_shingles"))
     shared = _shared_shingle_pairs(sh)
     sa, sb = sizes.alias("sa"), sizes.alias("sb")

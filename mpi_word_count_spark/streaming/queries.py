@@ -9,19 +9,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from mpi_word_count_spark.tokenizer import DEFAULT_DELIMITERS, tokenize
+from mpi_word_count_spark.tokenizer import tokenize
 
 
-def streaming_word_count(
-    lines: DataFrame, col: str = "text", delimiters: str = DEFAULT_DELIMITERS
-) -> DataFrame:
+def streaming_word_count(lines: DataFrame) -> DataFrame:
     """The flagship query in streaming form — the reference's
     partition-then-merge pipeline as incremental state (complete
     mode). Same tokenize → lower → filter → count plan; Spark keeps
     the running counts in the state store instead of a per-rank hash
     map (hash_map.c:69-79)."""
     return (
-        tokenize(lines, col=col, delimiters=delimiters)
+        tokenize(lines)
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("count"))
     )
@@ -234,11 +232,6 @@ def streaming_embedding_dedup(
     corpus_buckets: DataFrame,
     corpus_vecs: DataFrame,
     threshold: float = 0.4,
-    num_bands: int | None = None,
-    planes_per_band: int | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int | None = None,
 ) -> DataFrame:
     """Continuous-ingest SEMANTIC dedup vs a persisted embedding
     corpus — the streaming face of incremental_embedding_dups: each
@@ -279,28 +272,15 @@ def streaming_embedding_dedup(
     banding, not once per candidate row.
     """
     from mpi_word_count_spark.functions.vector import dot, norm
-    from mpi_word_count_spark.operators.dedup import (
-        EMB_PLANES_PER_BAND,
-        NUM_EMB_BANDS,
-        embedding_band_keys,
-    )
+    from mpi_word_count_spark.operators.dedup import NUM_EMB_BANDS, embedding_band_keys
 
-    nb = num_bands or NUM_EMB_BANDS
-    ppb = planes_per_band or EMB_PLANES_PER_BAND
     vecs = stream_vecs.select(
-        F.col(id_col),
-        F.col(vec_col),
-        norm(F.col(vec_col)).alias("_vnorm"),
+        F.col("vec_id"),
+        F.col("embedding"),
+        norm(F.col("embedding")).alias("_vnorm"),
     )
     bands = embedding_band_keys(
-        vecs,
-        nb,
-        ppb,
-        id_col,
-        vec_col,
-        dim,
-        extra_cols=(vec_col, "_vnorm"),
-        with_all="_vbuckets",
+        vecs, extra_cols=("embedding", "_vnorm"), with_all="_vbuckets"
     )
     bands = bands.repartition(
         stream_vecs.sparkSession.sparkContext.defaultParallelism
@@ -327,9 +307,9 @@ def streaming_embedding_dedup(
         obuckets.join(
             F.broadcast(
                 corpus_vecs.select(
-                    F.col(id_col).alias("_id"),
-                    F.col(vec_col).alias("_ovec"),
-                    norm(F.col(vec_col)).alias("_onorm"),
+                    F.col("vec_id").alias("_id"),
+                    F.col("embedding").alias("_ovec"),
+                    norm(F.col("embedding")).alias("_onorm"),
                 )
             ),
             "_id",
@@ -345,7 +325,7 @@ def streaming_embedding_dedup(
     )
     joined = bands.join(F.broadcast(store), ["band", "bucket"], "left")
     band_matches = F.filter(
-        F.expr(f"sequence(0, {nb - 1})"),
+        F.expr(f"sequence(0, {NUM_EMB_BANDS - 1})"),
         lambda i: F.col("_vbuckets")[i] == F.col("_obuckets")[i],
     )
     first_band = F.element_at(band_matches, 1)
@@ -355,7 +335,7 @@ def streaming_embedding_dedup(
         F.col("_id").alias("vec_id"),
         F.col("other"),
         F.round(
-            dot(F.col(vec_col), F.col("_ovec"))
+            dot(F.col("embedding"), F.col("_ovec"))
             / (F.col("_vnorm") * F.col("_onorm")),
             4,
         ).alias("cosine"),

@@ -74,7 +74,6 @@ def tokenize(
     col: str = "text",
     delimiters: str = DEFAULT_DELIMITERS,
     lowercase: bool = True,
-    out: str = "word",
     keep: list[str] | None = None,
 ) -> DataFrame:
     """text column → one row per word (S1), optionally lowercased (S2),
@@ -84,9 +83,9 @@ def tokenize(
     The plan is scan → project(split) → generate(explode) → filter:
     all whole-stage-codegen'd, no shuffle until a later aggregation.
     """
-    word = F.explode(split_words(col, delimiters)).alias(out)
+    word = F.explode(split_words(col, delimiters)).alias("word")
     cols = [F.col(k) for k in (keep or [])] + [word]
     tokens = df.select(*cols)
     if lowercase:
-        tokens = tokens.withColumn(out, F.lower(F.col(out)))
-    return tokens.filter(F.col(out) != "")
+        tokens = tokens.withColumn("word", F.lower(F.col("word")))
+    return tokens.filter(F.col("word") != "")

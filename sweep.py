@@ -15,10 +15,12 @@ to keep COVERAGE.md's "entire registry green at sf0.1" claim honest.
 
 from __future__ import annotations
 
+import argparse
+import os
 import sys
 import time
 
-sys.path.insert(0, ".")
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import __spark_entry__ as entrymod  # noqa: E402
 from mpi_word_count_spark import operators  # noqa: E402
@@ -27,18 +29,12 @@ from mpi_word_count_spark.session import get_spark  # noqa: E402
 
 
 def main() -> int:
-    only: set[str] | None = None
-    skip_idx: set[int] = set()
-    for i, a in enumerate(sys.argv):
-        if a == "--only":
-            only = set(sys.argv[i + 1].split(","))
-            skip_idx.add(i + 1)
-    args = [
-        a
-        for i, a in enumerate(sys.argv[1:], start=1)
-        if not a.startswith("--") and i not in skip_idx
-    ]
-    sf_dir = args[0] if args else "/root/testdata/sf0.01"
+    ap = argparse.ArgumentParser(description="Full-registry oracle sweep.")
+    ap.add_argument("sf_dir", nargs="?", default="/root/testdata/sf0.01")
+    ap.add_argument("--only", help="comma-separated query names to check")
+    args = ap.parse_args()
+    sf_dir = args.sf_dir
+    only = set(args.only.split(",")) if args.only else None
     spark = get_spark(app_name="sweep")
     queries = entrymod.queries()
     oracles = entrymod.oracle_sql()

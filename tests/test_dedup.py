@@ -51,7 +51,7 @@ def simhash_expr(df: DataFrame, bits: int = SIMHASH_BITS) -> DataFrame:
     row-wise, exploding docs × terms × bits rows through two shuffles
     with no Python in the row path — the form the DuckDB oracle
     mirrors."""
-    terms = _simhash_terms(df, "doc_id", "text")
+    terms = _simhash_terms(df)
     per_bit = (
         terms.select(
             "doc_id",
@@ -721,12 +721,12 @@ def test_containment_catches_excerpt_jaccard_misses(spark):
 
     from mpi_word_count_spark.operators.dedup import (
         _shared_shingle_pairs,
-        _shingle_index,
+        doc_shingles,
         ngram_jaccard_pairs,
     )
     from pyspark.sql import functions as F
 
-    sh = _shingle_index(df, 3, "doc_id", "text", None)
+    sh = doc_shingles(df)
     sizes = {r["doc_id"]: r["n"] for r in
              sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n")).collect()}
     shared = {(r["d1"], r["d2"]): r["inter"]

@@ -1,5 +1,6 @@
 """Cheap structural guards (no Spark session): library code must have a
-caller outside tests/, and the registry keeps its stated order."""
+caller outside tests/, every library parameter must be set by some
+caller, and the registry keeps its stated order."""
 
 from __future__ import annotations
 
@@ -27,6 +28,19 @@ def _docstring_nodes(tree: ast.AST) -> set[int]:
     return out
 
 
+def _held_code(node: ast.AST, docstrings: set[int]) -> ast.Module | None:
+    """The module a string literal holds when it is code (a worker
+    script): multi-line, not a docstring, and it parses."""
+    if not (isinstance(node, ast.Constant) and isinstance(node.value, str)):
+        return None
+    if "\n" not in node.value or id(node) in docstrings:
+        return None
+    try:
+        return ast.parse(node.value)
+    except SyntaxError:
+        return None
+
+
 def _names_used(tree: ast.AST, skip: tuple[int, int] | None = None) -> set[str]:
     """Identifiers a module uses: names, attributes, imports, strings
     that are identifiers (getattr/dispatch tables) and code held in
@@ -47,11 +61,8 @@ def _names_used(tree: ast.AST, skip: tuple[int, int] | None = None) -> set[str]:
         elif isinstance(node, ast.Constant) and isinstance(node.value, str):
             if node.value.isidentifier():
                 used.add(node.value)
-            elif "\n" in node.value and id(node) not in docstrings:
-                try:
-                    used |= _names_used(ast.parse(node.value))
-                except SyntaxError:
-                    pass
+            elif (code := _held_code(node, docstrings)) is not None:
+                used |= _names_used(code)
     return used
 
 
@@ -146,3 +157,116 @@ def test_env_reads_only_in_session():
     elsewhere grows an A/B knob the session does not know about."""
     found = _uses_outside(PKG / "session.py", {"environ", "environb", "getenv", "getenvb"})
     assert not found, "environment reads outside session.py:\n" + "\n".join(found)
+
+
+def _defaulted(fn: ast.FunctionDef | ast.AsyncFunctionDef) -> list[str]:
+    a = fn.args
+    pos = a.posonlyargs + a.args
+    names = [p.arg for p in pos[len(pos) - len(a.defaults) :]]
+    return names + [p.arg for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None]
+
+
+def _calls_with_caller(tree: ast.AST):
+    """(call, innermost enclosing def or None) for every call in `tree`,
+    including the calls in code held in string literals."""
+    docstrings = _docstring_nodes(tree)
+
+    def visit(node: ast.AST, caller: ast.AST | None):
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, ast.Call):
+                yield child, caller
+            code = _held_code(child, docstrings)
+            if code is not None:
+                yield from _calls_with_caller(code)
+            is_def = isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef))
+            yield from visit(child, child if is_def else caller)
+
+    yield from visit(tree, None)
+
+
+def _unset_library_parameters() -> dict[str, set[str]]:
+    """Defaulted parameters of package functions (queries/ aside: its
+    defaulted helpers build oracle SQL) that no call sets, keyed by
+    "path:line name". Callers are every program file and tests/. A call
+    matches a def by name; it sets a parameter by keyword, by position
+    (bound methods skip `self`), through `**kwargs` or a starred
+    argument, or through `functools.partial`. Passing on a parameter of
+    the calling function that is itself unset does not count."""
+    callers = [*_program_files(), *(ROOT / "tests").glob("*.py")]
+    trees = {p: ast.parse(p.read_text()) for p in callers}
+    defs = []  # (key, def node, positional names a call binds)
+    for path, tree in trees.items():
+        if PKG not in path.parents or PKG / "queries" in path.parents:
+            continue
+        bound = set()
+        for cls in ast.walk(tree):
+            if isinstance(cls, ast.ClassDef):
+                bound |= {
+                    id(f)
+                    for f in cls.body
+                    if isinstance(f, (ast.FunctionDef, ast.AsyncFunctionDef))
+                    and not any(getattr(d, "id", None) == "staticmethod"
+                                for d in f.decorator_list)
+                }
+        for fn in ast.walk(tree):
+            is_def = isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef))
+            if is_def and _defaulted(fn):
+                pos = [p.arg for p in fn.args.posonlyargs + fn.args.args]
+                key = f"{path.relative_to(ROOT)}:{fn.lineno} {fn.name}"
+                defs.append((key, fn, pos[1:] if id(fn) in bound else pos))
+    unset = {id(fn): set(_defaulted(fn)) for _, fn, _ in defs}
+    by_name: dict[str, list] = {}
+    for _, fn, pos in defs:
+        by_name.setdefault(fn.name, []).append((fn, pos))
+
+    calls = []
+    for tree in trees.values():
+        for call, caller in _calls_with_caller(tree):
+            func, args = call.func, call.args
+            name = getattr(func, "id", None) or getattr(func, "attr", None)
+            if name == "partial" and args:
+                name = getattr(args[0], "id", None) or getattr(args[0], "attr", None)
+                args = args[1:]
+            if name in by_name:
+                calls.append((name, args, call.keywords, caller))
+
+    changed = True
+    while changed:  # a pass-through sets its target only once its source is set
+        changed = False
+        for name, args, keywords, caller in calls:
+            relayed = unset.get(id(caller), set())
+
+            def sets(arg: ast.expr) -> bool:
+                return not (isinstance(arg, ast.Name) and arg.id in relayed)
+
+            for fn, pos in by_name[name]:
+                left = unset[id(fn)]
+                done = set()
+                for i, arg in enumerate(args):
+                    if isinstance(arg, ast.Starred):
+                        done |= set(pos[i:])
+                        break
+                    if i < len(pos) and sets(arg):
+                        done.add(pos[i])
+                for kw in keywords:
+                    if kw.arg is None:
+                        done |= left
+                    elif sets(kw.value):
+                        done.add(kw.arg)
+                if left & done:
+                    left -= done
+                    changed = True
+    return {key: unset[id(fn)] for key, fn, _ in defs if unset[id(fn)]}
+
+
+def test_every_library_parameter_is_set_by_a_caller():
+    """A defaulted parameter that no caller sets is an option nobody
+    uses: it multiplies the configurations to test while only its
+    default ever runs. Make it a constant (or the column name) instead.
+    Tests count as callers, so a parameter only a test sets stays."""
+    unset = _unset_library_parameters()
+    lines = [f"{key}: {', '.join(sorted(ps))}" for key, ps in sorted(unset.items())]
+    total = sum(len(params) for params in unset.values())
+    assert not unset, f"{total} defaulted parameters no caller sets:\n" + "\n".join(
+        lines
+    )

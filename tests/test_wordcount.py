@@ -7,6 +7,7 @@ from __future__ import annotations
 import pytest
 
 from mpi_word_count_spark.operators.wordcount import (
+    EmptyCorpusError,
     top_k_words,
     word_count_df,
     word_count_dir,
@@ -72,11 +73,17 @@ def test_top_k(spark):
     assert rows(top_k_words(df, k=2)) == [("a", 3), ("b", 2)]
 
 
-def test_empty_dir_errors(spark, tmp_path):
-    # reference errors on an empty corpus (word_count_mpi.c:415-422)
-    d = tmp_path / "empty"
+@pytest.mark.parametrize(
+    "hidden", [(), (".keep", "_notes")], ids=["empty", "hidden-only"]
+)
+def test_empty_dir_errors(spark, tmp_path, hidden):
+    # reference errors on an empty corpus (word_count_mpi.c:415-422);
+    # Spark reads no file whose name starts with "." or "_"
+    d = tmp_path / "corpus"
     d.mkdir()
-    with pytest.raises(Exception):
+    for name in hidden:
+        (d / name).write_text("not read\n")
+    with pytest.raises(EmptyCorpusError):
         word_count_dir(spark, str(d)).collect()
 
 
