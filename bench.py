@@ -31,7 +31,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from mpi_word_count_spark import registry  # noqa: E402
-from mpi_word_count_spark.session import get_spark, host_defaults  # noqa: E402
+from mpi_word_count_spark.session import get_spark  # noqa: E402
 
 
 def stdout_line(total: float, n_queries: int, sf: float) -> str:
@@ -176,7 +176,7 @@ def main() -> None:
         "total_sec_this_run": total,
         "n_queries": len(registry.HEADLINE),
         "best_of": "min over 2 passes x 2 runs (+spread-guard extras)",
-        "cpus": os.environ.get("SPARK_GRAFT_CPUS", str(host_defaults()[0])),
+        "cpus": str(spark.sparkContext.defaultParallelism),
         **gate,
         "load1_at_start": round(load1_at_start, 2),
         "load1_at_end": round(os.getloadavg()[0], 2),

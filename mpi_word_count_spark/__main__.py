@@ -141,11 +141,7 @@ def main(argv: list[str] | None = None) -> int:
     )
     if args.cpus is not None and args.cpus < 1:
         ap.error("--cpus must be >= 1")
-    spark = (
-        get_spark(master=f"local[{args.cpus}]", shuffle_partitions=args.cpus)
-        if args.cpus
-        else get_spark()
-    )
+    spark = get_spark(cpus=args.cpus, shuffle_partitions=args.cpus)
     with timing_log(args.timing, label="word_count"):
         if args.compat:
             from mpi_word_count_spark.operators.wordcount import (

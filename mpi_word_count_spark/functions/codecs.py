@@ -2284,12 +2284,6 @@ def _avi_container(
     return b"RIFF" + struct.pack("<I", len(riff_body)) + riff_body
 
 
-def encode_avi_mjpeg(jpeg_frames: list[bytes], width: int, height: int, fps: int = 10) -> bytes:
-    """RIFF-AVI with one baseline-JPEG payload per '00dc' frame (the
-    MJPG coding — the container is lossless around the JPEGs)."""
-    return _avi_container(jpeg_frames, width, height, b"MJPG", 24, fps)
-
-
 def encode_avi_dib(frames: list[np.ndarray], fps: int = 10) -> bytes:
     """RIFF-AVI with uncompressed 8-bit grayscale DIB '00db' frames
     (bottom-up rows, 4-byte padding, 256-entry gray palette) —

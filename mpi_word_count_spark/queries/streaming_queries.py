@@ -758,10 +758,9 @@ def q_streaming_manifest_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     synth connector's 5 micro-batches each commit one manifest
     snapshot via foreachBatch, with the batch id recorded in the
     manifest so a REPLAYED batch (sink committed, checkpoint WAL
-    didn't) no-ops instead of double-appending — the same idempotence
-    contract as the foreachBatch parquet sink, implemented in the
-    commit protocol itself (replay's orphan files are vacuum fodder,
-    never data). The final snapshot must contain every document
+    didn't) no-ops instead of double-appending: idempotence lives in
+    the commit protocol itself (replay's orphan files are vacuum
+    fodder, never data). The final snapshot must contain every document
     exactly once, and the manifest version count must equal the batch
     count; the oracle regenerates the corpus in SQL."""
     import shutil

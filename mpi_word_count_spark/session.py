@@ -32,25 +32,27 @@ def host_defaults() -> tuple[int, str]:
 
 def get_spark(
     app_name: str = "mpi_word_count_spark",
-    master: str | None = None,
+    cpus: int | None = None,
     shuffle_partitions: int | None = None,
     driver_memory: str | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or reuse) a SparkSession with engine defaults.
 
-    Env overrides of the host_defaults(): SPARK_GRAFT_CPUS (core count
-    for the local master), SPARK_GRAFT_DRIVER_MEM (driver heap).
+    `cpus` sets the local master's task slots, spark.default.parallelism
+    and the default shuffle width together, as `mpirun -np N` sets the
+    reference's worker count. Env overrides of the host_defaults():
+    SPARK_GRAFT_CPUS (cpus when not given), SPARK_GRAFT_DRIVER_MEM
+    (driver heap).
     """
     host_cpus, host_heap = host_defaults()
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", host_cpus))
-    master = master or f"local[{cpus}]"
+    cpus = cpus or int(os.environ.get("SPARK_GRAFT_CPUS", host_cpus))
     shuffle_partitions = shuffle_partitions or max(cpus, 8)
     driver_memory = driver_memory or os.environ.get("SPARK_GRAFT_DRIVER_MEM", host_heap)
 
     builder = (
         SparkSession.builder.appName(app_name)
-        .master(master)
+        .master(f"local[{cpus}]")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.default.parallelism", str(cpus))
         .config("spark.sql.adaptive.enabled", "true")

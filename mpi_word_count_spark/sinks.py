@@ -17,33 +17,22 @@ from contextlib import contextmanager
 from pyspark.sql import DataFrame
 
 
-def write_csv(df: DataFrame, path: str, single_file: bool = True) -> str:
-    """CSV sink with header (O4).
-
-    `single_file=True` reproduces the reference's one-file output by
-    coalescing to a single task — correct for parity runs, wrong at
-    100 TB; pass False to keep one file per partition (the scalable
-    default for any real corpus).
-    """
-    tmp = path + ".spark-tmp" if single_file else path
-    writer = df.coalesce(1) if single_file else df
-    writer.write.mode("overwrite").option("header", True).csv(tmp)
-    if single_file:
-        part = glob.glob(os.path.join(tmp, "part-*.csv"))[0]
-        if os.path.isdir(path):
-            shutil.rmtree(path)
-        elif os.path.exists(path):
-            os.remove(path)
-        shutil.move(part, path)
-        shutil.rmtree(tmp)
-    return path
-
-
 def write_word_count_csv(df: DataFrame, path: str = "csv_results.csv") -> str:
-    """Byte-parity CSV for the flagship query: header `Word,Count`
-    (word_count_mpi.c:137)."""
+    """Byte-parity CSV sink for the flagship query (O4): one file with
+    header `Word,Count` (word_count_mpi.c:137). Coalescing to a single
+    task reproduces the reference's one file — right for parity runs,
+    wrong at 100 TB."""
     renamed = df.withColumnRenamed("word", "Word").withColumnRenamed("count", "Count")
-    return write_csv(renamed, path, single_file=True)
+    tmp = path + ".spark-tmp"
+    renamed.coalesce(1).write.mode("overwrite").option("header", True).csv(tmp)
+    part = glob.glob(os.path.join(tmp, "part-*.csv"))[0]
+    if os.path.isdir(path):
+        shutil.rmtree(path)
+    elif os.path.exists(path):
+        os.remove(path)
+    shutil.move(part, path)
+    shutil.rmtree(tmp)
+    return path
 
 
 def show_console(df: DataFrame, limit: int = 0) -> list[str]:

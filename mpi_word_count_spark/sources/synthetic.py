@@ -35,31 +35,11 @@ MIN_WORDS = 5
 LEN_SPREAD = 20  # doc length uniform in [MIN_WORDS, MIN_WORDS + LEN_SPREAD)
 
 
-def synth_n_words(
-    doc_id: int, seed: str, min_words: int = MIN_WORDS, spread: int = LEN_SPREAD
-) -> int:
-    return min_words + py_hash32(str(doc_id), f"{seed}:len") % spread
-
-
-def synth_doc(
-    doc_id: int,
-    seed: str,
-    min_words: int = MIN_WORDS,
-    spread: int = LEN_SPREAD,
-    vocab_size: int = 0,
-) -> str:
-    """vocab_size=0 draws from the 16-word SYNTH_VOCAB (oracle
-    parity); vocab_size>0 draws numbered words from a synthetic
-    vocabulary that size — use it when the corpus needs realistic
-    shingle diversity (e.g. dedup benchmarks: a 16-word vocab caps
-    the 3-gram space at 4096, which saturates LSH buckets with
-    coincidental collisions and measures clique joins, not dedup)."""
-    n = synth_n_words(doc_id, seed, min_words, spread)
-    if vocab_size > 0:
-        return " ".join(
-            f"w{py_hash32(f'{doc_id}:{i}', f'{seed}:w') % vocab_size}"
-            for i in range(n)
-        )
+def synth_doc(doc_id: int, seed: str) -> str:
+    """Document `doc_id` of corpus `seed`: hash-drawn SYNTH_VOCAB words,
+    as many as its hash-drawn length (sql_synth_corpus_cte regenerates
+    the same words in DuckDB)."""
+    n = MIN_WORDS + py_hash32(str(doc_id), f"{seed}:len") % LEN_SPREAD
     return " ".join(
         SYNTH_VOCAB[py_hash32(f"{doc_id}:{i}", f"{seed}:w") % len(SYNTH_VOCAB)]
         for i in range(n)
@@ -114,9 +94,6 @@ try:  # the Data Source API needs pyspark >= 4.0
             self.n_docs = int(options.get("n_docs", 1000))
             self.seed = options.get("seed", "synth")
             self.n_partitions = max(1, int(options.get("partitions", 8)))
-            self.min_words = int(options.get("min_words", MIN_WORDS))
-            self.spread = max(1, int(options.get("len_spread", LEN_SPREAD)))
-            self.vocab_size = int(options.get("vocab_size", 0))
 
         def partitions(self) -> list[DocRange]:
             if self.n_docs <= 0:
@@ -129,13 +106,7 @@ try:  # the Data Source API needs pyspark >= 4.0
 
         def read(self, partition: DocRange) -> Iterator[tuple]:
             for doc_id in range(partition.start, partition.end):
-                yield (
-                    doc_id,
-                    synth_doc(
-                        doc_id, self.seed, self.min_words, self.spread,
-                        self.vocab_size,
-                    ),
-                )
+                yield (doc_id, synth_doc(doc_id, self.seed))
 
     class SynthCorpusStreamReader(SimpleDataSourceStreamReader):
         """Micro-batch reader over the same corpus: offsets are doc_id

@@ -1,85 +1,56 @@
 #!/usr/bin/env python
-"""Scaling study: reproduce the reference's benchmark shape locally.
+"""Word-count strong and weak scaling: the reference's published figure.
 
-The reference's published result (BASELINE.md) is (a) near-linear
-strong-scaling speedup of the word-count query up to physical cores
-and (b) ~0.90-0.95 weak-scaling efficiency with input replicated per
-rank (resources/Documentation.md:425,482). This harness measures the
-same two curves for our engine on local[n]:
+The reference reports (BASELINE.md, resources/Documentation.md:425,482)
+a word-count speedup of ≈15 at 16 physical CPUs and a weak-scaling
+efficiency of 0.90-0.95 with the input replicated per rank. This script
+measures the same two curves for `word_count_df` on local[n]:
 
-The sf0.1 corpus is only ~1.5 MB of text — far too small to occupy 32
-cores — so the worker amplifies it by replication (explode over a
-sequence), the same trick as the reference's replicated 1 GB files:
-
-- strong: fixed total work (STRONG_COPIES × corpus), n ∈ CORES,
+- strong: fixed work, STRONG_COPIES × the sf documents text;
   speedup_n = T_1 / T_n.
-- weak: work ∝ cores (WEAK_COPIES_PER_CORE × n × corpus),
+- weak: work grows with the cores, WEAK_COPIES_PER_CORE × n copies;
   efficiency_n = T_1 / T_n.
 
-Each point runs in a fresh subprocess (own JVM) so parallelism is set
-by spark.master alone. Prints ONE JSON line; also appended to
-SCALING.json history.
+n runs over 1, 2, 4, ... up to the cores this process may use, plus that
+count itself when it is not a power of two. Each point runs in a fresh
+JVM whose session comes from get_spark(cpus=n, shuffle_partitions=n):
+one warm-up, then the best of 2 timed runs into the noop sink.
+
+    python scaling_bench.py [sf_dir]     # default: the sf0.1 fixture
+
+Prints ONE JSON line (with the host core count, so a record is only read
+against records of the same host) and appends it to SCALING.json.
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import subprocess
 import sys
 
-CORES = [1, 2, 4, 8, 16, 32]
-STRONG_COPIES = 512          # ≈ 768 MB of text at sf0.1
-WEAK_COPIES_PER_CORE = 64    # ≈ 96 MB of text per core
+from mpi_word_count_spark.session import host_defaults
+from mpi_word_count_spark.tables import DEFAULT_SF_DIR
 
-# dedup scaling: DISTINCT synthetic documents (replication would turn
-# every copy-group into a quadratic candidate clique and measure the
-# wrong thing); fixed corpus, cores vary
-DEDUP_DOCS = 250_000         # ~25M tokens via the synthcorpus connector
-
-# data-axis weak scaling (round-6, VERDICT r5 item 7): grow the
-# DISTINCT corpus with the cores — docs/core held constant — the
-# cluster-growth claim (2x machines ingest 2x data in constant time).
-# 15625/core lands n=16 exactly on the 250k strong-scaling corpus.
-DEDUP_WEAK_DOCS_PER_CORE = 15_625
-
-# semantic-dedup scaling (round-7, VERDICT r6 item 7): a SECOND
-# LLM-pipeline query on the scaling record beyond wordcount/minhash.
-# 100k distinct synthetic vectors, 200 clusters (~500 vectors each):
-# the within-cluster pair fold (~2.5e7 dim-16 cosine folds) is the
-# CPU-bound quadratic kernel SemDeDup bounds by clustering — exactly
-# the term that must thread-scale.
-SEMDEDUP_VECS = 100_000
-SEMDEDUP_DIM = 16
-SEMDEDUP_CLUSTERS = 200
+HERE = os.path.dirname(os.path.abspath(__file__))
+STRONG_COPIES = 512  # ≈ 768 MB of text at sf0.1
+WEAK_COPIES_PER_CORE = 64  # ≈ 96 MB of text per core
 
 _WORKER = r"""
-import json, os, sys, time
-sys.path.insert(0, os.getcwd())   # run_point sets cwd to the repo root
-from pyspark.sql import SparkSession, functions as F
+import json, sys, time
+from pyspark.sql import functions as F
 from mpi_word_count_spark.operators.wordcount import word_count_df
+from mpi_word_count_spark.session import get_spark
 
-n = int(sys.argv[1])
-mode = sys.argv[2]          # strong | weak
-sf_dir = sys.argv[3]
-copies = int(sys.argv[4])
+n, sf_dir, copies = int(sys.argv[1]), sys.argv[2], int(sys.argv[3])
+spark = get_spark(app_name=f"scaling-{n}", cpus=n, shuffle_partitions=n)
+base = spark.read.parquet(f"{sf_dir}/documents.parquet").select("text").cache()
+base.count()
 
-spark = (
-    SparkSession.builder.master(f"local[{n}]")
-    .appName(f"scaling-{mode}-{n}")
-    .config("spark.sql.shuffle.partitions", str(max(n, 1)))
-    .config("spark.sql.adaptive.enabled", "true")
-    .config("spark.driver.memory", "16g")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-)
-base = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).select("text")
-base = base.cache()
-base.count()                # warm: base corpus resident in memory
-
-# Replicate AFTER an explicit n-way repartition: the 584 KB parquet is
-# one row group (one scan split), so without this every copy would land
-# in a single partition and n cores would idle.
+# Replicate AFTER an n-way repartition: the sf0.1 documents file is one
+# row group (one scan split), so otherwise every copy would land in a
+# single partition and n - 1 cores would idle.
 def corpus():
     return (
         base.repartition(max(2 * n, 8))
@@ -88,9 +59,8 @@ def corpus():
     )
 
 word_count_df(base.limit(50)).write.format("noop").mode("overwrite").save()
-
-# best of 2: the first run pays JIT/codegen warmup, which would
-# otherwise read as (noisy) anti-scaling at high core counts
+# best of 2: the first run pays JIT/codegen warm-up, which would
+# otherwise read as noisy anti-scaling at high core counts
 best = float("inf")
 for _ in range(2):
     t0 = time.monotonic()
@@ -101,537 +71,43 @@ spark.stop()
 """
 
 
-_DEDUP_WORKER = r"""
-import json, os, sys, time
-sys.path.insert(0, os.getcwd())
-from pyspark.sql import SparkSession
-from mpi_word_count_spark.operators.dedup import minhash_lsh_pairs
-from mpi_word_count_spark import operators
-from mpi_word_count_spark.sources.synthetic import register_synth_source
-
-n = int(sys.argv[1])
-n_docs = int(sys.argv[4])
-
-# Shuffle partitions scale with DATA once the corpus outgrows the
-# strong-scaling baseline (the SCALE.md sizing rule: bound
-# bytes/partition so join/agg hash tables stay in memory). Measured
-# on the 2.5M-doc corpus at 32 threads: parts=n 66.4s vs parts=64
-# 41.2s — 1.6x from sizing alone. The 250k strong-scaling corpus
-# keeps parts=n EXACTLY at every point so the published speedup
-# curve's protocol (and its t1 denominator) stays comparable
-# round-over-round.
-parts = n if n_docs <= 250_000 else max(n, n_docs // 40_000)
-spark = (
-    SparkSession.builder.master(f"local[{n}]")
-    .appName(f"scaling-dedup-{n}")
-    .config("spark.sql.shuffle.partitions", str(parts))
-    .config("spark.sql.adaptive.enabled", "true")
-    .config("spark.driver.memory", "16g")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-)
-register_synth_source(spark)
-
-# Materialize the synthetic corpus to parquet ONCE (untimed): the
-# Python-side generation is the SOURCE's cost, not the dedup
-# pipeline's, and the pipeline reads its input more than once
-# (signatures + candidate-doc shingling) — timing must cover the
-# MinHash pipeline over a real on-disk table, like production.
-import tempfile
-corpus_path = os.path.join(
-    tempfile.gettempdir(), "spark_graft_scratch", f"dedup_scale_{n_docs}.parquet"
-)
-assert os.path.exists(os.path.join(corpus_path, "_SUCCESS")), "prep did not run"
-
-def corpus():
-    # No repartition: Spark sizes file splits to defaultParallelism
-    # (maxSplitBytes = totalBytes/local[n]), so the 64-file corpus
-    # already scans n-wide. Round-6 finding: the unconditional
-    # repartition(2n) this used to do exchanges the FULL raw text and
-    # was the entire 16->32 "scaling sag" r5 blamed on the memory bus
-    # (sig stage 4.0s -> 2.5s at 32 threads once dropped); production
-    # pipelines use the conditional operators.widen(), which is a
-    # no-op whenever the scan is already cluster-wide.
-    return spark.read.parquet(corpus_path)
-
-# warm one tiny pipeline (JIT/codegen), then best-of-2 on the real one
-minhash_lsh_pairs(corpus().limit(200)).write.format("noop").mode("overwrite").save()
-operators.release_caches()
-best = float("inf")
-for _ in range(2):
-    t0 = time.monotonic()
-    minhash_lsh_pairs(corpus()).write.format("noop").mode("overwrite").save()
-    operators.release_caches()
-    best = min(best, time.monotonic() - t0)
-print(json.dumps({"n": n, "sec": round(best, 3)}))
-spark.stop()
-"""
-
-
-# video-decode scaling (round-7): the REAL per-item media kernel —
-# parse_avi + pure-python baseline-JPEG decode per frame — is the
-# compute-bound, shuffle-free end of the pipeline spectrum (its 100 TB
-# shape is "N independent Arrow batches, zero exchanges"), so its
-# strong-scaling curve isolates task scheduling + Python worker fanout
-# from shuffle effects. 2,000 MJPG videos x 8 32x32 frames = 16k real
-# JPEG decodes (~3.4 ms each single-threaded).
-VIDEO_N = 2_000
-VIDEO_FRAMES = 8
-VIDEO_SIDE = 32
-
-_VIDEO_PREP = r"""
-import os, sys, tempfile
-sys.path.insert(0, os.getcwd())
-import numpy as np
-import pandas as pd
-from pyspark.sql import SparkSession, types as T
-
-n_videos, n_frames, side = int(sys.argv[1]), int(sys.argv[2]), int(sys.argv[3])
-path = os.path.join(
-    tempfile.gettempdir(), "spark_graft_scratch", f"video_scale_{n_videos}.parquet"
-)
-if os.path.exists(os.path.join(path, "_SUCCESS")):
-    sys.exit(0)
-spark = (
-    SparkSession.builder.master("local[32]")
-    .appName("scaling-video-prep")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-)
-
-def synth(batches):
-    from mpi_word_count_spark.functions import codecs
-    for pdf in batches:
-        ids, payloads = [], []
-        for vid in pdf["id"]:
-            rng = np.random.default_rng(int(vid))   # per-item seed: deterministic corpus
-            jpegs = [
-                codecs.encode_jpeg_gray(
-                    rng.integers(0, 256, (side, side), dtype=np.uint8)
-                )
-                for _ in range(n_frames)
-            ]
-            ids.append(int(vid))
-            payloads.append(codecs.encode_avi_mjpeg(jpegs, side, side))
-        yield pd.DataFrame({"media_id": ids, "media": payloads})
-
-schema = T.StructType([
-    T.StructField("media_id", T.LongType(), False),
-    T.StructField("media", T.BinaryType(), True),
-])
-spark.range(n_videos).repartition(64).mapInPandas(synth, schema=schema).write.mode(
-    "overwrite"
-).parquet(path)
-spark.stop()
-"""
-
-
-_VIDEO_WORKER = r"""
-import json, os, sys, tempfile, time
-sys.path.insert(0, os.getcwd())
-from pyspark.sql import SparkSession
-from mpi_word_count_spark.operators.multimodal import video_frame_stats
-
-n = int(sys.argv[1])
-n_videos = int(sys.argv[4])
-
-spark = (
-    SparkSession.builder.master(f"local[{n}]")
-    .appName(f"scaling-video-{n}")
-    .config("spark.sql.shuffle.partitions", str(n))
-    .config("spark.sql.adaptive.enabled", "true")
-    .config("spark.driver.memory", "16g")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-)
-corpus_path = os.path.join(
-    tempfile.gettempdir(), "spark_graft_scratch", f"video_scale_{n_videos}.parquet"
-)
-assert os.path.exists(os.path.join(corpus_path, "_SUCCESS")), "prep did not run"
-
-def corpus():
-    # 64 parquet files: the scan is already n-wide for every n here
-    return spark.read.parquet(corpus_path)
-
-# warm the Python workers + codec import, then best-of-2
-video_frame_stats(corpus().limit(32), stride=1).write.format("noop").mode(
-    "overwrite"
-).save()
-best = float("inf")
-for _ in range(2):
-    t0 = time.monotonic()
-    video_frame_stats(corpus(), stride=1).write.format("noop").mode("overwrite").save()
-    best = min(best, time.monotonic() - t0)
-print(json.dumps({"n": n, "sec": round(best, 3)}))
-spark.stop()
-"""
-
-
-_SEMDEDUP_PREP = r"""
-import os, sys, tempfile
-sys.path.insert(0, os.getcwd())
-from pyspark.sql import SparkSession, functions as F
-
-n_vecs, dim = int(sys.argv[1]), int(sys.argv[2])
-path = os.path.join(
-    tempfile.gettempdir(), "spark_graft_scratch", f"semdedup_scale_{n_vecs}.parquet"
-)
-if os.path.exists(os.path.join(path, "_SUCCESS")):
-    sys.exit(0)
-spark = (
-    SparkSession.builder.master("local[32]")
-    .appName("scaling-semdedup-prep")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-)
-# deterministic pseudo-random embeddings, generated JVM-side: each
-# coordinate is murmur3(vec_id, j) scaled to [-1, 1] — no Python loop,
-# no RNG state, reproducible across rounds
-emb = spark.range(n_vecs).repartition(64).select(
-    F.col("id").alias("vec_id"),
-    F.array(
-        *[
-            (F.hash(F.col("id"), F.lit(j)).cast("double") / F.lit(2147483648.0))
-            for j in range(dim)
-        ]
-    ).alias("embedding"),
-)
-emb.write.mode("overwrite").parquet(path)
-spark.stop()
-"""
-
-
-_SEMDEDUP_WORKER = r"""
-import json, os, sys, tempfile, time
-sys.path.insert(0, os.getcwd())
-from pyspark.sql import SparkSession
-from mpi_word_count_spark import operators
-from mpi_word_count_spark.operators.similarity import semantic_dedup
-
-n = int(sys.argv[1])
-n_vecs = int(sys.argv[4])
-n_clusters = int(sys.argv[5])
-
-spark = (
-    SparkSession.builder.master(f"local[{n}]")
-    .appName(f"scaling-semdedup-{n}")
-    .config("spark.sql.shuffle.partitions", str(n))
-    .config("spark.sql.adaptive.enabled", "true")
-    .config("spark.driver.memory", "16g")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-)
-corpus_path = os.path.join(
-    tempfile.gettempdir(), "spark_graft_scratch", f"semdedup_scale_{n_vecs}.parquet"
-)
-assert os.path.exists(os.path.join(corpus_path, "_SUCCESS")), "prep did not run"
-
-def corpus():
-    return spark.read.parquet(corpus_path)
-
-# warm one tiny pipeline (JIT/codegen + the driver-side k-means path),
-# then best-of-2 on the real one
-semantic_dedup(corpus().limit(500), n_clusters=4).write.format("noop").mode(
-    "overwrite"
-).save()
-operators.release_caches()
-best = float("inf")
-for _ in range(2):
-    t0 = time.monotonic()
-    semantic_dedup(corpus(), n_clusters=n_clusters).write.format("noop").mode(
-        "overwrite"
-    ).save()
-    operators.release_caches()
-    best = min(best, time.monotonic() - t0)
-print(json.dumps({"n": n, "sec": round(best, 3)}))
-spark.stop()
-"""
-
-
-# Pregel-family scaling (round-10, VERDICT r9 item 4): the iterative
-# graph loop (pagerank/k-core/LPA) is 3 of the 10 most expensive bench
-# queries but had no measured core-count curve. Synthetic directed
-# graph, both orientations appended (the operators' undirected
-# convention): 1M nodes / 8M base edges, endpoints hash-derived so the
-# corpus is deterministic and JVM-generated. Per round the plan is ONE
-# src equi-join + ONE partially-aggregated dst shuffle — this curve
-# measures exactly that join/shuffle pair under thread scaling.
-PAGERANK_NODES = 1_000_000
-PAGERANK_EDGES = 8_000_000
-PAGERANK_ROUNDS = 6
-
-_PAGERANK_PREP = r"""
-import os, sys, tempfile
-sys.path.insert(0, os.getcwd())
-from pyspark.sql import SparkSession, functions as F
-
-n_nodes, n_edges = int(sys.argv[1]), int(sys.argv[2])
-path = os.path.join(
-    tempfile.gettempdir(), "spark_graft_scratch", f"pagerank_scale_{n_edges}.parquet"
-)
-if os.path.exists(os.path.join(path, "_SUCCESS")):
-    sys.exit(0)
-spark = (
-    SparkSession.builder.master("local[32]")
-    .appName("scaling-pagerank-prep")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-)
-# deterministic pseudo-random digraph: src cycles all nodes (so every
-# node has outdeg >= 1 even before the reverse orientation), dst is
-# murmur3-derived; both orientations appended = undirected convention
-base = spark.range(n_edges).repartition(64).select(
-    (F.col("id") % n_nodes).alias("src"),
-    F.pmod(F.hash(F.col("id"), F.lit(7)), F.lit(n_nodes)).cast("long").alias("dst"),
-).filter(F.col("src") != F.col("dst"))
-edges = base.unionByName(base.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-edges.write.mode("overwrite").parquet(path)
-spark.stop()
-"""
-
-_PAGERANK_WORKER = r"""
-import json, os, sys, tempfile, time
-sys.path.insert(0, os.getcwd())
-from pyspark.sql import SparkSession
-from mpi_word_count_spark import operators
-from mpi_word_count_spark.operators.graph import pagerank_fixed_point
-
-n = int(sys.argv[1])
-n_edges = int(sys.argv[4])
-iterations = int(sys.argv[5])
-
-spark = (
-    SparkSession.builder.master(f"local[{n}]")
-    .appName(f"scaling-pagerank-{n}")
-    .config("spark.sql.shuffle.partitions", str(n))
-    .config("spark.sql.adaptive.enabled", "true")
-    .config("spark.driver.memory", "16g")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-)
-corpus_path = os.path.join(
-    tempfile.gettempdir(), "spark_graft_scratch", f"pagerank_scale_{n_edges}.parquet"
-)
-assert os.path.exists(os.path.join(corpus_path, "_SUCCESS")), "prep did not run"
-
-def edges():
-    # 64 parquet files: the scan is already n-wide for every n here
-    return spark.read.parquet(corpus_path)
-
-# warm one tiny loop (JIT/codegen + the checkpoint path), then best-of-2
-pagerank_fixed_point(edges().limit(5000), iterations=2).write.format("noop").mode(
-    "overwrite"
-).save()
-operators.release_caches()
-best = float("inf")
-for _ in range(2):
-    t0 = time.monotonic()
-    pagerank_fixed_point(edges(), iterations=iterations).write.format("noop").mode(
-        "overwrite"
-    ).save()
-    operators.release_caches()
-    best = min(best, time.monotonic() - t0)
-print(json.dumps({"n": n, "sec": round(best, 3)}))
-spark.stop()
-"""
-
-
-_DEDUP_PREP = r"""
-import os, sys, tempfile
-sys.path.insert(0, os.getcwd())
-from pyspark.sql import SparkSession
-from mpi_word_count_spark.sources.synthetic import register_synth_source
-
-n_docs = int(sys.argv[1])
-path = os.path.join(
-    tempfile.gettempdir(), "spark_graft_scratch", f"dedup_scale_{n_docs}.parquet"
-)
-if os.path.exists(os.path.join(path, "_SUCCESS")):
-    sys.exit(0)
-spark = (
-    SparkSession.builder.master("local[32]")
-    .appName("scaling-dedup-prep")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-)
-register_synth_source(spark)
-(
-    spark.read.format("synthcorpus")
-    .option("n_docs", n_docs)
-    .option("seed", "scale")
-    .option("partitions", 64)
-    .option("min_words", 60)
-    .option("len_spread", 80)
-    .option("vocab_size", 50000)
-    .load()
-    .write.mode("overwrite").parquet(path)
-)
-spark.stop()
-"""
-
-
-def run_point(
-    n: int, mode: str, sf_dir: str, copies: int, extra: list[str] | None = None
-) -> float:
-    worker = {
-        "dedup": _DEDUP_WORKER,
-        "semdedup": _SEMDEDUP_WORKER,
-        "video": _VIDEO_WORKER,
-        "pagerank": _PAGERANK_WORKER,
-    }.get(mode, _WORKER)
+def run_point(n: int, sf_dir: str, copies: int) -> float:
+    """Seconds for one word count of `copies` × the corpus on local[n],
+    in a fresh JVM."""
     out = subprocess.run(
-        [sys.executable, "-c", worker, str(n), mode, sf_dir, str(copies)]
-        + (extra or []),
+        [sys.executable, "-c", _WORKER, str(n), sf_dir, str(copies)],
         capture_output=True,
         text=True,
-        cwd=os.path.dirname(os.path.abspath(__file__)),
+        cwd=HERE,
         timeout=1800,
     )
     for line in out.stdout.splitlines():
         if line.startswith("{"):
             return json.loads(line)["sec"]
-    raise RuntimeError(f"no result for n={n} {mode}: {out.stderr[-2000:]}")
+    raise RuntimeError(f"no result for n={n}: {out.stderr[-2000:]}")
 
 
 def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cores = [
-        int(c)
-        for c in os.environ.get(
-            "SPARK_GRAFT_SCALE_CORES", ",".join(map(str, CORES))
-        ).split(",")
-    ]
-    if os.environ.get("SPARK_GRAFT_SCALE_MODE") == "dedup":
-        # materialize the synthetic corpus ONCE on full parallelism —
-        # generation is the source's cost, not the pipeline's, and the
-        # first (often 1-core) point must not pay it single-threaded
-        subprocess.run(
-            [sys.executable, "-c", _DEDUP_PREP, str(DEDUP_DOCS)],
-            check=True,
-            cwd=os.path.dirname(os.path.abspath(__file__)),
-            timeout=1800,
-        )
-        dedup = {n: run_point(n, "dedup", sf_dir, DEDUP_DOCS) for n in cores}
-        t1 = dedup[cores[0]]
-        result = {
-            "metric": "minhash_dedup_scaling",
-            "n_docs": DEDUP_DOCS,
-            "strong_sec": dedup,
-            "strong_speedup": {n: round(t1 / t, 2) for n, t in dedup.items()},
-        }
-    elif os.environ.get("SPARK_GRAFT_SCALE_MODE") == "semdedup":
-        subprocess.run(
-            [sys.executable, "-c", _SEMDEDUP_PREP, str(SEMDEDUP_VECS), str(SEMDEDUP_DIM)],
-            check=True,
-            cwd=os.path.dirname(os.path.abspath(__file__)),
-            timeout=1800,
-        )
-        sem = {
-            n: run_point(
-                n, "semdedup", sf_dir, SEMDEDUP_VECS, [str(SEMDEDUP_CLUSTERS)]
-            )
-            for n in cores
-        }
-        t1 = sem[cores[0]]
-        result = {
-            "metric": "semantic_dedup_scaling",
-            "n_vecs": SEMDEDUP_VECS,
-            "dim": SEMDEDUP_DIM,
-            "n_clusters": SEMDEDUP_CLUSTERS,
-            "strong_sec": sem,
-            "strong_speedup": {n: round(t1 / t, 2) for n, t in sem.items()},
-        }
-    elif os.environ.get("SPARK_GRAFT_SCALE_MODE") == "video":
-        subprocess.run(
-            [
-                sys.executable, "-c", _VIDEO_PREP,
-                str(VIDEO_N), str(VIDEO_FRAMES), str(VIDEO_SIDE),
-            ],
-            check=True,
-            cwd=os.path.dirname(os.path.abspath(__file__)),
-            timeout=1800,
-        )
-        vid = {n: run_point(n, "video", sf_dir, VIDEO_N) for n in cores}
-        t1 = vid[cores[0]]
-        result = {
-            "metric": "video_decode_scaling",
-            "n_videos": VIDEO_N,
-            "frames_per_video": VIDEO_FRAMES,
-            "frame_side": VIDEO_SIDE,
-            "strong_sec": vid,
-            "strong_speedup": {n: round(t1 / t, 2) for n, t in vid.items()},
-        }
-    elif os.environ.get("SPARK_GRAFT_SCALE_MODE") == "pagerank":
-        subprocess.run(
-            [sys.executable, "-c", _PAGERANK_PREP,
-             str(PAGERANK_NODES), str(PAGERANK_EDGES)],
-            check=True,
-            cwd=os.path.dirname(os.path.abspath(__file__)),
-            timeout=1800,
-        )
-        pr = {
-            n: run_point(n, "pagerank", sf_dir, PAGERANK_EDGES,
-                         [str(PAGERANK_ROUNDS)])
-            for n in cores
-        }
-        t1 = pr[cores[0]]
-        # round decomposition at the top core count: setup (edge scan,
-        # degree agg, adjacency checkpoint) vs per-round join+shuffle
-        # cost, from a 1-round run at the same point
-        n_top = cores[-1]
-        t_one = run_point(n_top, "pagerank", sf_dir, PAGERANK_EDGES, ["1"])
-        per_round = max(0.0, (pr[n_top] - t_one) / max(PAGERANK_ROUNDS - 1, 1))
-        result = {
-            "metric": "pagerank_scaling",
-            "n_nodes": PAGERANK_NODES,
-            "n_base_edges": PAGERANK_EDGES,
-            "rounds": PAGERANK_ROUNDS,
-            "strong_sec": pr,
-            "strong_speedup": {n: round(t1 / t, 2) for n, t in pr.items()},
-            "decomposition_at_top": {
-                "cores": n_top,
-                "one_round_sec": round(t_one, 3),
-                "per_round_sec": round(per_round, 3),
-                "setup_sec": round(t_one - per_round, 3),
-            },
-        }
-    elif os.environ.get("SPARK_GRAFT_SCALE_MODE") == "dedup_weak":
-        # data-axis weak scaling: DISTINCT corpus grows with the
-        # cores (docs/core constant) — each point gets its own
-        # materialized corpus, prepped untimed at full parallelism
-        weak: dict[int, float] = {}
-        for n in cores:
-            n_docs = DEDUP_WEAK_DOCS_PER_CORE * n
-            subprocess.run(
-                [sys.executable, "-c", _DEDUP_PREP, str(n_docs)],
-                check=True,
-                cwd=os.path.dirname(os.path.abspath(__file__)),
-                timeout=1800,
-            )
-            weak[n] = run_point(n, "dedup", sf_dir, n_docs)
-        t1w = weak[cores[0]]
-        result = {
-            "metric": "minhash_dedup_weak_scaling",
-            "docs_per_core": DEDUP_WEAK_DOCS_PER_CORE,
-            "weak_sec": weak,
-            "weak_efficiency": {n: round(t1w / t, 2) for n, t in weak.items()},
-        }
-    else:
-        strong = {n: run_point(n, "strong", sf_dir, STRONG_COPIES) for n in cores}
-        weak = {
-            n: run_point(n, "weak", sf_dir, WEAK_COPIES_PER_CORE * n) for n in cores
-        }
-        t1s, t1w = strong[cores[0]], weak[cores[0]]
-        result = {
-            "metric": "wordcount_scaling",
-            "sf_dir": sf_dir,
-            "strong_sec": strong,
-            "strong_speedup": {n: round(t1s / t, 2) for n, t in strong.items()},
-            "weak_sec": weak,
-            "weak_efficiency": {n: round(t1w / t, 2) for n, t in weak.items()},
-        }
+    ap = argparse.ArgumentParser(description="Word-count strong/weak scaling.")
+    sf01 = os.path.join(os.path.dirname(DEFAULT_SF_DIR), "sf0.1")
+    ap.add_argument("sf_dir", nargs="?", default=sf01)
+    sf_dir = ap.parse_args().sf_dir
+    host = host_defaults()[0]
+    cores = [1 << i for i in range(host.bit_length())]
+    cores += [host] if cores[-1] != host else []
+    strong = {n: run_point(n, sf_dir, STRONG_COPIES) for n in cores}
+    weak = {n: run_point(n, sf_dir, WEAK_COPIES_PER_CORE * n) for n in cores}
+    result = {
+        "metric": "wordcount_scaling",
+        "host_cores": host,
+        "sf_dir": sf_dir,
+        "strong_sec": strong,
+        "strong_speedup": {n: round(strong[1] / t, 2) for n, t in strong.items()},
+        "weak_sec": weak,
+        "weak_efficiency": {n: round(weak[1] / t, 2) for n, t in weak.items()},
+    }
     print(json.dumps(result))
-    with open(os.path.join(os.path.dirname(os.path.abspath(__file__)), "SCALING.json"), "a") as fh:
+    with open(os.path.join(HERE, "SCALING.json"), "a") as fh:
         fh.write(json.dumps(result) + "\n")
 
 

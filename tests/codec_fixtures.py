@@ -2,7 +2,7 @@
 
 The decoders under test live in mpi_word_count_spark/functions/codecs.py;
 these encoders produce the formats and variants (PGM, colour and
-multi-scan/progressive JPEG, animated GIF, tiled TIFF) that no
+multi-scan/progressive JPEG, animated GIF, tiled TIFF, MJPG AVI) that no
 registered query writes, so they are kept with the tests that use them.
 """
 
@@ -20,6 +20,7 @@ from mpi_word_count_spark.functions.codecs import (
     _ENC_DC_VALS,
     _UNZIGZAG,
     _BitWriter,
+    _avi_container,
     _encode_jpeg_block,
     _huffman_encode_map,
     _jpeg_coef_blocks,
@@ -181,6 +182,12 @@ def encode_jpeg_rgb_progressive(
     return _jpeg_progressive_stream(
         coefs, [(1, 1)] * 3, quant, height, width, successive
     )
+
+
+def encode_avi_mjpeg(jpeg_frames: list[bytes], width: int, height: int, fps: int = 10) -> bytes:
+    """RIFF-AVI with one baseline-JPEG payload per '00dc' frame (the
+    MJPG coding — the container is lossless around the JPEGs)."""
+    return _avi_container(jpeg_frames, width, height, b"MJPG", 24, fps)
 
 
 def encode_gif_frames(

@@ -559,7 +559,7 @@ def test_avi_dib_width_padding():
 def test_avi_mjpeg_container_is_lossless_around_jpegs():
     imgs = _frames(n=3, h=16, w=16, seed=5)
     jpegs = [codecs.encode_jpeg_gray(i) for i in imgs]
-    avi = codecs.encode_avi_mjpeg(jpegs, 16, 16, fps=10)
+    avi = fx.encode_avi_mjpeg(jpegs, 16, 16, fps=10)
     meta = codecs.parse_avi(avi)
     assert meta["fourcc"] == "MJPG" and meta["frames"] == jpegs
     # frame decode = baseline JPEG decode (lossy): same tolerance as
@@ -610,7 +610,7 @@ def test_avi_through_spark_video_kernels(spark):
     dib_frames = _frames(n=5, h=8, w=8, seed=3)
     dib = codecs.encode_avi_dib(dib_frames)
     imgs = _frames(n=3, h=16, w=16, seed=4)
-    mjpg = codecs.encode_avi_mjpeg([codecs.encode_jpeg_gray(i) for i in imgs], 16, 16)
+    mjpg = fx.encode_avi_mjpeg([codecs.encode_jpeg_gray(i) for i in imgs], 16, 16)
     rows = [(1, bytearray(dib)), (2, bytearray(mjpg)), (3, bytearray(b"not a video"))]
     media = spark.createDataFrame(rows, "media_id long, media binary")
 

@@ -158,6 +158,51 @@ def test_session_defaults_come_from_the_host(monkeypatch):
     assert session.host_defaults() == (3, "512m")  # floor on tiny hosts
 
 
+def test_get_spark_cpus_sets_slots_and_parallelism(monkeypatch):
+    """One number sets the local task slots and the default parallelism,
+    as `mpirun -np N` sets the reference's worker count: a local[2]
+    master with the host's parallelism made widen() split every word
+    count for task slots that did not exist (no JVM needed)."""
+    from types import SimpleNamespace
+
+    from mpi_word_count_spark import session
+
+    conf = {}
+
+    class Builder:
+        def appName(self, name):
+            return self
+
+        def master(self, master):
+            conf["master"] = master
+            return self
+
+        def config(self, key, value):
+            conf[key] = value
+            return self
+
+        def getOrCreate(self):
+            return SimpleNamespace(sparkContext=SimpleNamespace(setLogLevel=lambda level: None))
+
+    monkeypatch.setattr(session, "SparkSession", SimpleNamespace(builder=Builder()))
+    session.get_spark(cpus=2)
+    assert conf["master"] == "local[2]"
+    assert conf["spark.default.parallelism"] == "2"
+
+
+def test_scaling_bench_runs_one_point():
+    """One word-count scaling point end to end: a fresh JVM, its session
+    from get_spark(cpus=1), one copy of the corpus."""
+    import sys
+
+    from tests.conftest import SF_DIR
+
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    import scaling_bench
+
+    assert scaling_bench.run_point(1, SF_DIR, 1) > 0
+
+
 def test_table_memo_is_per_session(spark):
     """A sibling session (same application, its own conf) resolves its
     own relation: the memoized relation of the first session would run

@@ -1,6 +1,7 @@
 """Cheap structural guards (no Spark session): library code must have a
 caller outside tests/, every library parameter must be set by some
-caller, and the registry keeps its stated order."""
+caller, sessions come only from get_spark, and the registry keeps its
+stated order."""
 
 from __future__ import annotations
 
@@ -157,6 +158,36 @@ def test_env_reads_only_in_session():
     elsewhere grows an A/B knob the session does not know about."""
     found = _uses_outside(PKG / "session.py", {"environ", "environb", "getenv", "getenvb"})
     assert not found, "environment reads outside session.py:\n" + "\n".join(found)
+
+
+def _with_held_code(tree: ast.AST):
+    """Every node of `tree` and of the code held in its string literals,
+    the latter numbered by their line in the file."""
+    docstrings = _docstring_nodes(tree)
+    for node in ast.walk(tree):
+        yield node
+        if (code := _held_code(node, docstrings)) is not None:
+            yield from _with_held_code(ast.increment_lineno(code, node.lineno - 1))
+
+
+def test_sessions_only_from_get_spark():
+    """Sessions come from session.get_spark, which derives the master,
+    parallelism, heap and engine settings from the host in one place. A
+    SparkSession.builder anywhere else, worker scripts held in strings
+    included, sets its own and drifts from the host."""
+    found = []
+    for path in _program_files():
+        if path == PKG / "session.py":
+            continue
+        for node in _with_held_code(ast.parse(path.read_text())):
+            if (
+                isinstance(node, ast.Attribute)
+                and node.attr == "builder"
+                and getattr(node.value, "id", getattr(node.value, "attr", None))
+                == "SparkSession"
+            ):
+                found.append(f"{path.relative_to(ROOT)}:{node.lineno}")
+    assert not found, "SparkSession.builder outside session.py:\n" + "\n".join(found)
 
 
 def _defaulted(fn: ast.FunctionDef | ast.AsyncFunctionDef) -> list[str]:
