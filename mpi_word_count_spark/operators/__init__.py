@@ -4,8 +4,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-# Cached DataFrames created inside operators (MinHash signatures, LSH
-# candidate sets, connected-component labels). A lazily returned result
+# Cached DataFrames created inside operators (SimHash fingerprints,
+# PPJoin prefix tables, PMI count tables). A lazily returned result
 # can't unpersist its own inputs — the operator doesn't know when the
 # caller is done — so operators register caches here and long-lived
 # callers (bench loops, test sessions) call release_caches() between
@@ -58,8 +58,9 @@ def _checkpoint(df: DataFrame) -> DataFrame:
 
 def materialize(df: DataFrame) -> DataFrame:
     """Checkpoint once a loop-invariant input that every round scans
-    (an adjacency list, a symmetrized edge set); release_caches()
-    frees it."""
+    (an adjacency list, a symmetrized edge set), or an intermediate
+    several scans of one plan read (see minhash_lsh_pairs on why not
+    cache()); release_caches() frees it."""
     out = _checkpoint(df)
     track_releaser(lambda: _unpersist_local_ckpt(out))
     return out

@@ -389,6 +389,23 @@ def band_keys(sig: DataFrame) -> DataFrame:
     ).select("doc_id", "bk.band", "bk.key")
 
 
+def lsh_candidates(sig: DataFrame) -> DataFrame:
+    """Distinct LSH candidate pairs (d1 < d2) of a signature table:
+    docs sharing the key of at least one band. An equi-join on
+    (band, key), so fan-out is bucket collisions, never all pairs."""
+    bands = band_keys(sig)
+    a, b = bands.alias("a"), bands.alias("b")
+    return (
+        a.join(
+            b,
+            (F.col("a.band") == F.col("b.band"))
+            & (F.col("a.key") == F.col("b.key"))
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
+        )
+        .select(F.col("a.doc_id").alias("d1"), F.col("b.doc_id").alias("d2"))
+        .distinct()
+    )
+
 
 def minhash_lsh_pairs(df: DataFrame, threshold: float = 0.5) -> DataFrame:
     """MinHash + banded LSH near-duplicate pairs, verified with exact
@@ -400,41 +417,28 @@ def minhash_lsh_pairs(df: DataFrame, threshold: float = 0.5) -> DataFrame:
     exact verification only for bucket-colliding pairs, shingling
     ONLY candidate docs (broadcast semi join on the candidate ids).
 
-    The signature table is cached: it is tiny (17 longs/doc — at
-    100 TB corpus scale it is GBs, well inside cluster cache) and it
-    feeds four consumers (bands, candidate ids, sizes, and the band
-    self-join's other side); without the cache each consumer
-    re-instantiates the full corpus tokenization. Caching the
-    exploded SHINGLE table instead was measured slower (it is ~the
-    corpus size re-materialized); caching signatures costs almost
-    nothing and leaves exactly ONE full-corpus tokenization in the
-    whole pipeline.
-    """
-    from mpi_word_count_spark.operators import track_cache
+    The signatures (17 longs/doc) and the candidate pairs are built
+    eagerly, once each, by operators.materialize: each is scanned
+    several times downstream (band sides and sizes; the two id
+    selects and the verification join). A lazy cache() is worse
+    here under AQE: every scan of it becomes its own table-cache
+    query stage, the stages run at the same time, and each builds the
+    cache (21 jobs per call at sf0.001 with cache(), 12 with
+    materialize). Signatures rather than the exploded shingle table
+    are held because the shingles are ~the corpus size; this leaves
+    ONE full-corpus tokenization in the pipeline.
 
-    sig = track_cache(minhash_signatures(df))
-    bands = band_keys(sig)
-    a = bands.alias("a")
-    b_ = bands.alias("b")
-    # cached: consumed twice (candidate-id broadcast + verification
-    # join) and tiny by LSH design — one bands self-join instead of two
-    candidates = track_cache(
-        a.join(
-            b_,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("d1"), F.col("b.doc_id").alias("d2"))
-        .distinct()
-    )
-    # Verification re-tokenizes ONLY candidate docs (the semi join in
-    # the shared helper); the signature/banding subtree is recomputed
-    # for the id list, but it shuffles ~17 longs/doc — orders cheaper
-    # than tokenizing text.
+    The call runs those two builds; the returned frame is lazy over
+    them. release_caches() frees them, and the result is not
+    recomputable afterwards: call the operator again instead of
+    re-executing a held result.
+    """
+    from mpi_word_count_spark.operators import materialize
+
+    sig = materialize(minhash_signatures(df))
     return _verify_candidates_jaccard(
         df,
-        candidates,
+        materialize(lsh_candidates(sig)),
         sig.select("doc_id", "n_shingles"),
         threshold,
     )
@@ -1198,9 +1202,10 @@ def incremental_minhash_dups(
 
     Without `corpus_signatures` both sides are signed in one pass
     (fixture mode; the store path is equivalence-tested in
-    tests/test_dedup.py).
+    tests/test_dedup.py). Signatures and candidates are materialized
+    as in minhash_lsh_pairs, under the same contract.
     """
-    from mpi_word_count_spark.operators import track_cache
+    from mpi_word_count_spark.operators import materialize
 
     flags = df.select(F.col("doc_id").alias("doc_id"), batch_filter.alias("is_batch"))
     if corpus_signatures is None:
@@ -1208,11 +1213,11 @@ def incremental_minhash_dups(
     else:
         batch_sig = minhash_signatures(df.filter(batch_filter))
         sig = corpus_signatures.unionByName(batch_sig)
-    sig = track_cache(sig)
+    sig = materialize(sig)
     tagged = band_keys(sig).join(flags, "doc_id")
     bb = tagged.filter(F.col("is_batch")).alias("bb")
     other = tagged.alias("o")
-    candidates = track_cache(
+    candidates = materialize(
         bb.join(
             other,
             (F.col("bb.band") == F.col("o.band"))

@@ -1093,29 +1093,18 @@ def q_minhash_estimate_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     all pairs); the estimate join touches 17-long signature rows and
     the exact join only candidate docs' shingles — the
     minhash_lsh_dups verification shape with one extra 16-column
-    comparison.
+    comparison. The signatures are materialized, as in
+    minhash_lsh_pairs: four scans read them.
     """
-    from mpi_word_count_spark.functions.hashing import universal_coeffs  # noqa: F401
     from mpi_word_count_spark.operators.dedup import (
-        band_keys,
+        lsh_candidates,
         minhash_signatures,
     )
-    from mpi_word_count_spark.operators import track_cache
+    from mpi_word_count_spark.operators import materialize
 
     docs = table(spark, "documents", sf_dir)
-    sig = track_cache(minhash_signatures(docs))
-    bands = band_keys(sig)
-    bx, by = bands.alias("x"), bands.alias("y")
-    candidates = (
-        bx.join(
-            by,
-            (F.col("x.band") == F.col("y.band"))
-            & (F.col("x.key") == F.col("y.key"))
-            & (F.col("x.doc_id") < F.col("y.doc_id")),
-        )
-        .select(F.col("x.doc_id").alias("d1"), F.col("y.doc_id").alias("d2"))
-        .distinct()
-    )
+    sig = materialize(minhash_signatures(docs))
+    candidates = lsh_candidates(sig)
     a, b = sig.alias("a"), sig.alias("b")
     matches = sum(
         F.when(F.col(f"a.h{i}") == F.col(f"b.h{i}"), 1).otherwise(0)

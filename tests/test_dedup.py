@@ -264,6 +264,35 @@ def test_release_caches_unpersists_tracked(spark):
     del released_before
 
 
+def test_minhash_job_counts_pinned(spark):
+    """Jobs per warm call on sf0.001 stay pinned: 12 for one
+    minhash_lsh_pairs collect, 35 for one dedup_clusters call. Each
+    Spark job costs ~60 ms of scheduling whatever its size. With the
+    signatures and candidates in a lazy cache() the counts are 21 and
+    59: AQE makes every scan of a cache its own query stage, and
+    concurrent stages build the same cache."""
+    import __spark_entry__ as entrymod
+
+    from mpi_word_count_spark.operators import release_caches
+    from mpi_word_count_spark.tables import table
+
+    from tests.conftest import SF_DIR, jobs_of
+
+    def pairs():
+        docs = table(spark, "documents", SF_DIR)
+        minhash_lsh_pairs(docs, threshold=0.5).collect()
+
+    def clusters():
+        entrymod.queries()["dedup_clusters"](spark, SF_DIR).collect()
+
+    for call, most in ((pairs, 14), (clusters, 40)):
+        call()  # warm: the first call also compiles
+        release_caches()
+        n = jobs_of(spark, call)
+        release_caches()
+        assert n <= most, f"{call.__name__}: {n} jobs > {most}"
+
+
 def test_levenshtein_parity_with_duckdb(spark):
     """Lock the cross-engine edit-distance semantics the
     edit_distance_dups oracle relies on: Spark's levenshtein and

@@ -1,7 +1,10 @@
 """Physical-plan audits: lock in the optimizer properties SCALE.md
 claims, so a refactor that silently loses pushdown / broadcast / the
 top-k heap / map-side partial aggregation fails CI, not the 100 TB
-run. Driver-side only (explain, no execution)."""
+run. Mostly driver-side (explain, no execution). The exception is a
+query whose operators go through operators.materialize (the graph
+loops' inputs, dedup_clusters' edge set, the MinHash-LSH signatures
+and candidates): building its plan runs those jobs."""
 
 from __future__ import annotations
 
@@ -14,11 +17,15 @@ from tests.conftest import SF_DIR
 QUERIES = entrymod.queries()
 
 
-def plan_of(spark, name: str) -> str:
+def explained(df) -> str:
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
-        QUERIES[name](spark, SF_DIR).explain("formatted")
+        df.explain("formatted")
     return buf.getvalue()
+
+
+def plan_of(spark, name: str) -> str:
+    return explained(QUERIES[name](spark, SF_DIR))
 
 
 def pushed_filters(plan: str) -> list[str]:
@@ -138,6 +145,18 @@ def test_no_quadratic_joins_in_registered_dedup_plans(spark):
         plan = plan_of(spark, name)
         assert "CartesianProduct" not in plan, name
         assert "BroadcastNestedLoopJoin" not in plan, name
+
+
+def test_lsh_candidate_join_is_an_equi_join(spark):
+    # the MinHash consumers read their candidates materialized, so the
+    # band self-join is out of their plans: audit it on its own
+    from mpi_word_count_spark.operators.dedup import lsh_candidates, minhash_signatures
+    from mpi_word_count_spark.tables import table
+
+    plan = explained(lsh_candidates(minhash_signatures(table(spark, "documents", SF_DIR))))
+    assert "CartesianProduct" not in plan
+    assert "BroadcastNestedLoopJoin" not in plan
+    assert "SortMergeJoin Inner" in plan or "HashJoin Inner" in plan
 
 
 def test_incremental_embedding_dups_batch_side_broadcasts(spark):
