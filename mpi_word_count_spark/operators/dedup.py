@@ -32,7 +32,7 @@ from pyspark.sql import functions as F
 
 from mpi_word_count_spark.functions.hashing import hash32, hash60
 from mpi_word_count_spark.operators.similarity import EMBED_DIM
-from mpi_word_count_spark.tokenizer import delimiter_regex
+from mpi_word_count_spark.tokenizer import split_words
 
 # MinHash/LSH default geometry: 16 hash functions, 8 bands × 2 rows.
 # S-curve threshold (1/b)^(1/r) ≈ 0.35 — catches jaccard ≥ 0.5 pairs
@@ -43,10 +43,10 @@ ROWS_PER_BAND = NUM_HASHES // NUM_BANDS
 
 
 def tokens_col(col: Column | str) -> Column:
-    """Ordered token array (empties removed) — the array-valued twin
-    of tokenizer.tokenize for per-document operators."""
+    """Ordered, lowercased token array — the array-valued twin of
+    tokenizer.tokenize for per-document operators."""
     c = F.col(col) if isinstance(col, str) else col
-    return F.filter(F.split(F.lower(c), delimiter_regex()), lambda x: x != "")
+    return split_words(F.lower(c))
 
 
 def shingles_from_tokens(toks: Column, n: int = 3) -> Column:

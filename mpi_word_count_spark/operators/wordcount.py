@@ -27,8 +27,8 @@ Spark-first design notes
   no Python in the hot path, so the scan→project→explode→agg pipeline
   runs at JVM speed regardless of corpus size.
 * The final `orderBy(word)` (S4) is a range-partitioned sort — only
-  applied when the caller asks for ordered output; at 100 TB you'd
-  keep the result partitioned and sort per-partition on write.
+  applied when the caller asks for ordered output; the CSV sink
+  writes its range partitions in parallel and joins them in order.
 """
 
 from __future__ import annotations

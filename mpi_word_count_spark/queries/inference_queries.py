@@ -622,8 +622,8 @@ def q_naive_bayes_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = d.select(
         "doc_id",
         "lang",
-        F.explode(tokens_col(F.lower(F.col("text")))).alias("tok"),
-    ).filter(F.col("tok") != "")
+        F.explode(tokens_col("text")).alias("tok"),
+    )
     cnt = toks.groupBy("lang", "tok").agg(
         F.count(F.lit(1)).cast("long").alias("c")
     )

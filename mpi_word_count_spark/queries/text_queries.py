@@ -1909,9 +1909,7 @@ def q_readability_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mpi_word_count_spark.tokenizer import split_words
 
     docs = table(spark, "documents", sf_dir)
-    n_words = F.size(
-        F.filter(split_words(F.lower(F.col("text"))), lambda x: x != "")
-    )
+    n_words = F.size(split_words(F.lower(F.col("text"))))
     base = docs.select(
         "doc_id",
         F.greatest(

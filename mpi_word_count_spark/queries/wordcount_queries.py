@@ -67,27 +67,25 @@ def wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
 def sql_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The same flagship query through the SQL entry point
     (`spark.sql` + temp view) — the engine's second query API. The
-    delimiter regex is bound as a named parameter, so the alphabet
+    word regex is bound as a named parameter, so the alphabet
     stays a literal byte list (S1) and never meets SQL string
     escaping. Catalyst plans this identically to the DataFrame form
     (same Exchange/HashAggregate shape — one plan, two front ends).
     """
-    from mpi_word_count_spark.tokenizer import DEFAULT_DELIMITERS, delimiter_regex
+    from mpi_word_count_spark.tokenizer import DEFAULT_DELIMITERS, word_regex
 
     table(spark, "documents", sf_dir).createOrReplaceTempView("documents_v")
     return spark.sql(
         """
         SELECT word, count(*) AS count
         FROM (
-            SELECT explode(
-                filter(split(lower(text), :rx), x -> x <> '')
-            ) AS word
+            SELECT explode(regexp_extract_all(lower(text), :rx, 0)) AS word
             FROM documents_v
         )
         GROUP BY word
         ORDER BY word
         """,
-        args={"rx": delimiter_regex(DEFAULT_DELIMITERS)},
+        args={"rx": word_regex(DEFAULT_DELIMITERS)},
     )
 
 

@@ -18,20 +18,25 @@ from pyspark.sql import DataFrame
 
 
 def write_word_count_csv(df: DataFrame, path: str = "csv_results.csv") -> str:
-    """Byte-parity CSV sink for the flagship query (O4): one file with
-    header `Word,Count` (word_count_mpi.c:137). Coalescing to a single
-    task reproduces the reference's one file — right for parity runs,
-    wrong at 100 TB."""
-    renamed = df.withColumnRenamed("word", "Word").withColumnRenamed("count", "Count")
+    """Byte-parity CSV sink (O4): header `Word,Count`, then one part file
+    per partition, written in parallel and joined in name order, so row
+    order is `df`'s partition order — an `orderBy` result's, as reference
+    ranks write their sorted slices in turn (word_count_mpi.c:132-142).
+    A failure leaves `path` as it was and no scratch file behind."""
     tmp = path + ".spark-tmp"
-    renamed.coalesce(1).write.mode("overwrite").option("header", True).csv(tmp)
-    part = glob.glob(os.path.join(tmp, "part-*.csv"))[0]
-    if os.path.isdir(path):
-        shutil.rmtree(path)
-    elif os.path.exists(path):
-        os.remove(path)
-    shutil.move(part, path)
-    shutil.rmtree(tmp)
+    whole = os.path.join(tmp, "whole.csv")
+    try:
+        df.write.mode("overwrite").csv(tmp)
+        with open(whole, "wb") as out:
+            out.write(b"Word,Count\n")
+            for part in sorted(glob.glob(os.path.join(tmp, "part-*.csv"))):
+                with open(part, "rb") as fh:
+                    shutil.copyfileobj(fh, out)
+        if os.path.isdir(path):
+            shutil.rmtree(path)
+        os.replace(whole, path)
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
     return path
 
 

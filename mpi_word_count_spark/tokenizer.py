@@ -6,10 +6,10 @@ chars hardcoded at tokenizer.c:7 plus the literal bytes of
 delimiters.txt (consumed char-by-char at tokenizer.c:22-27 — it is a
 byte list, NOT a regex). `[`, `]` and `-` are themselves delimiters.
 
-Spark mapping: the alphabet compiles once into a regex character
-class used with `F.split` + `F.explode` — fully JVM-side, inside
-whole-stage codegen, no UDF. The same class is valid RE2 syntax so
-the DuckDB oracle can run the identical tokenization.
+Spark mapping: words are the maximal runs of the negated delimiter
+class, `regexp_extract_all` + `F.explode` — JVM-side, no UDF, no empty
+token; the pattern compiles once per task (`F.split` compiled it once
+per row). The class is RE2 syntax too, for the DuckDB oracles.
 """
 
 from __future__ import annotations
@@ -62,11 +62,16 @@ def delimiter_regex(delimiters: str = DEFAULT_DELIMITERS) -> str:
     return f"[{body}]+"
 
 
+def word_regex(delimiters: str) -> str:
+    """The negated class `[^...]+`: one word, a maximal non-delimiter run."""
+    return "[^" + delimiter_regex(delimiters)[1:]
+
+
 def split_words(col: Column | str, delimiters: str = DEFAULT_DELIMITERS) -> Column:
-    """Column expression: text → array<string> of raw tokens (may
-    contain one leading '' when the text starts with a delimiter)."""
+    """Column expression: text → array<string> of its words, in order;
+    never an empty string (tokenizer.c:47-79)."""
     c = F.col(col) if isinstance(col, str) else col
-    return F.split(c, delimiter_regex(delimiters))
+    return F.regexp_extract_all(c, F.lit(word_regex(delimiters)), 0)
 
 
 def tokenize(
@@ -76,16 +81,16 @@ def tokenize(
     lowercase: bool = True,
     keep: list[str] | None = None,
 ) -> DataFrame:
-    """text column → one row per word (S1), optionally lowercased (S2),
-    empty tokens dropped (tokenizer.c:62-64).
+    """text column → one row per word (S1), optionally lowercased (S2);
+    `split_words` emits no empty token (tokenizer.c:62-64).
 
     `keep` preserves passthrough columns (e.g. doc_id for lineage).
-    The plan is scan → project(split) → generate(explode) → filter:
-    all whole-stage-codegen'd, no shuffle until a later aggregation.
+    The plan is scan → project(extract) → generate(explode): all
+    whole-stage-codegen'd, no shuffle until a later aggregation.
     """
     word = F.explode(split_words(col, delimiters)).alias("word")
     cols = [F.col(k) for k in (keep or [])] + [word]
     tokens = df.select(*cols)
     if lowercase:
         tokens = tokens.withColumn("word", F.lower(F.col("word")))
-    return tokens.filter(F.col("word") != "")
+    return tokens

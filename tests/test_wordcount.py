@@ -4,7 +4,12 @@ tiny, long_words)."""
 
 from __future__ import annotations
 
+import re
+from collections import Counter
+from contextlib import contextmanager
+
 import pytest
+from pyspark.sql import functions as F
 
 from mpi_word_count_spark.operators.wordcount import (
     EmptyCorpusError,
@@ -13,6 +18,8 @@ from mpi_word_count_spark.operators.wordcount import (
     word_count_dir,
 )
 from mpi_word_count_spark.sinks import show_console, write_word_count_csv
+from mpi_word_count_spark.tokenizer import delimiter_regex
+from tests.conftest import jobs_of
 
 
 def rows(df):
@@ -94,6 +101,78 @@ def test_csv_sink(spark, tmp_path):
     write_word_count_csv(df, out)
     content = open(out).read().splitlines()
     assert content == ["Word,Count", "a,1", "b,2"]
+
+
+@contextmanager
+def uncoalesced(spark):
+    """AQE would merge a small corpus's range partitions into one."""
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        yield
+    finally:
+        spark.conf.set(key, before)
+
+
+def test_csv_sink_parallel_parity(spark, tmp_path):
+    # one part file per range partition, concatenated in name order,
+    # must equal the whole corpus sorted by UTF-8 bytes (S4)
+    files = {
+        "a.txt": "Élan élan ÉLAN zebra,Zebra 42 4x\nΩmega ωMEGA b a 10 9\n",
+        "b.txt": "naïve NAÏVE 𐐀ray 𐐨RAY 😀 𝒳 alpha--ALPHA 007\n",
+        "c.txt": "straße Straße z y x w v u t s r q p o n m l k\n",
+    }
+    path = make_corpus(tmp_path, files)
+    model = Counter(
+        w.lower()
+        for text in files.values()
+        for w in re.split(delimiter_regex(), text)
+        if w
+    )
+    want = "Word,Count\n" + "".join(
+        f"{w},{model[w]}\n" for w in sorted(model, key=lambda w: w.encode())
+    )
+    out = tmp_path / "csv_results.csv"
+    with uncoalesced(spark):
+        df = word_count_dir(spark, path)
+        assert df.rdd.getNumPartitions() > 1
+        write_word_count_csv(df, str(out))
+    assert out.read_bytes() == want.encode()
+
+
+def test_csv_sink_all_delimiters_is_header_only(spark, tmp_path):
+    path = make_corpus(tmp_path, {"a.txt": ",,;; \n\t..", "b.txt": "[]-\n"})
+    out = tmp_path / "csv_results.csv"
+    write_word_count_csv(word_count_dir(spark, path), str(out))
+    assert out.read_bytes() == b"Word,Count\n"
+
+
+def test_csv_sink_failure_leaves_no_scratch(spark, tmp_path):
+    # a failing write keeps the previous CSV and leaves no scratch state
+    out = tmp_path / "csv_results.csv"
+    out.write_bytes(b"Word,Count\nold,1\n")
+    bad = spark.createDataFrame([("a", 1)], "word string, count long").select(
+        F.raise_error(F.lit("sink failure")).cast("string").alias("word"), "count"
+    )
+    with pytest.raises(Exception, match="sink failure"):
+        write_word_count_csv(bad, str(out))
+    assert out.read_bytes() == b"Word,Count\nold,1\n"
+    assert [p.name for p in tmp_path.iterdir()] == ["csv_results.csv"]
+
+
+def test_paper_query_job_count_pinned(spark, tmp_path):
+    # aggregate map, range sampling, range map, write — the same on
+    # every warm call. One file per core, so widen() adds no shuffle.
+    n = spark.sparkContext.defaultParallelism
+    path = make_corpus(tmp_path, {f"{i}.txt": f"b a b {i}\nc a\n" for i in range(n)})
+    out = str(tmp_path / "csv_results.csv")
+
+    def call():
+        write_word_count_csv(word_count_dir(spark, path), out)
+
+    call()
+    assert jobs_of(spark, call) == 4
 
 
 def test_console_sink(spark):
