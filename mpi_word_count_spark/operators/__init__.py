@@ -83,7 +83,8 @@ def iterate(state, *steps, rounds: int, every: int = 1, until=None):
     runs on the checkpointed `new` while `prev` is still held; the loop
     stops at the first True and raises RuntimeError when no round
     within `rounds` gives one (part-merged state looks plausible and
-    is wrong).
+    is wrong). `every` = 0 with `until` checkpoints every round but not
+    the starting state, which the first round then reads lazily.
 
     Once a round is checkpointed (and tested), the loop's earlier
     checkpoints are freed; the survivor is freed by release_caches().
@@ -115,7 +116,7 @@ def iterate(state, *steps, rounds: int, every: int = 1, until=None):
         else:
             if until is not None:
                 raise RuntimeError(
-                    f"did not converge within max_iters={rounds}; raise max_iters"
+                    f"did not converge within {rounds} checkpointed rounds; raise max_iters"
                 )
     except BaseException:
         for df in held:

@@ -274,10 +274,9 @@ def _verify_candidates_jaccard(
     skewed corpus ever regresses here, this is the term to look at."""
     from mpi_word_count_spark.operators import widen
 
-    cand_ids = (
-        candidates.select(F.col(left).alias("doc_id"))
-        .union(candidates.select(F.col(right).alias("doc_id")))
-        .distinct()
+    # no distinct(): duplicate build keys do not change a semi join
+    cand_ids = candidates.select(F.col(left).alias("doc_id")).union(
+        candidates.select(F.col(right).alias("doc_id"))
     )
     # probe=df: the semi join preserves df's partitioning, and letting
     # widen() plan the candidates subtree cost ~2s of driver time per
@@ -451,12 +450,27 @@ def dup_clusters(df: DataFrame, pairs: DataFrame, max_iters: int = 25) -> DataFr
     near-dup evidence into the canonical-document assignment an actual
     dedup pipeline keeps (keep cluster_id == doc_id, drop the rest).
 
-    Min-label propagation: labels start as self, each round every node
-    takes min(own, neighbors' labels); converges in ≤ diameter rounds
-    (dup components are short chains/cliques in practice, so a handful).
-    Each round is ONE shuffle of the edge list; the driver only sees a
-    changed-row count. At extreme scale the large-star/small-star
-    variant halves round count; same join shape.
+    Min-label propagation: each round every node takes the min label
+    over its neighbors and itself; converges in ≤ diameter rounds (dup
+    components are short chains/cliques in practice, so a handful).
+    The edge list holds both orientations of every pair plus a
+    self-loop on each endpoint, built by one explode with no union or
+    distinct: repeated edges cannot change a min, and the self-loop
+    makes "neighbors and itself" a plain join. Round 1 is the lazy
+    start state min(src) per dst, with no label join. Every later
+    round is ONE join of the edges with the labels and ONE aggregation
+    per dst, which also carries the node's own pre-round label (the
+    self-loop's) as `_old`; the loop stops at the first round where
+    no label differs from `_old`, tested by a one-job isEmpty() probe
+    on the round's checkpoint. `max_iters` bounds the rounds, round 1
+    included; as round 1 is never tested, max_iters < 2 always raises.
+
+    Spark jobs of one warm registered dedup_clusters call at sf0.001,
+    21 in all (pinned by tests/test_dedup.py): 6 for the MinHash
+    signatures and candidates, 5 to materialize the edge list, 5 per
+    checkpointed round, 1 per isEmpty() probe and 4 for the result.
+    On long chains dup_clusters_twostar needs O(log n) rounds instead
+    of the diameter.
 
     Lineage MUST be truncated, not just cached: `pairs` is typically a
     full LSH pipeline, and because cache substitution happens at
@@ -474,27 +488,21 @@ def dup_clusters(df: DataFrame, pairs: DataFrame, max_iters: int = 25) -> DataFr
     """
     from mpi_word_count_spark.operators import iterate, materialize
 
-    e = pairs.select(F.col("d1").alias("src"), F.col("d2").alias("dst"))
-    edges = materialize(_symmetrize(e))
+    ends = (("d1", "d2"), ("d2", "d1"), ("d1", "d1"), ("d2", "d2"))
+    edge = [F.struct(F.col(a).alias("src"), F.col(b).alias("dst")) for a, b in ends]
+    edges = materialize(
+        pairs.select(F.explode(F.array(*edge)).alias("e")).select("e.src", "e.dst")
+    )
 
     def step(labels: DataFrame) -> DataFrame:
         labels = labels.select("v", "label")
-        prop = (
+        return (
             edges.join(labels, edges.src == labels.v)
-            .select(F.col("dst").alias("v"), "label")
-            .groupBy("v")
-            .agg(F.min("label").alias("nbr_min"))
-        )
-        # carry the pre-round label through the join so convergence
-        # detection is a scan of THIS round's checkpoint, not an extra
-        # join+shuffle job per round (the checkpoint materializes the
-        # round anyway; the count is then block-local).
-        return labels.join(prop, "v", "left").select(
-            "v",
-            F.least(
-                F.col("label"), F.coalesce(F.col("nbr_min"), F.col("label"))
-            ).alias("label"),
-            F.col("label").alias("_old"),
+            .groupBy(F.col("dst").alias("v"))
+            .agg(
+                F.min("label").alias("label"),
+                F.min(F.when(F.col("src") == F.col("dst"), F.col("label"))).alias("_old"),
+            )
         )
 
     # silent non-convergence would hand back labels that are only
@@ -502,10 +510,11 @@ def dup_clusters(df: DataFrame, pairs: DataFrame, max_iters: int = 25) -> DataFr
     # raises instead, and the caller either raises max_iters (component
     # diameter bound) or switches to large-star/small-star.
     labels = iterate(
-        edges.select(F.col("src").alias("v")).distinct().withColumn("label", F.col("v")),
+        edges.groupBy(F.col("dst").alias("v")).agg(F.min("src").alias("label")),
         step,
-        rounds=max_iters,
-        until=lambda _, new: new.filter(F.col("label") != F.col("_old")).count() == 0,
+        rounds=max_iters - 1,
+        every=0,
+        until=lambda _, new: new.filter(F.col("label") != F.col("_old")).isEmpty(),
     ).select("v", "label")
     # CONTRACT: the final labels' checkpoint has no recomputable
     # lineage, so a dup_clusters result must not be re-executed AFTER
@@ -1153,7 +1162,7 @@ def dup_clusters_twostar(df: DataFrame, pairs: DataFrame) -> DataFrame:
         return rewired.filter(F.col("src") != F.col("dst")).distinct()
 
     def fixpoint(old: DataFrame, new: DataFrame) -> bool:
-        return new.exceptAll(old).limit(1).count() + old.exceptAll(new).limit(1).count() == 0
+        return new.exceptAll(old).isEmpty() and old.exceptAll(new).isEmpty()
 
     edges = iterate(
         _symmetrize(pairs.select(F.col("d1").alias("src"), F.col("d2").alias("dst")))

@@ -254,6 +254,39 @@ def test_dup_clusters_nonconvergence_raises(spark):
     assert persisted_rdd_ids(spark) - before == set()
 
 
+def test_dup_clusters_multi_round(spark):
+    """A graph that needs many label rounds: an 11-edge path (12 rounds
+    to a fixpoint: the far end's label moves one hop per round) and a
+    triangle, with every pair given reversed (d1 > d2), two repeated
+    and one self-pair. max_iters counts the rounds: 12 converges, 11
+    raises. The result equals dup_clusters_twostar's."""
+    import pytest
+
+    from mpi_word_count_spark.operators import release_caches
+    from mpi_word_count_spark.operators.dedup import dup_clusters, dup_clusters_twostar
+
+    docs = spark.createDataFrame(
+        [(i, f"text {i}") for i in range(17)], "doc_id long, text string"
+    )
+    path = [(i + 1, i) for i in range(11)]
+    triangle = [(14, 13), (15, 14), (15, 13)]
+    pairs = spark.createDataFrame(
+        path + triangle + [(5, 4), (15, 13), (12, 12)], "d1 long, d2 long"
+    )
+    want = {i: 0 for i in range(12)} | {12: 12, 13: 13, 14: 13, 15: 13, 16: 16}
+
+    def clusters(fn, *args):
+        out = {r["doc_id"]: r["cluster_id"] for r in fn(docs, pairs, *args).collect()}
+        release_caches()
+        return out
+
+    assert clusters(dup_clusters, 12) == want
+    assert clusters(dup_clusters_twostar) == want
+    with pytest.raises(RuntimeError, match="did not converge"):
+        dup_clusters(docs, pairs, max_iters=11)
+    release_caches()
+
+
 def test_release_caches_unpersists_tracked(spark):
     from mpi_word_count_spark.operators import release_caches
 
@@ -265,8 +298,8 @@ def test_release_caches_unpersists_tracked(spark):
 
 
 def test_minhash_job_counts_pinned(spark):
-    """Jobs per warm call on sf0.001 stay pinned: 12 for one
-    minhash_lsh_pairs collect, 35 for one dedup_clusters call. Each
+    """Jobs per warm call on sf0.001 stay pinned: 11 for one
+    minhash_lsh_pairs collect, 21 for one dedup_clusters call. Each
     Spark job costs ~60 ms of scheduling whatever its size. With the
     signatures and candidates in a lazy cache() the counts are 21 and
     59: AQE makes every scan of a cache its own query stage, and
@@ -285,7 +318,7 @@ def test_minhash_job_counts_pinned(spark):
     def clusters():
         entrymod.queries()["dedup_clusters"](spark, SF_DIR).collect()
 
-    for call, most in ((pairs, 14), (clusters, 40)):
+    for call, most in ((pairs, 13), (clusters, 26)):
         call()  # warm: the first call also compiles
         release_caches()
         n = jobs_of(spark, call)

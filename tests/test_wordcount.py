@@ -18,7 +18,7 @@ from mpi_word_count_spark.operators.wordcount import (
     word_count_dir,
 )
 from mpi_word_count_spark.sinks import show_console, write_word_count_csv
-from mpi_word_count_spark.tokenizer import delimiter_regex
+from mpi_word_count_spark.tokenizer import delimiter_regex, load_delimiters
 from tests.conftest import jobs_of
 
 
@@ -159,6 +159,19 @@ def test_csv_sink_failure_leaves_no_scratch(spark, tmp_path):
         write_word_count_csv(bad, str(out))
     assert out.read_bytes() == b"Word,Count\nold,1\n"
     assert [p.name for p in tmp_path.iterdir()] == ["csv_results.csv"]
+
+
+def test_csv_sink_writes_words_unquoted(spark, tmp_path):
+    # under an alphabet without `,` and `"` those characters are word
+    # characters, written raw as the reference's `%s,%ld` writes them
+    alphabet = tmp_path / "delims.txt"
+    alphabet.write_text(".;")
+    path = make_corpus(tmp_path, {"a.txt": 'a,b A,B;a,b. say"hi\nSAY"HI'})
+    out = tmp_path / "csv_results.csv"
+    write_word_count_csv(
+        word_count_dir(spark, path, delimiters=load_delimiters(str(alphabet))), str(out)
+    )
+    assert out.read_bytes() == b'Word,Count\na,b,3\nsay"hi,2\n'
 
 
 def test_paper_query_job_count_pinned(spark, tmp_path):
