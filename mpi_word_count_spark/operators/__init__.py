@@ -4,30 +4,13 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-# Cached DataFrames created inside operators (SimHash fingerprints,
-# PPJoin prefix tables, PMI count tables). A lazily returned result
-# can't unpersist its own inputs — the operator doesn't know when the
-# caller is done — so operators register caches here and long-lived
-# callers (bench loops, test sessions) call release_caches() between
-# queries. Forgetting to release is bounded leak, not wrong results:
-# Spark evicts LRU under memory pressure; this keeps long sessions from
-# accumulating dead cache entries at all.
-_TRACKED_CACHES: list[DataFrame] = []
-_TRACKED_RELEASERS: list = []  # callables freeing non-cache blocks
-
-
-def track_cache(df: DataFrame) -> DataFrame:
-    """cache() a DataFrame and register it for later release_caches()."""
-    cached = df.cache()
-    _TRACKED_CACHES.append(cached)
-    return cached
-
-
-def track_releaser(fn) -> None:
-    """Register a zero-arg callable that frees storage release_caches()
-    can't reach via unpersist() — e.g. localCheckpoint RDD blocks,
-    which otherwise linger until a JVM GC notices the orphaned RDD."""
-    _TRACKED_RELEASERS.append(fn)
+# Checkpointed DataFrames created inside operators (MinHash
+# signatures, PPJoin prefix tables, PMI count tables, the surviving
+# state of an iterate() loop). A lazily returned result can't free its
+# own inputs — the operator doesn't know when the caller is done — so
+# materialize() and iterate() hold them here and long-lived callers
+# (bench loops, test sessions) call release_caches() between queries.
+_HELD: list[DataFrame] = []
 
 
 def _unpersist_local_ckpt(df: DataFrame) -> None:
@@ -61,9 +44,8 @@ def materialize(df: DataFrame) -> DataFrame:
     (an adjacency list, a symmetrized edge set), or an intermediate
     several scans of one plan read (see minhash_lsh_pairs on why not
     cache()); release_caches() frees it."""
-    out = _checkpoint(df)
-    track_releaser(lambda: _unpersist_local_ckpt(out))
-    return out
+    _HELD.append(_checkpoint(df))
+    return _HELD[-1]
 
 
 def iterate(state, *steps, rounds: int, every: int = 1, until=None):
@@ -122,28 +104,22 @@ def iterate(state, *steps, rounds: int, every: int = 1, until=None):
         for df in held:
             _unpersist_local_ckpt(df)
         raise
-    for df in held:
-        track_releaser(lambda df=df: _unpersist_local_ckpt(df))
+    _HELD.extend(held)
     return state
 
 
 def release_caches() -> int:
-    """Unpersist every tracked cache and run every tracked releaser;
-    returns how many were released.
+    """Free every frame materialize() and iterate() hold; returns how
+    many were freed.
 
-    Caches recompute transparently if their DataFrame is re-executed
-    later. RELEASERS MAY NOT: operators that register one (e.g.
-    dup_clusters' checkpointed labels) produce results whose
-    storage has no recomputable lineage — after release_caches(),
-    re-derive such results by calling the operator again instead of
-    re-executing a held DataFrame reference."""
-    n = 0
-    while _TRACKED_CACHES:
-        _TRACKED_CACHES.pop().unpersist()
-        n += 1
-    while _TRACKED_RELEASERS:
-        _TRACKED_RELEASERS.pop()()
-        n += 1
+    A held frame's storage has no recomputable lineage: after
+    release_caches() a result built over one (dup_clusters' labels,
+    the PMI count tables, any query that materializes) cannot be
+    re-executed. Re-derive it by calling the operator or query again
+    instead of re-executing a held DataFrame reference."""
+    n = len(_HELD)
+    while _HELD:
+        _unpersist_local_ckpt(_HELD.pop())
     return n
 
 

@@ -314,7 +314,9 @@ def unigram_vocab(freqs: DataFrame) -> dict[str, int]:
     them by (freq DESC, piece ASC) — binary-collation tie-break, same
     as the oracle's ORDER BY. Bounded collects (≤ alphabet + k_multi
     rows), the same model-sized driver pull as top_vocab above."""
-    pf = piece_freqs(freqs).cache()
+    from mpi_word_count_spark.operators import materialize
+
+    pf = materialize(piece_freqs(freqs))
     singles = pf.filter(F.length("piece") == 1).collect()
     multi = (
         pf.filter(F.length("piece") >= 2)
@@ -322,7 +324,6 @@ def unigram_vocab(freqs: DataFrame) -> dict[str, int]:
         .limit(UNIGRAM_K_MULTI)
         .collect()
     )
-    pf.unpersist()
     kept = {r["piece"]: int(r["pfreq"]) for r in [*singles, *multi]}
     total = sum(kept.values())
     return {
@@ -445,9 +446,9 @@ def unigram_em_vocab(docs: DataFrame, rounds: int = UNIGRAM_EM_ROUNDS) -> DataFr
     Returns the final vocab as (piece, n_chars, em_use, em_cost),
     em_use being the final E-step's usage (the counts the final costs
     derive from)."""
-    from mpi_word_count_spark.operators import track_cache
+    from mpi_word_count_spark.operators import materialize
 
-    freqs = track_cache(word_freqs(docs))
+    freqs = materialize(word_freqs(docs))
     vocab, use = unigram_em_train(freqs, rounds)
     rows = [
         (p, len(p), int(use.get(p, 0)), int(c))
@@ -512,9 +513,9 @@ def unigram_em_segment_stats(docs: DataFrame) -> DataFrame:
     costs — the inference half of the sentencepiece pipeline (train →
     tokenize) as one oracle-verifiable DataFrame. Same plan shape as
     unigram_segment_stats plus the EM rounds' type-table passes."""
-    from mpi_word_count_spark.operators import track_cache
+    from mpi_word_count_spark.operators import materialize
 
-    freqs = track_cache(word_freqs(docs))
+    freqs = materialize(word_freqs(docs))
     vocab, _use = unigram_em_train(freqs)
     return _segment_stats_df(freqs, vocab, UNIGRAM_MAX_PIECE)
 

@@ -366,7 +366,7 @@ def dsir_importance_weights(docs: DataFrame, target_filter: Column) -> DataFrame
     lambda (the CollapseProject HOF trap). No corpus self-join,
     nothing global.
     """
-    from mpi_word_count_spark.operators import track_cache, widen
+    from mpi_word_count_spark.operators import materialize, widen
     from mpi_word_count_spark.operators.dedup import tokens_col
 
     t = F.col("t")
@@ -393,10 +393,10 @@ def dsir_importance_weights(docs: DataFrame, target_filter: Column) -> DataFrame
         "_is_target",
         (hash32(F.col("g"), seed="dsir") % DSIR_BUCKETS).alias("b"),
     )
-    # BOTH the model fit (counts) and the scoring tail read dbc: cache
+    # BOTH the model fit (counts) and the scoring tail read dbc: hold
     # the thin (doc, bucket) count table so the corpus-sized tokenize +
     # gram hash explode runs once, not twice
-    dbc = track_cache(
+    dbc = materialize(
         feats.groupBy("doc_id", "_is_target", "b").agg(
             F.count(F.lit(1)).alias("cnt")
         )

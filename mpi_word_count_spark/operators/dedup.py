@@ -612,9 +612,9 @@ def simhash_banded_pairs(df: DataFrame, max_hamming: int = 8) -> DataFrame:
     tracks collision structure, not |docs|² — the same banding idea
     as MinHash LSH, with zero recall loss.
     """
-    from mpi_word_count_spark.operators import track_cache
+    from mpi_word_count_spark.operators import materialize
 
-    s = track_cache(simhash(df))
+    s = materialize(simhash(df))
     chunks = [
         F.struct(
             F.lit(j).alias("band"),
@@ -890,7 +890,7 @@ def incremental_embedding_dups(
     alone; OPTIMIZATION_r10.md). At scale the scan already has
     thousands of splits and widen is a no-op."""
     from mpi_word_count_spark.functions.vector import dot, norm
-    from mpi_word_count_spark.operators import track_cache, widen
+    from mpi_word_count_spark.operators import materialize, widen
 
     emb = widen(emb)
 
@@ -912,7 +912,7 @@ def incremental_embedding_dups(
             dim=dim,
         )
         corpus_bands = corpus_buckets.select("_id", "band", "bucket")
-    batch_bands = track_cache(batch_bands)
+    batch_bands = materialize(batch_bands)
     bb = batch_bands.alias("bb")
     corpus_cands = (
         corpus_bands.alias("o")
@@ -1311,7 +1311,7 @@ def ppjoin_pairs(
     skew lives in the suffix by construction; candidate volume tracks
     true similarity structure, not |docs|².
     """
-    from mpi_word_count_spark.operators import track_cache, widen
+    from mpi_word_count_spark.operators import materialize, widen
 
     toks = widen(df).select(
         F.col("doc_id").alias("doc_id"), tokens_col("text").alias("_toks")
@@ -1328,10 +1328,10 @@ def ppjoin_pairs(
     # the shingle HOF lambda — per-element re-tokenization, measured
     # 20.5s vs 3.7s at sf0.1 for this stage. |set| comes from the
     # doc-partition window below (same exchange as the rank), never
-    # from a second reference to the array. The tracked cache covers
+    # from a second reference to the array. Materializing tok covers
     # the FOUR plan branches reading tok (ranking, both self-join
     # sides, both verification sides).
-    tok = track_cache(toks.select("doc_id", F.explode(sets_col).alias("token")))
+    tok = materialize(toks.select("doc_id", F.explode(sets_col).alias("token")))
     w_doc = Window.partitionBy("doc_id")
     w_df = Window.partitionBy("token")
     w_rank = w_doc.orderBy("df", "token")
@@ -1345,10 +1345,10 @@ def ppjoin_pairs(
         - F.floor((F.lit(threshold_pct) * F.col("n") + 99) / 100)
         + 1
     )
-    # both sides of the candidate self-join read the prefix: cache it
+    # both sides of the candidate self-join read the prefix: hold it
     # so the two window shuffles (df per element, rank per doc) run
     # once, not twice
-    prefix = track_cache(
+    prefix = materialize(
         ranked.filter(F.col("rank") <= prefix_len).select(
             "doc_id", "n", "token", "rank"
         )
@@ -1400,9 +1400,9 @@ def ppjoin_pairs(
         .drop("_ub")
     )
     # Verification via size(array_intersect) over per-doc token
-    # arrays built FROM THE CACHED tok table (optimization r11 —
+    # arrays built FROM THE MATERIALIZED tok table (optimization r11 —
     # r10 rejected this rewrite when it re-tokenized the corpus; from
-    # the cache it is one doc-keyed groupBy). tok holds each doc's
+    # tok it is one doc-keyed groupBy). tok holds each doc's
     # DISTINCT shingles, so collect_list yields the set and the
     # intersect size IS the old (pair × shared-token) join's count.
     # The old form exploded 310k candidates × ~52 tokens into a ~16M
@@ -1468,13 +1468,13 @@ def sorted_neighborhood_pairs(
     neighborhood (right side emits its own and its predecessor
     bucket), so each candidate pair is produced exactly once.
     """
-    from mpi_word_count_spark.operators import track_cache
+    from mpi_word_count_spark.operators import materialize
 
-    # cached: the fingerprint table feeds BOTH the bucket-count branch
-    # and the ranked branch, whose exchanges hash on different keys —
-    # without the cache the full-corpus applyInPandas simhash pass
+    # materialized: the fingerprint table feeds BOTH the bucket-count
+    # branch and the ranked branch, whose exchanges hash on different
+    # keys — without the hold the full-corpus applyInPandas simhash pass
     # executes twice (same convention as simhash_banded_pairs)
-    s = track_cache(simhash(df))
+    s = materialize(simhash(df))
     bucket = F.shiftrightunsigned("simhash", SIMHASH_BITS - 8).alias("b")
     sb = s.select("doc_id", "simhash", bucket)
     counts = sb.groupBy("b").agg(F.count(F.lit(1)).alias("n"))

@@ -260,11 +260,11 @@ def phash_dups(phash: DataFrame, max_hamming: int = PHASH_BANDS - 1) -> DataFram
         raise ValueError(
             f"banded join guarantees recall only to {PHASH_BANDS - 1} bits"
         )
-    from mpi_word_count_spark.operators import track_cache
+    from mpi_word_count_spark.operators import materialize
 
     # the hash table feeds the band explode AND both verify sides —
-    # cache it (5 ints/row) so the Arrow kernel runs once, not 3x
-    phash = track_cache(phash)
+    # materialize it (5 ints/row) so the Arrow kernel runs once, not 3x
+    phash = materialize(phash)
     bands = phash.select(
         "media_id",
         F.explode(

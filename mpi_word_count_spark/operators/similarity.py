@@ -655,11 +655,11 @@ def semantic_dedup(
     deterministic and oracle-replicable (no RNG anywhere).
     """
     from mpi_word_count_spark.functions.parity import portable_round
-    from mpi_word_count_spark.operators import track_cache
+    from mpi_word_count_spark.operators import materialize
 
     cents = kmeans_centroids(vectors, k=n_clusters, iters=kmeans_iters)
-    # cache the assignment: it feeds BOTH sides of the within-cluster
-    # join plus the final projection — without the cache the
+    # materialize the assignment: it feeds BOTH sides of the
+    # within-cluster join plus the final projection — without it the
     # k-literal argmin expression re-evaluates three times per row.
     # Norms precompute per ROW so each candidate pair costs ONE array
     # fold (the dot), not three — higher-order-function lambdas are
@@ -672,7 +672,7 @@ def semantic_dedup(
     # tasks — without this the quadratic fold work serializes on one
     # core; at real scale the input already has thousands of splits
     # and widen is a no-op
-    assigned = track_cache(
+    assigned = materialize(
         widen(vectors).select(
             F.col("vec_id").alias("vec_id"),
             F.col("embedding").alias("_v"),
@@ -747,12 +747,12 @@ def margin_alignment_pairs(
         F.col("embedding").alias("b_vec"),
         norm(F.col("embedding")).alias("b_norm"),
     )
-    from mpi_word_count_spark.operators import track_cache
+    from mpi_word_count_spark.operators import materialize
 
-    # cached: the docstring's "ONE scored A×B table" is only true with
-    # the cache — fwd and bwd exchange on DIFFERENT keys (a_id vs
+    # materialized: the docstring's "ONE scored A×B table" is only
+    # true with the hold — fwd and bwd exchange on DIFFERENT keys (a_id vs
     # b_id), so without it the cross-join cosine fold runs twice
-    scored = track_cache(
+    scored = materialize(
         b.crossJoin(F.broadcast(a)).select(
             "a_id",
             "b_id",

@@ -595,16 +595,16 @@ def pmi_score_pairs(
     the denominator). `uni` carries (w, c) unigram counts. Returns
     keep + (n_occurrences, pmi).
 
-    Both count tables are cached (track_cache): they are the
-    Zipf-bounded distinct-key aggregates — NOT the corpus-sized token
-    stream — and each feeds its own total plus the scoring join, so
-    caching them holds the pipeline to one corpus pass per count
+    Both count tables are materialized: they are the Zipf-bounded
+    distinct-key aggregates — NOT the corpus-sized token stream — and
+    each feeds its own total plus the scoring join, so holding them
+    holds the pipeline to one corpus pass per count
     table. Marginals and totals join back by broadcast; nothing here
     shuffles more than |vocab| rows."""
-    from mpi_word_count_spark.operators import track_cache
+    from mpi_word_count_spark.operators import materialize
 
-    uni = track_cache(uni)
-    pairs = track_cache(pairs)
+    uni = materialize(uni)
+    pairs = materialize(pairs)
     n1 = uni.agg(F.sum("c").alias("n1_total"))
     n2 = pairs.agg(F.sum("n_occurrences").alias("n2_total"))
     u1 = uni.select(F.col("w").alias("w1"), F.col("c").alias("c1"))

@@ -646,13 +646,13 @@ def q_cogrouped_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _basket_pairs(li: DataFrame):
     """Shared basket machinery for the market-basket queries: the
-    distinct (order, supplier) item table — CACHED, because the rules
-    query reads it for baskets, item marginals, and the basket total
-    (uncached, the corpus scan + distinct ran once per subtree) — and
+    distinct (order, supplier) item table — MATERIALIZED, because the
+    rules query reads it for baskets, item marginals, and the basket
+    total (unheld, the corpus scan + distinct ran once per subtree) — and
     the unordered within-basket pairs generated in-row."""
-    from mpi_word_count_spark.operators import track_cache
+    from mpi_word_count_spark.operators import materialize
 
-    s = track_cache(li.select("l_orderkey", "l_suppkey").distinct())
+    s = materialize(li.select("l_orderkey", "l_suppkey").distinct())
     baskets = (
         s.groupBy("l_orderkey")
         .agg(F.sort_array(F.collect_set("l_suppkey")).alias("ss"))

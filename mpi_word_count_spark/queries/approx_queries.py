@@ -156,20 +156,20 @@ def q_hll_sketch_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     Driver verification: each row carries the exact distinct count
     over the same rows plus within_tolerance = |est-exact|/exact <=
     3*rsd (lgConfigK=12 → rsd ≈ 1.04/√4096 ≈ 1.6%). Sketches are fed
-    the cached distinct (lang, word) pairs — HLL state is identical
-    on a deduplicated stream (insert is idempotent), and the cache
-    lets the exact branch reuse the same single corpus scan. The
-    exact columns exist only for verification; production runs the
-    sketch branch alone.
+    the materialized distinct (lang, word) pairs — HLL state is
+    identical on a deduplicated stream (insert is idempotent), and
+    holding them lets the exact branch reuse the same single corpus
+    scan. The exact columns exist only for verification; production
+    runs the sketch branch alone.
     """
-    from mpi_word_count_spark.operators import track_cache
+    from mpi_word_count_spark.operators import materialize
 
     docs = table(spark, "documents", sf_dir)
     toks = tokenize(docs, col="text", keep=["lang"])
     # one corpus scan + one distinct shuffle feeds every branch:
     # per-lang sketches, per-lang exact, and the global exact
-    pairs = track_cache(toks.distinct())
-    sketches = track_cache(
+    pairs = materialize(toks.distinct())
+    sketches = materialize(
         pairs.groupBy("lang").agg(F.hll_sketch_agg("word").alias("sk"))
     )
     est_lang = sketches.select(
@@ -385,8 +385,6 @@ def q_hll_set_intersection(spark: SparkSession, sf_dir: str) -> DataFrame:
     envelope 3·rsd·(est_a + est_b + est_union) — inclusion-exclusion
     ADDS absolute errors, so the band must widen accordingly (and
     does: lgConfigK=12 → rsd ≈ 1.6%)."""
-    from mpi_word_count_spark.operators import track_cache
-
     e = table(spark, "events", sf_dir)
     # one scan: per-side sketches built as conditional aggregates
     sk = e.agg(
@@ -415,7 +413,6 @@ def q_hll_set_intersection(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("exact_b"),
     )
-    sk = track_cache(sk)
     est = sk.select(
         "exact_a",
         "exact_b",

@@ -26,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from mpi_word_count_spark.operators import track_cache
+from mpi_word_count_spark.operators import materialize
 from mpi_word_count_spark.operators.bpe import (
     DEFAULT_MERGES,
     DEFAULT_VOCAB_TYPES,
@@ -193,7 +193,7 @@ def q_bpe_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     (whitespace token counting is token_stats; this is the
     tokenizer-aware version).
 
-    Plan: tokenize ONCE into (doc_id, word, cnt) [cached — vocab
+    Plan: tokenize ONCE into (doc_id, word, cnt) [materialized — vocab
     collect and the final join both read it], derive the word-type
     table by re-aggregation (never a second corpus scan), encode each
     word TYPE once via the literal-merge folds, then broadcast-join
@@ -202,7 +202,7 @@ def q_bpe_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitioning key prefix."""
     docs = table(spark, "documents", sf_dir)
     tok = tokenize(docs, col="text", keep=["doc_id"])
-    dw = track_cache(
+    dw = materialize(
         tok.filter(F.col("word").rlike(ALNUM_WORD))
         .groupBy("doc_id", "word")
         .agg(F.count(F.lit(1)).alias("cnt"))
@@ -263,7 +263,7 @@ def q_bpe_fertility_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = table(spark, "documents", sf_dir)
     tok = tokenize(docs, col="text", keep=["lang"])
-    dw = track_cache(
+    dw = materialize(
         tok.filter(F.col("word").rlike(ALNUM_WORD))
         .groupBy("lang", "word")
         .agg(F.count(F.lit(1)).alias("cnt"))
@@ -402,12 +402,12 @@ def q_byte_bpe_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document token counts under the learned BYTE-level BPE
     table, plus the byte length the GPT-2 bytes/token compression
     ratio is quoted against. Identical plan shape to bpe_token_counts:
-    ONE tokenize into (doc_id, word, cnt) [cached], word types by
+    ONE tokenize into (doc_id, word, cnt) [materialized], word types by
     re-aggregation, each TYPE encoded once via the literal-merge
     folds over the byte split, sizes broadcast back."""
     docs = table(spark, "documents", sf_dir)
     tok = tokenize(docs, col="text", keep=["doc_id"])
-    dw = track_cache(
+    dw = materialize(
         tok.groupBy("doc_id", "word").agg(F.count(F.lit(1)).alias("cnt"))
     )
     freqs = dw.groupBy("word").agg(F.sum("cnt").alias("freq"))

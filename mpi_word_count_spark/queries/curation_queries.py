@@ -830,7 +830,7 @@ def q_greedy_source_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     argmax pulled to the driver — the loop state is source names,
     never corpus data.
     """
-    from mpi_word_count_spark.operators import release_caches, track_cache, widen
+    from mpi_word_count_spark.operators import materialize, widen
     from mpi_word_count_spark.operators.dedup import (
         shingles_from_tokens,
         tokens_col,
@@ -838,7 +838,7 @@ def q_greedy_source_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = table(spark, "documents", sf_dir)
     toks = widen(docs).select("source", tokens_col("text").alias("_toks"))
-    src_sh = track_cache(
+    src_sh = materialize(
         toks.select(
             "source",
             F.explode(shingles_from_tokens(F.col("_toks"), 3)).alias("shingle"),
@@ -864,14 +864,12 @@ def q_greedy_source_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
         picked = src_sh.filter(F.col("source") == best["source"]).select(
             "shingle"
         )
-        covered = track_cache(
+        covered = materialize(
             picked if covered is None else covered.union(picked).distinct()
         )
-    out = spark.createDataFrame(
+    return spark.createDataFrame(
         rows, "round int, source string, new_shingles bigint, cum_coverage bigint"
     )
-    release_caches()
-    return out
 
 
 def _contrastive_oracle() -> str:
@@ -922,9 +920,9 @@ def q_contrastive_triplets(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mpi_word_count_spark.queries.dedup_queries import q_minhash_lsh_dups
 
     pairs = q_minhash_lsh_dups(spark, sf_dir).select("d1", "d2").distinct()
-    from mpi_word_count_spark.operators import track_cache
+    from mpi_word_count_spark.operators import materialize
 
-    pairs = track_cache(pairs)
+    pairs = materialize(pairs)
     n = table(spark, "documents", sf_dir).agg(
         F.count(F.lit(1)).alias("n_docs")
     )

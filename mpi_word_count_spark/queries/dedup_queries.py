@@ -1249,7 +1249,9 @@ def q_dedup_method_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select(F.lit(m).alias("method"), "d1", "d2")
         )
         allp = part if allp is None else allp.unionByName(part)
-    allp = allp.cache()
+    from mpi_word_count_spark.operators import materialize
+
+    allp = materialize(allp)
     sizes = allp.groupBy("method").agg(F.count(F.lit(1)).alias("n"))
     x = allp.alias("x")
     y = allp.alias("y")
@@ -1266,9 +1268,6 @@ def q_dedup_method_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(F.count(F.lit(1)).alias("n_common"))
     )
-    from mpi_word_count_spark.operators import track_cache
-
-    track_cache(allp)
     return (
         common.join(
             sizes.select(

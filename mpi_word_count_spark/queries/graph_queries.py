@@ -693,12 +693,12 @@ def q_supplier_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
-    from mpi_word_count_spark.operators import track_cache
+    from mpi_word_count_spark.operators import materialize
 
     # backbone-sized (sparse by the support cut) and referenced three
-    # times below (both orientations + the anti-join): cached so the
+    # times below (both orientations + the anti-join): materialized so the
     # basket-explode pipeline runs once — released via release_caches()
-    e = track_cache(
+    e = materialize(
         baskets.select(F.explode(pairs_col).alias("p"))
         .select("p.a", "p.b")
         .groupBy("a", "b")

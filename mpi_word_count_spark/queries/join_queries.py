@@ -218,13 +218,13 @@ def q_overlapping_order_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             "e",
         )
     )
-    from mpi_word_count_spark.operators import track_cache
+    from mpi_word_count_spark.operators import materialize
 
-    # both self-join sides read tiles: cache it so the lineitem
+    # both self-join sides read tiles: hold it so the lineitem
     # max-shipdate aggregate + orders join + tile explode run once,
     # not once per side (the before-plan materialized the identical
     # subtree twice)
-    tiles = track_cache(
+    tiles = materialize(
         iv.withColumn(
             "tile",
             F.explode(

@@ -502,12 +502,12 @@ def q_price_ols_cv(spark: SparkSession, sf_dir: str) -> DataFrame:
     the 10.8 MB lineitem parquet scans as ONE task, so the md5 fold
     hash and ten decimal partial sums for 600k rows ran on one core
     (no-op at scale, where the scan already has thousands of splits);
-    (2) foldsums is cached: the totals aggregate previously
+    (2) foldsums is materialized: the totals aggregate previously
     re-instantiated the whole corpus scan + aggregation subtree (the
     before-plan shows two identical Scan→HashAggregate chains), so the
     md5-heavy pass executed twice per run."""
     from mpi_word_count_spark.functions.hashing import hash32
-    from mpi_word_count_spark.operators import track_cache, widen
+    from mpi_word_count_spark.operators import materialize, widen
 
     li = table(spark, "lineitem", sf_dir)
     fold = (
@@ -537,7 +537,7 @@ def q_price_ols_cv(spark: SparkSession, sf_dir: str) -> DataFrame:
     def s(expr) -> F.Column:
         return F.sum(expr.cast("decimal(38,0)")).cast("double")
 
-    foldsums = track_cache(raw.groupBy("fold").agg(
+    foldsums = materialize(raw.groupBy("fold").agg(
         F.count(F.lit(1)).cast("double").alias("fn"),
         s(F.col("q")).alias("fsq"),
         s(F.col("d")).alias("fsd"),

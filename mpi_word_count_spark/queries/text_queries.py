@@ -962,9 +962,9 @@ def q_stupid_backoff_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the total join by broadcast."""
     docs = table(spark, "documents", sf_dir)
     from mpi_word_count_spark.operators.dedup import tokens_col
-    from mpi_word_count_spark.operators import track_cache, widen
+    from mpi_word_count_spark.operators import materialize, widen
 
-    staged = track_cache(
+    staged = materialize(
         widen(docs).select("doc_id", tokens_col("text").alias("t"))
     )
     t = F.col("t")
@@ -980,7 +980,7 @@ def q_stupid_backoff_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "p.w1", "p.w2")
     )
     train = staged.filter(F.col("doc_id") % 2 == 0)
-    uni = track_cache(
+    uni = materialize(
         train.select(F.explode(t).alias("tok"))
         .groupBy("tok")
         .agg(F.count(F.lit(1)).alias("c"))

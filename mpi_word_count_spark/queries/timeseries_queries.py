@@ -64,10 +64,10 @@ _SERIES_CTE = """hist AS (
 
 def _hour_series(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spark twin of _SERIES_CTE: the dense hourly count series
-    (h, x), cached (model-sized; consumers reference it repeatedly —
-    released via release_caches())."""
-    from mpi_word_count_spark.operators import track_cache
-
+    (h, x). Consumers reference it repeatedly, but it is not held: its
+    one corpus-sized stage, the hour histogram's shuffle, is reused
+    across those references by AQE (ReusedExchange), and a hold only
+    adds jobs (2–5 per query at sf0.01)."""
     ev = table(spark, "events", sf_dir)
     hist = ev.groupBy(
         F.floor(
@@ -80,10 +80,8 @@ def _hour_series(spark: SparkSession, sf_dir: str) -> DataFrame:
     spine = bounds.select(
         F.explode(F.sequence(F.col("h0"), F.col("h1"))).alias("h")
     )
-    return track_cache(
-        spine.join(F.broadcast(hist), "h", "left").select(
-            "h", F.coalesce(F.col("c"), F.lit(0)).cast("long").alias("x")
-        )
+    return spine.join(F.broadcast(hist), "h", "left").select(
+        "h", F.coalesce(F.col("c"), F.lit(0)).cast("long").alias("x")
     )
 
 

@@ -337,11 +337,11 @@ def q_events_value_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitions bounded."""
     from pyspark.sql import Window
 
-    from mpi_word_count_spark.operators import track_cache
+    from mpi_word_count_spark.operators import materialize
 
     ev = table(spark, "events", sf_dir).select("event_type", "value")
     w = Window.partitionBy("event_type")
-    ranked = track_cache(ev.select(
+    ranked = materialize(ev.select(
         "event_type",
         "value",
         F.row_number().over(w.orderBy("value")).alias("rn"),
@@ -350,7 +350,7 @@ def q_events_value_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     med = ranked.filter(F.col("rn") == F.expr("(n + 1) div 2")).select(
         "event_type", F.col("value").alias("med"), "n"
     )
-    devs = track_cache(ranked.join(F.broadcast(med.drop("n")), "event_type").select(
+    devs = materialize(ranked.join(F.broadcast(med.drop("n")), "event_type").select(
         "event_type",
         "value",
         F.abs(F.col("value") - F.col("med")).alias("dev"),
@@ -439,10 +439,10 @@ def q_events_cusum_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     first breach hour."""
     from pyspark.sql import Window
 
-    from mpi_word_count_spark.operators import track_cache
+    from mpi_word_count_spark.operators import materialize
 
     ev = table(spark, "events", sf_dir)
-    hc = track_cache(
+    hc = materialize(
         ev.groupBy(
             "event_type", F.date_trunc("hour", F.col("ts")).alias("h")
         ).agg(F.count(F.lit(1)).alias("c"))

@@ -337,3 +337,21 @@ def test_dsir_weights_rank_targetlike_docs_higher(spark):
     }
     assert set(w) == {1, 2, 3}
     assert w[1] > w[2] and w[1] > w[3], w
+
+
+def test_greedy_source_coverage_keeps_the_callers_holds(spark):
+    """A query frees nothing its caller still holds: a dedup_clusters
+    result built before greedy_source_coverage runs still executes
+    after it. Freeing held frames is the caller's release_caches(),
+    which also frees greedy_source_coverage's own per-round state."""
+    import __spark_entry__ as entrymod
+
+    from mpi_word_count_spark.operators import release_caches
+
+    queries = entrymod.queries()
+    release_caches()
+    held = queries["dedup_clusters"](spark, SF_DIR)
+    n = held.count()
+    assert queries["greedy_source_coverage"](spark, SF_DIR).count() > 0
+    assert held.count() == n
+    release_caches()

@@ -326,6 +326,32 @@ def test_minhash_job_counts_pinned(spark):
         assert n <= most, f"{call.__name__}: {n} jobs > {most}"
 
 
+def test_held_intermediate_job_counts_pinned(spark):
+    """Jobs per warm call on sf0.001 stay pinned: 10 for
+    sorted_neighborhood_dups and 12 for bigram_pmi. Both hold an
+    intermediate that one plan scans several times (the SimHash
+    fingerprints four times, the PMI unigram counts three times); as a
+    lazy cache() that costs 17 and 15 jobs, because AQE builds the
+    cache once per scan, as for the MinHash signatures above."""
+    import __spark_entry__ as entrymod
+
+    from mpi_word_count_spark.operators import release_caches
+
+    from tests.conftest import SF_DIR, jobs_of
+
+    most = {"sorted_neighborhood_dups": 12, "bigram_pmi": 14}
+    got = {}
+    for name in most:
+        def call():
+            entrymod.queries()[name](spark, SF_DIR).collect()
+
+        call()  # warm: the first call also compiles
+        release_caches()
+        got[name] = jobs_of(spark, call)
+        release_caches()
+    assert all(got[n] <= most[n] for n in most), f"jobs {got} > {most}"
+
+
 def test_levenshtein_parity_with_duckdb(spark):
     """Lock the cross-engine edit-distance semantics the
     edit_distance_dups oracle relies on: Spark's levenshtein and

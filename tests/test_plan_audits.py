@@ -2,9 +2,9 @@
 claims, so a refactor that silently loses pushdown / broadcast / the
 top-k heap / map-side partial aggregation fails CI, not the 100 TB
 run. Mostly driver-side (explain, no execution). The exception is a
-query whose operators go through operators.materialize (the graph
-loops' inputs, dedup_clusters' edge set, the MinHash-LSH signatures
-and candidates): building its plan runs those jobs."""
+query that holds an intermediate (operators.materialize or the
+iterate() loops): building its plan runs those jobs, and plan_of
+audits the intermediates' plans along with the query's."""
 
 from __future__ import annotations
 
@@ -25,7 +25,25 @@ def explained(df) -> str:
 
 
 def plan_of(spark, name: str) -> str:
-    return explained(QUERIES[name](spark, SF_DIR))
+    """The query's formatted plan, then the plan of every intermediate
+    it checkpoints while it is built: the query's own plan reads a
+    checkpoint as a scan of its blocks, so an audit of that plan alone
+    would not see what the checkpoint ran."""
+    from mpi_word_count_spark import operators
+
+    checkpoint = operators._checkpoint
+    held_plans = []
+
+    def recording(df):
+        held_plans.append(explained(df))
+        return checkpoint(df)
+
+    operators._checkpoint = recording
+    try:
+        plan = explained(QUERIES[name](spark, SF_DIR))
+    finally:
+        operators._checkpoint = checkpoint
+    return "\n".join([plan, *held_plans])
 
 
 def pushed_filters(plan: str) -> list[str]:

@@ -121,10 +121,19 @@ def test_registry_order_rule():
     assert digest == REGISTRY_NAMES_SHA256
 
 
-# What only the iteration driver (operators/__init__.py) may call: the
-# two checkpoint APIs and the non-public py4j chain that frees a
-# checkpoint's blocks (queryExecution().analyzed().rdd().unpersist).
-CHECKPOINT_CALLS = {"localCheckpoint", "checkpoint", "queryExecution", "_unpersist_local_ckpt"}
+# What only operators/__init__.py may call: the two checkpoint APIs,
+# the non-public py4j chain that frees a checkpoint's blocks
+# (queryExecution().analyzed().rdd().unpersist), and the lazy cache
+# APIs, so that materialize() is the one way to hold an intermediate.
+CHECKPOINT_CALLS = {
+    "localCheckpoint",
+    "checkpoint",
+    "queryExecution",
+    "_unpersist_local_ckpt",
+    "cache",
+    "persist",
+    "unpersist",
+}
 
 
 def _uses_outside(allowed: Path, names: set[str]) -> list[str]:
@@ -145,11 +154,12 @@ def _uses_outside(allowed: Path, names: set[str]) -> list[str]:
 
 
 def test_checkpointing_only_in_the_iteration_driver():
-    """Round state is materialized and freed in one place: a package
-    module other than operators/__init__.py that checkpoints or frees a
-    checkpoint by hand regrows the seven hand-rolled loops."""
+    """Intermediates are held and freed in one place: a package module
+    other than operators/__init__.py that checkpoints, caches,
+    persists or frees by hand regrows the seven hand-rolled loops, or a
+    second hold whose release contract differs from materialize()'s."""
     found = _uses_outside(PKG / "operators" / "__init__.py", CHECKPOINT_CALLS)
-    assert not found, "checkpoint calls outside operators/__init__.py:\n" + "\n".join(found)
+    assert not found, "hold or free calls outside operators/__init__.py:\n" + "\n".join(found)
 
 
 def test_env_reads_only_in_session():

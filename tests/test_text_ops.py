@@ -9,6 +9,7 @@ from __future__ import annotations
 import itertools
 import random
 
+import pytest
 from pyspark.sql import functions as F
 
 from mpi_word_count_spark.queries.text_queries import _min_diff_word_dist
@@ -148,3 +149,19 @@ def test_rrf_index_released_and_never_written_to_disk(spark):
     release_caches()
     assert persisted_rdd_ids(spark) - before == set()
     assert scratch_dirs() == scratch_before
+
+
+@pytest.mark.parametrize("name", ["bigram_pmi", "ppjoin_dups", "greedy_source_coverage"])
+def test_held_intermediates_released(spark, name):
+    """Every intermediate a query holds goes through materialize(): after
+    a collect, release_caches() leaves no persisted RDD the call made."""
+    import __spark_entry__ as entrymod
+    from mpi_word_count_spark.operators import release_caches
+
+    from tests.conftest import SF_DIR, persisted_rdd_ids
+
+    release_caches()
+    before = persisted_rdd_ids(spark)
+    assert entrymod.queries()[name](spark, SF_DIR).collect()
+    release_caches()
+    assert persisted_rdd_ids(spark) - before == set()
